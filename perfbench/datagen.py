@@ -3,16 +3,13 @@
 Writes the eight TPC-H-shaped tables plus ``events``, ``documents`` and
 ``embeddings`` (one parquet file each) with the schemas and value domains
 the engine's queries read: the same layout as the repository's sf0.001 /
-sf0.01 / sf0.1 test data.  Row counts scale with ``sf`` (lineitem is
-6,000,000 x sf rows).  The same ``(sf, seed)`` always gives byte-identical
-tables, so the golden fingerprints in ``golden.json`` stay valid.
-
-    python3 perfbench/datagen.py OUT_DIR [--sf SF] [--seed SEED]
+sf0.01 / sf0.1 test data, at scale factor ``SF`` (lineitem holds
+6,000,000 x ``SF`` rows).  The tables are byte-identical on every call, so
+the golden fingerprints in ``golden.json`` stay valid.
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 
 import numpy as np
@@ -105,9 +102,10 @@ def _embeddings(rng, n: int, dim: int = 64) -> pa.Table:
     })
 
 
-def tables(sf: float, seed: int = DATA_SEED) -> dict[str, pa.Table]:
-    """Build every table in memory; ``sf`` scales the row counts."""
-    rng = np.random.Generator(np.random.PCG64(seed))
+def tables() -> dict[str, pa.Table]:
+    """Build every table in memory at scale factor ``SF``."""
+    sf = SF
+    rng = np.random.Generator(np.random.PCG64(DATA_SEED))
     n_cust = max(1, int(150_000 * sf))
     n_supp = max(1, int(10_000 * sf))
     n_part = max(1, int(200_000 * sf))
@@ -185,24 +183,11 @@ def tables(sf: float, seed: int = DATA_SEED) -> dict[str, pa.Table]:
     return out
 
 
-def write(out_dir: str, sf: float, seed: int = DATA_SEED) -> None:
+def write(out_dir: str) -> None:
     """Write every table to ``out_dir/<name>.parquet`` (one row group)."""
     os.makedirs(out_dir, exist_ok=True)
-    for name, table in tables(sf, seed).items():
+    for name, table in tables().items():
         pq.write_table(
             table, os.path.join(out_dir, f"{name}.parquet"),
             row_group_size=max(1, table.num_rows),
         )
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("out_dir")
-    ap.add_argument("--sf", type=float, default=SF)
-    ap.add_argument("--seed", type=int, default=DATA_SEED)
-    args = ap.parse_args()
-    write(args.out_dir, args.sf, args.seed)
-
-
-if __name__ == "__main__":
-    main()

@@ -1,10 +1,10 @@
 """Golden output fingerprints for the benchmark's correctness gate.
 
 A fingerprint is the row count, the sorted column names and a SHA-256 of
-the rows after the same normalization as the repository's DuckDB-oracle
-compare: columns sorted by name, every cell rendered with ``repr`` (NULL
-and NaN as ``<NULL>``, timestamps in ISO form), rows sorted.  Equal
-fingerprints mean equal results regardless of row order.
+the rows after ``_normalize`` of the repository's DuckDB-oracle compare
+(``tests/oracle_harness.py``: columns sorted by name, cells rendered as
+strings, rows sorted).  Equal fingerprints mean equal results regardless
+of row order.
 
 ``golden.json`` holds one fingerprint per benchmark query, computed once
 by running each query's DuckDB oracle SQL over the tables ``datagen.py``
@@ -18,12 +18,12 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import os
 import sys
 import tempfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)
 GOLDEN_PATH = os.path.join(HERE, "golden.json")
 
 
@@ -33,27 +33,16 @@ def datagen_digest() -> str:
         return hashlib.sha256(f.read()).hexdigest()
 
 
-def _cell(v) -> str:
-    import pandas as pd
-
-    if v is None or (isinstance(v, float) and math.isnan(v)):
-        return "<NULL>"
-    if isinstance(v, float):
-        return repr(v)
-    if isinstance(v, pd.Timestamp):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_cell(x) for x in v) + "]"
-    return repr(v)
-
-
 def fingerprint(pdf) -> dict:
     """Order-insensitive fingerprint of a pandas result frame."""
-    cols = sorted(pdf.columns)
-    rows = sorted(
-        tuple(_cell(v) for v in row)
-        for row in pdf[cols].astype(object).itertuples(index=False, name=None)
-    )
+    tests = os.path.join(ROOT, "tests")
+    if tests not in sys.path:
+        sys.path.insert(0, tests)
+    from oracle_harness import _normalize
+
+    norm = _normalize(pdf)
+    cols = list(norm.columns)
+    rows = norm.values.tolist()
     digest = hashlib.sha256(
         json.dumps([cols, rows], separators=(",", ":")).encode()
     ).hexdigest()
@@ -66,7 +55,7 @@ def load() -> dict:
 
 
 def main() -> None:
-    sys.path.insert(0, os.path.dirname(HERE))
+    sys.path.insert(0, ROOT)
     sys.path.insert(0, HERE)
     import datagen
     import duckdb
@@ -80,7 +69,7 @@ def main() -> None:
     if missing:
         sys.exit(f"queries without DuckDB oracle SQL: {missing}")
     with tempfile.TemporaryDirectory() as tmp:
-        datagen.write(tmp, datagen.SF)
+        datagen.write(tmp)
         con = duckdb.connect()
         for fn in sorted(os.listdir(tmp)):
             con.execute(f"CREATE VIEW {fn.removesuffix('.parquet')} AS "

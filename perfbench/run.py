@@ -45,7 +45,7 @@ def _data_dir(work: str) -> str:
     if not os.path.exists(os.path.join(path, "_COMPLETE")):
         shutil.rmtree(path, ignore_errors=True)
         tmp = path + f".tmp{os.getpid()}"
-        datagen.write(tmp, datagen.SF)
+        datagen.write(tmp)
         open(os.path.join(tmp, "_COMPLETE"), "w").close()
         os.rename(tmp, path)
     return path
@@ -162,9 +162,13 @@ def main() -> int:
     print(f"# {args.workload} seed={args.seed}: {result['calls']} timed calls "
           f"in {result['passes']} passes over {result['timed_s']:.2f}s",
           file=sys.stderr)
+    print(f"#   re-checked on the stage-cache hit path: "
+          f"{', '.join(result['rechecked']) or 'none'}", file=sys.stderr)
+    print(f"#   session start {result['session_start_s']:.2f}s; per query: "
+          "warm-up call, then timed calls", file=sys.stderr)
     for name, lat in sorted(result["per_query"].items()):
-        print(f"#   {name}: {' '.join(f'{x:.3f}' for x in lat)}",
-              file=sys.stderr)
+        print(f"#   {name}: {result['setup_calls'][name]:.3f} | "
+              f"{' '.join(f'{x:.3f}' for x in lat)}", file=sys.stderr)
     print(json.dumps({
         "correct": result["failed"] == 0,
         "attempted": result["attempted"],

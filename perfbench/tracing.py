@@ -25,6 +25,7 @@ import time
 #: layer modules whose public functions get a span each
 TRACED_MODULES = [
     "newyork_taxi_etl_spark.session",
+    "newyork_taxi_etl_spark.registry",
     "newyork_taxi_etl_spark.sources.readers",
     "newyork_taxi_etl_spark.sources.writers",
     "newyork_taxi_etl_spark.plans.pipeline",
@@ -255,7 +256,8 @@ def layer_metrics(tracer: Tracer, calls: list[dict], cores: int,
     ``calls`` are the traced timed calls (request id, build/exec seconds,
     Spark job metrics).  Values are means per traced call unless the name
     says otherwise; ``setup`` carries the set-up spans (session start,
-    registry load) and stage-cache totals for the whole process."""
+    registry load), stage-cache totals for the whole process and the
+    operators' warm-up seconds (``setup_totals``)."""
     n = max(1, len(calls))
     reqs = {c["request"] for c in calls}
     spans = [s for s in tracer.spans if s.request in reqs]
@@ -337,17 +339,27 @@ def layer_metrics(tracer: Tracer, calls: list[dict], cores: int,
         ops = _outermost(spans, f"operators.{short}.")
         m[f"operators.{short}.calls"] = (per_call(len(ops)), "count")
         m[f"operators.{short}.s"] = (per_call(_dur(ops)), "s")
+        m[f"operators.{short}.setup_s"] = (setup[f"operators.{short}.setup_s"],
+                                           "s")
     return m
 
 
-def stage_cache_totals(tracer: Tracer) -> dict[str, float]:
-    """Stage-cache hits, misses and build seconds over every traced span
-    (set-up and timed calls): misses land in set-up, where they cost."""
+def setup_totals(tracer: Tracer) -> dict[str, float]:
+    """Whole-process numbers: stage-cache hits, misses and build seconds over
+    every traced span (set-up and timed calls; misses land in set-up, where
+    they cost), and each operator module's driver-side seconds in the
+    warm-up pass, where trainers whose artifacts the stage cache keeps run."""
     cached = [s for s in tracer.spans if s.name == "streaming._stage_cached"]
     builds = [s for s in _outermost(cached, "streaming._stage_cached")
               if s.outcome == "miss"]
-    return {
+    out = {
         "stage_cache_hits": sum(s.outcome == "hit" for s in cached),
         "stage_cache_misses": sum(s.outcome == "miss" for s in cached),
         "stage_cache_build_s": _dur(builds),
     }
+    setup = [s for s in tracer.spans
+             if s.request and s.request.startswith("setup:")]
+    for short in OPERATOR_MODULES:
+        out[f"operators.{short}.setup_s"] = _dur(
+            _outermost(setup, f"operators.{short}."))
+    return out

@@ -2,8 +2,7 @@
 
 Every pass calls each query of its workload once, in an order drawn from
 ``--seed``.  On a 4-core machine a warm pass of ``analytics_mix`` takes
-about 4 s and one of ``ingest_curation`` about 7 s, so that set-up plus
-two to three timed passes fit one run.
+about 7 s and one of ``ingest_curation`` about 12 s.
 """
 
 from __future__ import annotations
@@ -12,9 +11,10 @@ WORKLOADS: dict[str, list[str]] = {
     # Short read-only batch queries where fixed per-call costs dominate:
     # planning, builder time and per-job/stage scheduling.  Five of the
     # reference-parity queries, then one each of cleaning, windows, TPC-H
-    # joins and profiling (nine: an odd count keeps the median call on one
-    # query).  Bypasses streaming, sources.writers, the stage cache and the
-    # corpus operators.
+    # joins and profiling (nine: with an odd count the calls of one query
+    # hold the median).  The profiling query reads a parquet footer for its row count
+    # (``sources.readers.parquet_rowcount``).  Bypasses streaming,
+    # sources.writers, the stage cache and the corpus operators.
     "analytics_mix": [
         "traffic_congestion",
         "value_by_slot_dow",
@@ -24,23 +24,26 @@ WORKLOADS: dict[str, list[str]] = {
         "clean_speed_filter",
         "window_distribution_funcs",
         "customers_without_orders",
-        "profile_nulls",
+        "kll_quantile_sketch",
     ],
-    # The write path and corpus curation.  CDC merge, SCD2, a partitioned
-    # write with a pruned read-back and an AvailableNow windowed drain spend
-    # their time inside the builder (eager writes, commits, checkpoints);
-    # MinHash dedup, PQ ANN over a trained codebook and BM25 ranking run
-    # Python/Arrow UDFs and driver-side loops; the codebook is shared
-    # through the stage cache, so a first call costs several times a warm
-    # one and set-up carries the training.  Seven queries, so that the
-    # median call falls on one query, not in the gap between two.
+    # The write path and corpus curation.  A partitioned write
+    # (sources.writers) with a pruned read-back and an AvailableNow windowed
+    # drain spend their time inside the builder (eager writes, commits,
+    # checkpoints).  The corpus queries reach the operator modules on every
+    # call: the decontaminated corpus pipeline (dedup, curation), IVF
+    # balance (similarity), count-min heavy hitters (sketch), WordPiece
+    # segmentation (wordpiece, with unigram's word vocab).  The IVF
+    # centroids (clustering), the WordPiece vocab and the byte-BPE merges
+    # (bytebpe) are trained once in set-up and shared through the stage
+    # cache after, so a first call costs several times a warm one.  Seven
+    # queries: the two calls of the fourth fastest hold the median.
     "ingest_curation": [
-        "cdc_merge_apply",
-        "scd2_dimension_history",
         "partitioned_write_pruned_read",
         "structured_streaming_availablenow",
-        "dedup_minhash_lsh",
-        "ann_pq_adc_topk",
-        "bm25_rank",
+        "corpus_pipeline_decontaminated",
+        "ann_ivf_balance",
+        "freq_tokens_cms_sampled",
+        "wordpiece_runtime_drift",
+        "bytebpe_merge_loop",
     ],
 }

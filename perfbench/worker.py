@@ -5,15 +5,16 @@ untimed warm-up pass of the workload, collecting every result and checking
 it against its golden fingerprint.  Then timed passes: a single closed-loop
 client calls ``registry.queries()[name](spark, sf_dir)`` and materializes
 the result to the ``noop`` sink, one call after the other, until the time
-budget is spent (whole passes only, at least ``MIN_PASSES``).  After the
-timed passes, every query whose set-up call went through the stage cache
-is collected and checked once more, untimed: its set-up result came from
-the cache-miss (build) path, the timed calls took the hit path.  The
-result goes to ``--out`` as JSON.
+budget is spent (whole passes only, at least ``workloads.MIN_PASSES``).
+After the timed passes, every query whose set-up call went through the
+stage cache is collected and checked once more, untimed: its set-up
+result came from the cache-miss (build) path, the timed calls took the
+hit path.  The result goes to ``--out`` as JSON.
 
 With ``--trace 1`` the layer modules are wrapped before the registry loads
-(see ``tracing.py``); each query is then traced in one timed pass and not
-in the next, so the traced run also reports what tracing costs.
+(see ``tracing.py``); each query is then traced in one of the first two
+timed passes and not in the other, so the traced run also reports what
+tracing costs.
 """
 
 from __future__ import annotations
@@ -31,12 +32,9 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-#: nearest-rank percentile reported as ``latency_tail_s``: with two timed
-#: passes of seven or nine queries, three or more calls lie beyond it
+#: nearest-rank percentile reported as ``latency_tail_s``: with two or
+#: three timed passes of seven queries, three or more calls lie beyond it
 TAIL_PCT = 75
-#: timed passes at least: every query is timed twice, and the traced run
-#: times every query once traced and once not
-MIN_PASSES = 2
 
 
 def _percentile(values: list[float], pct: float) -> float:
@@ -73,7 +71,7 @@ def main() -> None:
     sys.path.insert(0, ROOT)
     sys.path.insert(0, HERE)
     import golden as golden_mod
-    from workloads import WORKLOADS
+    from workloads import MIN_PASSES, WORKLOADS
 
     names = WORKLOADS[args.workload]
     goldens = golden_mod.load()["queries"]
@@ -145,16 +143,18 @@ def main() -> None:
     latencies: list[float] = []
     per_query: dict[str, list[float]] = {}
     traced_calls: list[dict] = []
-    call_s = {False: 0.0, True: 0.0}
-    call_n = {False: 0, True: 0}
+    # first two passes of a traced run: {traced: {query: seconds}}
+    paired: dict[bool, dict[str, float]] = {False: {}, True: {}}
     timed0 = time.monotonic()
     n_pass = 0
     while True:
         for name in rng.sample(names, len(names)):
-            # each query alternates traced / untraced from pass to pass, and
-            # half of the queries start traced: every query is timed both
-            # ways, balanced against passes still speeding up as the JIT warms
-            traced = bool(tracer) and (names.index(name) + n_pass) % 2 == 0
+            # in the first two passes half of the queries are traced in the
+            # first and the other half in the second: every query is timed
+            # once each way, balanced against passes still speeding up as
+            # the JIT warms.  Later passes are untraced.
+            traced = (bool(tracer) and n_pass < 2
+                      and (names.index(name) + n_pass) % 2 == 0)
             if tracer:
                 tracer.enabled = traced
             attempted += 1
@@ -179,8 +179,8 @@ def main() -> None:
             cache_events.clear()
             latencies.append(t2 - t0)
             per_query.setdefault(name, []).append(round(t2 - t0, 4))
-            call_s[traced] += t2 - t0
-            call_n[traced] += 1
+            if n_pass < 2:
+                paired[traced][name] = t2 - t0
             if traced:
                 jobs = tracer.new_jobs(sc)
                 traced_calls.append({
@@ -189,7 +189,7 @@ def main() -> None:
                 })
         n_pass += 1
         done = time.monotonic() - timed0 >= args.seconds
-        if done and n_pass >= MIN_PASSES:
+        if done and n_pass >= MIN_PASSES[args.workload]:
             break
     timed_s = time.monotonic() - timed0
 
@@ -219,10 +219,11 @@ def main() -> None:
             session_start_s=session_start_s, registry_load_s=registry_load_s)
         metrics = layer_metrics(tracer, traced_calls, sc.defaultParallelism,
                                 totals)
-        qps_plain = call_n[False] / call_s[False]
-        qps_traced = call_n[True] / call_s[True]
-        metrics["trace.overhead_pct"] = (
-            100.0 * (qps_plain - qps_traced) / qps_plain, "%")
+        both = paired[False].keys() & paired[True].keys()
+        plain_s = sum(paired[False][q] for q in both)
+        traced_s = sum(paired[True][q] for q in both)
+        # drop of calls per second of call time, same queries both ways
+        metrics["trace.overhead_pct"] = (100.0 * (1 - plain_s / traced_s), "%")
         result["metrics"] = metrics
         if args.spans:
             tracer.dump(args.spans)

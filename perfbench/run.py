@@ -38,6 +38,19 @@ WORKER_TIMEOUT_S = 165
 DRIVER_MEMORY = "3g"
 
 
+def task_slots() -> int:
+    """Spark task slots of the worker: half the cores, at least one.
+
+    The other half is left to what runs beside the tasks: the JIT compiler
+    and GC threads (busy for many passes), the Python driver and the Python
+    UDF workers.  With every core given to tasks those compete with them and
+    with the machine's other tenants, and a run's speed varies with how they
+    happen to interleave.  At sf0.1 a call keeps about two cores busy either
+    way, so its latency does not change.
+    """
+    return max(1, len(os.sched_getaffinity(0)) // 2)
+
+
 def _data_dir(work: str) -> str:
     """Input tables for this ``datagen.py``, generated once per checkout."""
     digest = golden.datagen_digest()
@@ -111,7 +124,7 @@ def main() -> int:
     env.update(
         TMPDIR=os.path.join(scratch, "tmp"),
         SPARK_LOCAL_DIRS=os.path.join(scratch, "local"),
-        SPARK_GRAFT_CPUS=str(len(os.sched_getaffinity(0))),
+        SPARK_GRAFT_CPUS=str(task_slots()),
         SPARK_DRIVER_MEMORY=DRIVER_MEMORY,
         # keep the JVM's temp files (and no hsperfdata) inside the root too
         JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={os.path.join(scratch, 'tmp')}"

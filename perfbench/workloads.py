@@ -1,8 +1,7 @@
 """The benchmark's workloads: which registered queries one pass calls.
 
 Every pass calls each query of its workload once, in an order drawn from
-``--seed``.  Both lists have seven queries, an odd count: the calls of the
-fourth fastest query hold the median, not the gap between two queries.
+``--seed``.
 """
 
 from __future__ import annotations

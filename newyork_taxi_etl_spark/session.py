@@ -59,19 +59,25 @@ def tune(spark: SparkSession) -> SparkSession:
     The flag lives on the instance (not an id() set — CPython reuses ids
     after GC), so a fresh vanilla session is still tuned on first use;
     scoped-conf helpers restore values in ``finally`` and never leave a
-    tuned session de-tuned."""
+    tuned session de-tuned.  The flag is set only when every conf was
+    applied, so a partly tuned session is retried on its next call.
+
+    Contract for driver-provided sessions: once tuned, nothing outside the
+    engine's restoring helpers may change a ``DYNAMIC_CONFS`` key."""
     if getattr(spark, "_nyetl_tuned", False):
         return spark
+    all_set = True
     for k, v in DYNAMIC_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             # Some confs may be static on exotic deployments; best effort.
-            pass
-    try:
-        spark._nyetl_tuned = True
-    except Exception:
-        pass  # exotic session proxies that reject attributes: stay untuned
+            all_set = False
+    if all_set:
+        try:
+            spark._nyetl_tuned = True
+        except Exception:
+            pass  # exotic session proxies that reject attributes: stay untuned
     return spark
 
 

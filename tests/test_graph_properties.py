@@ -4,10 +4,7 @@
   edge set (not just the planted shapes in test_graph.py);
 * salted_join must be row-identical to the plain inner join for ANY data
   and any salt width (salting may only change the physical shuffle, never
-  the result);
-* registration order must keep the families the driver's round-1
-  correctness pass never reached at the FRONT (the rotation lever of
-  VERDICT r1 item 1 — a regression here silently re-starves them).
+  the result).
 
 One Hypothesis example = one Spark job; max_examples stays small.
 """
@@ -94,96 +91,6 @@ def test_salted_join_equals_plain_join(spark, left, right):
         .collect()
     )
     assert salted == plain
-
-
-def test_registration_order_is_tiered_by_driver_verdict():
-    """The driver's correctness pass truncates at 50 queries in registration
-    order; rotation is QUERY-granular since round 3. Tier rule (no hard
-    counts — the per-round _R*_VERIFIED sets are the source of truth):
-    never-verified queries lead (tier 0), changed-since-verify next (1),
-    then standing verdicts oldest-round-first — a latest-round-N verdict
-    maps to tier N+1, so a hypothetical round-1-only name would rank ahead
-    of round-2 names rather than colliding with tier 1.  Round 13: every
-    registered query holds a green verdict and round 12 re-verified all 17
-    changed names, so the window is (new registrations +
-    changed-since-verify) followed by the stalest standing verdicts —
-    since round 16 the round-6-latest cohort (tier 7; the r5 tail was
-    retired in round 15).  Round 16 registers no new queries; its head
-    is the 31 plan-restructured names queued for re-verification."""
-    from newyork_taxi_etl_spark import registry
-
-    names = list(registry.queries())
-    tiers = [registry._tier(n) for n in names]
-    assert tiers == sorted(tiers), "registry not ordered by verification tier"
-    window = names[:50]
-    # every never-verified and changed-since-verify query MUST be inside
-    # the 50-query window
-    for n in names:
-        if registry._tier(n) in (0, 1):
-            assert n in window, n
-    # keep the head small enough that stale standing verdicts keep rotating
-    n_head = sum(1 for t in tiers if t in (0, 1))
-    assert n_head <= 46, f"tier-0/1 head too large ({n_head}): stale cohort pushed out"
-    for probe, want in (
-        ("text_stats", 7),                                     # r6-latest
-        ("batch_sessionize", 8), ("exact_n_sample", 8),        # r7-latest
-        ("window_running_sum", 8),
-        ("streaming_quantile_sketch", 9),                      # r8-reverified
-        ("compliance_delete_rewrite", 9),                      # r8-reverified
-        ("grouped_percentiles", 9), ("grouped_moment_stats", 9),  # r8-latest
-        ("langid_confusion", 10),              # r9-latest
-        ("freq_tokens_cms", 11),               # r10-reverified (was r3-latest)
-        ("bpe_merge_loop", 11),                # r10-reverified: shared trainer
-        ("knn_label_accuracy", 11),            # r10-reverified: spread + cache
-        ("corpus_shard_export", 12),      # r11-reverified: commutative checksum
-        ("training_shard_assignment", 12), # r11-reverified: min-3 fingerprint
-        ("zipf_token_slope", 13),      # r12-reverified: ordered_positions rank
-        ("wordpiece_merge_loop", 13),  # r12-reverified: log-domain score
-        ("ann_recall_sq8", 13),        # r12-reverified: shared-helper refactor
-        ("dsir_importance_select", 13),  # r12-reverified: shared-stage refactor
-        ("readability_scores", 13),             # r12 session 2, verified r12
-        ("pagerank_source_lang", 14),  # r13-reverified (was the r4 tail)
-        ("bm25_rank", 14),             # r13-reverified (was the r4 tail)
-        ("heaps_law_exponent", 14),    # r13-reverified: decile align
-        ("bytebpe_merge_loop", 14),             # r13 new, verified r13
-        ("smoothing_holdout_nll", 14),          # r13 new, verified r13
-        ("streaming_doremi_ingest", 14),        # r13 new, verified r13
-        ("profile_nulls", 15), ("summary_stats", 15),  # r14-reverified core
-        ("quality_auc_rank", 15),          # r14-reverified: cached weights
-        ("curriculum_quality_stages", 15),  # r14-reverified: cached weights
-        ("gram_subspace_topk", 15),     # r14-reverified: driver-side fold
-        ("ann_recall_ivfpq", 15),       # r14-reverified: stage-cached index
-        ("ann_opq_trained_recall", 15),  # r14-reverified: cached rotation
-        ("ann_pq_rotated_recall", 15),   # r14-reverified: family-cached legs
-        ("quality_distillation_audit", 15),     # r14 new, verified r14
-        ("bloom_prefilter_orders", 16),  # r5-latest tail, retired r15
-        ("cdc_merge_apply", 16), ("bracket_discount_revenue", 16),
-        ("local_supplier_volume", 16),
-        ("sequence_pack_bestfit", 16),  # r15-changed, re-verified r15
-        ("packing_budget_curve", 16),
-        ("dedup_bloom_gate", 16),
-        ("streaming_bloom_gate_ingest", 16),
-        ("dedup_multimodal_phash", 16),
-        ("kll_quantile_sketch", 16),            # r15 new, verified r15
-        ("streaming_kll_ingest", 16),           # r15 new, verified r15
-        ("dedup_multimodal_phash_dct", 16),     # r15 new, verified r15
-        # r16 plan restructures queued for driver re-verification:
-        ("semantic_dedup_kmeans", 1),    # broadcast pair join (was r15 tier)
-        ("tokenizer_family_bakeoff", 1),  # cached holdout tables (r15 new)
-        ("ccnet_kn_bucket_agreement", 1),  # cached KN doc scores
-        ("bigram_lm_compare", 1), ("kneser_ney_lm_compare", 1),
-        ("char_coverage_budget", 1),     # cached alphabet counts
-        ("dedup_clusters", 1),           # cached multiband pairs/components
-        ("linkage_quality_gate", 1),     # cached scored linkage pairs
-        ("join_auto_dispatch", 1),       # cached decision table
-        ("jl_projection_distortion", 1),  # literal sign matrix
-        ("dedup_exact_substring", 1),    # shared diagonal-run stage
-        ("streaming_lsh_index_dedup", 1),  # cached staged source
-        ("streaming_dsir_ingest", 1),      # cached model + staged source
-        ("streaming_char_coverage_ingest", 1),
-        ("streaming_ann_ingest", 1),       # cached trained snapshot
-    ):
-        assert registry._tier(probe) == want, probe
 
 
 def test_triangle_count_matches_bruteforce(spark):

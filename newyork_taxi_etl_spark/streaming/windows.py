@@ -3,8 +3,17 @@ reference — time-series behavior there is plain timestamp columns).
 
 The same ``F.window``/``F.session_window`` expressions work in batch and in
 Structured Streaming; batch mode is what the DuckDB oracle checks, streaming
-mode is exercised via ``run_stream_availablenow`` (readStream → watermark →
-windowed agg → memory sink).
+mode is exercised by the ``run_*`` drains below.
+
+Every drain takes one path: the runner stages its input as parquet,
+``_stream_stage`` opens the file stream over it, the runner shapes the
+streaming plan, and ``_run_drain`` runs it with ``Trigger.AvailableNow`` under
+a scoped ``spark.sql.shuffle.partitions``, waits for it through ``_drain``
+(stop and raise ``TimeoutError`` after ``_DRAIN_TIMEOUT_S``), and either
+returns the memory sink's rows or leaves the result in the ``foreachBatch``
+fold's parquet state.  Checkpoints are Spark's temporary ones, deleted on a
+clean stop; only ``run_checkpoint_recovery`` names its own, since a restart
+from it is what that runner proves.
 
 Scale notes: tumbling/sliding windows are hash aggregates on (window, key) —
 partial aggregation applies; session windows require a per-key sort (Spark
@@ -129,18 +138,71 @@ def _recover_dir(target_dir: str) -> None:
         os.rename(tomb, target_dir)
 
 
-def _drain(q, timeout_sec: int) -> None:
+#: how long any AvailableNow drain may run before it is stopped and raises
+_DRAIN_TIMEOUT_S = 180
+
+
+def _drain(q) -> None:
     """Await an AvailableNow drain; fail loudly on timeout.
 
     ``awaitTermination(timeout)`` returns False (it does NOT raise) if the
     query is still running — reading the sink at that point would silently
     return partial results.
     """
-    if not q.awaitTermination(timeout_sec):
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
         q.stop()
         raise TimeoutError(
-            f"streaming drain did not finish within {timeout_sec}s"
+            f"streaming drain did not finish within {_DRAIN_TIMEOUT_S}s"
         )
+
+
+def _stream_stage(spark, schema, path: str, max_files=None) -> DataFrame:
+    """Parquet file stream over the staged directory ``path``;
+    ``max_files`` sets ``maxFilesPerTrigger`` so a multi-file stage drains
+    as that many micro-batches."""
+    reader = spark.readStream.schema(schema).format("parquet")
+    reader = reader.option("path", path)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.load()
+
+
+def _run_drain(df, partitions: int, sink, mode=None, checkpoint=None):
+    """Drain the streaming ``df`` to completion with Trigger.AvailableNow.
+
+    ``partitions`` scopes ``spark.sql.shuffle.partitions`` (and so the
+    state-store partition count) to this run.  ``sink`` is ``"memory"`` or
+    a ``foreachBatch`` function; ``mode`` is the output mode (Spark's
+    default when None); ``checkpoint`` is a fixed checkpoint location (a
+    temporary one, deleted on a clean stop, when None).
+
+    A memory sink returns its rows as a DataFrame.  Its temp view is
+    dropped before returning, also when the drain fails, so a long-lived
+    session does not gain one view per call: classic Spark analyses
+    ``spark.table`` eagerly, so the returned DataFrame holds the sink's
+    plan, not its name.
+    """
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
+    writer = df.writeStream
+    if sink == "memory":
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(sink)
+    if mode is not None:
+        writer = writer.outputMode(mode)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    try:
+        with _scoped_conf(
+            spark, "spark.sql.shuffle.partitions", str(partitions)
+        ):
+            _drain(writer.trigger(availableNow=True).start())
+        if sink == "memory":
+            return spark.table(name)
+    finally:
+        if sink == "memory":
+            spark.catalog.dropTempView(name)
 
 
 #: per-process stage-cache namespace token (see _stage_cache_dir)
@@ -440,29 +502,14 @@ def run_stream_availablenow(
     read_events); the staged copy has the repaired schema.
     """
     src_df.write.mode("overwrite").parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir)
     agg = (
         stream.withWatermark(ts, watermark)
         .groupBy(F.window(ts, dur).alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w.start").alias("w_start"), "cnt")
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 120)
-    return spark.table(name).orderBy("w_start")
+    return _run_drain(agg, 8, "memory", "complete").orderBy("w_start")
 
 
 def run_streaming_dedup(
@@ -492,24 +539,10 @@ def run_streaming_dedup(
     keys = keys or ["user_id", ts]
     doubled = src_df.unionAll(src_df)
     doubled.write.mode("overwrite").parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir)
     deduped = stream.withWatermark(ts, watermark).dropDuplicatesWithinWatermark(keys)
-    name = f"dedup_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 120)
-    return spark.table(name).agg(F.count(F.lit(1)).alias("n"))
+    out = _run_drain(deduped, 8, "memory", "append")
+    return out.agg(F.count(F.lit(1)).alias("n"))
 
 
 def run_stateful_user_stats(
@@ -536,12 +569,7 @@ def run_stateful_user_stats(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     src_df.write.mode("overwrite").parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir)
 
     def update_fn(key_tuple, pdf_iter, state):
         n, mx = state.get if state.exists else (0, None)
@@ -562,18 +590,8 @@ def run_stateful_user_stats(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stateful_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            stats.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 120)
     return (
-        spark.table(name)
+        _run_drain(stats, 8, "memory", "update")
         .groupBy(key)
         .agg(
             F.max("n_events").alias("n_events"),
@@ -601,17 +619,8 @@ def run_stream_stream_join(
     out-of-order SLA and state stays O(rows inside the horizon).
     """
     src_df.write.mode("overwrite").parquet(stage_dir)
-
-    def _stream():
-        return (
-            spark.readStream.schema(src_df.schema)
-            .format("parquet")
-            .option("path", stage_dir)
-            .load()
-        )
-
     purchases = (
-        _stream()
+        _stream_stage(spark, src_df.schema, stage_dir)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", watermark)
         .select(
@@ -621,7 +630,7 @@ def run_stream_stream_join(
         )
     )
     clicks = (
-        _stream()
+        _stream_stage(spark, src_df.schema, stage_dir)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", watermark)
         .select(
@@ -637,18 +646,8 @@ def run_stream_stream_join(
             "c_ts >= p_ts - INTERVAL 30 MINUTES AND c_ts <= p_ts"
         ),
     )
-    name = f"ssjoin_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 120)
     return (
-        spark.table(name)
+        _run_drain(joined, 8, "memory", "append")
         .groupBy(F.col("p_user").alias("user_id"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
         .orderBy("user_id")
@@ -676,7 +675,6 @@ def run_foreachbatch_upsert(
     result — the same mergeability argument that makes map-side partial
     aggregation correct.
     """
-    import os
     import shutil
 
     # read-only stage shared build-once via the r12 _stage_cached
@@ -690,27 +688,8 @@ def run_foreachbatch_upsert(
         .parquet(target),
     )
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
-
-    upsert = _upsert_counts_fn(target_dir)
-
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option(
-                "checkpointLocation",
-                stage_dir + f"_ckpt_{uuid.uuid4().hex[:8]}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 180)
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
+    _run_drain(stream, 8, _upsert_counts_fn(target_dir))
     return (
         spark.read.parquet(target_dir)
         .select(
@@ -742,7 +721,6 @@ def run_upsert_replay_proof(
     real batch): dedup keys on batch_id alone, exactly like Delta's
     txnAppId/txnVersion, never on payload equality.
     """
-    import os
     import shutil
 
     # same read-only stage (and cache key) as run_foreachbatch_upsert —
@@ -755,25 +733,9 @@ def run_upsert_replay_proof(
         .parquet(target),
     )
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     upsert = _upsert_counts_fn(target_dir)
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option(
-                "checkpointLocation",
-                stage_dir + f"_ckpt_{uuid.uuid4().hex[:8]}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 180)
+    _run_drain(stream, 8, upsert)
 
     applied = _applied_batch_ids(target_dir)
     if not applied:
@@ -817,25 +779,10 @@ def run_streaming_cms(
     from newyork_taxi_etl_spark.operators.sketch import cms_counters
 
     src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", "1")
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     counters = cms_counters(stream, col, depth, width)
-    name = f"cms_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            counters.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 120)
-    return spark.table(name).orderBy("j", "bucket")
+    out = _run_drain(counters, 8, "memory", "complete")
+    return out.orderBy("j", "bucket")
 
 
 def run_stream_static_enrich(
@@ -843,7 +790,6 @@ def run_stream_static_enrich(
     src_df: DataFrame,
     dim_df: DataFrame,
     stage_dir: str,
-    timeout_sec: int = 120,
 ) -> DataFrame:
     """Stream-static broadcast enrich: the most common production
     streaming shape (facts stream in, a small dimension table sits
@@ -853,15 +799,8 @@ def run_stream_static_enrich(
     complete mode. The static side is planned ONCE; state is bounded by
     the dimension-key cardinality.
     """
-    import uuid as _uuid
-
     src_df.write.mode("overwrite").parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir)
     enriched = stream.withColumn(
         "nk", F.pmod(F.col("user_id"), F.lit(25))
     ).join(F.broadcast(dim_df), F.col("nk") == F.col("n_nationkey"))
@@ -871,18 +810,8 @@ def run_stream_static_enrich(
         .cast("double")
         .alias("sum_value"),
     )
-    name = f"stream_enrich_{_uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
     return (
-        spark.table(name)
+        _run_drain(agg, 8, "memory", "complete")
         .select(
             "n_name", "cnt", F.round(F.col("sum_value"), 4).alias("sum_value")
         )
@@ -896,7 +825,6 @@ def run_streaming_decayed_scores(
     ref_df: DataFrame,
     stage_dir: str,
     lam: float = 0.01,
-    timeout_sec: int = 120,
 ) -> DataFrame:
     """Streaming exponential-decay scores, bit-identical to the batch twin.
 
@@ -912,16 +840,8 @@ def run_streaming_decayed_scores(
     multiplies every score by one constant). ``maxFilesPerTrigger=1`` over
     a 4-file stage forces a real multi-batch drain.
     """
-    import uuid as _uuid
-
     src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", "1")
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     ref = ref_df.withColumn("one", F.lit(1))
     age_h = (F.unix_micros("mx_ts") - F.unix_micros("ts")) / F.lit(
         3600000000.0
@@ -940,18 +860,8 @@ def run_streaming_decayed_scores(
         .cast("double")
         .alias("decayed_score"),
     )
-    name = f"decay_out_{_uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
     return (
-        spark.table(name)
+        _run_drain(agg, 8, "memory", "complete")
         .select(
             "event_type",
             "n_events",
@@ -967,7 +877,6 @@ def run_streaming_decay_rescale(
     stage_dir: str,
     target_dir: str,
     lam: float = 0.01,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Exp-decay scores against a MOVING reference: ``foreachBatch`` state
     rescale (the production pattern ``run_streaming_decayed_scores``
@@ -999,13 +908,7 @@ def run_streaming_decay_rescale(
 
     src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     us_h = 3600000000.0  # microseconds per hour
 
     def rescale_merge(batch_df, batch_id):
@@ -1091,17 +994,7 @@ def run_streaming_decay_rescale(
         _mark_applied(nxt, batch_id, applied)  # commits atomically with swap
         _swap_dir(nxt, target_dir)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            stream.writeStream.foreachBatch(rescale_merge)
-            .option(
-                "checkpointLocation",
-                stage_dir + f"_ckpt_{uuid.uuid4().hex[:8]}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 8, rescale_merge)
     return (
         spark.read.parquet(target_dir)
         .select(
@@ -1122,7 +1015,6 @@ def run_streaming_lsh_index(
     k: int = 4,
     rows_per_band: int = 2,
     max_band_size: int = 64,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """Incremental MinHash-LSH dedup index via ``foreachBatch`` — dedup a
@@ -1169,13 +1061,7 @@ def run_streaming_lsh_index(
     stage_dir = _stage_cached(stage_dir, cache_key, _build_stage)
     shutil.rmtree(index_dir, ignore_errors=True)
     shutil.rmtree(pairs_dir, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(docs_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, docs_df.schema, stage_dir, 1)
 
     def fold(batch_df, batch_id):
         applied = _applied_batch_ids(index_dir)
@@ -1236,17 +1122,7 @@ def run_streaming_lsh_index(
         # window; on plain parquet this narrows it to the mark write.
         _mark_applied(index_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option(
-                "checkpointLocation",
-                stage_dir + f"_ckpt_{uuid.uuid4().hex[:8]}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 8, fold)
     return (
         spark.read.schema("id_a long, id_b long")
         .parquet(pairs_dir)
@@ -1260,7 +1136,6 @@ def run_stream_stream_outer_join(
     src_df: DataFrame,
     stage_dir: str,
     watermark: str = "1 hour",
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER join — the null-emission
@@ -1310,17 +1185,8 @@ def run_stream_stream_outer_join(
         sentinel_fn=_sentinels,
         cache_key=cache_key,
     )
-    def _stream():
-        return (
-            spark.readStream.schema(src_df.schema)
-            .format("parquet")
-            .option("path", stage_dir)
-            .option("maxFilesPerTrigger", 1)
-            .load()
-        )
-
     purchases = (
-        _stream()
+        _stream_stage(spark, src_df.schema, stage_dir, 1)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", watermark)
         .select(
@@ -1330,7 +1196,7 @@ def run_stream_stream_outer_join(
         )
     )
     clicks = (
-        _stream()
+        _stream_stage(spark, src_df.schema, stage_dir, 1)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", watermark)
         .select(
@@ -1347,21 +1213,11 @@ def run_stream_stream_outer_join(
         ),
         "leftOuter",
     )
-    name = f"ssouter_out_{uuid.uuid4().hex[:8]}"
     # 4 state partitions: stream-stream join state is tiny here and each
     # micro-batch pays per-partition state-store open/commit — fewer, fuller
     # stores beat 8 near-empty ones (same knob a real job sizes to load)
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
     return (
-        spark.table(name)
+        _run_drain(joined, 4, "memory", "append")
         .filter(F.col("p_user") >= 0)
         .groupBy(F.col("p_user").alias("user_id"))
         .agg(
@@ -1380,7 +1236,6 @@ def run_stream_stream_two_sided_outer(
     stage_dir: str,
     join_type: str,
     watermark: str = "1 hour",
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """Watermarked stream-stream FULL OUTER / RIGHT OUTER join — completes
@@ -1416,18 +1271,8 @@ def run_stream_stream_two_sided_outer(
         sentinel_fn=_sentinels,
         cache_key=cache_key,
     )
-
-    def _stream():
-        return (
-            spark.readStream.schema(src_df.schema)
-            .format("parquet")
-            .option("path", stage_dir)
-            .option("maxFilesPerTrigger", 1)
-            .load()
-        )
-
     purchases = (
-        _stream()
+        _stream_stage(spark, src_df.schema, stage_dir, 1)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", watermark)
         .select(
@@ -1437,7 +1282,7 @@ def run_stream_stream_two_sided_outer(
         )
     )
     clicks = (
-        _stream()
+        _stream_stage(spark, src_df.schema, stage_dir, 1)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", watermark)
         .select(
@@ -1454,21 +1299,11 @@ def run_stream_stream_two_sided_outer(
         ),
         join_type,
     )
-    name = f"ss2outer_out_{uuid.uuid4().hex[:8]}"
     # 4 state partitions — see run_stream_stream_outer_join
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    out = _run_drain(joined, 4, "memory", "append")
     uid = F.coalesce(F.col("p_user"), F.col("c_user"))
     return (
-        spark.table(name)
-        .filter(uid >= 0)  # sentinels match only themselves; drop them
+        out.filter(uid >= 0)  # sentinels match only themselves; drop them
         .groupBy(uid.alias("user_id"))
         .agg(
             F.count(F.when(F.col("purchase_id").isNotNull()
@@ -1487,7 +1322,6 @@ def run_transform_with_state_stats(
     spark,
     src_df: DataFrame,
     stage_dir: str,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Per-user running stats via ``transformWithStateInPandas`` — the
     Spark 4 arbitrary-state API (SPARK-40434 successor): explicit
@@ -1543,40 +1377,25 @@ def run_transform_with_state_stats(
             pass
 
     src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     stats = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=RunningStats(),
         outputStructType="user_id bigint, n_events bigint, total_value double",
         outputMode="Update",
         timeMode="None",
     )
-    name = f"tws_out_{uuid.uuid4().hex[:8]}"
     # transformWithState requires the RocksDB state store provider (the
     # default HDFS-backed store does not implement the new API's
     # multi-state/TTL surface) — scoped, like the partition-count conf
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"), _scoped_conf(
+    with _scoped_conf(
         spark,
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     ):
-        q = (
-            stats.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+        out = _run_drain(stats, 8, "memory", "update")
     last = F.max(F.struct("n_events", "total_value")).alias("m")
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        out.groupBy("user_id")
         .agg(last)
         .select(
             "user_id",
@@ -1683,21 +1502,8 @@ def run_checkpoint_recovery(
 
     def drain_phase(half_df, mode):
         half_df.repartition(4).write.mode(mode).parquet(stage_dir)
-        stream = (
-            spark.readStream.schema(src_df.schema)
-            .format("parquet")
-            .option("path", stage_dir)
-            .option("maxFilesPerTrigger", 1)
-            .load()
-        )
-        with _scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-            q = (
-                stream.writeStream.foreachBatch(upsert)
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q, 180)
+        stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
+        _run_drain(stream, 8, upsert, checkpoint=ckpt_dir)
 
     drain_phase(half1, "overwrite")   # phase 1: first half, fresh checkpoint
     drain_phase(half2, "append")      # phase 2: RESTART, same checkpoint —
@@ -1721,7 +1527,6 @@ def run_streaming_quantile_sketch(
     lo: float = 0.0,
     hi: float = 512.0,
     nb: int = 256,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Mergeable QUANTILE SKETCH folded at ingest: per micro-batch, the
     256-bucket FIXED-BOUND equi-width histogram of ``value`` is merged
@@ -1744,13 +1549,7 @@ def run_streaming_quantile_sketch(
 
     src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     w = (hi - lo) / nb
     # Clamped on BOTH ends: values >= hi land in the last bucket, values
     # below lo in bucket 0 (without the lower clamp a value < lo would
@@ -1793,13 +1592,7 @@ def run_streaming_quantile_sketch(
         _mark_applied(nxt, batch_id, applied)
         _swap_dir(nxt, target_dir)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 4, fold)
 
     from pyspark.sql.window import Window
 
@@ -1841,7 +1634,6 @@ def run_streaming_session_close(
     stage_dir: str,
     gap: str = "30 minutes",
     watermark: str = "1 hour",
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """Streamed SESSION WINDOWS with real closure semantics (append mode):
@@ -1876,13 +1668,7 @@ def run_streaming_session_close(
         cache_key=cache_key,
     )
 
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     sessions = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.col("user_id"), F.session_window("ts", gap).alias("w"))
@@ -1893,18 +1679,8 @@ def run_streaming_session_close(
             "n_events",
         )
     )
-    name = f"sessclose_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
     return (
-        spark.table(name)
+        _run_drain(sessions, 4, "memory", "append")
         .filter(F.col("user_id") >= 0)
         .orderBy("user_id", "session_start")
     )
@@ -1916,7 +1692,6 @@ def run_streaming_cdc_apply(
     cdc_df: DataFrame,
     stage_dir: str,
     target_dir: str,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Streaming CDC APPLY (the Debezium-consumer pattern): a change feed
     with per-row ops — ``U`` (new value) / ``D`` (tombstone) — drains as
@@ -1939,13 +1714,7 @@ def run_streaming_cdc_apply(
     shutil.rmtree(target_dir, ignore_errors=True)
     shutil.copytree(target_dir + "_base", target_dir)
     cdc_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(cdc_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, cdc_df.schema, stage_dir, 1)
 
     def apply_batch(batch_df, batch_id):
         applied = _applied_batch_ids(target_dir)
@@ -1973,13 +1742,7 @@ def run_streaming_cdc_apply(
         _mark_applied(nxt, batch_id, applied)
         _swap_dir(nxt, target_dir)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 4, apply_batch)
     final = spark.read.parquet(target_dir)
     return final.agg(
         F.count(F.lit(1)).cast("bigint").alias("rows_after"),
@@ -1995,7 +1758,6 @@ def run_streaming_late_drop(
     src_df: DataFrame,
     stage_dir: str,
     watermark: str = "1 hour",
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """Watermark LATE-DATA DROP accounting — the streaming semantic every
@@ -2093,32 +1855,16 @@ def run_streaming_late_drop(
 
     stage_dir = _stage_cached(stage_dir, cache_key, build)
 
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    name = f"latedrop_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    drained = _run_drain(agg, 4, "memory", "append")
     total = src_df.count()
     out = (
-        spark.table(name)
-        .filter(F.col("w.start") <= F.lit(mx))  # drop the sentinel window
+        drained.filter(F.col("w.start") <= F.lit(mx))  # not the sentinel's
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_windows"),
             F.sum("cnt").cast("bigint").alias("events_emitted"),
@@ -2140,7 +1886,6 @@ def run_streaming_linkage_ingest(
     threshold: float = 0.15,
     max_df_frac: float = 0.10,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """Record LINKAGE AT INGEST: incoming records stream in micro-batches
@@ -2218,13 +1963,7 @@ def run_streaming_linkage_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema(b_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, b_df.schema, stage_dir, 1)
 
     def link_batch(batch_df, batch_id):
         applied = _applied_batch_ids(target_dir)
@@ -2270,13 +2009,7 @@ def run_streaming_linkage_ingest(
         best.write.mode("append").parquet(target_dir)
         _mark_applied(target_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(link_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, link_batch)
 
     out = spark.read.parquet(target_dir)
     return out.select(
@@ -2293,7 +2026,6 @@ def run_streaming_reservoir_sample(
     stage_dir: str,
     target_dir: str,
     k: int = 64,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Bounded UNIFORM SAMPLE maintained at ingest: the deterministic
     distributed reservoir (keep the k smallest md5(event_id) ranks)
@@ -2315,13 +2047,7 @@ def run_streaming_reservoir_sample(
 
     src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
 
     def fold(batch_df, batch_id):
         ss = batch_df.sparkSession
@@ -2338,13 +2064,7 @@ def run_streaming_reservoir_sample(
         cand.write.mode("overwrite").parquet(nxt)
         _swap_dir(nxt, target_dir)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 4, fold)
 
     from pyspark.sql import Window
 
@@ -2367,7 +2087,6 @@ def run_streaming_group_reservoir(
     stage_dir: str,
     target_dir: str,
     k: int = 8,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Per-GROUP bounded uniform sample maintained at ingest: the
     k-smallest-md5-rank reservoir of run_streaming_reservoir_sample,
@@ -2384,13 +2103,7 @@ def run_streaming_group_reservoir(
 
     src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(src_df.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     w = Window.partitionBy("event_type").orderBy("h", "event_id")
 
     def topk(df):
@@ -2416,13 +2129,7 @@ def run_streaming_group_reservoir(
         cand.write.mode("overwrite").parquet(nxt)
         _swap_dir(nxt, target_dir)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 4, fold)
 
     out = spark.read.parquet(target_dir)
     return (
@@ -2437,7 +2144,6 @@ def run_streaming_ann_ingest(
     emb_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """VECTOR APPENDS AT INGEST against a persisted IVF index — the
@@ -2533,13 +2239,7 @@ def run_streaming_ann_ingest(
         os.makedirs(idx_root, exist_ok=True)
         shutil.move(os.path.join(work_dir, "assignments"), assign_dir)
         shutil.move(os.path.join(work_dir, "centroids"), cent_dir)
-    stream = (
-        spark.readStream.schema(arriving.drop("_v").schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, arriving.drop("_v").schema, stage_dir, 1)
 
     def append_batch(batch_df, batch_id):
         applied = _applied_batch_ids(assign_dir)
@@ -2571,13 +2271,7 @@ def run_streaming_ann_ingest(
         )
         _mark_applied(assign_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(append_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, append_batch)
 
     # -- probe the drained table, partition-pruned ----------------------
     cent_t = spark.read.parquet(cent_dir)
@@ -2627,7 +2321,6 @@ def run_streaming_quality_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """QUALITY GATING AT INGEST with a PERSISTED learned scorer — the
@@ -2697,13 +2390,7 @@ def run_streaming_quality_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
     def score_batch(batch_df, batch_id):
         applied = _applied_batch_ids(target_dir)
@@ -2735,13 +2422,7 @@ def run_streaming_quality_ingest(
         scored.write.mode("append").parquet(target_dir)
         _mark_applied(target_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(score_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, score_batch)
 
     out = spark.read.parquet(target_dir)
     n = F.count(F.lit(1))
@@ -2763,7 +2444,6 @@ def run_streaming_w1_ingest(
     events_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """WASSERSTEIN-1 DRIFT MONITORED AT INGEST — the drift monitor teams
@@ -2826,13 +2506,7 @@ def run_streaming_w1_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema("v bigint")
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, "v bigint", stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(counts_dir)
@@ -2845,13 +2519,7 @@ def run_streaming_w1_ingest(
         part.write.mode("append").parquet(counts_dir)
         _mark_applied(counts_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     ca = spark.read.parquet(baseline_dir)
     cb = (
@@ -2875,7 +2543,6 @@ def run_streaming_mmd_ingest(
     emb_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """MOMENT-KERNEL MMD DRIFT MONITORED AT INGEST — the kernel twin of
@@ -2914,14 +2581,8 @@ def run_streaming_mmd_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema(
-            "vec_id bigint, label int, embedding array<float>"
-        )
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
+    stream = _stream_stage(
+        spark, "vec_id bigint, label int, embedding array<float>", stage_dir, 1
     )
 
     def fold_batch(batch_df, batch_id):
@@ -2944,13 +2605,7 @@ def run_streaming_mmd_ingest(
         par.unionByName(lab).write.mode("append").parquet(state_dir)
         _mark_applied(state_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     state = spark.read.parquet(state_dir)
     out = None
@@ -2967,7 +2622,6 @@ def run_streaming_psi_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """CALIBRATION-DRIFT (PSI) MONITORING AT INGEST — the fourth
@@ -3034,13 +2688,7 @@ def run_streaming_psi_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(counts_dir)
@@ -3060,13 +2708,7 @@ def run_streaming_psi_ingest(
         part.write.mode("append").parquet(counts_dir)
         _mark_applied(counts_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     counts = (
         spark.read.parquet(counts_dir)
@@ -3088,7 +2730,6 @@ def run_streaming_fm_ingest(
     spark,
     docs_df: DataFrame,
     work_dir: str,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """DISTINCT-TOKEN GROWTH CURVE AT INGEST via a LogLog sketch (Durand
@@ -3146,13 +2787,7 @@ def run_streaming_fm_ingest(
         stage_dir, cache_key and f"{cache_key}:fmstage3", _build_stage
     )
 
-    stream = (
-        spark.readStream.schema("text string")
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, "text string", stage_dir, 1)
 
     h2 = "(hv div 64)"
     rho = (
@@ -3185,13 +2820,7 @@ def run_streaming_fm_ingest(
         part.write.mode("append").parquet(state_dir)
         _mark_applied(state_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     state = spark.read.parquet(state_dir)
     prefixes = spark.range(1, 4).select(F.col("id").cast("int").alias("p"))
@@ -3243,7 +2872,6 @@ def run_streaming_dsir_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """DSIR SELECTION AT INGEST — the sixth build-once/apply-per-batch
@@ -3294,13 +2922,7 @@ def run_streaming_dsir_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(parts_dir)
@@ -3320,13 +2942,7 @@ def run_streaming_dsir_ingest(
         part.write.mode("append").parquet(parts_dir)
         _mark_applied(parts_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     agg = (
         spark.read.parquet(parts_dir)
@@ -3360,7 +2976,6 @@ def run_streaming_funnel_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """QUALITY-RULE FUNNEL AT INGEST — the seventh per-batch fold, and
     the first with NO build phase: every funnel column is a per-doc-
@@ -3385,13 +3000,7 @@ def run_streaming_funnel_ingest(
 
     staged = docs_df.select("doc_id", "n_chars", "text")
     staged.repartition(n_slices).write.parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(parts_dir)
@@ -3402,13 +3011,7 @@ def run_streaming_funnel_ingest(
         part.write.mode("append").parquet(parts_dir)
         _mark_applied(parts_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     counts = (
         spark.read.parquet(parts_dir)
@@ -3428,7 +3031,6 @@ def run_streaming_decon_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """SPAN-LEVEL DECONTAMINATION AT INGEST — the fifth
@@ -3484,13 +3086,7 @@ def run_streaming_decon_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, "doc_id bigint, text string", stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(runs_dir)
@@ -3505,13 +3101,7 @@ def run_streaming_decon_ingest(
         part.write.mode("append").parquet(runs_dir)
         _mark_applied(runs_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     return _decon_top(spark.read.parquet(runs_dir))
 
@@ -3521,7 +3111,6 @@ def run_streaming_char_coverage_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """CHARACTER-COVERAGE AT INGEST — the eighth per-batch fold, second
@@ -3558,13 +3147,7 @@ def run_streaming_char_coverage_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(parts_dir)
@@ -3575,13 +3158,7 @@ def run_streaming_char_coverage_ingest(
         part.write.mode("append").parquet(parts_dir)
         _mark_applied(parts_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     counts = (
         spark.read.parquet(parts_dir)
@@ -3596,7 +3173,6 @@ def run_streaming_heavy_hitters(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """PHI-HEAVY TOKENS AT INGEST — the ninth per-batch fold: each
     micro-batch reduces to its (token, count) integer partial, the
@@ -3621,13 +3197,7 @@ def run_streaming_heavy_hitters(
 
     staged = docs_df.select("doc_id", "text")
     staged.repartition(n_slices).write.parquet(stage_dir)
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(parts_dir)
@@ -3645,13 +3215,7 @@ def run_streaming_heavy_hitters(
         part.write.mode("append").parquet(parts_dir)
         _mark_applied(parts_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     counts = (
         spark.read.parquet(parts_dir)
@@ -3685,7 +3249,6 @@ def run_streaming_lcp_depth_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """SUFFIX-LCP REPETITION DEPTH AT INGEST — the tenth per-batch fold
@@ -3718,13 +3281,7 @@ def run_streaming_lcp_depth_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(parts_dir)
@@ -3735,13 +3292,7 @@ def run_streaming_lcp_depth_ingest(
         part.write.mode("append").parquet(parts_dir)
         _mark_applied(parts_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     folded = (
         spark.read.parquet(parts_dir)
@@ -3760,7 +3311,6 @@ def run_streaming_doremi_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """DoReMi-style domain reweighting AT INGEST — the eleventh
@@ -3789,13 +3339,7 @@ def run_streaming_doremi_ingest(
         .write.mode("overwrite")
         .parquet(target),
     )
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(parts_dir)
@@ -3806,13 +3350,7 @@ def run_streaming_doremi_ingest(
         part.write.mode("append").parquet(parts_dir)
         _mark_applied(parts_dir, batch_id, applied)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     folded = (
         spark.read.parquet(parts_dir)
@@ -3827,7 +3365,6 @@ def run_streaming_bloom_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """BLOOM-GATE DEDUP AT INGEST — the twelfth per-batch fold, and the
@@ -3897,13 +3434,7 @@ def run_streaming_bloom_ingest(
         build_stage,
     )
 
-    stream = (
-        spark.readStream.schema(d.schema)
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, d.schema, stage_dir, 1)
 
     pos_of = F.array(
         *[
@@ -4004,13 +3535,7 @@ def run_streaming_bloom_ingest(
         _mark_applied(nxt, batch_id, applied)
         _swap_dir(nxt, state_dir)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     flags = spark.read.parquet(os.path.join(state_dir, "decisions"))
     bits_n = (
@@ -4063,7 +3588,6 @@ def run_streaming_kll_ingest(
     docs_df: DataFrame,
     work_dir: str,
     n_slices: int = 3,
-    timeout_sec: int = 180,
     cache_key: str | None = None,
 ) -> DataFrame:
     """KLL QUANTILE SKETCH AT INGEST — the thirteenth per-batch fold:
@@ -4154,13 +3678,7 @@ def run_streaming_kll_ingest(
         build_stage,
     )
 
-    stream = (
-        spark.readStream.schema("doc_id bigint, val bigint")
-        .format("parquet")
-        .option("path", stage_dir)
-        .option("maxFilesPerTrigger", 1)
-        .load()
-    )
+    stream = _stream_stage(spark, "doc_id bigint, val bigint", stage_dir, 1)
 
     def fold_batch(batch_df, batch_id):
         applied = _applied_batch_ids(state_dir)
@@ -4241,13 +3759,7 @@ def run_streaming_kll_ingest(
         _mark_applied(nxt, batch_id, applied)
         _swap_dir(nxt, state_dir)
 
-    with _scoped_conf(spark, "spark.sql.shuffle.partitions", "16"):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, timeout_sec)
+    _run_drain(stream, 16, fold_batch)
 
     surv = spark.read.parquet(os.path.join(state_dir, "surv")).select(
         "doc_id", "val"

@@ -18,7 +18,8 @@ from tests.conftest import SF_SMOKE
 def test_recovery_equals_batch_and_fresh_ckpt_double_counts(spark):
     from newyork_taxi_etl_spark.sources.readers import read_events
     from newyork_taxi_etl_spark.streaming.windows import (
-        _drain,
+        _run_drain,
+        _stream_stage,
         _upsert_counts_fn,
         run_checkpoint_recovery,
     )
@@ -58,20 +59,12 @@ def test_recovery_equals_batch_and_fresh_ckpt_double_counts(spark):
         target = str(Path(d) / "target")
 
         def fresh_drain(ckpt_name):
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .format("parquet")
-                .option("path", stage)
-                .option("maxFilesPerTrigger", 1)
-                .load()
+            _run_drain(
+                _stream_stage(spark, ev.schema, stage, 1),
+                4,
+                _upsert_counts_fn(target),
+                checkpoint=str(Path(d) / ckpt_name),
             )
-            q = (
-                stream.writeStream.foreachBatch(_upsert_counts_fn(target))
-                .option("checkpointLocation", str(Path(d) / ckpt_name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q, 180)
             return {
                 r["user_id"]: r["n_events"]
                 for r in spark.read.parquet(target).collect()

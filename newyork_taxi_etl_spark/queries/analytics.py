@@ -18,7 +18,7 @@ from newyork_taxi_etl_spark.functions.exact import (
     sum_exact_sql,
 )
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import read_events, table_path
+from newyork_taxi_etl_spark.sources.readers import table
 
 _SLOT = SLOT_CASE_SQL.format(ts="ts")
 _DOW = DOW_SQL.format(ts="ts")
@@ -41,7 +41,7 @@ FLAG_IDS = [1, 13, 38]
     doc="A9 multi-agg by time-of-day slot + O1 sort (nb:117702 (c114)) — flagship",
 )
 def traffic_congestion(spark, sf_dir):
-    return ops.traffic_congestion(read_events(spark, sf_dir))
+    return ops.traffic_congestion(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -58,7 +58,7 @@ def traffic_congestion(spark, sf_dir):
     doc="A10 rounded aggs by (slot, day-of-week) (nb:121693 (c138))",
 )
 def value_by_slot_dow(spark, sf_dir):
-    return ops.value_by_slot_dow(read_events(spark, sf_dir))
+    return ops.value_by_slot_dow(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -75,7 +75,7 @@ def value_by_slot_dow(spark, sf_dir):
 )
 def rank_in_group(spark, sf_dir):
     return ops.rank_in_group(
-        spark.read.parquet(table_path(sf_dir, "lineitem")), "l_returnflag", "l_linestatus"
+        table(spark, sf_dir, "lineitem"), "l_returnflag", "l_linestatus"
     ).orderBy("l_returnflag", "rnk")
 
 
@@ -96,7 +96,7 @@ def rank_in_group(spark, sf_dir):
     doc="O3 top-k routes with concat_ws label (nb:122413 (c144))",
 )
 def top_routes(spark, sf_dir):
-    return ops.top_routes(read_events(spark, sf_dir))
+    return ops.top_routes(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -119,7 +119,7 @@ def top_routes(spark, sf_dir):
     "identical to top_routes, and the oracle is the same SQL",
 )
 def top_routes_salted(spark, sf_dir):
-    return ops.top_routes_salted(read_events(spark, sf_dir))
+    return ops.top_routes_salted(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -138,7 +138,7 @@ def top_routes_salted(spark, sf_dir):
 )
 def corr_by_group(spark, sf_dir):
     return ops.corr_by_group(
-        spark.read.parquet(table_path(sf_dir, "lineitem")),
+        table(spark, sf_dir, "lineitem"),
         "l_returnflag",
         "l_quantity",
         "l_extendedprice",
@@ -158,7 +158,7 @@ def corr_by_group(spark, sf_dir):
     doc="A8 avg by boolean membership flag (airport tip%% analog, nb:66529 (c105))",
 )
 def flag_split_stats(spark, sf_dir):
-    return ops.flag_split_stats(read_events(spark, sf_dir), FLAG_IDS)
+    return ops.flag_split_stats(table(spark, sf_dir, "events"), FLAG_IDS)
 
 
 @register(
@@ -176,7 +176,7 @@ def flag_split_stats(spark, sf_dir):
     doc="A10 multi-agg by derived trip_type (airport stats analog, nb:122693 (c147))",
 )
 def group_type_stats(spark, sf_dir):
-    return ops.group_type_stats(read_events(spark, sf_dir), FLAG_IDS)
+    return ops.group_type_stats(table(spark, sf_dir, "events"), FLAG_IDS)
 
 
 @register(
@@ -191,7 +191,7 @@ def group_type_stats(spark, sf_dir):
 )
 def count_nonnull_by_group(spark, sf_dir):
     return ops.count_nonnull_by_group(
-        spark.read.parquet(table_path(sf_dir, "orders")), "o_orderstatus", "o_custkey"
+        table(spark, sf_dir, "orders"), "o_orderstatus", "o_custkey"
     )
 
 
@@ -208,7 +208,7 @@ def count_nonnull_by_group(spark, sf_dir):
     doc="O2 global sort desc by aggregate expression (nb:122031 (c142))",
 )
 def congestion_sorted_desc(spark, sf_dir):
-    df = ops.traffic_congestion(read_events(spark, sf_dir))
+    df = ops.traffic_congestion(table(spark, sf_dir, "events"))
     return df.orderBy(F.desc("trip_count"))
 
 
@@ -221,7 +221,7 @@ def congestion_sorted_desc(spark, sf_dir):
 )
 def distinct_values(spark, sf_dir):
     return (
-        spark.read.parquet(table_path(sf_dir, "orders"))
+        table(spark, sf_dir, "orders")
         .select("o_orderpriority")
         .distinct()
         .orderBy("o_orderpriority")
@@ -253,7 +253,7 @@ def distinct_values(spark, sf_dir):
     "count within each decoded status — decode is a zero-shuffle projection",
 )
 def categorical_decode_rank(spark, sf_dir):
-    decoded = spark.read.parquet(table_path(sf_dir, "orders")).withColumn(
+    decoded = table(spark, sf_dir, "orders").withColumn(
         "status_name",
         F.when(F.col("o_orderstatus") == "O", "Open")
         .when(F.col("o_orderstatus") == "F", "Finished")
@@ -285,7 +285,7 @@ def categorical_decode_rank(spark, sf_dir):
 def rollup_slot_dow(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.datetime import time_of_day_slot
 
-    slotted = read_events(spark, sf_dir).select(
+    slotted = table(spark, sf_dir, "events").select(
         time_of_day_slot("ts").alias("time_of_day_slot"),
         F.dayofweek("ts").alias("day_of_week"),
         "value",
@@ -323,7 +323,7 @@ def rollup_slot_dow(spark, sf_dir):
 def cube_slot_dow(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.datetime import time_of_day_slot
 
-    slotted = read_events(spark, sf_dir).select(
+    slotted = table(spark, sf_dir, "events").select(
         time_of_day_slot("ts").alias("time_of_day_slot"),
         F.dayofweek("ts").alias("day_of_week"),
         "value",
@@ -366,7 +366,7 @@ def topn_per_group(spark, sf_dir):
 
     w = Window.partitionBy("lang").orderBy(F.desc("n_chars"), F.asc("doc_id"))
     return (
-        spark.read.parquet(table_path(sf_dir, "documents"))
+        table(spark, sf_dir, "documents")
         .select("lang", "doc_id", "n_chars")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
@@ -398,7 +398,7 @@ def topn_per_group(spark, sf_dir):
 def pivot_slot_by_type(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.datetime import time_of_day_slot
 
-    slotted = read_events(spark, sf_dir).select(
+    slotted = table(spark, sf_dir, "events").select(
         time_of_day_slot("ts").alias("time_of_day_slot"), "event_type"
     )
     return (
@@ -434,7 +434,7 @@ def pivot_slot_by_type(spark, sf_dir):
     "per-row double products, summed through decimal for order-independence",
 )
 def pricing_summary(spark, sf_dir):
-    li = spark.read.parquet(table_path(sf_dir, "lineitem")).filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.to_timestamp(F.lit("1998-09-02"))
     )
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -473,7 +473,7 @@ def pricing_summary(spark, sf_dir):
     "column",
 )
 def json_props_stats(spark, sf_dir):
-    ev = read_events(spark, sf_dir).withColumn(
+    ev = table(spark, sf_dir, "events").withColumn(
         "_p", F.from_json(F.col("props"), "k INT")
     )
     k = F.col("_p.k").cast("bigint")
@@ -507,9 +507,7 @@ def json_props_stats(spark, sf_dir):
     "path (same shape as profile_distinct_approx's HLL companion)",
 )
 def grouped_percentiles(spark, sf_dir):
-    from newyork_taxi_etl_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -538,9 +536,7 @@ def grouped_percentiles(spark, sf_dir):
     "vs two separate groupBy jobs reading the data twice",
 )
 def grouping_sets_report(spark, sf_dir):
-    from newyork_taxi_etl_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir).withColumn("ub", F.col("user_id") % 10)
+    ev = table(spark, sf_dir, "events").withColumn("ub", F.col("user_id") % 10)
     return (
         ev.groupingSets([["event_type"], ["ub"]], "event_type", "ub")
         .agg(F.count(F.lit(1)).alias("cnt"), sum_exact("value").alias("sum_value"))
@@ -580,9 +576,7 @@ def grouping_sets_report(spark, sf_dir):
     "UNION ALL",
 )
 def unpivot_melt(spark, sf_dir):
-    from newyork_taxi_etl_spark.sources.readers import table_path
-
-    li = spark.read.parquet(table_path(sf_dir, "lineitem")).select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_extendedprice", "l_discount", "l_tax"
     )
     long = li.unpivot(
@@ -625,9 +619,7 @@ def unpivot_melt(spark, sf_dir):
     "compare identically as strings",
 )
 def order_extremes(spark, sf_dir):
-    from newyork_taxi_etl_spark.sources.readers import table_path
-
-    o = spark.read.parquet(table_path(sf_dir, "orders"))
+    o = table(spark, sf_dir, "orders")
     key = "format_string('%020.2f|%012d', o_totalprice, o_orderkey)"
     return (
         o.groupBy(F.col("o_orderpriority").alias("priority"))
@@ -664,7 +656,7 @@ def order_extremes(spark, sf_dir):
     "nested-loop fallback",
 )
 def null_safe_join_agg(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     k = F.nullif(F.col("user_id") % 7, F.lit(3))
     l = ev.select(k.alias("k"), "value")
     r = ev.select(k.alias("rk")).distinct()
@@ -699,7 +691,7 @@ def null_safe_join_agg(spark, sf_dir):
     "type-domain cardinality, not the event count",
 )
 def user_event_profile(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
         .agg(
@@ -741,7 +733,7 @@ def user_event_profile(spark, sf_dir):
 def pareto_skyline_parts(spark, sf_dir):
     from pyspark.sql import Window
 
-    part = spark.read.parquet(table_path(sf_dir, "part")).filter(
+    part = table(spark, sf_dir, "part").filter(
         F.col("p_retailprice").isNotNull() & F.col("p_size").isNotNull()
     )
     cells = part.select("p_retailprice", "p_size").distinct()

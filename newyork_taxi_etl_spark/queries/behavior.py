@@ -18,7 +18,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import read_events
+from newyork_taxi_etl_spark.sources.readers import table
 
 _STAGES = ("signup", "view", "click", "purchase")
 
@@ -68,7 +68,7 @@ _EPOCH = datetime.date(2024, 1, 1)  # corpus start; fixed so week numbering
     "needs no per-stage re-scan and is the standard warehouse funnel",
 )
 def funnel_conversion(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         *[
             F.min(F.when(F.col("event_type") == s, F.col("ts"))).alias(f"t{i}")
@@ -143,7 +143,7 @@ def funnel_conversion(spark, sf_dir):
     "by the user dimension",
 )
 def cohort_retention(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     wk = ev.select(
         "user_id",
         F.floor(
@@ -213,7 +213,7 @@ def cohort_retention(spark, sf_dir):
 def funnel_time_to_convert(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.exact import avg_exact
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         *[
             F.min(F.when(F.col("event_type") == s, F.col("ts"))).alias(f"t{i}")
@@ -273,7 +273,7 @@ def inter_event_gap_stats(spark, sf_dir):
 
     from newyork_taxi_etl_spark.functions.exact import sum_exact
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = ev.select(
         (
@@ -331,7 +331,7 @@ def inter_event_gap_stats(spark, sf_dir):
 def chi_square_event_dow(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.exact import sum_exact
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     obs = (
         ev.groupBy(
             "event_type", (F.dayofweek(F.to_date("ts")) - 1).alias("dow")
@@ -393,7 +393,7 @@ def chi_square_event_dow(spark, sf_dir):
 def event_type_transitions(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         F.col("event_type").alias("from_type"),
@@ -451,7 +451,7 @@ def event_type_transitions(spark, sf_dir):
 def value_zscore_outliers(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.exact import sum_exact
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     m = ev.groupBy("event_type").agg(
         F.count("value").alias("n"),
         sum_exact("value").alias("s"),
@@ -505,7 +505,7 @@ def value_zscore_outliers(spark, sf_dir):
     "the join broadcasts the AGGREGATE, never the spine x events",
 )
 def daily_gapfill_counts(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     spine = spark.range(1).select(
         F.explode(
             F.sequence(
@@ -572,7 +572,7 @@ def time_weighted_avg_value(spark, sf_dir):
 
     from newyork_taxi_etl_spark.functions.exact import sum_exact
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seg = ev.select(
         "event_type",
@@ -641,7 +641,7 @@ def time_weighted_avg_value(spark, sf_dir):
 def trimmed_mean_pandas(spark, sf_dir):
     import pandas as pd
 
-    ev = read_events(spark, sf_dir).select("event_type", "event_id", "value")
+    ev = table(spark, sf_dir, "events").select("event_type", "event_id", "value")
 
     def trim(pdf: pd.DataFrame) -> pd.DataFrame:
         from decimal import ROUND_HALF_UP, Decimal
@@ -705,7 +705,7 @@ def trimmed_mean_pandas(spark, sf_dir):
     "one dialect here",
 )
 def sql_frontend_topk(spark, sf_dir):
-    read_events(spark, sf_dir).createOrReplaceTempView(
+    table(spark, sf_dir, "events").createOrReplaceTempView(
         "nyte_sql_frontend_events"
     )
     return spark.sql(
@@ -778,7 +778,7 @@ def sql_frontend_topk(spark, sf_dir):
 def psi_value_drift(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.exact import sum_exact
 
-    ev = read_events(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    ev = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     binned = ev.select(
         F.when(F.to_date("ts") < F.lit(datetime.date(2024, 1, 16)), "ref")
         .otherwise("cur")
@@ -879,7 +879,7 @@ def purchase_attribution(spark, sf_dir):
 
     from newyork_taxi_etl_spark.functions.exact import sum_exact
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -960,7 +960,7 @@ def purchase_attribution(spark, sf_dir):
     "the escape hatch, same pattern as the MinHash band cap",
 )
 def market_basket_rules(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     baskets = (
         ev.filter(F.col("event_type") == "purchase")
         .select(
@@ -1052,7 +1052,7 @@ def cusum_changepoint(spark, sf_dir):
 
     from newyork_taxi_etl_spark.functions.exact import avg_exact
 
-    ev = read_events(spark, sf_dir).filter(F.col("event_type") == "error")
+    ev = table(spark, sf_dir, "events").filter(F.col("event_type") == "error")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("double").alias("x")
     )
@@ -1118,7 +1118,7 @@ def cusum_changepoint(spark, sf_dir):
 def decayed_event_score(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.exact import sum_exact
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("mx_ts"))
     age_h = (F.unix_micros("mx_ts") - F.unix_micros("ts")) / F.lit(
         3600000000.0
@@ -1169,7 +1169,7 @@ def grouped_quantile_pandas_agg(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    ev = read_events(spark, sf_dir).select("event_type", "value")
+    ev = table(spark, sf_dir, "events").select("event_type", "value")
 
     def _interp(s: pd.Series, p: float):
         v = s.dropna().sort_values(kind="mergesort").to_numpy()
@@ -1267,7 +1267,7 @@ def grouped_quantile_pandas_agg(spark, sf_dir):
 def grouped_mode_median_disc(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     freq = ev.groupBy("event_type", "user_id").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1340,7 +1340,7 @@ def grouped_mode_median_disc(spark, sf_dir):
 def nucleus_user_coverage(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1430,7 +1430,7 @@ def poisson_bootstrap_ci(spark, sf_dir):
     from pyspark.sql import Window
 
     ev = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
@@ -1544,7 +1544,7 @@ def poisson_bootstrap_ci(spark, sf_dir):
 )
 def grouped_linear_trend(spark, sf_dir):
     ev = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
@@ -1620,7 +1620,7 @@ def grouped_linear_trend(spark, sf_dir):
 def ab_welch_ttest(spark, sf_dir):
     dec = "decimal(38,0)"
     base = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .filter(
             F.col("value").isNotNull()
             & F.col("event_type").isin("click", "purchase")
@@ -1714,7 +1714,7 @@ def rolling_metric_corr(spark, sf_dir):
     dec = "decimal(38,0)"
     yi = F.round(F.col("value") * 100).cast("bigint")
     daily = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .groupBy(F.date_trunc("day", "ts").alias("day"))
         .agg(
@@ -1791,7 +1791,7 @@ def weekly_growth_rates(spark, sf_dir):
     from pyspark.sql import Window
 
     weekly = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .groupBy(
             F.floor(F.unix_timestamp("ts") / F.lit(604800.0))
             .cast("bigint")
@@ -1874,7 +1874,7 @@ def weekly_growth_rates(spark, sf_dir):
 def attribution_multitouch(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"),
         F.col("user_id").alias("p_user"),
@@ -1988,7 +1988,7 @@ def attribution_multitouch(spark, sf_dir):
 )
 def categorical_mi_profile(spark, sf_dir):
     dec = "decimal(38,12)"
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     obs = (
         ev.groupBy(
             "event_type", (F.dayofweek(F.to_date("ts")) - 1).alias("dow")
@@ -2098,7 +2098,7 @@ def ks_two_sample_drift(spark, sf_dir):
     from pyspark.sql import Window
 
     dec = "decimal(38,0)"
-    ev = read_events(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     tagged = ev.select(
         F.when(F.to_date("ts") < F.lit(datetime.date(2024, 1, 16)), "a")
         .otherwise("b")
@@ -2223,7 +2223,7 @@ def conformal_interval_coverage(spark, sf_dir):
     from pyspark.sql import Window
 
     dec = "decimal(38,0)"
-    ev = read_events(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     base = ev.select(
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("v"),
@@ -2350,7 +2350,7 @@ def conformal_interval_coverage(spark, sf_dir):
 )
 def dow_seasonality_strength(spark, sf_dir):
     dec12 = "decimal(38,12)"
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.to_date("ts").alias("d"),
         (F.dayofweek(F.to_date("ts")) - 1).alias("dow"),
@@ -2471,7 +2471,7 @@ def ks_weekly_drift_monitor(spark, sf_dir):
     from pyspark.sql import Window
 
     dec = "decimal(38,0)"
-    ev = read_events(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     t = ev.select(
         F.date_trunc("week", F.col("ts")).cast("date").alias("wk"),
         F.round(F.col("value") * 100).cast("bigint").alias("v"),
@@ -2619,7 +2619,7 @@ def ks_weekly_drift_monitor(spark, sf_dir):
 def grouped_mad_outliers(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = read_events(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     t = ev.select(
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("v"),
@@ -2753,7 +2753,7 @@ def grouped_mad_outliers(spark, sf_dir):
 )
 def target_encoding_loo(spark, sf_dir):
     base = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
@@ -2888,7 +2888,7 @@ def target_encoding_loo(spark, sf_dir):
 def kaplan_meier_conversion(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     sec = ev.select(
         "user_id", "event_type", F.unix_timestamp("ts").alias("s")
     )
@@ -3087,7 +3087,7 @@ def w1_from_counts(counts):
     "observed range for a scale-free 0-1 number.",
 )
 def wasserstein_value_drift(spark, sf_dir):
-    ev = read_events(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     tagged = ev.select(
         F.when(
             F.col("ts").cast("date") < F.lit("2024-01-16").cast("date"), "a"
@@ -3202,7 +3202,7 @@ def ewma_anomaly_flags(spark, sf_dir):
 
     from newyork_taxi_etl_spark.functions.exact import sum_exact
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.round(sum_exact("value"), 6).alias("x"))
@@ -3352,9 +3352,7 @@ def ewma_anomaly_flags(spark, sf_dir):
 def markov_sequence_anomaly(spark, sf_dir):
     from pyspark.sql import Window
 
-    from newyork_taxi_etl_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "user_id",
@@ -3457,7 +3455,7 @@ _HOLT_L = "(0.5 * {y} + 0.5 * ({l} + {b}))"
     "CTE joined against the indexed series.",
 )
 def holt_linear_forecast(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     series = (
         ev.groupBy(
             "event_type", F.to_date("ts").alias("d")
@@ -3572,7 +3570,7 @@ _OLS_DERIVE = """
 def grouped_ols_regression(spark, sf_dir):
     dec = "decimal(38,0)"
     base = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
@@ -3681,7 +3679,7 @@ def grouped_ols_regression(spark, sf_dir):
 def scd2_dimension_build(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = read_events(spark, sf_dir).filter(F.col("user_id") < 10)
+    ev = table(spark, sf_dir, "events").filter(F.col("user_id") < 10)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     marked = ev.select(
         "user_id",
@@ -3763,7 +3761,7 @@ def scd2_dimension_build(spark, sf_dir):
 def anova_oneway_value(spark, sf_dir):
     dec = "decimal(38,0)"
     base = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",

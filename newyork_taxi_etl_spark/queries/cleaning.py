@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.functions.datetime import SLOT_CASE_SQL, DOW_SQL
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import read_events, table_path
+from newyork_taxi_etl_spark.sources.readers import table
 
 _SLOT = SLOT_CASE_SQL.format(ts="ts")
 _DOW = DOW_SQL.format(ts="ts")
@@ -32,7 +32,7 @@ _DOW = DOW_SQL.format(ts="ts")
     "silently vanish in BOTH engines",
 )
 def clean_speed_filter(spark, sf_dir):
-    df = read_events(spark, sf_dir)
+    df = table(spark, sf_dir, "events")
     return (
         df.filter((F.col("value") / (F.second("ts") / 60.0)) <= 50)
         .select("event_id", "user_id", "value")
@@ -62,7 +62,7 @@ def clean_speed_filter(spark, sf_dir):
     "(keep_or_drop, nb:62553 (c49), SURVEY §2.9.6)",
 )
 def clean_keep_drop(spark, sf_dir):
-    df = read_events(spark, sf_dir)
+    df = table(spark, sf_dir, "events")
     low = F.col("value") < 1
     rule = (
         F.when(low & F.col("event_type").isin("purchase", "view") & (F.minute("ts") < 30), "keep")
@@ -97,7 +97,7 @@ def clean_keep_drop(spark, sf_dir):
 )
 def clean_sign_fix(spark, sf_dir):
     df = (
-        spark.read.parquet(table_path(sf_dir, "lineitem"))
+        table(spark, sf_dir, "lineitem")
         .withColumn("disc_shift", F.col("l_discount") - 0.05)
         .withColumn("tax_shift", F.col("l_tax") - 0.04)
     )
@@ -139,7 +139,7 @@ def clean_sign_fix(spark, sf_dir):
     "nb:63555 (c58), SURVEY §2.9.2/3); greatest() §2.8",
 )
 def fare_validation(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "lineitem"))
+    df = table(spark, sf_dir, "lineitem")
     meter = F.greatest(F.col("l_quantity") * 900, F.col("l_discount") * 200000)
     expected = (
         F.when(F.col("l_linenumber") == 1, F.lit(500) + meter)
@@ -175,7 +175,7 @@ def feature_slots(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.datetime import with_calendar_features
 
     return (
-        with_calendar_features(read_events(spark, sf_dir))
+        with_calendar_features(table(spark, sf_dir, "events"))
         .select("event_id", "hour_of_day", "day_of_week", "time_of_day_slot")
         .orderBy("event_id")
     )
@@ -193,7 +193,7 @@ def feature_slots(spark, sf_dir):
     "semantics of nb:64146 (c69), SURVEY §2.9.2)",
 )
 def null_propagation_filter(spark, sf_dir):
-    df = read_events(spark, sf_dir)
+    df = table(spark, sf_dir, "events")
     return (
         df.filter(
             (F.col("value") / F.nullif(F.second("ts"), F.lit(0))) > 1

@@ -16,7 +16,7 @@ from newyork_taxi_etl_spark.functions.text import shingles_sql
 from newyork_taxi_etl_spark.operators import curation as C
 from newyork_taxi_etl_spark.registry import register
 from newyork_taxi_etl_spark.session import spread
-from newyork_taxi_etl_spark.sources.readers import table_path
+from newyork_taxi_etl_spark.sources.readers import table
 
 _SH = shingles_sql("text", 3)
 
@@ -48,7 +48,7 @@ _SH = shingles_sql("text", 3)
     "that way (no shuffle before the final top-k)",
 )
 def doc_repetition_profile(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     prof = C.repetition_profile(docs)
     return prof.orderBy(
         F.desc("dup_ngram_frac"), F.desc("dup_tok_frac"), "doc_id"
@@ -85,7 +85,7 @@ def doc_repetition_profile(spark, sf_dir):
     "doc_id aggregate — no corpus-sized shuffle at 100 TB",
 )
 def contamination_ngram_overlap(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     out = C.ngram_contamination(corpus, bench)
@@ -117,7 +117,7 @@ def contamination_ngram_overlap(spark, sf_dir):
     "a broadcast total; group count = domain count, never data-sized",
 )
 def domain_mix_weights(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return C.domain_mix_weights(docs, "source", alpha=0.5)
 
 
@@ -154,7 +154,7 @@ def domain_mix_weights(spark, sf_dir):
     "1000-executor packer shards 100 TB",
 )
 def token_budget_packing(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return C.token_budget_packing(docs, budget=512)
 
 
@@ -249,7 +249,7 @@ def _bestfit_sql(budget: int, sfx: str = "", shard_target: int = 16) -> str:
     "tests/test_round14_ops.py.",
 )
 def sequence_pack_bestfit(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return C.sequence_pack_bestfit(docs, budget=512, shard_target=16)
 
 
@@ -287,7 +287,7 @@ def _budget_leg_sql(budget: int, sfx: str) -> str:
     "aggregates bin-sized.",
 )
 def packing_budget_curve(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     legs = []
     for b in (256, 512, 1024):
         packed = C.sequence_pack_bestfit(docs, budget=b, shard_target=16)
@@ -346,7 +346,7 @@ def packing_budget_curve(spark, sf_dir):
     "quality-signal primitive at corpus scale",
 )
 def tfidf_top_terms(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     out = C.tfidf_top_terms(docs, top_k=1)
     return out.filter(F.col("doc_id") < 100).orderBy("doc_id")
 
@@ -389,7 +389,7 @@ def tfidf_top_terms(spark, sf_dir):
     "search over a training corpus without an external index",
 )
 def bm25_rank(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     out = C.bm25_scores(docs, ["spark", "join", "vector"])
     return out.orderBy(F.desc("bm25"), "doc_id").limit(15)
 
@@ -440,7 +440,7 @@ def training_shard_assignment(spark, sf_dir):
 
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     sharded = docs.select(
         "doc_id",
         "n_chars",
@@ -508,7 +508,7 @@ def training_shard_assignment(spark, sf_dir):
 def label_rebalance_sample(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.sampling import hash_bucket
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     counts = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n_before"))
     target = counts.agg(F.min("n_before").alias("n_min"))
     rates = counts.crossJoin(F.broadcast(target)).select(
@@ -580,7 +580,7 @@ def label_rebalance_sample(spark, sf_dir):
 def corpus_pipeline_end2end(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.dedup import dedup_exact
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     gated = docs.filter((F.size(toks) >= 30) & (ttr >= 0.2))
@@ -675,7 +675,7 @@ def corpus_pipeline_end2end(spark, sf_dir):
 def corpus_pipeline_decontaminated(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.dedup import dedup_exact
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
 
@@ -767,7 +767,7 @@ def corpus_pipeline_decontaminated(spark, sf_dir):
 def weighted_median_doclen(spark, sf_dir):
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang", "n_chars").agg(
         F.count(F.lit(1)).alias("c"),
         F.sum("n_chars").cast("bigint").alias("wsum"),
@@ -858,7 +858,7 @@ def weighted_median_doclen(spark, sf_dir):
     "two final divisions.",
 )
 def passage_chunking_plan(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", "lang", F.size(F.split(F.col("text"), " ")).alias("n")
     )
@@ -1084,7 +1084,7 @@ def quality_logreg_filter(spark, sf_dir):
         logistic_prob,
     )
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
@@ -1191,7 +1191,7 @@ def quality_distillation_audit(spark, sf_dir):
     )
     from newyork_taxi_etl_spark.queries.text import _QR_RULES, _qr_stats
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
@@ -1334,7 +1334,7 @@ def corpus_pipeline_learned(spark, sf_dir):
         logistic_prob,
     )
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     x1 = ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1")
@@ -1466,7 +1466,7 @@ def corpus_pipeline_learned(spark, sf_dir):
 def boilerplate_segment_strip(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.dedup import cdc_segments
 
-    docs = spread(spark.read.parquet(table_path(sf_dir, "documents")))
+    docs = spread(table(spark, sf_dir, "documents"))
     segs = (
         cdc_segments(docs, boundary_mod=8, min_tokens=5)
         .join(F.broadcast(docs.select("doc_id", "lang")), "doc_id")
@@ -1552,7 +1552,7 @@ def streaming_quality_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_qingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     # shares the ":logreg_weights" sub-key with the PSI monitor —
@@ -1612,7 +1612,7 @@ def quality_auc_rank(spark, sf_dir):
         logistic_prob,
     )
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
@@ -1716,7 +1716,7 @@ def quality_calibration_ece(spark, sf_dir):
         logistic_prob,
     )
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
@@ -1842,7 +1842,7 @@ def curriculum_quality_stages(spark, sf_dir):
     )
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
@@ -1969,7 +1969,7 @@ def logreg_learning_curve(spark, sf_dir):
         logistic_prob,
     )
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     allfeats = docs.select(
@@ -2096,7 +2096,7 @@ def logreg_kfold_cv(spark, sf_dir):
         logistic_prob,
     )
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     af = docs.select(
@@ -2253,7 +2253,7 @@ _DECON_SQL = f"""
 def decontamination_fuzzy(spark, sf_dir):
     from newyork_taxi_etl_spark.operators import dedup as D
 
-    docs = spread(spark.read.parquet(table_path(sf_dir, "documents")))
+    docs = spread(table(spark, sf_dir, "documents"))
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     bands_b = D.lsh_band_rows(D.with_minhash(bench)).localCheckpoint(
@@ -2476,7 +2476,7 @@ def _scored_bins(docs, w):
     "4-float broadcast), then everything is (source x 10 bins)-sized.",
 )
 def quality_psi_by_domain(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     # the trainer's feature projection lives inside the cached build;
     # _scored_bins below re-derives the scoring features per doc
     w = _logreg_weights_cached(spark, docs, sf_dir)
@@ -2510,7 +2510,7 @@ def streaming_quality_psi_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_psiingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_psi_ingest(
@@ -2636,7 +2636,7 @@ def _shard_audit_stats(docs):
     "corpus comparison.",
 )
 def shard_export_shuffle_audit(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     run_a = _shard_audit_stats(docs)
     # run B: same rule from a deliberately different physical layout
     relaid = docs.repartition(17, "lang").sortWithinPartitions("n_chars")
@@ -2812,7 +2812,7 @@ _DECON_SPAN_SQL = f"""
     "which is small by definition.",
 )
 def decontamination_exact_substring(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     index = _decon_bench_index(docs).localCheckpoint()
     corpus = _decon_pos_grams(docs.filter(F.col("doc_id") % 50 != 0))
     return _decon_top(_decon_runs(index, corpus))
@@ -2839,7 +2839,7 @@ def streaming_decontamination_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_deconingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_decon_ingest(
@@ -2921,7 +2921,7 @@ _DSIR_SQL = f"""
     "— the 100 TB dataflow is the same three passes",
 )
 def dsir_importance_select(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _dsir_profile(docs)
 
 
@@ -3048,7 +3048,7 @@ def streaming_dsir_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_dsiringest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_dsir_ingest(
@@ -3119,7 +3119,7 @@ def streaming_dsir_ingest(spark, sf_dir):
     "out-casts as the single-target query",
 )
 def dsir_domain_affinity(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _dsir_affinity_matrix(docs)
 
 
@@ -3270,7 +3270,7 @@ _SC_FLAG_SPARK = (
     "shuffled position table",
 )
 def span_corruption_plan(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     d = (
         docs.select(
             "doc_id",
@@ -3413,7 +3413,7 @@ def curriculum_ccnet_agreement(spark, sf_dir):
         _lang_ntile3,
     )
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
@@ -3561,8 +3561,8 @@ def hybrid_rrf_fusion(spark, sf_dir):
 
     from newyork_taxi_etl_spark.operators import similarity as S
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    docs = table(spark, sf_dir, "documents")
+    emb = table(spark, sf_dir, "embeddings")
     text50 = (
         C.bm25_scores(docs, list(_RRF_TERMS))
         .orderBy(F.desc("bm25"), "doc_id")
@@ -3663,7 +3663,7 @@ def hybrid_rrf_fusion(spark, sf_dir):
     "combinable) + O(sources) arithmetic",
 )
 def mixture_epochs_plan(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     avail = docs.groupBy("source").agg(
         F.sum(F.size(F.split("text", " ")))
         .cast("bigint")
@@ -3763,7 +3763,7 @@ _LCP_DEPTHS = (1, 2, 4, 8, 16)
     "two exact int/int divisions at 6 dp — engine-exact.",
 )
 def lcp_repetition_depth(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _lcp_finalize(_lcp_gram_stats(docs))
 
 
@@ -3880,7 +3880,7 @@ def streaming_lcp_depth_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_lcpingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_lcp_depth_ingest(
@@ -3968,7 +3968,7 @@ _DOREMI_SQL = """
     "12-dp decimal sums keep both engines exact.",
 )
 def doremi_domain_weights(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _doremi_from_tf(_doremi_tf(docs))
 
 
@@ -4085,7 +4085,7 @@ def streaming_doremi_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_doremiingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_doremi_ingest(spark, docs, work)

@@ -15,7 +15,7 @@ from newyork_taxi_etl_spark.operators import dedup as D
 from newyork_taxi_etl_spark.functions.text import minhash_sql, shingles_sql
 from newyork_taxi_etl_spark.registry import register
 from newyork_taxi_etl_spark.session import spread
-from newyork_taxi_etl_spark.sources.readers import table_path
+from newyork_taxi_etl_spark.sources.readers import table
 
 _SH = shingles_sql("text", 3)
 
@@ -34,7 +34,7 @@ _SH = shingles_sql("text", 3)
     "(one shuffle on the content hash, map-side combine)",
 )
 def dedup_exact(spark, sf_dir):
-    return D.dedup_exact(spark.read.parquet(table_path(sf_dir, "documents")))
+    return D.dedup_exact(table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -52,7 +52,7 @@ def dedup_exact(spark, sf_dir):
     "near-dup pipeline, non-vacuous on this corpus (31-word vocab)",
 )
 def dedup_prefix_block(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "documents"))
+    df = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     # F.concat (not concat_ws) so a single-token doc yields a NULL key, the
     # same NULL-propagation the oracle's `||` has — concat_ws would silently
@@ -106,7 +106,7 @@ def dedup_prefix_block(spark, sf_dir):
     "result on this corpus is the CORRECT answer (no near-dups planted)",
 )
 def dedup_minhash_lsh(spark, sf_dir):
-    docs = spread(spark.read.parquet(table_path(sf_dir, "documents")))
+    docs = spread(table(spark, sf_dir, "documents"))
     sigs = D.with_minhash(docs, k=4)
     return D.lsh_candidate_pairs(sigs, k=4, rows_per_band=2, max_band_size=64)
 
@@ -156,7 +156,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     "on this corpus",
 )
 def dedup_ngram_jaccard(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return D.shingle_jaccard_pairs(docs, "lang", threshold=0.01, max_df_frac=0.02)
 
 
@@ -206,7 +206,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     "sum_g f_g^2, never |A|x|B|.",
 )
 def dedup_containment(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return D.shingle_jaccard_pairs(
         docs, "lang", threshold=0.1, max_df_frac=0.02, metric="containment"
     )
@@ -226,7 +226,7 @@ def dedup_containment(spark, sf_dir):
     "pair set itself is O(n^2) — correct, but not a scalable bench output",
 )
 def dedup_simhash(spark, sf_dir):
-    docs = spread(spark.read.parquet(table_path(sf_dir, "documents")))
+    docs = spread(table(spark, sf_dir, "documents"))
     return D.with_simhash(docs, bits=16).select("doc_id", "simhash")
 
 
@@ -273,7 +273,7 @@ def dedup_simhash(spark, sf_dir):
 def dedup_embedding_cosine(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.similarity import cosine_pairs
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     # localCheckpoint: cosine_pairs self-joins the sample, and without it
     # each side re-runs the corpus-wide TakeOrdered draw (r9 watch item)
     picked = (
@@ -329,7 +329,7 @@ def dedup_embedding_lsh(spark, sf_dir):
     )
     from newyork_taxi_etl_spark.queries.similarity import LSH_BANDS
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     # BLAS bucket scorer: identical results to the expression path
     # (asserted in tests/test_similarity_params.py), measured 3x faster
     return cosine_pairs_lsh_multiband_blas(emb, threshold=0.4, bands=LSH_BANDS)
@@ -359,7 +359,7 @@ def dedup_embedding_lsh(spark, sf_dir):
     "Levenshtein, so the pair set is value-checked exactly",
 )
 def dedup_edit_distance(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     # NULL-propagating concat to match the oracle's `||`: a single-token doc
     # gets a NULL block key and never equi-joins, in BOTH engines (concat_ws
@@ -442,7 +442,7 @@ def minhash_jaccard_gate(spark, sf_dir):
 
     k = 16
     docs = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
+        table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 60)
     )
     sh = with_shingles(docs, "text", 3, "sh").select(
@@ -606,7 +606,7 @@ _PASSAGE_LSH_SQL = f"""
     "join mass banded-bucket-capped, never |segments|^2.",
 )
 def dedup_passage_lsh(spark, sf_dir):
-    docs = spread(spark.read.parquet(table_path(sf_dir, "documents")))
+    docs = spread(table(spark, sf_dir, "documents"))
     return D.passage_dup_pairs(
         docs, boundary_mod=8, min_tokens=5, threshold=0.8, max_band_size=64
     )
@@ -655,7 +655,7 @@ def dedup_passage_lsh(spark, sf_dir):
     "O(distinct-hash x sources) afterwards.",
 )
 def source_overlap_matrix(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     per_src = (
         docs.select(
             F.md5(F.lower(F.trim(F.col("text")))).alias("h"), "source"
@@ -738,7 +738,7 @@ def source_overlap_matrix(spark, sf_dir):
     "overlaps — documented, not asserted).",
 )
 def hll_overlap_sketch_matrix(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     fp = docs.select(
         F.md5(F.lower(F.trim(F.col("text")))).alias("h"), "source"
     ).distinct()
@@ -873,7 +873,7 @@ def _diag_runs_cached(spark, sf_dir):
     from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
 
     def build():
-        docs = spark.read.parquet(table_path(sf_dir, "documents"))
+        docs = table(spark, sf_dir, "documents")
         return D.substring_diag_runs(docs, k=8, max_occ=64)
 
     return df_stage_cached(
@@ -969,7 +969,7 @@ def _diag_runs_cached(spark, sf_dir):
     "nothing corpus-sized anywhere.",
 )
 def dedup_substring_strip(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     ledger = D.substring_strip_ledger_from(
         _diag_runs_cached(spark, sf_dir), min_tokens=12
     )
@@ -1053,7 +1053,7 @@ _SOURCE_MATRIX_SQL = """
     "groupBy to (key, source), then key-equi-joined count algebra.",
 )
 def dedup_source_matrix(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     keyed = docs.filter(F.size(toks) >= 2).select(
         F.concat(
@@ -1157,7 +1157,7 @@ def semantic_decontamination(spark, sf_dir):
     )
     from newyork_taxi_etl_spark.queries.similarity import LSH_BANDS
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     pairs = cosine_pairs_lsh_multiband_blas(
         emb, threshold=0.4, bands=LSH_BANDS
     )
@@ -1264,7 +1264,7 @@ _BLOOM_SQL = f"""
     "copy) holds by construction and is pytested with planted copies.",
 )
 def dedup_bloom_gate(spark, sf_dir):
-    docs = spread(spark.read.parquet(table_path(sf_dir, "documents")))
+    docs = spread(table(spark, sf_dir, "documents"))
     d = docs.select("doc_id", F.lower(F.trim(F.col("text"))).alias("norm"))
     pos = (
         d.select(
@@ -1376,7 +1376,7 @@ def streaming_bloom_gate_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_bloomingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     # the fold interpolates its actual n_slices into the stage key

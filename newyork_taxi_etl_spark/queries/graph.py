@@ -20,7 +20,7 @@ from newyork_taxi_etl_spark.operators.similarity import (
     cosine_pairs_lsh_multiband_blas,
 )
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import table_path
+from newyork_taxi_etl_spark.sources.readers import table
 
 _COS_SQL = (
     "ROUND(list_dot_product(CAST(ea.embedding AS DOUBLE[]),"
@@ -71,7 +71,7 @@ def _multiband_pairs(spark, sf_dir):
     from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
 
     def build():
-        emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+        emb = table(spark, sf_dir, "embeddings")
         # BLAS bucket scorer: result-identical fast twin
         # (see operators.similarity)
         return cosine_pairs_lsh_multiband_blas(
@@ -170,7 +170,7 @@ def dedup_canonical_docs(spark, sf_dir):
     drop = comps.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return (
         # drop list is bounded by the dup count (<< corpus): broadcast the
         # anti side so the corpus never shuffles
@@ -225,7 +225,7 @@ def pagerank_source_lang(spark, sf_dir):
 
     from newyork_taxi_etl_spark.operators.graph import pagerank
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     e0 = docs.select(
         F.col("source").alias("u"), F.col("lang").alias("v")
     ).distinct()
@@ -348,7 +348,7 @@ def semantic_dedup_quality_keeper(spark, sf_dir):
     from pyspark.sql import functions as F
 
     comp = _multiband_components(spark, sf_dir)
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     q = docs.select(
@@ -486,7 +486,7 @@ def dedup_aware_split(spark, sf_dir):
     # seven consumer queries; the eager localCheckpoint pin is obsolete
     pairs = _multiband_pairs(spark, sf_dir)
     comp = _multiband_components(spark, sf_dir)
-    docs = spark.read.parquet(table_path(sf_dir, "documents")).select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id"
     )
     split = (

@@ -12,11 +12,7 @@ from pyspark.sql.functions import broadcast
 from newyork_taxi_etl_spark.functions.exact import avg_exact, avg_exact_sql, sum_exact, sum_exact_sql
 from newyork_taxi_etl_spark.operators import joins as J
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import read_events, table_path
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(table_path(sf_dir, name))
+from newyork_taxi_etl_spark.sources.readers import table
 
 
 @register(
@@ -36,13 +32,13 @@ def _t(spark, sf_dir, name):
     "orders never shuffles, 3 dims broadcast",
 )
 def broadcast_enrich(spark, sf_dir):
-    fact = _t(spark, sf_dir, "orders")
+    fact = table(spark, sf_dir, "orders")
     joined = J.star_join(
         fact,
         [
-            (_t(spark, sf_dir, "customer"), "o_custkey", "c_custkey"),
-            (_t(spark, sf_dir, "nation"), "c_nationkey", "n_nationkey"),
-            (_t(spark, sf_dir, "region"), "n_regionkey", "r_regionkey"),
+            (table(spark, sf_dir, "customer"), "o_custkey", "c_custkey"),
+            (table(spark, sf_dir, "nation"), "c_nationkey", "n_nationkey"),
+            (table(spark, sf_dir, "region"), "n_regionkey", "r_regionkey"),
         ],
     )
     return (
@@ -74,10 +70,10 @@ def broadcast_enrich(spark, sf_dir):
     "the join",
 )
 def revenue_by_nation(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "F")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    l = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "F")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
     joined = (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(broadcast(c), o.o_custkey == c.c_custkey)
@@ -114,9 +110,9 @@ def revenue_by_nation(spark, sf_dir):
     "join + TakeOrderedAndProject",
 )
 def top_unshipped_orders(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = table(spark, sf_dir, "orders")
+    l = table(spark, sf_dir, "lineitem")
     joined = (
         o.join(broadcast(c), o.o_custkey == c.c_custkey)
         .join(l, o.o_orderkey == l.l_orderkey)
@@ -150,8 +146,8 @@ def top_unshipped_orders(spark, sf_dir):
 def customers_without_orders(spark, sf_dir):
     return (
         J.anti_join(
-            _t(spark, sf_dir, "customer"),
-            _t(spark, sf_dir, "orders"),
+            table(spark, sf_dir, "customer"),
+            table(spark, sf_dir, "orders"),
             "c_custkey",
             "o_custkey",
         )
@@ -175,8 +171,8 @@ def customers_without_orders(spark, sf_dir):
 def suppliers_in_order_nations(spark, sf_dir):
     return (
         J.semi_join(
-            _t(spark, sf_dir, "supplier"),
-            _t(spark, sf_dir, "customer"),
+            table(spark, sf_dir, "supplier"),
+            table(spark, sf_dir, "customer"),
             "s_nationkey",
             "c_nationkey",
         )
@@ -199,9 +195,7 @@ def suppliers_in_order_nations(spark, sf_dir):
     "INTERSECT + EXCEPT with distinct semantics",
 )
 def set_ops(spark, sf_dir):
-    from newyork_taxi_etl_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     purch = ev.filter(F.col("event_type") == "purchase").select("user_id")
     err = ev.filter(F.col("event_type") == "error").select("user_id")
     signup_hi = ev.filter(
@@ -230,7 +224,7 @@ def set_ops(spark, sf_dir):
     "oracle is DuckDB's native ASOF LEFT JOIN",
 )
 def asof_join_events(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -264,7 +258,7 @@ def asof_join_events(spark, sf_dir):
     "quadratic nested-loop Spark plans for a raw BETWEEN join",
 )
 def range_join_windows(spark, sf_dir):
-    ev = read_events(spark, sf_dir).select("ts", "value")
+    ev = table(spark, sf_dir, "events").select("ts", "value")
     iv = spark.range(24).select(
         F.col("id").cast("int").alias("window_id"),
         F.expr(
@@ -305,10 +299,10 @@ def range_join_windows(spark, sf_dir):
 def skew_salted_join(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.joins import salted_join
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     joined = salted_join(
         li,
         orders,
@@ -352,17 +346,17 @@ def skew_salted_join(spark, sf_dir):
     "non-trivial",
 )
 def nation_trade_volume(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     supp = broadcast(
-        _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+        table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     )
     cust = broadcast(
-        _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+        table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     )
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     n1 = broadcast(nation.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")))
     n2 = broadcast(nation.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")))
     joined = (
@@ -410,11 +404,11 @@ def nation_trade_volume(spark, sf_dir):
     "shipdate filter pushed to the fact scan",
 )
 def promo_revenue_share(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1996-04-01")
     )
-    p = _t(spark, sf_dir, "part")
+    p = table(spark, sf_dir, "part")
     j = l.join(broadcast(p), l.l_partkey == p.p_partkey)
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
@@ -451,11 +445,11 @@ def promo_revenue_share(spark, sf_dir):
     "lineitem; supplier dim broadcast",
 )
 def top_supplier_revenue(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1996-04-01")
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = table(spark, sf_dir, "supplier")
     revs = l.groupBy("l_suppkey").agg(
         sum_exact(
             F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -504,8 +498,8 @@ def top_supplier_revenue(spark, sf_dir):
     "in both engines so the strict < comparison cannot flip on a boundary",
 )
 def small_qty_revenue_bridge(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    bp = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23").select(
+    li = table(spark, sf_dir, "lineitem")
+    bp = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23").select(
         F.col("p_partkey").alias("l_partkey")
     )
     sliced = li.join(broadcast(bp), "l_partkey").select(
@@ -552,14 +546,14 @@ def small_qty_revenue_bridge(spark, sf_dir):
     "decimal routing is needed for the HAVING threshold",
 )
 def large_volume_customers(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy(F.col("l_orderkey"))
         .agg(F.sum("l_quantity").alias("total_qty"))
         .filter(F.col("total_qty") > 250)
     )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = table(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
     return (
         orders.join(big, orders["o_orderkey"] == big["l_orderkey"])
         .join(broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
@@ -599,12 +593,12 @@ def large_volume_customers(spark, sf_dir):
     "key — no fact-fact shuffle anywhere",
 )
 def idle_rich_customers(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
+    cust = table(spark, sf_dir, "customer")
     thresh = cust.filter(F.col("c_acctbal") > 0).agg(
         avg_exact("c_acctbal").alias("bal_lim")
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= "2000-07-01")
         .select(F.col("o_custkey").alias("c_custkey"))
         .distinct()
@@ -745,13 +739,13 @@ def _join_strategy_choice_build(spark, sf_dir):
     def stat_row(name, df):
         return df.select(F.lit(name).alias("join_name"), *cols)
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     # self-join candidate: BOTH sides' stats from the ONE per-key grouped
     # aggregate (build bytes = sum of per-key string mass + row overhead;
     # probe rows/hottest key from the same counts) — one scan of events,
     # as the doc promises
     ev_per_key = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -769,13 +763,13 @@ def _join_strategy_choice_build(spark, sf_dir):
     pieces = [
         stat_row(
             "lineitem_x_supplier_on_suppkey",
-            small_stats(_t(spark, sf_dir, "supplier"), "s_name").crossJoin(
+            small_stats(table(spark, sf_dir, "supplier"), "s_name").crossJoin(
                 broadcast(big_stats(li, "l_suppkey"))
             ),
         ),
         stat_row(
             "lineitem_x_orders_on_orderkey",
-            small_stats(_t(spark, sf_dir, "orders"), "o_orderpriority").crossJoin(
+            small_stats(table(spark, sf_dir, "orders"), "o_orderpriority").crossJoin(
                 broadcast(big_stats(li, "l_orderkey"))
             ),
         ),
@@ -820,13 +814,13 @@ def _join_strategy_choice_build(spark, sf_dir):
     "engines hash the identical value",
 )
 def shipping_priority_top10(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").filter(
+    c = table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = _t(spark, sf_dir, "orders").filter(
+    o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < "1998-01-01"
     )
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > "1998-01-01"
     )
     j = o.join(broadcast(c), o.o_custkey == c.c_custkey).join(
@@ -875,13 +869,13 @@ def shipping_priority_top10(spark, sf_dir):
     "never for a join",
 )
 def returned_item_customers(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01")
         & (F.col("o_orderdate") < "1996-07-01")
     )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    l = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     j = (
         l.join(broadcast(o), l.l_orderkey == o.o_orderkey)
         .join(broadcast(c), o.o_custkey == c.c_custkey)
@@ -942,12 +936,12 @@ def returned_item_customers(spark, sf_dir):
     "both engines",
 )
 def dominant_part_suppliers(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1997-01-01")
     )
     promo_parts = (
-        _t(spark, sf_dir, "part")
+        table(spark, sf_dir, "part")
         .filter(F.col("p_type") == "PROMO")
         .select("p_partkey")
     )
@@ -964,7 +958,7 @@ def dominant_part_suppliers(spark, sf_dir):
         .select("l_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = table(spark, sf_dir, "supplier")
     return (
         s.join(broadcast(dominant), s.s_suppkey == dominant.l_suppkey, "semi")
         .select(
@@ -1015,10 +1009,10 @@ def dominant_part_suppliers(spark, sf_dir):
     "into the date comparison; final count is supplier-dim-sized",
 )
 def waiting_orders_suppliers(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
-    o = _t(spark, sf_dir, "orders").filter(
+    o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_orderdate")
     l1 = (
@@ -1049,7 +1043,7 @@ def waiting_orders_suppliers(spark, sf_dir):
             "anti",
         )
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = table(spark, sf_dir, "supplier")
     return (
         waiting.join(broadcast(s), waiting.l_suppkey == s.s_suppkey)
         .groupBy(F.col("s_name").alias("supplier_name"))
@@ -1088,15 +1082,15 @@ def waiting_orders_suppliers(spark, sf_dir):
     "exact revenue; nation_name tie-break",
 )
 def local_supplier_volume(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01")
         & (F.col("o_orderdate") < "1997-01-01")
     )
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    l = table(spark, sf_dir, "lineitem")
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     j = (
         l.join(broadcast(o), l.l_orderkey == o.o_orderkey)
         .join(broadcast(c), o.o_custkey == c.c_custkey)
@@ -1143,8 +1137,8 @@ def local_supplier_volume(spark, sf_dir):
     "aggregate; decimal-exact revenue",
 )
 def bracket_discount_revenue(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = table(spark, sf_dir, "lineitem")
+    p = table(spark, sf_dir, "part")
     j = l.join(broadcast(p), l.l_partkey == p.p_partkey)
     br = (
         (
@@ -1211,19 +1205,19 @@ def bracket_discount_revenue(spark, sf_dir):
     "discipline so both engines divide identical doubles",
 )
 def nation_market_share(spark, sf_dir):
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
+    p = table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
+    l = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1995-01-01")
         & (F.col("o_orderdate") < "1997-01-01")
     )
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation").select(
+    c = table(spark, sf_dir, "customer")
+    n1 = table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_regionkey")
     )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    s = _t(spark, sf_dir, "supplier")
-    n2 = _t(spark, sf_dir, "nation").select(
+    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    s = table(spark, sf_dir, "supplier")
+    n2 = table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -1285,11 +1279,11 @@ def nation_market_share(spark, sf_dir):
     "sum discipline",
 )
 def product_type_profit(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
+    l = table(spark, sf_dir, "lineitem")
+    p = table(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
+    o = table(spark, sf_dir, "orders")
     profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.lit(
         0.1
     ) * F.col("p_retailprice") * F.col("l_quantity")
@@ -1357,7 +1351,7 @@ _STREAK_BODY = """
     "per customer, order count, streak count, longest streak",
 )
 def order_streaks_recursive(spark, sf_dir):
-    _t(spark, sf_dir, "orders").createOrReplaceTempView(
+    table(spark, sf_dir, "orders").createOrReplaceTempView(
         "nyte_recursive_orders"
     )
     return spark.sql(_STREAK_BODY.format(orders="nyte_recursive_orders"))
@@ -1439,10 +1433,10 @@ def join_auto_dispatch(spark, sf_dir):
             "checksum",
         )
 
-    li = _t(spark, sf_dir, "lineitem").select("l_suppkey", "l_orderkey", "l_extendedprice")
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey")
-    ev = read_events(spark, sf_dir).select("event_id", "event_type", "value")
+    li = table(spark, sf_dir, "lineitem").select("l_suppkey", "l_orderkey", "l_extendedprice")
+    sup = table(spark, sf_dir, "supplier").select("s_suppkey")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey")
+    ev = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
 
     def agg(df, col):
         return df.agg(
@@ -1537,12 +1531,12 @@ def join_auto_dispatch(spark, sf_dir):
     "the full unique key so LIMIT 100 is deterministic.",
 )
 def min_cost_supplier(spark, sf_dir):
-    p = _t(spark, sf_dir, "part").filter(
+    p = table(spark, sf_dir, "part").filter(
         (F.col("p_type") == "ECONOMY") & F.col("p_size").between(10, 20)
     )
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    l = table(spark, sf_dir, "lineitem")
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
     # inner subquery, decorrelated: min unit price per part — restricted to
     # the filtered partkeys first (equality with p.p_partkey makes that
     # semantics-preserving) so the grouped MIN and the broadcast stay tiny.
@@ -1605,10 +1599,10 @@ def min_cost_supplier(spark, sf_dir):
     "is map-side combined.",
 )
 def late_shipment_priority(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = table(spark, sf_dir, "lineitem")
     semi = o.join(
         l,
         (o.o_orderkey == l.l_orderkey)
@@ -1655,9 +1649,9 @@ def late_shipment_priority(spark, sf_dir):
     "cross join.",
 )
 def important_part_values(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
+    l = table(spark, sf_dir, "lineitem")
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
     val = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     base = l.join(broadcast(s), l.l_suppkey == s.s_suppkey).join(
         broadcast(n), s.s_nationkey == n.n_nationkey
@@ -1701,8 +1695,8 @@ def important_part_values(spark, sf_dir):
     "pre-aggregation with no second pass.",
 )
 def priority_by_linestatus(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    o = table(spark, sf_dir, "orders")
+    l = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -1745,8 +1739,8 @@ def priority_by_linestatus(spark, sf_dir):
     "map-side combines to almost nothing.",
 )
 def customer_order_distribution(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
     per_cust = (
         c.join(
             o,
@@ -1791,12 +1785,12 @@ def customer_order_distribution(spark, sf_dir):
     "shuffle on (brand, size).",
 )
 def supplier_cnt_by_part(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(
+    l = table(spark, sf_dir, "lineitem")
+    p = table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & F.col("p_size").isin(1, 5, 9, 13, 17, 21, 25)
     )
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    bad = table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
     return (

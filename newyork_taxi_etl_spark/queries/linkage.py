@@ -26,7 +26,7 @@ from newyork_taxi_etl_spark.operators.linkage import (
 )
 from newyork_taxi_etl_spark.registry import register
 from newyork_taxi_etl_spark.session import spread
-from newyork_taxi_etl_spark.sources.readers import table_path
+from newyork_taxi_etl_spark.sources.readers import table
 
 _SH = shingles_sql("text", 3)
 
@@ -92,7 +92,7 @@ _LINK_CTE = "WITH " + _LINK_BODY
 
 
 def _corpora(spark, sf_dir):
-    docs = spread(spark.read.parquet(table_path(sf_dir, "documents")))
+    docs = spread(table(spark, sf_dir, "documents"))
     return docs, derive_perturbed_corpus(docs)
 
 

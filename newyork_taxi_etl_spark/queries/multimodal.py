@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.operators import multimodal as M
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import table_path
+from newyork_taxi_etl_spark.sources.readers import table
 
 
 @register(
@@ -29,7 +29,7 @@ from newyork_taxi_etl_spark.sources.readers import table_path
     "value-checked against the oracle",
 )
 def multimodal_features(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     feats = M.extract_features(M.attach_blob(docs))
     return feats.select("doc_id", "n_bytes", "first_byte")
 
@@ -48,7 +48,7 @@ def multimodal_features(spark, sf_dir):
     "payload via posexplode(transform(sequence(...)))",
 )
 def multimodal_frame_sample(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     sampled = M.frame_sample(M.attach_blob(docs), every_n_bytes=64)
     return sampled.select(
         "doc_id",
@@ -71,7 +71,7 @@ def multimodal_frame_sample(spark, sf_dir):
     "swapped for a deterministic byte slice",
 )
 def multimodal_resize(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return M.resize_blobs(M.attach_blob(docs), target_bytes=32)
 
 
@@ -176,7 +176,7 @@ _PHASH_TAIL_SQL = """bands AS (
     "all-pairs.",
 )
 def dedup_multimodal_phash(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _phash_lsh_pairs(M.phash_bands(M.attach_blob(docs)))
 
 
@@ -292,5 +292,5 @@ _DCT_COEF_SQL = "coef(u, x, k) AS (VALUES " + ", ".join(
     "bits/blob persisted, banded shuffle only.",
 )
 def dedup_multimodal_phash_dct(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _phash_lsh_pairs(M.phash_dct_bands(M.attach_blob(docs)))

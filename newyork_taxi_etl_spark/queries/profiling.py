@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.operators import profile as P
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import read_events, table_path
+from newyork_taxi_etl_spark.sources.readers import table, table_path
 
 _MONEYISH = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
@@ -28,7 +28,7 @@ _MONEYISH = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     doc="A3 single-pass per-column null counts (nb:973 (c12))",
 )
 def profile_nulls(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "lineitem"))
+    df = table(spark, sf_dir, "lineitem")
     return P.null_counts(
         df, ["l_quantity", "l_extendedprice", "l_discount", "l_returnflag", "l_shipdate"]
     )
@@ -50,7 +50,7 @@ def profile_nulls(spark, sf_dir):
 )
 def profile_negatives(spark, sf_dir):
     df = (
-        spark.read.parquet(table_path(sf_dir, "lineitem"))
+        table(spark, sf_dir, "lineitem")
         .withColumn("disc_shift", F.col("l_discount") - 0.05)
         .withColumn("tax_shift", F.col("l_tax") - 0.04)
         .withColumn("qty_shift", F.col("l_quantity") - 25)
@@ -73,7 +73,7 @@ def profile_negatives(spark, sf_dir):
     doc="A4 exact countDistinct for every column, single pass (nb:1121 (c16))",
 )
 def profile_distinct(spark, sf_dir):
-    return P.distinct_counts(spark.read.parquet(table_path(sf_dir, "orders")))
+    return P.distinct_counts(table(spark, sf_dir, "orders"))
 
 
 @register(
@@ -97,7 +97,7 @@ def profile_distinct(spark, sf_dir):
 )
 def summary_stats(spark, sf_dir):
     return P.summary_stats(
-        spark.read.parquet(table_path(sf_dir, "lineitem")),
+        table(spark, sf_dir, "lineitem"),
         ["l_quantity", "l_extendedprice"],
     )
 
@@ -113,7 +113,7 @@ def summary_stats(spark, sf_dir):
 )
 def exact_quantile(spark, sf_dir):
     return P.exact_quantiles(
-        spark.read.parquet(table_path(sf_dir, "lineitem")),
+        table(spark, sf_dir, "lineitem"),
         "l_extendedprice",
         [0.5, 0.999],
     )
@@ -137,7 +137,7 @@ def exact_quantile(spark, sf_dir):
 def profile_distinct_approx(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(table_path(sf_dir, "orders"))
+    df = table(spark, sf_dir, "orders")
     cols = ["o_orderkey", "o_custkey", "o_orderpriority"]
     # two separate 1-row aggregates: mixing exact multi-distinct (Expand,
     # one replica per distinct column) with wide HLL buffers in a single
@@ -183,7 +183,7 @@ def profile_distinct_approx(spark, sf_dir):
     "count (not the row count) bounds the shuffle",
 )
 def value_histogram(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     return (
         ev.filter(F.col("value").isNotNull())
         .groupBy(
@@ -216,8 +216,8 @@ def value_histogram(spark, sf_dir):
     "into a single declarative pass",
 )
 def data_quality_checks(spark, sf_dir):
-    li = spark.read.parquet(table_path(sf_dir, "lineitem"))
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
     orphans = (
         li.select("l_orderkey")
         .join(
@@ -288,7 +288,7 @@ def freq_tokens_cms(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.sketch import approx_heavy_hitters
 
     toks = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
+        table(spark, sf_dir, "documents")
         .select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
     )
     return approx_heavy_hitters(toks, "tok", support=0.02, depth=4, width=256)
@@ -352,7 +352,7 @@ def freq_tokens_cms_sampled(spark, sf_dir):
     )
 
     toks = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
+        table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok"),
@@ -422,7 +422,7 @@ def freq_tokens_cms_by_lang(spark, sf_dir):
     )
 
     toks = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
+        table(spark, sf_dir, "documents")
         .select("lang", F.explode(F.split(F.col("text"), " ")).alias("tok"))
     )
     return grouped_heavy_hitters_topk(
@@ -496,7 +496,7 @@ def freq_tokens_cms_by_lang_sampled(spark, sf_dir):
     )
 
     toks = (
-        spark.read.parquet(table_path(sf_dir, "documents"))
+        table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             "lang",
@@ -567,8 +567,8 @@ def bloom_prefilter_orders(spark, sf_dir):
         bloom_maybe_contains,
     )
 
-    cust = spark.read.parquet(table_path(sf_dir, "customer"))
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
+    cust = table(spark, sf_dir, "customer")
+    orders = table(spark, sf_dir, "orders")
     keys = cust.filter(F.col("c_nationkey") < 5).select(
         F.col("c_custkey").alias("key")
     )
@@ -645,7 +645,7 @@ def bloom_prefilter_orders(spark, sf_dir):
     "minhash_jaccard_gate / bloom_prefilter_orders",
 )
 def quantile_sketch_gate(spark, sf_dir):
-    li = spark.read.parquet(table_path(sf_dir, "lineitem"))
+    li = table(spark, sf_dir, "lineitem")
     x = F.col("l_extendedprice")
     # the exact side rides the DISTRIBUTED selection (operators/profile.py
     # exact_quantiles — range shuffle, no single-task buffer); the earlier
@@ -735,7 +735,7 @@ def quantile_sketch_gate(spark, sf_dir):
     "the result is deterministic",
 )
 def skew_diagnostics(spark, sf_dir):
-    li = spark.read.parquet(table_path(sf_dir, "lineitem"))
+    li = table(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("cnt"))
     tot = counts.agg(
         F.count(F.lit(1)).alias("n_keys"),
@@ -805,8 +805,8 @@ def skew_diagnostics(spark, sf_dir):
     "distribution, this one prices the joins it feeds",
 )
 def join_size_estimate(spark, sf_dir):
-    li = spark.read.parquet(table_path(sf_dir, "lineitem"))
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
     lo = li.groupBy(F.col("l_orderkey").alias("k")).agg(
         F.count(F.lit(1)).alias("cnt_l")
     )
@@ -853,7 +853,7 @@ def join_size_estimate(spark, sf_dir):
     "Exact side fused into ONE array-percentile aggregate per group",
 )
 def grouped_quantile_gate(spark, sf_dir):
-    li = spark.read.parquet(table_path(sf_dir, "lineitem"))
+    li = table(spark, sf_dir, "lineitem")
     g = li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_extendedprice, array(0.5D, 0.99D))").alias("ex"),
         F.expr(
@@ -906,7 +906,7 @@ def grouped_quantile_gate(spark, sf_dir):
 )
 def grouped_quantile_dist(spark, sf_dir):
     return P.grouped_exact_quantiles(
-        read_events(spark, sf_dir), "event_type", "value", [0.5, 0.9]
+        table(spark, sf_dir, "events"), "event_type", "value", [0.5, 0.9]
     )
 
 
@@ -933,7 +933,7 @@ def grouped_quantile_dist(spark, sf_dir):
     "buffers in one aggregate forces the sort-based object-agg fallback)",
 )
 def grouped_distinct_approx(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("bigint").alias("dc_users")
     )
@@ -979,7 +979,7 @@ def grouped_distinct_approx(spark, sf_dir):
     "assert equality of neither.",
 )
 def hll_sketch_merge_gate(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     per_group = ev.groupBy("event_type").agg(
         F.hll_sketch_agg("user_id").alias("sk")
     )
@@ -1039,7 +1039,7 @@ def hll_sketch_merge_gate(spark, sf_dir):
     "(order-independent, functions/exact.py) then rounded.",
 )
 def winsorized_group_stats(spark, sf_dir):
-    ev = read_events(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     cuts = ev.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.05)).alias("p05"),
         F.percentile("value", F.lit(0.95)).alias("p95"),
@@ -1100,7 +1100,7 @@ def winsorized_group_stats(spark, sf_dir):
     "of quantile binning. Per-bin count/min/max verify the assignment.",
 )
 def quantile_binning_feature(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     cuts = docs.agg(
         F.percentile("n_chars", F.lit(0.25)).alias("c1"),
         F.percentile("n_chars", F.lit(0.50)).alias("c2"),
@@ -1148,7 +1148,7 @@ def quantile_binning_feature(spark, sf_dir):
     "pairs, the sketch side only fixed-width sketch bytes.",
 )
 def windowed_distinct_hll(spark, sf_dir):
-    ev = read_events(spark, sf_dir).select(
+    ev = table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("day"), "user_id"
     )
     per_day = ev.groupBy("day").agg(
@@ -1218,7 +1218,7 @@ def windowed_distinct_hll(spark, sf_dir):
 def grouped_moment_stats(spark, sf_dir):
     dec = "decimal(38,0)"
     ev = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
@@ -1316,7 +1316,7 @@ def grouped_moment_stats(spark, sf_dir):
     "Spark dayofweek normalized to DuckDB's 0-based convention.",
 )
 def k_anonymity_profile(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     dow = (F.dayofweek(F.to_date("ts")) - 1).alias("dow")
     fine = ev.select(
         "event_type",
@@ -1405,7 +1405,7 @@ def k_anonymity_profile(spark, sf_dir):
 def quantile_dkw_ci(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = read_events(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     counts = (
         ev.select(F.round(F.col("value") * 100).cast("bigint").alias("v"))
         .groupBy("v")
@@ -1500,7 +1500,7 @@ def ams_f2_sketch_gate(spark, sf_dir):
     from pyspark.sql import Window
 
     dec = "decimal(38,0)"
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     signs = (
         ev.select(
             F.explode(
@@ -1605,7 +1605,7 @@ def ams_f2_sketch_gate(spark, sf_dir):
     "argmin.",
 )
 def k_anonymity_ladder(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     classes = _qi_ladder_classes(ev)
     supp = F.sum(F.when(F.col("k") < 5, F.col("k")).otherwise(0))
     stats = classes.groupBy("level").agg(
@@ -1735,7 +1735,7 @@ def _qi_ladder_classes(ev):
 def dp_noisy_histogram(spark, sf_dir):
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     hist = docs.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("true_count")
     )
@@ -1872,7 +1872,7 @@ _DP2_KEY = (
     "touches raw rows after the first aggregate.",
 )
 def dp_release_pipeline(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     classes = _qi_ladder_classes(ev).localCheckpoint(eager=True)
     supp = F.sum(F.when(F.col("k") < 5, F.col("k")).otherwise(0))
     stats = classes.groupBy("level").agg(
@@ -2017,7 +2017,7 @@ _BENFORD_CASE = (
 def benford_first_digit(spark, sf_dir):
     from pyspark.sql import Window
 
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
+    orders = table(spark, sf_dir, "orders")
     c = F.round(F.col("o_totalprice") * 100).cast("bigint")
     digits = orders.filter(F.col("o_totalprice") > 0).select(
         F.floor(
@@ -2118,8 +2118,8 @@ def benford_first_digit(spark, sf_dir):
 def gini_revenue_concentration(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
 
-    cust = spark.read.parquet(table_path(sf_dir, "customer"))
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
+    cust = table(spark, sf_dir, "customer")
+    orders = table(spark, sf_dir, "orders")
     rev = (
         cust.join(
             orders, cust["c_custkey"] == orders["o_custkey"], "left"
@@ -2241,7 +2241,7 @@ _HILL_SQL = """
 def hill_tail_index(spark, sf_dir):
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     base = docs.select("lang", "n_chars", "doc_id").filter(
         F.col("n_chars") > 0
     )
@@ -2642,7 +2642,7 @@ def _kll_survivors(d, n: int):
 def kll_quantile_sketch(spark, sf_dir):
     from newyork_taxi_etl_spark.sources.readers import parquet_rowcount
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
         F.size(F.split("text", " ")).cast("bigint").alias("val"),
@@ -2732,7 +2732,7 @@ def streaming_kll_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_kllingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     # 2 slices: one state-less first fold + one genuine fold-into-state
@@ -2874,7 +2874,7 @@ def kmv_theta_sketch_setops(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.sketch import kmv_bottom_k, kmv_hash
 
     k = _KMV_K
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "lang", F.explode(F.split("text", " ")).alias("tok")
     )

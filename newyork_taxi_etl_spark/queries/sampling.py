@@ -12,13 +12,13 @@ from pyspark.sql import functions as F
 from newyork_taxi_etl_spark.functions.exact import avg_exact, avg_exact_sql
 from newyork_taxi_etl_spark.operators import sampling as ops
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import read_events, table_path
+from newyork_taxi_etl_spark.sources.readers import table
 
 _BUCKET = ops.BUCKET_SQL.format(key="doc_id", n=100)
 
 
 def _docs(spark, sf_dir):
-    return spark.read.parquet(table_path(sf_dir, "documents"))
+    return table(spark, sf_dir, "documents")
 
 
 @register(
@@ -126,7 +126,7 @@ def sample_stratified(spark, sf_dir):
     "primitive",
 )
 def sample_weighted(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return ops.weighted_hash_sample(docs, "doc_id", "n_chars", k=25)
 
 
@@ -317,7 +317,7 @@ def exact_n_sample(spark, sf_dir):
     "repartition-stable, contamination-stable as the corpus grows.",
 )
 def group_aware_split(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     tagged = ev.select(
         "user_id",
         F.when(ops.hash_bucket("user_id", 100) < 80, "train")
@@ -410,7 +410,7 @@ def temporal_holdout_audit(spark, sf_dir):
     import datetime
 
     dec = "decimal(38,12)"
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     tagged = ev.select(
         "user_id",
         "value",

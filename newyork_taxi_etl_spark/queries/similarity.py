@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from newyork_taxi_etl_spark.functions.exact import avg_exact_sql, dec_out_sql
 from newyork_taxi_etl_spark.operators import similarity as S
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import table_path
+from newyork_taxi_etl_spark.sources.readers import table, table_path
 
 _COS_SQL = (
     "ROUND(list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
@@ -65,7 +65,7 @@ def bands_sql(id_alias: str, where: str = "") -> str:
     "vectors x corpus, per-query heap via row_number",
 )
 def ann_bruteforce_topk(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     return S.brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
 
 
@@ -104,7 +104,7 @@ def ann_bruteforce_topk(spark, sf_dir):
     "single-band 0.14 this replaces)",
 )
 def ann_lsh_bucketed_topk(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     return S.lsh_multiband_topk(
         emb, emb.filter(F.col("vec_id") < 5), k=5, bands=LSH_BANDS
     )
@@ -132,7 +132,7 @@ def ann_lsh_bucketed_topk(spark, sf_dir):
     "value-checked against the SQL oracle",
 )
 def ann_pandas_topk(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     queries = [
         (r.vec_id, list(r.embedding))
         for r in emb.filter(F.col("vec_id") < 3).collect()
@@ -186,7 +186,7 @@ def ann_pandas_topk(spark, sf_dir):
     "corpus/n_centroids*n_probe candidates per query",
 )
 def ann_ivf_topk(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     return S.ivf_topk(
         emb, emb.filter(F.col("vec_id") < 5), k=5, n_centroids=8, n_probe=2
     )
@@ -206,6 +206,18 @@ _BF10_SQL = f"""
         FROM bfs
       ) WHERE rank <= 10
     )"""
+
+
+def _byte_size(conf_value: str) -> int:
+    """Bytes of a Spark byte-size conf value (``"10485760b"``, ``"10m"``,
+    ``"-1"``); a bare number is bytes."""
+    v = conf_value.strip().lower().removesuffix("b")
+    mult = 1
+    for i, unit in enumerate("kmgtp", start=1):
+        if v.endswith(unit):
+            v, mult = v[:-1], 1024 ** i
+            break
+    return int(v) * mult
 
 
 def _ivf_leg_sql(p: int) -> str:
@@ -295,7 +307,7 @@ def _recall_row_sql(method: str) -> str:
     "deployment reads before sizing an index",
 )
 def ann_recall_at_k(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 5)
     # n_queries*k rows, consumed five times (total + four semi joins):
     # materialize once instead of re-scoring the corpus per consumer
@@ -372,7 +384,7 @@ def ann_recall_at_k(spark, sf_dir):
 def embedding_quantize_int8(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.exact import avg_exact
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     base = emb.select(
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v")
     ).withColumn("scale", F.expr("array_max(transform(v, x -> abs(x))) / 127"))
@@ -422,7 +434,7 @@ def embedding_quantize_int8(spark, sf_dir):
 def embedding_norm_stats(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.exact import avg_exact
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     nrm = F.round(
         F.expr(
             "sqrt(aggregate(zip_with(embedding, embedding, "
@@ -508,7 +520,7 @@ def kmeans_cluster_sizes(spark, sf_dir):
         kmeans_assign,
     )
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     return cluster_profile(kmeans_assign(emb, k=4, n_iter=3))
 
 
@@ -537,7 +549,7 @@ def kmeans_cluster_sizes(spark, sf_dir):
     "sf0.1",
 )
 def label_centroids(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     exploded = emb.select(
         "label",
         F.posexplode(F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")).alias(
@@ -637,7 +649,7 @@ _IVF_KM_SQL = f"""
     "corpus/n_centroids*n_probe per query",
 )
 def ann_ivf_kmeans_topk(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     return _ivf_kmeans_topk(
         emb, k=5, cent=_ivf_centroids_cached(spark, emb, sf_dir)
     )
@@ -1035,7 +1047,7 @@ def _pq_trained_cached(
     "memory story that makes billion-vector ANN fit in RAM",
 )
 def pq_encode_profile(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     _, _, encoded, _ = _pq_parts(emb)
     return (
         encoded.groupBy(
@@ -1122,7 +1134,7 @@ def pq_encode_profile(spark, sf_dir):
     "measures the dataflow, not recall (size m/k up for that)",
 )
 def ann_pq_adc_topk(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -1219,7 +1231,7 @@ def _pq_adc_topk(emb, k=5, k_codes=_PQ_K, train=False, query_ids=None,
     "bytes for recall",
 )
 def ann_pq_adc_k16_topk(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -1264,7 +1276,7 @@ def ann_pq_adc_k16_topk(spark, sf_dir):
     "measured number instead of assuming the textbook one",
 )
 def ann_pq_adc_trained_topk(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -1448,7 +1460,7 @@ def _ivfpq_adc_topk(spark, sf_dir, k=5, n_probe=2):
     from newyork_taxi_etl_spark.streaming.windows import _stage_cached
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     base = emb.select(
         "vec_id",
@@ -1617,7 +1629,7 @@ def _ivfpq_residual_topk(spark, sf_dir, k=5, n_probe=2):
     from newyork_taxi_etl_spark.streaming.windows import _stage_cached
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     base = emb.select(
         "vec_id",
@@ -1812,7 +1824,7 @@ def ann_ivfpq_residual_topk(spark, sf_dir):
     "agree.",
 )
 def ann_recall_ivfpq(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 5)
     bf = (
         S.brute_force_topk(emb, qs, k=10)
@@ -1943,7 +1955,7 @@ def ann_recall_ivfpq(spark, sf_dir):
     "exactly the trade a 100 TB index sizes with m/k",
 )
 def ann_recall_trained(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 5)
     bf = (
         S.brute_force_topk(emb, qs, k=10)
@@ -2067,7 +2079,7 @@ def _trunc_pairs_sql(d: int) -> str:
     "price of each truncation on this corpus",
 )
 def ann_truncation_recall(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     bf = (
         S.brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
         .select("query_id", "cand_id")
@@ -2154,7 +2166,7 @@ def ann_cascade_rerank(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql.functions import broadcast
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     t = emb.withColumn("embedding", F.slice("embedding", 1, 16))
     tq = q.withColumn("embedding", F.slice("embedding", 1, 16))
@@ -2252,7 +2264,7 @@ def ann_cascade_rerank(spark, sf_dir):
     "bucket key is a zero-shuffle projection.",
 )
 def semantic_dedup_buckets(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     # norm precomputed ONCE per vector (norm_a = sqrt(dot(a,a)) exactly, so
     # dot/(na*nb) is bit-identical to the oracle's three-dot formulation)
     # — each candidate pair costs one dot product instead of three
@@ -2351,7 +2363,7 @@ _RRF_LEG = """
 def rrf_hybrid_retrieval(spark, sf_dir):
     from pyspark.sql import Window
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
 
     def leg(dim):
         sliced = emb.select(
@@ -2445,7 +2457,7 @@ def ann_index_persisted_probe(spark, sf_dir):
         _SQDIST,
     )
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         "embedding",
@@ -2614,7 +2626,7 @@ def ann_index_filtered_probe(spark, sf_dir):
     )
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     base = emb.select(
         "vec_id",
@@ -2803,7 +2815,7 @@ def ann_index_incremental_append(spark, sf_dir):
         kmeans_centroids,
     )
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         "embedding",
@@ -2991,7 +3003,7 @@ def jl_projection_distortion(spark, sf_dir):
     signs_sql = "array(" + ", ".join(sign_rows) + ")"
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     proj = emb.select(
         "vec_id",
@@ -3209,7 +3221,7 @@ def gram_power_iteration_pc1(spark, sf_dir):
     from pyspark.sql import Window
 
     dec = "decimal(38,12)"
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     # one-pass Gram over the UPPER TRIANGLE only (2080 terms/row instead
     # of 4096 — G is symmetric and round(v_i*v_j) == round(v_j*v_i)
     # exactly, so mirroring after the aggregate is value-identical to
@@ -3365,7 +3377,7 @@ def knn_label_accuracy(spark, sf_dir):
     )
 
     raw = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     nrm = F.expr(f"sqrt({_DOT.format(a='embedding', b='embedding')})")
     q = _fixed_n_queries(raw).select(
@@ -3472,7 +3484,7 @@ def label_noise_consensus(spark, sf_dir):
     )
 
     raw = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     nrm = F.expr(f"sqrt({_DOT.format(a='embedding', b='embedding')})")
     q = _fixed_n_queries(raw).select(
@@ -3667,7 +3679,7 @@ def knn_label_accuracy_indexed(spark, sf_dir):
     # spread_small_scan: parallelize the assignment/eval stages when the
     # corpus fits one split (structural no-op at scale)
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     # norms precomputed ONCE per vector and STORED IN THE INDEX (a
     # serving index carries them for exactly this reason) — one dot per
@@ -3960,7 +3972,7 @@ def gram_subspace_topk(spark, sf_dir):
 
     from pyspark.sql import types as T
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     gram = {
         (r["i"], r["j"]): r["g"] for r in _gram_checkpointed(emb).collect()
     }
@@ -4051,7 +4063,7 @@ def streaming_ann_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     work = tempfile.mkdtemp(prefix="nyetl_annstream_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_ann_ingest(
@@ -4131,7 +4143,7 @@ def streaming_ann_ingest(spark, sf_dir):
 )
 def embedding_class_separation(spark, sf_dir):
     dec = "decimal(38,12)"
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "label",
         F.posexplode(
@@ -4266,7 +4278,7 @@ def lsh_scurve_calibration(spark, sf_dir):
     )
 
     emb = (
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < 64)
         .select(
             "vec_id",
@@ -4488,7 +4500,7 @@ _MMD_SQL = f"""
     "Planted-shift sensitivity is pinned in tests/test_round9b_ops.py.",
 )
 def mmd_moment_drift(spark, sf_dir):
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     par = moment_mmd2_split(
         emb.withColumn(
             "side", F.when(F.col("vec_id") % 2 == 0, 1).otherwise(0)
@@ -4592,7 +4604,7 @@ def mmr_diverse_topk(spark, sf_dir, k: int = 5, n_cand: int = 12):
     from pyspark.sql import Window
 
     lam = 0.7
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
@@ -4856,7 +4868,7 @@ def ann_ranking_quality(spark, sf_dir):
     # spread_small_scan: parallelize the assignment/eval stages when the
     # corpus fits one split (structural no-op at scale)
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     # norms precomputed once per vector and stored in the index (the r7
     # semantic_dedup_buckets lesson): sqrt(dot(v,v)) is the same subtree
@@ -5095,7 +5107,7 @@ def embedding_outlier_screen(spark, sf_dir):
     )
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     dims = emb.select(
         F.explode(
@@ -5208,7 +5220,7 @@ def hard_negative_mining(spark, sf_dir):
     )
 
     raw = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     nrm = F.expr(f"sqrt({_DOT.format(a='embedding', b='embedding')})")
     q = _fixed_n_queries(raw, n=64).select(
@@ -5353,7 +5365,7 @@ def ann_sq8_adc_topk(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     return _sq8_ranked(emb, k=5)
 
@@ -5499,7 +5511,7 @@ def ann_recall_sq8(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     bf = _l2_bf_top10(emb)
     sq8 = _sq8_ranked(emb, k=10).select("query_id", "cand_id")
@@ -5646,7 +5658,7 @@ def ann_recall_sq_sweep(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     bf = _l2_bf_top10(emb)
     out = None
@@ -5785,7 +5797,7 @@ def ann_pq_rotated_recall(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     qs = emb.filter(F.col("vec_id") < 5)
     bf = (
@@ -6217,7 +6229,7 @@ def ann_opq_trained_recall(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     qs = emb.filter(F.col("vec_id") < 5)
     bf = (
@@ -6377,7 +6389,7 @@ def ann_ivf_balance(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
     base = emb.select(
@@ -6492,7 +6504,7 @@ _LABEL_MARGIN_SQL = """
 )
 def embedding_label_margin(spark, sf_dir):
     dec = "decimal(38,12)"
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings")).select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -6650,7 +6662,7 @@ _ISOTROPY_SQL = """
 )
 def embedding_isotropy_audit(spark, sf_dir):
     dec = "decimal(38,12)"
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings")).select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -6818,7 +6830,7 @@ def lsh_band_sweep(spark, sf_dir):
         spread_small_scan,
     )
 
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     # spread the 512-row sample BEFORE checkpointing (r16, guide §2.5 /
     # the spread_small_scan discipline): limit(512) materializes as ONE
     # partition, so the truth pass's broadcast-NLJ cosine scan (131k
@@ -7243,7 +7255,7 @@ def embedding_whitening_audit(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     base = emb.select(
         "vec_id",
@@ -7356,17 +7368,20 @@ def semantic_dedup_kmeans(spark, sf_dir):
     )
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     # constant cluster SIZE (the SemDeDup contract): k grows with the
     # corpus once cells would exceed ~750 members; at every shipped SF
     # this is the shared k=8 build.  n comes from the parquet footer
     # (exact, zero Spark jobs) so a centroid-stage cache hit skips the
     # corpus entirely (r14 ADVICE).
-    from newyork_taxi_etl_spark.sources.readers import parquet_rowcount
+    from newyork_taxi_etl_spark.sources.readers import (
+        parquet_rowcount,
+        parquet_value_count,
+    )
 
-    k = max(8, parquet_rowcount(table_path(sf_dir, "embeddings"))
-            // _SEMDEDUP_CELL)
+    emb_path = table_path(sf_dir, "embeddings")
+    k = max(8, parquet_rowcount(emb_path) // _SEMDEDUP_CELL)
     cent = _ivf_centroids_cached(spark, emb, sf_dir, k=k)
     cent_row = cent.agg(
         F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
@@ -7414,15 +7429,18 @@ def semantic_dedup_kmeans(spark, sf_dir):
     # the local cores idle under ~1.5M pairwise dots, and a byte-sized
     # salt is useless because AQE coalesces the tiny-bytes/heavy-CPU
     # post-shuffle partitions right back together.  Scale-adaptive fix:
-    # when the WHOLE cells table is broadcast-sized (n from the parquet
-    # footer; ~64-dim rows => <=50k rows is well under the 10 MB
-    # default), broadcast the build side — the pair generation then runs
-    # exchange-free at the probe scan's parallelism (emb is
-    # spread_small_scan'd upstream).  Past that size SemDeDup's own
-    # contract takes over (k grows with the corpus, so the cid shuffle
-    # join has >= core-count cells) and the plain join is right.
-    n_emb = parquet_rowcount(table_path(sf_dir, "embeddings"))
-    if n_emb <= 50_000:
+    # when the WHOLE cells table is broadcast-sized, broadcast the build
+    # side — the pair generation then runs exchange-free at the probe
+    # scan's parallelism (emb is spread_small_scan'd upstream).  Its size
+    # is rows × embedding width × 8 B, the footer's leaf value count of
+    # ``embedding`` times 8 (2,000 64-dim rows ≈ 1 MB; 50k rows would be
+    # ~26 MB, over the 10 MB default), held against the session's
+    # spark.sql.autoBroadcastJoinThreshold.  Past that size SemDeDup's
+    # own contract takes over (k grows with the corpus, so the cid
+    # shuffle join has >= core-count cells) and the plain join is right.
+    emb_bytes = 8 * parquet_value_count(emb_path, "embedding")
+    limit = _byte_size(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    if emb_bytes <= limit:
         joined = a.join(F.broadcast(b), "cid")
     else:
         joined = a.join(b, "cid")
@@ -7513,7 +7531,7 @@ def prototype_pruning_select(spark, sf_dir):
     )
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
     cent_row = cent.agg(
@@ -7638,7 +7656,7 @@ def coreset_kcenter_select(spark, sf_dir):
     )
 
     emb = spread_small_scan(
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
     )
     base = emb.select(
         "vec_id",
@@ -7779,7 +7797,7 @@ def dbscan_embedding_clusters(spark, sf_dir):
 
     # pin the slice once — every downstream branch re-reads it
     emb = (
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < _DBSCAN_SLICE)
         .select("vec_id", "embedding")
         .localCheckpoint(eager=True)
@@ -7918,7 +7936,7 @@ def lof_knn_outliers(spark, sf_dir):
 
     # pin the slice once — every downstream branch re-reads it
     emb = (
-        spark.read.parquet(table_path(sf_dir, "embeddings"))
+        table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < _DBSCAN_SLICE)
         .select("vec_id", "embedding")
         .localCheckpoint(eager=True)

@@ -22,7 +22,7 @@ from newyork_taxi_etl_spark.functions.exact import (
     sum_exact_sql,
 )
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import read_events, table_path
+from newyork_taxi_etl_spark.sources.readers import table
 from newyork_taxi_etl_spark.sources.writers import (
     HAVE_DELTA,
     optimize_zorder,
@@ -59,7 +59,7 @@ def partitioned_write_pruned_read(spark, sf_dir):
     out = _workdir("partitioned_events")
     shutil.rmtree(out, ignore_errors=True)
     df = (
-        read_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .withColumn("event_year", F.year("ts"))
         .withColumn("event_month", F.month("ts"))
         .withColumn("event_day", F.dayofmonth("ts"))
@@ -93,7 +93,7 @@ def partitioned_write_pruned_read(spark, sf_dir):
 def zorder_approx_roundtrip(spark, sf_dir):
     out = _workdir("zordered_events")
     shutil.rmtree(out, ignore_errors=True)
-    df = read_events(spark, sf_dir)
+    df = table(spark, sf_dir, "events")
     write_zordered_approx(df, out, ["user_id", "event_type"], target_files=8)
     back = spark.read.parquet(out).filter(F.col("user_id") == 7)
     return (
@@ -122,7 +122,7 @@ def zorder_approx_roundtrip(spark, sf_dir):
     "truth aggregates (n_partitions == COUNT(DISTINCT month))",
 )
 def sql_catalog_surface(spark, sf_dir):
-    df = read_events(spark, sf_dir).withColumn("event_month", F.month("ts"))
+    df = table(spark, sf_dir, "events").withColumn("event_month", F.month("ts"))
     spark.sql("DROP TABLE IF EXISTS nyetl_events_tbl")
     # a fresh in-memory catalog doesn't know about tables a previous session
     # wrote, so DROP TABLE can't clear the managed location — remove it too
@@ -178,7 +178,7 @@ def describe_table_detail_full(spark, sf_dir):
     ``num_files`` depends on task parallelism at write time, so the
     registered query drops it; pytest asserts it separately.
     """
-    df = read_events(spark, sf_dir).withColumn("event_month", F.month("ts"))
+    df = table(spark, sf_dir, "events").withColumn("event_month", F.month("ts"))
     tbl = "nyetl_events_detail_tbl"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     warehouse = spark.conf.get(
@@ -231,7 +231,7 @@ if HAVE_DELTA:  # pragma: no cover - activates when delta-spark is installed
         out = _workdir("delta_events")
         shutil.rmtree(out, ignore_errors=True)
         df = (
-            read_events(spark, sf_dir)
+            table(spark, sf_dir, "events")
             .withColumn("event_month", F.month("ts"))
         )
         write_partitioned(df, out, ["event_month"], fmt="delta")
@@ -263,8 +263,6 @@ if HAVE_DELTA:  # pragma: no cover - activates when delta-spark is installed
     "value-checked against the plain-join oracle",
 )
 def bucketed_colocated_join(spark, sf_dir):
-    from newyork_taxi_etl_spark.sources.readers import table_path
-
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", "spark-warehouse"
     ).removeprefix("file:")
@@ -272,7 +270,7 @@ def bucketed_colocated_join(spark, sf_dir):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
     (
-        spark.read.parquet(table_path(sf_dir, "orders"))
+        table(spark, sf_dir, "orders")
         .select("o_custkey", "o_totalprice")
         .write.bucketBy(4, "o_custkey")
         .sortBy("o_custkey")
@@ -280,7 +278,7 @@ def bucketed_colocated_join(spark, sf_dir):
         .saveAsTable("nyetl_orders_bkt")
     )
     (
-        spark.read.parquet(table_path(sf_dir, "customer"))
+        table(spark, sf_dir, "customer")
         .select("c_custkey", "c_mktsegment")
         .write.bucketBy(4, "c_custkey")
         .sortBy("c_custkey")
@@ -335,7 +333,7 @@ _ROUNDTRIP_ORACLE = f"""
 def csv_roundtrip(spark, sf_dir):
     out = _workdir("events_csv")
     shutil.rmtree(out, ignore_errors=True)
-    ev = read_events(spark, sf_dir).select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     ev.write.mode("overwrite").option("header", True).csv(out)
@@ -355,7 +353,7 @@ def csv_roundtrip(spark, sf_dir):
 def jsonl_roundtrip(spark, sf_dir):
     out = _workdir("events_jsonl")
     shutil.rmtree(out, ignore_errors=True)
-    ev = read_events(spark, sf_dir).select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     ev.write.mode("overwrite").json(out)
@@ -375,7 +373,7 @@ def jsonl_roundtrip(spark, sf_dir):
 def orc_roundtrip(spark, sf_dir):
     out = _workdir("events_orc")
     shutil.rmtree(out, ignore_errors=True)
-    ev = read_events(spark, sf_dir).select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     ev.write.mode("overwrite").orc(out)
@@ -433,7 +431,7 @@ def orc_roundtrip(spark, sf_dir):
 def cdc_merge_apply(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.exact import sum_exact
 
-    cust = spark.read.parquet(table_path(sf_dir, "customer"))
+    cust = table(spark, sf_dir, "customer")
     upd = cust.filter(F.col("c_custkey") % 10 == 0).select(
         F.col("c_custkey").alias("k"),
         F.lit("U").alias("op"),
@@ -528,7 +526,7 @@ def schema_evolution_read(spark, sf_dir):
 
     out = _workdir("schema_evo")
     shutil.rmtree(out, ignore_errors=True)
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
+    orders = table(spark, sf_dir, "orders")
     orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     ).write.mode("overwrite").parquet(os.path.join(out, "gen=1"))
@@ -600,13 +598,13 @@ def schema_evolution_read(spark, sf_dir):
 )
 def scd2_dimension_history(spark, sf_dir):
     eff = "2000-01-01"
-    dim = spark.read.parquet(table_path(sf_dir, "customer")).select(
+    dim = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"),
         F.col("c_mktsegment").alias("segment"),
         F.lit("1990-01-01").cast("timestamp").alias("valid_from"),
     )
     changed = (
-        spark.read.parquet(table_path(sf_dir, "orders"))
+        table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= eff)
         .select(F.col("o_custkey").alias("custkey"))
         .distinct()
@@ -671,7 +669,7 @@ def scd2_dimension_history(spark, sf_dir):
 )
 def incremental_agg_refresh(spark, sf_dir):
     cutoff = "1999-01-01"
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
+    orders = table(spark, sf_dir, "orders")
     dec = "decimal(38,12)"
 
     def state(df):
@@ -732,7 +730,7 @@ def _compact_orders(spark, sf_dir):
     small_dir = os.path.join(base, "small")
     compact_dir = os.path.join(base, "compact")
 
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
+    orders = table(spark, sf_dir, "orders")
     orders.repartition(16).write.mode("overwrite").parquet(small_dir)
     n_before = len(glob.glob(os.path.join(small_dir, "*.parquet")))
 
@@ -823,7 +821,7 @@ def compaction_concurrent_read(spark, sf_dir):
         with open(pointer) as f:
             return os.path.join(base, f.read().strip())
 
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
+    orders = table(spark, sf_dir, "orders")
     gen0 = os.path.join(base, "gen0")
     orders.repartition(16).write.mode("overwrite").parquet(gen0)
     write_pointer("gen0")
@@ -926,7 +924,7 @@ def compaction_concurrent_read(spark, sf_dir):
 def table_diff_reconcile(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.sampling import hash_bucket
 
-    ev = read_events(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     base = ev.select(
         "event_id",
         F.round(F.col("value") * 100).cast("bigint").alias("yi"),
@@ -1044,7 +1042,7 @@ def compliance_delete_rewrite(spark, sf_dir):
 
     out = _workdir("compliance_tbl")
     shutil.rmtree(out, ignore_errors=True)
-    ev = read_events(spark, sf_dir).withColumn(
+    ev = table(spark, sf_dir, "events").withColumn(
         "u_bucket", hash_bucket("user_id", 16)
     )
     ev.write.mode("overwrite").partitionBy("u_bucket").parquet(out)
@@ -1165,7 +1163,7 @@ def time_travel_vacuum(spark, sf_dir):
         with open(pointer) as f:
             return os.path.join(base, f.read().strip())
 
-    orders = spark.read.parquet(table_path(sf_dir, "orders")).select(
+    orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     gen0 = os.path.join(base, "gen0")
@@ -1271,7 +1269,7 @@ def time_travel_vacuum(spark, sf_dir):
 def streaming_cdc_apply(spark, sf_dir):
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    base = spark.read.parquet(table_path(sf_dir, "orders")).select(
+    base = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     cdc = (
@@ -1352,7 +1350,7 @@ def zorder_interleaved_skipping(spark, sf_dir):
         write_zordered_interleaved,
     )
 
-    li = spark.read.parquet(table_path(sf_dir, "lineitem"))
+    li = table(spark, sf_dir, "lineitem")
     zdir = _workdir("zint_lineitem")
     ldir = _workdir("zlex_lineitem")
     write_zordered_interleaved(
@@ -1458,7 +1456,7 @@ def zorder_interleaved_skipping(spark, sf_dir):
 def corpus_shard_export(spark, sf_dir):
     out = _workdir("corpus_shards")
     shutil.rmtree(out, ignore_errors=True)
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.size(F.split(F.col("text"), " "))
     kept = docs.filter(toks >= 10).select(
         "doc_id",

@@ -4,7 +4,7 @@ Batch evaluation of the same expressions Structured Streaming runs —
 oracle-checkable — plus a real readStream pass (rows-only).
 
 Oracle note: raw ``ts`` carries nanoseconds in the parquet file; the engine
-reads microseconds (sources.readers.read_events), so every oracle that
+reads microseconds (sources.readers.table(..., "events")), so every oracle that
 exposes or compares timestamps first casts ``ts`` to microsecond precision
 (``CAST(ts AS TIMESTAMP)``).
 """
@@ -17,7 +17,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import read_events
+from newyork_taxi_etl_spark.sources.readers import table
 from newyork_taxi_etl_spark.streaming import windows as W
 
 
@@ -43,7 +43,7 @@ def _workdir(name: str) -> str:
     "under Structured Streaming)",
 )
 def tumbling_window_agg(spark, sf_dir):
-    return W.tumbling_agg(read_events(spark, sf_dir))
+    return W.tumbling_agg(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -67,7 +67,7 @@ def tumbling_window_agg(spark, sf_dir):
     "(F.window(dur, slide))",
 )
 def sliding_window_agg(spark, sf_dir):
-    return W.sliding_agg(read_events(spark, sf_dir))
+    return W.sliding_agg(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -99,7 +99,7 @@ def sliding_window_agg(spark, sf_dir):
     "is the classic gaps-and-islands formulation",
 )
 def session_window_agg(spark, sf_dir):
-    return W.session_agg(read_events(spark, sf_dir))
+    return W.session_agg(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -120,7 +120,7 @@ def session_window_agg(spark, sf_dir):
 )
 def structured_streaming_availablenow(spark, sf_dir):
     stage = _workdir("stream_stage")
-    return W.run_stream_availablenow(spark, read_events(spark, sf_dir), stage)
+    return W.run_stream_availablenow(spark, table(spark, sf_dir, "events"), stage)
 
 
 @register(
@@ -138,7 +138,7 @@ def structured_streaming_availablenow(spark, sf_dir):
 )
 def streaming_dedup_within_watermark(spark, sf_dir):
     stage = _workdir("dedup_stage")
-    return W.run_streaming_dedup(spark, read_events(spark, sf_dir), stage)
+    return W.run_streaming_dedup(spark, table(spark, sf_dir, "events"), stage)
 
 
 @register(
@@ -156,7 +156,7 @@ def streaming_dedup_within_watermark(spark, sf_dir):
 )
 def stateful_user_stats(spark, sf_dir):
     stage = _workdir("stateful_stage")
-    return W.run_stateful_user_stats(spark, read_events(spark, sf_dir), stage)
+    return W.run_stateful_user_stats(spark, table(spark, sf_dir, "events"), stage)
 
 
 @register(
@@ -182,7 +182,7 @@ def stateful_user_stats(spark, sf_dir):
 )
 def stream_stream_join(spark, sf_dir):
     stage = _workdir("ssjoin_stage")
-    return W.run_stream_stream_join(spark, read_events(spark, sf_dir), stage)
+    return W.run_stream_stream_join(spark, table(spark, sf_dir, "events"), stage)
 
 
 @register(
@@ -208,7 +208,7 @@ def streaming_upsert_counts(spark, sf_dir):
     target = _workdir("upsert_target")
     return W.run_foreachbatch_upsert(
         spark,
-        read_events(spark, sf_dir),
+        table(spark, sf_dir, "events"),
         stage,
         target,
         cache_key=f"events_rep4:{sf_dir}",
@@ -241,7 +241,7 @@ def foreachbatch_idempotent_replay(spark, sf_dir):
     # same read-only stage (and key) as streaming_upsert_counts
     return W.run_upsert_replay_proof(
         spark,
-        read_events(spark, sf_dir),
+        table(spark, sf_dir, "events"),
         stage,
         target,
         cache_key=f"events_rep4:{sf_dir}",
@@ -270,7 +270,7 @@ def foreachbatch_idempotent_replay(spark, sf_dir):
 )
 def streaming_cms_counters(spark, sf_dir):
     stage = _workdir("cms_stage")
-    return W.run_streaming_cms(spark, read_events(spark, sf_dir), stage)
+    return W.run_streaming_cms(spark, table(spark, sf_dir, "events"), stage)
 
 
 @register(
@@ -297,14 +297,12 @@ def streaming_static_enrich(spark, sf_dir):
     import os
     import tempfile
 
-    from newyork_taxi_etl_spark.sources.readers import table_path
-
-    dim = spark.read.parquet(table_path(sf_dir, "nation")).select(
+    dim = table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
     stage = _workdir("enrich_stage")
     return W.run_stream_static_enrich(
-        spark, read_events(spark, sf_dir), dim, stage
+        spark, table(spark, sf_dir, "events"), dim, stage
     )
 
 
@@ -343,7 +341,7 @@ def streaming_decayed_scores(spark, sf_dir):
     import os
     import tempfile
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     ref = ev.agg(F.max("ts").alias("mx_ts"))
     stage = _workdir("decay_stage")
     return W.run_streaming_decayed_scores(spark, ev, ref, stage)
@@ -386,7 +384,7 @@ def streaming_decay_rescale(spark, sf_dir):
     import os
     import tempfile
 
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     stage = _workdir("rescale_stage")
     target = _workdir("rescale_state")
     return W.run_streaming_decay_rescale(spark, ev, stage, target)
@@ -453,9 +451,7 @@ def _lsh_index_oracle() -> str:
     "buckets, state never lives in memory",
 )
 def streaming_lsh_index_dedup(spark, sf_dir):
-    from newyork_taxi_etl_spark.sources.readers import table_path
-
-    docs = spark.read.parquet(table_path(sf_dir, "documents")).select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     dups = docs.filter(F.col("doc_id") < 10).select(
@@ -517,7 +513,7 @@ def stream_stream_outer_join(spark, sf_dir):
     # deterministic scaffolding with fixed mtimes)
     return W.run_stream_stream_outer_join(
         spark,
-        read_events(spark, sf_dir),
+        table(spark, sf_dir, "events"),
         stage,
         cache_key=f"events_ss3:{sf_dir}",
     )
@@ -567,7 +563,7 @@ def stream_stream_full_outer_join(spark, sf_dir):
     stage = _workdir("ssfull_stage")
     return W.run_stream_stream_two_sided_outer(
         spark,
-        read_events(spark, sf_dir),
+        table(spark, sf_dir, "events"),
         stage,
         "fullOuter",
         cache_key=f"events_ss3:{sf_dir}",
@@ -587,7 +583,7 @@ def stream_stream_right_outer_join(spark, sf_dir):
     stage = _workdir("ssright_stage")
     return W.run_stream_stream_two_sided_outer(
         spark,
-        read_events(spark, sf_dir),
+        table(spark, sf_dir, "events"),
         stage,
         "rightOuter",
         cache_key=f"events_ss3:{sf_dir}",
@@ -640,7 +636,7 @@ if tws_available():
     def transform_with_state_stats(spark, sf_dir):
         stage = _workdir("tws_stage")
         return W.run_transform_with_state_stats(
-            spark, read_events(spark, sf_dir), stage
+            spark, table(spark, sf_dir, "events"), stage
         )
 
 
@@ -674,7 +670,7 @@ def streaming_checkpoint_recovery(spark, sf_dir):
     # because the returned DataFrame reads the target lazily.
     workdir = tempfile.mkdtemp(prefix="nyetl_ckpt_recovery_")
     atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return W.run_checkpoint_recovery(spark, read_events(spark, sf_dir), workdir)
+    return W.run_checkpoint_recovery(spark, table(spark, sf_dir, "events"), workdir)
 
 
 @register(
@@ -727,7 +723,7 @@ def streaming_quantile_sketch(spark, sf_dir):
     stage = _workdir("qsketch_stage")
     target = _workdir("qsketch_state")
     return W.run_streaming_quantile_sketch(
-        spark, read_events(spark, sf_dir), stage, target
+        spark, table(spark, sf_dir, "events"), stage, target
     )
 
 
@@ -773,7 +769,7 @@ def streaming_session_close(spark, sf_dir):
     stage = _workdir("sessclose_stage")
     return W.run_streaming_session_close(
         spark,
-        read_events(spark, sf_dir),
+        table(spark, sf_dir, "events"),
         stage,
         cache_key=f"events_sess3:{sf_dir}",
     )
@@ -825,7 +821,7 @@ def streaming_late_drop(spark, sf_dir):
     stage = _workdir("latedrop_stage")
     return W.run_streaming_late_drop(
         spark,
-        read_events(spark, sf_dir),
+        table(spark, sf_dir, "events"),
         stage,
         cache_key=f"events_latedrop3:{sf_dir}",
     )
@@ -862,7 +858,7 @@ def streaming_reservoir_sample(spark, sf_dir):
     stage = _workdir("reservoir_stage")
     target = _workdir("reservoir_state")
     return W.run_streaming_reservoir_sample(
-        spark, read_events(spark, sf_dir), stage, target
+        spark, table(spark, sf_dir, "events"), stage, target
     )
 
 
@@ -894,7 +890,7 @@ def streaming_group_reservoir(spark, sf_dir):
     stage = _workdir("gres_stage")
     target = _workdir("gres_state")
     return W.run_streaming_group_reservoir(
-        spark, read_events(spark, sf_dir), stage, target
+        spark, table(spark, sf_dir, "events"), stage, target
     )
 
 
@@ -921,13 +917,12 @@ from newyork_taxi_etl_spark.queries.behavior import _W1_SQL  # noqa: E402
 def streaming_wasserstein_ingest(spark, sf_dir):
     work = _workdir("w1_ingest")
     return W.run_streaming_w1_ingest(
-        spark, read_events(spark, sf_dir), work,
+        spark, table(spark, sf_dir, "events"), work,
         cache_key=f"events_w1:{sf_dir}",
     )
 
 
 from newyork_taxi_etl_spark.queries.similarity import _MMD_SQL  # noqa: E402
-from newyork_taxi_etl_spark.sources.readers import table_path  # noqa: E402
 
 
 @register(
@@ -948,7 +943,7 @@ from newyork_taxi_etl_spark.sources.readers import table_path  # noqa: E402
 )
 def streaming_mmd_ingest(spark, sf_dir):
     work = _workdir("mmd_ingest")
-    emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    emb = table(spark, sf_dir, "embeddings")
     return W.run_streaming_mmd_ingest(
         spark, emb, work, cache_key=f"emb_mmd:{sf_dir}"
     )
@@ -1024,7 +1019,7 @@ def streaming_fm_distinct_ingest(spark, sf_dir):
     import shutil
     import tempfile
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_fmingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_fm_ingest(

@@ -21,7 +21,7 @@ from newyork_taxi_etl_spark.functions.text import (
 )
 from newyork_taxi_etl_spark.registry import register
 from newyork_taxi_etl_spark.session import spread
-from newyork_taxi_etl_spark.sources.readers import table_path
+from newyork_taxi_etl_spark.sources.readers import table
 
 _TOKS_SQL = "string_split(text, ' ')"
 
@@ -47,7 +47,7 @@ MARKERS = [("en", "the"), ("de", "scan"), ("es", "join"), ("fr", "group")]
     "type-token ratio — single narrow projection, no shuffle",
 )
 def text_stats(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "documents"))
+    df = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     return (
         df.select(
@@ -88,7 +88,7 @@ def text_stats(spark, sf_dir):
     "pipeline",
 )
 def text_quality_score(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "documents"))
+    df = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     quality = F.round(
@@ -118,7 +118,7 @@ def text_quality_score(spark, sf_dir):
     "(ceil(len/4) pieces per word)",
 )
 def text_token_count(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "documents"))
+    df = table(spark, sf_dir, "documents")
     return df.select(
         "doc_id",
         F.size(F.split("text", " ")).alias("ws_tokens"),
@@ -153,7 +153,7 @@ def text_token_count(spark, sf_dir):
     "priority tiebreak (deterministic argmax)",
 )
 def text_lang_id(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "documents"))
+    df = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     cnt = {lang: marker_count(toks, w) for lang, w in MARKERS}
     pred = (
@@ -184,7 +184,7 @@ def text_lang_id(spark, sf_dir):
     "md5-family MinHash signatures over 3-word shingles",
 )
 def text_fingerprint(spark, sf_dir):
-    df = spread(spark.read.parquet(table_path(sf_dir, "documents")))
+    df = spread(table(spark, sf_dir, "documents"))
     df = with_shingles(df, "text", 3, out="sh")
     return df.select(
         "doc_id",
@@ -212,7 +212,7 @@ def text_fingerprint(spark, sf_dir):
     "TakeOrderedAndProject, no global sort",
 )
 def text_regex_extract(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "documents"))
+    df = table(spark, sf_dir, "documents")
     ex = df.select(
         F.regexp_extract(F.col("text"), "[a-z]{5,}", 0).alias("long_word")
     )
@@ -248,7 +248,7 @@ def text_regex_extract(spark, sf_dir):
     "rows per partition survive the shuffle",
 )
 def text_top_ngrams(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select(F.split(F.lower(F.col("text")), " ").alias("toks"))
     bigrams = toks.select(
         F.explode(
@@ -293,7 +293,7 @@ def text_top_ngrams(spark, sf_dir):
     "Java regex and DuckDB RE2 agree",
 )
 def text_pii_redact(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     body = F.concat(
         F.col("text"),
         F.lit(" contact: user"),
@@ -355,7 +355,7 @@ def text_pii_redact(spark, sf_dir):
 def zipf_token_slope(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     tf = (
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
         .groupBy("tok")
@@ -449,7 +449,7 @@ def zipf_token_slope(spark, sf_dir):
     "uniform, which the gate records rather than assumes",
 )
 def lm_perplexity_score(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
@@ -523,7 +523,7 @@ def lm_perplexity_score(spark, sf_dir):
     "this same aggregate",
 )
 def bpe_top_merges(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split("text", " ")).alias("tok")).filter(
         F.length("tok") >= 2
     )
@@ -769,7 +769,7 @@ def _split_docs(docs, split: str):
 
 
 def _bpe_tops_cached(spark, sf_dir, split: str):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _tops_cached(
         spark,
         f"bpetops3:{split}:{sf_dir}",
@@ -778,7 +778,7 @@ def _bpe_tops_cached(spark, sf_dir, split: str):
 
 
 def _wp_tops_cached(spark, sf_dir, split: str):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _tops_cached(
         spark,
         f"wptops3:{split}:{sf_dir}",
@@ -787,7 +787,7 @@ def _wp_tops_cached(spark, sf_dir, split: str):
 
 
 def _bb_tops_cached(spark, sf_dir, split: str):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     vocab = (
         _split_docs(docs, split)
         .select(F.explode(F.split("text", " ")).alias("w"))
@@ -810,7 +810,7 @@ def _uni_final_cached(spark, sf_dir, split: str):
 
     from newyork_taxi_etl_spark.streaming.windows import _stage_cached
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
 
     def build(target: str) -> None:
         UNI.train_unigram(
@@ -828,7 +828,7 @@ def _bpe_encoded_words(spark, sf_dir):
     encoded with the trained merge table — the merges apply in training
     order via the same fold.  Exposed for the round-trip invariant test
     (concat(syms) must reconstruct w exactly)."""
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     tops = _bpe_tops_cached(spark, sf_dir, "full")
     lv = (
         docs.select(
@@ -1005,7 +1005,7 @@ _BPE_HOLDOUT_SQL = f"""
 )
 def bpe_holdout_fertility(spark, sf_dir):
     def build():
-        docs = spark.read.parquet(table_path(sf_dir, "documents"))
+        docs = table(spark, sf_dir, "documents")
         tops = _bpe_tops_cached(spark, sf_dir, "train80")
         lv = (
             docs.select(
@@ -1100,7 +1100,7 @@ def udtf_token_explode(spark, sf_dir):
                     yield i, tok
 
     spark.udtf.register("tokenize_udtf", Tokenize)
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     docs.filter(F.col("doc_id") % 25 == 0).createOrReplaceTempView(
         "udtf_docs_slice"
     )
@@ -1145,7 +1145,7 @@ def udtf_token_explode(spark, sf_dir):
     "e.g. tokenizers over arrow-backed vocabularies.",
 )
 def arrow_doc_length_stats(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents")).select(
+    docs = table(spark, sf_dir, "documents").select(
         "lang", "text"
     )
 
@@ -1210,7 +1210,7 @@ def arrow_doc_length_stats(spark, sf_dir):
     "same engine-parity idiom the CMS family pins (queries/profiling).",
 )
 def feature_hashing_profile(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(F.split("text", " ")).alias("tok")
     )
@@ -1265,7 +1265,7 @@ def feature_hashing_profile(spark, sf_dir):
     "semantics exactly.",
 )
 def array_hof_surface(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     lens = "transform(split(text, ' '), t -> length(t))"
     longs = f"filter({lens}, x -> x > 3)"
     per_doc = docs.select(
@@ -1437,7 +1437,7 @@ def _doc_nll_cached(spark, sf_dir, model: str, out: str):
     from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
 
     def build():
-        docs = spark.read.parquet(table_path(sf_dir, "documents"))
+        docs = table(spark, sf_dir, "documents")
         if model == "kn":
             return _doc_mean_nll(_kn_nll(_bi_stream(docs)), out="s")
         if model == "bi_add1":
@@ -1634,7 +1634,7 @@ def bigram_lm_compare(spark, sf_dir):
     "after the first aggregate.",
 )
 def langid_confusion(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "documents"))
+    df = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     cnt = {lang: marker_count(toks, w) for lang, w in MARKERS}
     pred = (
@@ -1784,7 +1784,7 @@ def novel_ngram_growth(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.text import with_shingles
 
     dec = "decimal(38,12)"
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     mx = docs.agg(F.max("doc_id").alias("m"))
     inst = (
         with_shingles(docs, "text", 3, out="sh")
@@ -1904,7 +1904,7 @@ _BG_SQL = shingles_sql("text", 2)
 def pmi_collocations(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.text import with_shingles
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     uni = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")
@@ -1975,7 +1975,7 @@ def pmi_collocations(spark, sf_dir):
     "divisions at the end.",
 )
 def token_fertility_by_lang(spark, sf_dir):
-    df = spark.read.parquet(table_path(sf_dir, "documents"))
+    df = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     sub = F.size(F.regexp_extract_all("text", F.lit("[a-z0-9]{1,4}"), 0))
     return (
@@ -2036,7 +2036,7 @@ def token_fertility_by_lang(spark, sf_dir):
 def chao1_vocab_richness(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.text import with_shingles
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     occ = (
         with_shingles(docs, "text", 3, "sh")
         .select(F.explode("sh").alias("g"))
@@ -2108,7 +2108,7 @@ def chao1_vocab_richness(spark, sf_dir):
 def good_turing_smoothing(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.text import with_shingles
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     occ = (
         with_shingles(docs, "text", 3, "sh")
         .select(F.explode("sh").alias("g"))
@@ -2197,7 +2197,7 @@ def good_turing_smoothing(spark, sf_dir):
 )
 def token_entropy_by_lang(spark, sf_dir):
     dec = "decimal(38,12)"
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     f = (
         docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok") != "")
@@ -2445,7 +2445,7 @@ _UNI_HOLDOUT_SQL = f"""
 )
 def unigram_holdout_fertility(spark, sf_dir):
     def build():
-        docs = spark.read.parquet(table_path(sf_dir, "documents"))
+        docs = table(spark, sf_dir, "documents")
         final = _uni_final_cached(spark, sf_dir, "train80")
         lv = (
             spread(docs)
@@ -2785,7 +2785,7 @@ def _lang_ntile3(doc_scores, score_col="score"):
 )
 def ccnet_perplexity_buckets(spark, sf_dir):
     dec = "decimal(38,12)"
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     doc_scores = _doc_mean_nll(
         _uni_add1_nll(_tok_stream(docs)), out="score"
     )
@@ -2863,7 +2863,7 @@ def _dndiv_leg_sql(n: int) -> str:
 def distinct_n_diversity(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.text import with_shingles
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     legs = []
     for n in (1, 2, 3):
         if n == 1:
@@ -2957,7 +2957,7 @@ _WP_HOLDOUT_SQL = f"""
 )
 def wordpiece_holdout_fertility(spark, sf_dir):
     def build():
-        docs = spark.read.parquet(table_path(sf_dir, "documents"))
+        docs = table(spark, sf_dir, "documents")
         tops = _wp_tops_cached(spark, sf_dir, "train80")
         lv = (
             docs.select(
@@ -3076,7 +3076,7 @@ _WP_GREEDY_SQL = f"""
 def wordpiece_greedy_segment(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.unigram import word_vocab
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     words = word_vocab(docs)
     vocab = vocab_from_tops(words, _wp_tops_cached(spark, sf_dir, "full"))
     segs = greedy_segment_words(words, vocab)
@@ -3415,7 +3415,7 @@ _WP_DRIFT_SQL = f"""
 def wordpiece_runtime_drift(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.unigram import word_vocab
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     tops = _wp_tops_cached(spark, sf_dir, "full")
     wv = word_vocab(docs)
     vocab = vocab_from_tops(wv, tops)
@@ -3630,7 +3630,7 @@ _QR_FUNNEL_SQL = f"""
     "beyond the doc aggregate",
 )
 def quality_rule_funnel(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     qstats = _qr_stats(docs).localCheckpoint(eager=False)
     return _qr_finalize(_qr_stage_counts(qstats))
 
@@ -3657,7 +3657,7 @@ def streaming_quality_funnel_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_funnelingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_funnel_ingest(spark, docs, work)
@@ -3726,7 +3726,7 @@ _READABILITY_SQL = """
     "shuffle is the O(langs) rollup — nothing grows with corpus size.",
 )
 def readability_scores(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _readability_finalize(_readability_terms(docs))
 
 
@@ -3821,7 +3821,7 @@ def _char_counts_cached(spark, sf_dir):
     from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
 
     def build():
-        docs = spark.read.parquet(table_path(sf_dir, "documents"))
+        docs = table(spark, sf_dir, "documents")
         return _char_counts(docs)
 
     return df_stage_cached(
@@ -3968,7 +3968,7 @@ def streaming_char_coverage_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_charcov_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_char_coverage_ingest(
@@ -4061,7 +4061,7 @@ _OOV_FALLBACK_SQL = """
 def oov_fallback_rate(spark, sf_dir):
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     counts = _char_counts_cached(spark, sf_dir)
     w_ord = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("ch"))
     w_cum = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -4197,7 +4197,7 @@ def quality_selection_curve(spark, sf_dir):
 
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     quality = F.round(
@@ -4295,7 +4295,7 @@ def streaming_heavy_hitters_ingest(spark, sf_dir):
 
     from newyork_taxi_etl_spark.streaming import windows as W
 
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="nyetl_hh_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
     return W.run_streaming_heavy_hitters(spark, docs, work)
@@ -4394,7 +4394,7 @@ def heaps_law_exponent(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
 
     dec = "decimal(38,12)"
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
         "text",
@@ -4532,7 +4532,7 @@ _ZIPF_BY_SOURCE_SQL = f"""
     "12-dp decimal OLS moments as zipf_token_slope.",
 )
 def zipf_slope_by_source(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     return _zipf_source_stats(docs).orderBy("source")
 
 
@@ -4728,7 +4728,7 @@ def bytebpe_holdout_fertility(spark, sf_dir):
     def build():
         from newyork_taxi_etl_spark.operators.bytebpe import BYTE_SYMS_EXPR
 
-        docs = spark.read.parquet(table_path(sf_dir, "documents"))
+        docs = table(spark, sf_dir, "documents")
         tops = _bb_tops_cached(spark, sf_dir, "train80")
         lv = (
             docs.select(
@@ -5014,7 +5014,7 @@ _SOURCE_GROWTH_SQL = f"""
     "tables; everything downstream is O(sources x 10).",
 )
 def source_growth_matrix(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     zipf = _zipf_source_stats(docs).select(
         "source",
         "vocab",
@@ -5131,7 +5131,7 @@ _SMOOTH_HOLDOUT_SQL = """
 )
 def smoothing_holdout_nll(spark, sf_dir):
     dec = "decimal(38,12)"
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     toks = _tok_stream(docs)
     train = toks.filter(F.col("doc_id") % 5 != 0)
     hold = toks.filter(F.col("doc_id") % 5 == 0)
@@ -5306,7 +5306,7 @@ _BPE_GAIN_SQL = f"""
     "else.",
 )
 def bpe_merge_gain_curve(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     vocab = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") >= 2)
@@ -5495,7 +5495,7 @@ _BAKEOFF_SQL = f"""
     "corpus-sized shuffles twice.",
 )
 def tokenizer_family_bakeoff(spark, sf_dir):
-    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    docs = table(spark, sf_dir, "documents")
     fams = (
         ("bpe", bpe_holdout_fertility, "bpe_symbols", "bpe_fertility"),
         ("wordpiece", wordpiece_holdout_fertility, "wp_symbols",

@@ -16,7 +16,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.sources.readers import read_events
+from newyork_taxi_etl_spark.sources.readers import table
 
 def _w():
     """Deterministic per-user ordering: ts then event_id tiebreak.
@@ -39,7 +39,7 @@ def _w():
     doc="lag/lead/row_number over per-user event sequences (extension of W1)",
 )
 def window_lead_lag(spark, sf_dir):
-    df = read_events(spark, sf_dir)
+    df = table(spark, sf_dir, "events")
     return (
         df.select(
             "event_id",
@@ -68,7 +68,7 @@ def window_lead_lag(spark, sf_dir):
     "decimal-exact so partial order can't skew doubles",
 )
 def window_running_sum(spark, sf_dir):
-    df = read_events(spark, sf_dir)
+    df = table(spark, sf_dir, "events")
     w = _w().rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return df.select(
         "event_id",
@@ -99,7 +99,7 @@ def window_running_sum(spark, sf_dir):
     "exchange on user_id + per-partition sort, no global sort",
 )
 def window_range_frame(spark, sf_dir):
-    df = read_events(spark, sf_dir)
+    df = table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_timestamp("ts"))
@@ -129,7 +129,7 @@ def window_range_frame(spark, sf_dir):
     doc="ntile + dense_rank per event_type",
 )
 def window_ntile_dense_rank(spark, sf_dir):
-    df = read_events(spark, sf_dir)
+    df = table(spark, sf_dir, "events")
     w_val = Window.partitionBy("event_type").orderBy("value", "event_id")
     w_usr = Window.partitionBy("event_type").orderBy("user_id")
     return df.select(
@@ -178,7 +178,7 @@ def window_ntile_dense_rank(spark, sf_dir):
     "partitioning, so Spark plans ONE shuffle)",
 )
 def batch_sessionize(spark, sf_dir):
-    df = read_events(spark, sf_dir)
+    df = table(spark, sf_dir, "events")
     sec = F.unix_timestamp("ts")
     w = Window.partitionBy("user_id").orderBy(sec, "event_id")
     gap = sec - F.lag(sec).over(w)
@@ -231,7 +231,7 @@ def batch_sessionize(spark, sf_dir):
     "deterministic. One hash exchange on user_id; per-partition sort",
 )
 def window_distribution_funcs(spark, sf_dir):
-    ev = read_events(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w = Window.partitionBy("user_id").orderBy("value", "event_id")
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (
@@ -289,7 +289,7 @@ def window_distribution_funcs(spark, sf_dir):
     "re-scan per gap.",
 )
 def window_locf_fill(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")

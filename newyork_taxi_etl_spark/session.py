@@ -41,7 +41,7 @@ DYNAMIC_CONFS: dict[str, str] = {
     "spark.sql.caseSensitive": "false",
     # The driver testdata stores events.ts as parquet TIMESTAMP(NANOS), which
     # Spark 4 rejects outright; read it as long nanos and convert in the
-    # reader (sources.readers.read_events).
+    # reader (sources.readers.table(..., "events")).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.functions.exact import avg_exact
 from newyork_taxi_etl_spark.localrel import local_rows_df
+from newyork_taxi_etl_spark.sources.readers import _parquet, _stamp
 
 
 @contextlib.contextmanager
@@ -272,29 +273,12 @@ def _fs_fingerprint(path: str) -> str:
     parquet would diverge from the DuckDB oracle, which always retrains
     on the live data)."""
     import hashlib
-    import os
 
-    h = hashlib.md5()
     try:
-        if os.path.isfile(path):
-            st = os.stat(path)
-            h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-        else:
-            for root, dirs, files in os.walk(path):
-                dirs.sort()
-                for fn in sorted(files):
-                    fp = os.path.join(root, fn)
-                    try:
-                        st = os.stat(fp)
-                    except OSError:
-                        continue
-                    rel = os.path.relpath(fp, path)
-                    h.update(
-                        f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode()
-                    )
+        stamp = _stamp(path)
     except OSError:
         return "nofs"
-    return h.hexdigest()[:12]
+    return hashlib.md5(repr(stamp).encode()).hexdigest()[:12]
 
 
 def _fingerprinted_key(cache_key: str) -> str:
@@ -369,7 +353,12 @@ def df_stage_cached(spark, cache_key: str, build_df, n_files: int | None = None)
 
     ``n_files``: coalesce tiny bounded tables to few output files (skip it
     for corpus-sized stages — their natural partitioning is the scalable
-    layout)."""
+    layout).
+
+    A committed stage never changes (atomic rename, ``_STAGE_COMPLETE``),
+    so the read-back goes through the sources schema memo, keyed on the
+    stage's file inventory: a hit infers no schema, so it starts no Spark
+    job of its own."""
     import os
 
     def build(target: str) -> None:
@@ -380,7 +369,7 @@ def df_stage_cached(spark, cache_key: str, build_df, n_files: int | None = None)
         df.write.mode("overwrite").parquet(os.path.join(target, "t"))
 
     sdir = _stage_cached(None, cache_key, build)
-    return spark.read.parquet(os.path.join(sdir, "t"))
+    return _parquet(spark, os.path.join(sdir, "t"))
 
 
 def _stage_time_sliced(
@@ -499,7 +488,7 @@ def run_stream_availablenow(
 
     Staging exists because the driver's raw events file stores nanosecond
     timestamps Spark can't stream-read directly (see sources.readers.
-    read_events); the staged copy has the repaired schema.
+    table); the staged copy has the repaired schema.
     """
     src_df.write.mode("overwrite").parquet(stage_dir)
     stream = _stream_stage(spark, src_df.schema, stage_dir)

@@ -164,12 +164,12 @@ def test_psi_one_sided_bin_uses_smoothed_zero(spark):
     )
     import newyork_taxi_etl_spark.queries.behavior as B
 
-    orig = B.read_events
-    B.read_events = lambda s, d: df
+    orig = B.table
+    B.table = lambda s, d, name: df
     try:
         got = B.psi_value_drift(spark, "ignored").collect()[0]
     finally:
-        B.read_events = orig
+        B.table = orig
 
     def p(n, t):
         return (n + 0.5) / (t + 5.0)

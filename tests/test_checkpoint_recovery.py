@@ -16,7 +16,7 @@ from tests.conftest import SF_SMOKE
 
 
 def test_recovery_equals_batch_and_fresh_ckpt_double_counts(spark):
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
     from newyork_taxi_etl_spark.streaming.windows import (
         _run_drain,
         _stream_stage,
@@ -24,7 +24,7 @@ def test_recovery_equals_batch_and_fresh_ckpt_double_counts(spark):
         run_checkpoint_recovery,
     )
 
-    ev = read_events(spark, SF_SMOKE)
+    ev = table(spark, SF_SMOKE, "events")
     with tempfile.TemporaryDirectory() as d:
         out = run_checkpoint_recovery(spark, ev, d).collect()
         want = {

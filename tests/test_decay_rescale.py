@@ -17,12 +17,12 @@ from tests.conftest import SF_SMOKE
 
 
 def _drained_state(spark, tmp):
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
     from newyork_taxi_etl_spark.streaming.windows import (
         run_streaming_decay_rescale,
     )
 
-    ev = read_events(spark, SF_SMOKE)
+    ev = table(spark, SF_SMOKE, "events")
     out = run_streaming_decay_rescale(
         spark, ev, str(tmp / "stage"), str(tmp / "state")
     )
@@ -134,10 +134,10 @@ def test_transform_with_state_gated_on_protobuf(spark):
         pytest.skip("google.protobuf absent — TWS runner env-gated")
     from pyspark.sql import functions as F
 
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
     got = queries()["transform_with_state_stats"](spark, SF_SMOKE).collect()
-    ev = read_events(spark, SF_SMOKE)
+    ev = table(spark, SF_SMOKE, "events")
     want = {
         r["user_id"]: r["n"]
         for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()

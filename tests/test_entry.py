@@ -71,3 +71,24 @@ def test_tune_is_memoized_once_every_conf_is_set():
     tune(stub)
     tune(stub)
     assert stub.conf.sets == list(DYNAMIC_CONFS)
+
+
+def test_input_tables_are_opened_only_through_sources():
+    """``sources.readers.table`` is the one read path for input tables:
+    no module outside ``sources/`` reads ``table_path(...)`` itself.
+    Output and stage directories may still be read directly."""
+    import re
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    pkg = repo / "newyork_taxi_etl_spark"
+    direct = re.compile(r"\.parquet\(\s*table_path\(|\bread_parquet\(")
+    files = [repo / "__spark_entry__.py", repo / "bench.py"] + [
+        p for p in pkg.rglob("*.py") if (pkg / "sources") not in p.parents
+    ]
+    found = [
+        f"{p.relative_to(repo)}:{p.read_text()[:m.start()].count(chr(10)) + 1}"
+        for p in files
+        for m in direct.finditer(p.read_text())
+    ]
+    assert not found, found

@@ -189,7 +189,7 @@ def test_grouped_moment_stats_partitioning_invariant(spark):
     agree to the last rounded digit, and the moments must match an exact
     Python computation from the raw values."""
     from newyork_taxi_etl_spark.registry import queries
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
     from conftest import SF_SMOKE
     import math
 
@@ -201,10 +201,10 @@ def test_grouped_moment_stats_partitioning_invariant(spark):
 
     from newyork_taxi_etl_spark.queries import profiling as prof
 
-    ev = read_events(spark, SF_SMOKE)
+    ev = table(spark, SF_SMOKE, "events")
     for n_part in (1, 13):
         with mock.patch.object(
-            prof, "read_events", lambda s, d, n=n_part: ev.repartition(n)
+            prof, "table", lambda s, d, name, n=n_part: ev.repartition(n)
         ):
             got = rows(prof.grouped_moment_stats(spark, SF_SMOKE))
         assert got == base, n_part

@@ -29,9 +29,9 @@ def test_dp_release_conserves_and_composes(spark):
     assert len(chosen) == 1
     assert all(r["chosen_level"] == chosen[0] for r in rel.values()), rel
 
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
-    n_events = read_events(spark, SF_ORACLE).count()
+    n_events = table(spark, SF_ORACLE, "events").count()
     total = sum(r["true_rows"] + r["rows_suppressed"] for r in rel.values())
     assert total == n_events, (total, n_events)
     assert all(r["noisy_rows"] >= 0 for r in rel.values())

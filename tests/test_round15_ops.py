@@ -162,9 +162,9 @@ def test_holt_fold_matches_python_recurrence(spark):
     import pyspark.sql.functions as F
 
     from newyork_taxi_etl_spark.queries.behavior import holt_linear_forecast
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
-    ev = read_events(spark, SF_SMOKE)
+    ev = table(spark, SF_SMOKE, "events")
     daily = (
         ev.groupBy("event_type", F.to_date("ts").alias("d"))
         .agg(F.count(F.lit(1)).alias("y"))
@@ -201,12 +201,12 @@ def test_markov_anomaly_scores_are_valid_loglikelihoods(spark):
     import pyspark.sql.functions as F
 
     from newyork_taxi_etl_spark.queries.behavior import markov_sequence_anomaly
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
     rows = markov_sequence_anomaly(spark, SF_SMOKE).collect()
     assert len(rows) == 10
     assert [r.avg_logp for r in rows] == sorted(r.avg_logp for r in rows)
-    ev = read_events(spark, SF_SMOKE)
+    ev = table(spark, SF_SMOKE, "events")
     k = ev.select("event_type").distinct().count()
     n_total = ev.count()
     floor = m.log(1.0 / (n_total + k))  # rarest possible smoothed prob
@@ -339,10 +339,10 @@ def test_ols_matches_numpy_lstsq(spark):
     import pyspark.sql.functions as F
 
     from newyork_taxi_etl_spark.queries.behavior import grouped_ols_regression
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
     ev = (
-        read_events(spark, SF_SMOKE)
+        table(spark, SF_SMOKE, "events")
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
@@ -378,10 +378,10 @@ def test_anova_matches_python_decomposition(spark):
     import pyspark.sql.functions as F
 
     from newyork_taxi_etl_spark.queries.behavior import anova_oneway_value
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
     rows = (
-        read_events(spark, SF_SMOKE)
+        table(spark, SF_SMOKE, "events")
         .filter(F.col("value").isNotNull())
         .select("event_type", F.round(F.col("value") * 100).alias("y"))
         .collect()

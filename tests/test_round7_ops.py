@@ -38,9 +38,9 @@ def test_exact_n_sample_is_exact(spark):
 def test_winsorized_mean_inside_clip_band(spark):
     """The winsorized mean must sit inside [p05, p95] of its group, and
     at most ~10% of rows may be clipped (5% per tail + tie slack)."""
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
-    ev = read_events(spark, SF_SMOKE).filter(F.col("value").isNotNull())
+    ev = table(spark, SF_SMOKE, "events").filter(F.col("value").isNotNull())
     cuts = {
         r["event_type"]: (r["p05"], r["p95"])
         for r in ev.groupBy("event_type")
@@ -76,9 +76,9 @@ def test_nucleus_prefix_is_minimal(spark):
     must fall below 80% — minimality of the cut."""
     row = queries()["nucleus_user_coverage"](spark, SF_SMOKE).collect()[0]
     assert row["covered_events"] >= 0.8 * row["total_events"]
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
-    ev = read_events(spark, SF_SMOKE)
+    ev = table(spark, SF_SMOKE, "events")
     per_user = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -102,9 +102,9 @@ def test_welch_ttest_matches_scipy_formula(spark):
     the engine value must match to 1e-9."""
     import numpy as np
 
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
-    ev = read_events(spark, SF_SMOKE).filter(F.col("value").isNotNull())
+    ev = table(spark, SF_SMOKE, "events").filter(F.col("value").isNotNull())
     vals = {
         t: np.round(
             np.array(
@@ -140,9 +140,9 @@ def test_rrf_fused_rank_dominates_single_leg_for_agreed_top(spark):
 def test_table_diff_finds_planted_mutations(spark):
     """The reconcile must classify exactly the planted changes: deletes =
     rows with event_id%5000==11, changes = %1000==7 (minus deleted)."""
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
-    ev = read_events(spark, SF_SMOKE).filter(F.col("value").isNotNull())
+    ev = table(spark, SF_SMOKE, "events").filter(F.col("value").isNotNull())
     n_del = ev.filter(F.col("event_id") % 5000 == 11).count()
     n_chg = ev.filter(
         (F.col("event_id") % 1000 == 7) & (F.col("event_id") % 5000 != 11)
@@ -160,9 +160,9 @@ def test_compliance_delete_removes_only_target_partition(spark, tmp_path):
     row = queries()["compliance_delete_rewrite"](spark, SF_SMOKE).collect()[0]
     assert row["target_rows_left"] == 0
     assert row["buckets_rewritten"] == 1
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
-    ev = read_events(spark, SF_SMOKE)
+    ev = table(spark, SF_SMOKE, "events")
     expected = ev.filter(
         (F.col("user_id") != 7) | F.col("user_id").isNull()
     ).count()
@@ -180,12 +180,12 @@ def test_streaming_quantile_sketch_bounds_error(spark):
 def test_quantile_sketch_fold_replay_is_noop(spark, tmp_path):
     """The additive histogram fold must ignore a redelivered batch_id —
     double-applying bucket counts would shift every quantile estimate."""
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
     from newyork_taxi_etl_spark.streaming.windows import (
         run_streaming_quantile_sketch,
     )
 
-    ev = read_events(spark, SF_SMOKE)
+    ev = table(spark, SF_SMOKE, "events")
     out = run_streaming_quantile_sketch(
         spark, ev, str(tmp_path / "stage"), str(tmp_path / "state")
     ).collect()[0]

@@ -36,7 +36,7 @@ def test_grouped_mad_outliers_matches_numpy(spark):
     """Full numpy recomputation of the discrete median / MAD / integer
     outlier gate on the same 2-dp ticks — median rank ceil(n/2), MAD as
     the same walk on |v - med|, outliers ad*10000 > 44478*mad."""
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
 
     rows = {
         r["event_type"]: r
@@ -45,7 +45,7 @@ def test_grouped_mad_outliers_matches_numpy(spark):
         ).collect()
     }
     pdf = (
-        read_events(spark, SF_ORACLE)
+        table(spark, SF_ORACLE, "events")
         .filter("value IS NOT NULL")
         .select("event_type", "value")
         .toPandas()
@@ -369,12 +369,12 @@ def test_streaming_w1_ingest_batching_invariant(spark, tmp_path):
     events arrive as 1 slice or 4 — and must equal the one-shot batch
     statistic (wasserstein_value_drift) bit-for-bit."""
     from newyork_taxi_etl_spark.registry import queries
-    from newyork_taxi_etl_spark.sources.readers import read_events
+    from newyork_taxi_etl_spark.sources.readers import table
     from newyork_taxi_etl_spark.streaming.windows import (
         run_streaming_w1_ingest,
     )
 
-    ev = read_events(spark, SF_ORACLE)
+    ev = table(spark, SF_ORACLE, "events")
     one = run_streaming_w1_ingest(
         spark, ev, str(tmp_path / "one"), n_slices=1
     ).collect()

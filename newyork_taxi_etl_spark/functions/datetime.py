@@ -9,13 +9,30 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+#: Spark twin of SLOT_CASE_SQL for a column name, with ``>=``/``<=`` (the
+#: expansion of ``Column.between``): SQL ``BETWEEN`` would plan a common
+#: expression (``With``) and an extra Project.
+_SLOT_CASE = (
+    "CASE WHEN hour({ts}) >= 0 AND hour({ts}) <= 5 THEN 'Night' "
+    "WHEN hour({ts}) >= 6 AND hour({ts}) <= 11 THEN 'Morning' "
+    "WHEN hour({ts}) >= 12 AND hour({ts}) <= 16 THEN 'Afternoon' "
+    "WHEN hour({ts}) >= 17 AND hour({ts}) <= 20 THEN 'Evening' "
+    "ELSE 'LateNight' END"
+)
+
+
 def time_of_day_slot(ts: Column | str) -> Column:
     """Slot bucketing exactly as ``nb:64830 (c88)``:
 
     Night 0-5, Morning 6-11, Afternoon 12-16, Evening 17-20, else LateNight.
     All-literal branches => non-nullable string (SURVEY §1.2).
+
+    A column name is parsed as one SQL expression: a nested Column tree
+    costs a py4j round trip per node.
     """
-    h = F.hour(F.col(ts) if isinstance(ts, str) else ts)
+    if isinstance(ts, str):
+        return F.expr(_SLOT_CASE.format(ts=ts))
+    h = F.hour(ts)
     return (
         F.when(h.between(0, 5), F.lit("Night"))
         .when(h.between(6, 11), F.lit("Morning"))

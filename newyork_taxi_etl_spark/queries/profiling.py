@@ -6,6 +6,8 @@ Single-pass per-column aggregate profiles — the reference's signature
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.operators import profile as P
@@ -2291,6 +2293,8 @@ _KLL_HMAX = 12
 _KLL_QS = (0.5, 0.99)
 
 _KLL_EVEN = "('0','2','4','6','8','a','c','e')"
+#: the sketched value of a document: its whitespace token count
+_KLL_VAL = "CAST(size(split(text, ' ')) AS BIGINT) AS val"
 
 
 def _kll_sql() -> str:
@@ -2518,8 +2522,6 @@ def _kll_bound(n: int) -> int:
     Bound: 2B + 2^H (derivation mirrored in tests/test_kll.py, which
     asserts the realized error under it on shipped and adversarial
     corpora)."""
-    import math
-
     b = 0
     stages = _kll_active_stages(n)
     for h in stages:
@@ -2527,46 +2529,34 @@ def _kll_bound(n: int) -> int:
     return 2 * b + (1 << len(stages))
 
 
-def _kll_grp_expr(h: int, ng: int):
-    """Level-h compactor group of a doc: salted md5 of doc_id mod the
-    level's group count — identical string/derivation on both engines."""
-    return F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"kllg{h}:"), F.col("doc_id").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(ng),
+def _kll_grp_expr(h: int, ng: int) -> str:
+    """Level-h compactor group of a doc (SQL text over ``doc_id``):
+    salted md5 of doc_id mod the level's group count — identical
+    string/derivation on both engines."""
+    return (
+        f"pmod(CAST(conv(substring(md5(concat('kllg{h}:', "
+        f"CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT), {ng})"
     )
 
 
-def _kll_coin_expr(h: int):
-    """Level-h compaction coin of a group (reads the ``grp`` column):
+def _kll_coin_expr(h: int) -> str:
+    """Level-h compaction coin of a group (SQL text over ``grp``):
     parity of the first md5 hex digit of the salted group id."""
-    return F.when(
-        F.substring(
-            F.md5(
-                F.concat(F.lit(f"kllc:{h}:"), F.col("grp").cast("string"))
-            ),
-            1,
-            1,
-        ).isin(*list("02468ace")),
-        0,
-    ).otherwise(1)
+    return (
+        f"CASE WHEN substring(md5(concat('kllc:{h}:', CAST(grp AS STRING))),"
+        f" 1, 1) IN {_KLL_EVEN} THEN 0 ELSE 1 END"
+    )
+
+
+#: in-group rank of a level's compaction (SQL text over ``grp``): the
+#: window partitions by group, so a distributed level shuffles on it
+_KLL_POS = "row_number() OVER (PARTITION BY grp ORDER BY val, doc_id) AS pos"
 
 
 def _kll_one_task_rows() -> int:
     """Population size at-or-below which the REMAINING cascade levels run
-    in one task (r15 optimization, guide §2.4): the per-level
-    ``Window.partitionBy(grp)`` needs ClusteredDistribution(grp), which a
+    in one task (r15 optimization, guide §2.4): the per-level rank
+    window (``PARTITION BY grp``) needs ClusteredDistribution(grp), which a
     SinglePartition child satisfies — so collapsing the shrinking
     survivor set to one partition replaces the tail's Θ(log n) hash
     exchanges (one chained shuffle barrier per level) with pipelined
@@ -2588,8 +2578,6 @@ def _kll_survivors(d, n: int):
     so the cascade is a pure deterministic function of the data — the
     DuckDB oracle replays it bit-for-bit, and physical partitioning
     cannot change the result (pytested)."""
-    from pyspark.sql import Window
-
     one_task = _kll_one_task_rows()
     collapsed = False
     cur = d
@@ -2601,14 +2589,14 @@ def _kll_survivors(d, n: int):
             # the cascade shuffle-free (see _kll_one_task_rows)
             cur = cur.coalesce(1)
             collapsed = True
-        w = Window.partitionBy("grp").orderBy("val", "doc_id")
+        # three DataFrame operations over SQL text: a Column tree costs
+        # a py4j round trip per node
         cur = (
-            cur.withColumn("grp", _kll_grp_expr(h, ng))
-            .withColumn("pos", F.row_number().over(w))
-            .filter(F.col("pos") % 2 == _kll_coin_expr(h))
-            .select("doc_id", "val")
+            cur.selectExpr("doc_id", "val", f"{_kll_grp_expr(h, ng)} AS grp")
+            .selectExpr("doc_id", "val", "grp", _KLL_POS)
+            .where(f"pos % 2 = {_kll_coin_expr(h)}")
         )
-    return cur
+    return cur.select("doc_id", "val")
 
 
 @register(
@@ -2643,63 +2631,64 @@ def kll_quantile_sketch(spark, sf_dir):
     from newyork_taxi_etl_spark.sources.readers import parquet_rowcount
 
     docs = table(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        F.size(F.split("text", " ")).cast("bigint").alias("val"),
-    )
+    d = docs.selectExpr("doc_id", _KLL_VAL)
     n = parquet_rowcount(table_path(sf_dir, "documents"))
-    return _kll_report(spark, d, n)
+    return _kll_report(d, n)
 
 
-def _kll_report(spark, d, n: int, surv=None, bound: int | None = None):
+def _kll_report(d, n: int, surv=None, bound: int | None = None):
     """Survivors -> the per-quantile report (shared with the ingest
-    fold's drain, which passes its own accumulated fold bound).  The
-    survivor ranking window is bounded by the top buffer (~2 * _KLL_TOP
-    rows), so the single-partition sort is on a constant-size set."""
-    from pyspark.sql import Window
+    fold's drain, which passes its own accumulated fold bound), planned
+    as three query stages because each AQE query stage costs a Spark job
+    plus a re-plan of the remaining plan:
 
+    1. the survivor ranking window (single-partition, bounded by the top
+       buffer, ~2 * _KLL_TOP rows) folds into ONE row of per-quantile
+       estimates and the survivor count, which is broadcast;
+    2. one global aggregate over ``d`` counts both exact ranks of every
+       estimate (partial aggregates, then a single-partition exchange);
+    3. the one-row result expands to a row per quantile (``inline``) and
+       is sorted in that single partition — no range exchange.
+
+    No survivors (or no rows in ``d``) gives zero rows."""
     if surv is None:
         surv = _kll_survivors(d, n)
-    wr = Window.orderBy("val", "doc_id")
-    ranked = surv.withColumn("r", F.row_number().over(wr)).withColumn(
-        "s", F.count(F.lit(1)).over(Window.partitionBy())
-    )
-    from newyork_taxi_etl_spark.localrel import local_rows_df
-
-    qdf = local_rows_df(spark, [(q,) for q in _KLL_QS], "q double")
-    est = qdf.join(
-        ranked,
-        F.col("r") == F.ceil(F.col("q") * F.col("s")).cast("long"),
-    ).select("q", F.col("val").alias("est"))
     if bound is None:
         bound = _kll_bound(n)
-    ranks = (
-        d.crossJoin(F.broadcast(est))
-        .groupBy("q", "est")
-        .agg(
-            F.sum((F.col("val") < F.col("est")).cast("long"))
-            .cast("bigint")
-            .alias("rank_lo"),
-            F.sum((F.col("val") <= F.col("est")).cast("long"))
-            .cast("bigint")
-            .alias("rank_hi"),
-        )
+    est = surv.selectExpr(
+        "val",
+        "row_number() OVER (ORDER BY val, doc_id) AS r",
+        "count(1) OVER () AS s",
+    ).selectExpr(
+        "max(s) AS s",
+        *(
+            f"max(CASE WHEN r = CAST(ceil({q!r}D * s) AS BIGINT) "
+            f"THEN val END) AS e{i}"
+            for i, q in enumerate(_KLL_QS)
+        ),
     )
-    target = F.ceil(F.col("q") * F.lit(float(n))).cast("bigint")
-    return ranks.select(
-        "q",
-        F.col("est").cast("bigint").alias("est"),
-        target.alias("target_rank"),
-        "rank_lo",
-        "rank_hi",
-        F.lit(bound).cast("bigint").alias("bound"),
-        (
-            (F.col("rank_lo") <= target + F.lit(bound))
-            & (F.col("rank_hi") >= target - F.lit(bound))
+    aggs, rows = ["max(s) AS s"], []
+    for i, q in enumerate(_KLL_QS):
+        aggs += [
+            f"max(e{i}) AS e{i}",
+            f"sum(CAST(val < e{i} AS BIGINT)) AS lo{i}",
+            f"sum(CAST(val <= e{i} AS BIGINT)) AS hi{i}",
+        ]
+        target = math.ceil(q * float(n))
+        rows.append(
+            f"named_struct('q', {q!r}D, 'est', CAST(e{i} AS BIGINT), "
+            f"'target_rank', CAST({target} AS BIGINT), "
+            f"'rank_lo', lo{i}, 'rank_hi', hi{i}, "
+            f"'bound', CAST({bound} AS BIGINT), "
+            f"'within_bound', CAST(lo{i} <= {target + bound} "
+            f"AND hi{i} >= {target - bound} AS INT))"
         )
-        .cast("int")
-        .alias("within_bound"),
-    ).orderBy("q")
+    ranks = d.crossJoin(F.broadcast(est)).selectExpr(*aggs)
+    return (
+        ranks.where("s > 0")
+        .selectExpr(f"inline(array({', '.join(rows)}))")
+        .orderBy("q")
+    )
 
 
 @register(

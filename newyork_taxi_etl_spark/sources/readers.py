@@ -124,9 +124,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     t = dict(df.dtypes).get("ts")
     if t == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     elif t == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = df.withColumn("ts", F.expr("CAST(ts AS TIMESTAMP)"))
     return df
 
 

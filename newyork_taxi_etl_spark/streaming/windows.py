@@ -3615,9 +3615,14 @@ def run_streaming_kll_ingest(
 
     from newyork_taxi_etl_spark.queries.profiling import (
         _KLL_CAP,
+        _KLL_HMAX,
+        _KLL_POS,
+        _KLL_TOP,
+        _KLL_VAL,
         _kll_active_stages,
         _kll_coin_expr,
         _kll_grp_expr,
+        _kll_one_task_rows,
         _kll_report,
     )
 
@@ -3625,10 +3630,7 @@ def run_streaming_kll_ingest(
     state_dir = os.path.join(work_dir, "kll_state")
     shutil.rmtree(state_dir, ignore_errors=True)
 
-    d = docs_df.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.size(F.split("text", " ")).cast("bigint").alias("val"),
-    )
+    d = docs_df.selectExpr("CAST(doc_id AS BIGINT) AS doc_id", _KLL_VAL)
 
     def build_stage(target: str) -> None:
         # rank-deterministic contiguous slices (the oracle replays the
@@ -3699,12 +3701,6 @@ def run_streaming_kll_ingest(
         # levels' windows run over SinglePartition with no per-level
         # hash exchange.  State is O(top buffer) by construction; the
         # 4*TOP*HMAX slack covers it at any slicing.
-        from newyork_taxi_etl_spark.queries.profiling import (
-            _KLL_HMAX,
-            _KLL_TOP,
-            _kll_one_task_rows,
-        )
-
         one_task = _kll_one_task_rows()
         state_bound = 4 * _KLL_TOP * _KLL_HMAX
         collapsed = False
@@ -3716,26 +3712,21 @@ def run_streaming_kll_ingest(
                 collapsed = True
             # single pass per stage: non-level-h rows ride the sentinel
             # -1 group (bounded: they are higher-level survivors)
-            cur = cur.withColumn(
-                "grp",
-                F.when(
-                    F.col("lvl") == h, _kll_grp_expr(h, ng)
-                ).otherwise(F.lit(-1)),
-            )
-            w = Window.partitionBy("grp").orderBy("val", "doc_id")
+            grp = _kll_grp_expr(h, ng)
             cur = (
-                cur.withColumn("pos", F.row_number().over(w))
-                .filter(
-                    (F.col("lvl") != h)
-                    | (F.col("pos") % 2 == _kll_coin_expr(h))
-                )
-                .withColumn(
+                cur.selectExpr(
+                    "doc_id",
+                    "val",
                     "lvl",
-                    F.when(
-                        F.col("lvl") == h, F.lit(h + 1)
-                    ).otherwise(F.col("lvl")),
+                    f"CASE WHEN lvl = {h} THEN {grp} ELSE -1 END AS grp",
                 )
-                .select("doc_id", "val", "lvl")
+                .selectExpr("doc_id", "val", "lvl", "grp", _KLL_POS)
+                .where(f"lvl <> {h} OR pos % 2 = {_kll_coin_expr(h)}")
+                .selectExpr(
+                    "doc_id",
+                    "val",
+                    f"CASE WHEN lvl = {h} THEN {h + 1} ELSE lvl END AS lvl",
+                )
             )
         nxt = state_dir + "_next"
         shutil.rmtree(nxt, ignore_errors=True)
@@ -3757,7 +3748,6 @@ def run_streaming_kll_ingest(
     n_final, bound_acc = int(meta["n_seen"]), int(meta["bound_acc"])
     h_final = len(_kll_active_stages(n_final))
     return _kll_report(
-        spark,
         d,
         n_final,
         surv=surv,

@@ -36,6 +36,73 @@ def test_kll_within_bound_on_shipped_corpus(spark):
     assert all(_err(r) * 4 <= r.bound for r in rows), rows
 
 
+def _write_corpus(spark, path, n: int) -> None:
+    """n documents whose token counts cycle through [10, 100] with ties."""
+    rows = [
+        (i, "en", "web", " ".join(["w"] * ((i * 37) % 91 + 10)))
+        for i in range(n)
+    ]
+    spark.createDataFrame(
+        rows, "doc_id bigint, lang string, source string, text string"
+    ).coalesce(1).write.mode("overwrite").parquet(str(path))
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 256, 257, 999])
+def test_kll_report_matches_oracle_at_small_n(spark, tmp_path, n):
+    """The three-stage report on corpora with no rows, no compaction
+    (n <= 256) and exactly one level (257 <= n <= 512) or two (999):
+    engine equals the DuckDB oracle; with no rows it returns none (the
+    oracle keeps one null-estimate row per quantile there)."""
+    from newyork_taxi_etl_spark import registry
+
+    _write_corpus(spark, tmp_path / "documents.parquet", n)
+    got = registry.queries()["kll_quantile_sketch"](spark, str(tmp_path))
+    assert got.columns == [
+        "q", "est", "target_rank", "rank_lo", "rank_hi", "bound",
+        "within_bound",
+    ]
+    assert [f.dataType.simpleString() for f in got.schema] == [
+        "double", "bigint", "bigint", "bigint", "bigint", "bigint", "int"
+    ]
+    rows = [tuple(r) for r in got.collect()]
+    if n == 0:
+        assert rows == []
+        return
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{tmp_path}/documents.parquet/*.parquet'"
+    )
+    oracle = con.execute(
+        registry.oracle_sql()["kll_quantile_sketch"]
+    ).fetchall()
+    con.close()
+    assert rows == [tuple(r) for r in oracle]
+    assert all(r[-1] == 1 for r in rows), rows
+
+
+@pytest.mark.quick
+def test_kll_report_runs_in_three_jobs_without_range_exchange(spark):
+    """The report is planned as three query stages (survivor estimates
+    broadcast, one global rank aggregate, expand + sort in one
+    partition): a warm call starts at most 3 Spark jobs and its executed
+    plan has no range exchange for the final sort."""
+    from newyork_taxi_etl_spark import registry
+    from tests.conftest import SF_ORACLE
+
+    q = registry.queries()["kll_quantile_sketch"]
+    q(spark, SF_ORACLE).collect()  # warm the table's schema memo
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    df = q(spark, SF_ORACLE)
+    rows = df.collect()
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    assert [r.q for r in rows] == [0.5, 0.99]
+    assert len(jobs) <= 3, sorted(jobs)
+    plan = df._jdf.queryExecution().executedPlan().toString().lower()
+    assert "rangepartitioning" not in plan, plan
+
+
 def test_kll_partition_invariance(spark):
     """The cascade is a pure function of the data: md5-derived groups
     and coins make the survivor set identical under any physical

@@ -399,7 +399,7 @@ def test_lsh_band_sweep_gates(spark):
 # Property tests: the readability terms and coverage budget vs direct
 # Python recomputation over random corpora (hypothesis).
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 _WORD = st.text(
@@ -457,10 +457,23 @@ def test_readability_terms_match_python(spark, texts):
 
 @settings(**_PROP_SETTINGS)
 @given(_CORPUS)
+# top share 21/128 = 0.1640625 is an exact tie at 6 places
+@example(
+    [
+        "b .? b?b bc. c?bz",
+        "? ? | |! |az c.b? ?bzac !ab!! z!z!a.",
+        "? ? ?aa !?b bbc| zzc? bbc||| |za|ab ||z!?!",
+        "c ccz z!b ca|aa ?.!!! ?...!! .....! a..... ??a... ?aaaaa ???aaa",
+    ]
+)
 def test_char_coverage_budget_matches_python(spark, texts):
     """Coverage budget == direct recomputation: rank chars by (count
-    desc, char asc), integer thresholds, for ANY random corpus."""
+    desc, char asc), integer thresholds, for ANY random corpus.  The
+    top share rounds half-up from the double's shortest decimal form,
+    as SQL ROUND does in Spark (and DuckDB); Python's round() would
+    round an exact tie to even."""
     from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
 
     rows = [(i, "xx", t) for i, t in enumerate(texts)]
     out = _char_coverage_finalize(_char_counts(_docs(spark, rows))).collect()
@@ -484,7 +497,8 @@ def test_char_coverage_budget_matches_python(spark, texts):
     assert r.alphabet_size == len(ranked)
     assert (r.chars_for_90, r.chars_for_995) == (k90, k995)
     assert r.top_char == ranked[0][0]
-    assert r.top_share == round(ranked[0][1] / total, 6)
+    share = Decimal(repr(ranked[0][1] / total))
+    assert r.top_share == float(share.quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 def test_heavy_hitters_planted_and_slicing_invariant(spark, tmp_path):

@@ -9,9 +9,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-#: Spark twin of SLOT_CASE_SQL for a column name, with ``>=``/``<=`` (the
-#: expansion of ``Column.between``): SQL ``BETWEEN`` would plan a common
-#: expression (``With``) and an extra Project.
+#: Spark twin of SLOT_CASE_SQL, with ``>=``/``<=``: SQL ``BETWEEN`` would
+#: plan a common expression (``With``) and an extra Project.
 _SLOT_CASE = (
     "CASE WHEN hour({ts}) >= 0 AND hour({ts}) <= 5 THEN 'Night' "
     "WHEN hour({ts}) >= 6 AND hour({ts}) <= 11 THEN 'Morning' "
@@ -21,25 +20,16 @@ _SLOT_CASE = (
 )
 
 
-def time_of_day_slot(ts: Column | str) -> Column:
+def time_of_day_slot(ts: str) -> Column:
     """Slot bucketing exactly as ``nb:64830 (c88)``:
 
     Night 0-5, Morning 6-11, Afternoon 12-16, Evening 17-20, else LateNight.
     All-literal branches => non-nullable string (SURVEY §1.2).
 
-    A column name is parsed as one SQL expression: a nested Column tree
-    costs a py4j round trip per node.
+    Parsed as one SQL expression over the column name: a nested Column
+    tree costs a py4j round trip per node.
     """
-    if isinstance(ts, str):
-        return F.expr(_SLOT_CASE.format(ts=ts))
-    h = F.hour(ts)
-    return (
-        F.when(h.between(0, 5), F.lit("Night"))
-        .when(h.between(6, 11), F.lit("Morning"))
-        .when(h.between(12, 16), F.lit("Afternoon"))
-        .when(h.between(17, 20), F.lit("Evening"))
-        .otherwise(F.lit("LateNight"))
-    )
+    return F.expr(_SLOT_CASE.format(ts=ts))
 
 
 #: DuckDB-equivalent CASE expression for oracle SQL. DuckDB hour() on naive

@@ -2292,6 +2292,7 @@ _KLL_TOP = 256
 _KLL_HMAX = 12
 _KLL_QS = (0.5, 0.99)
 
+#: even md5 hex digits, for the oracle SQL only (the engine spells its own)
 _KLL_EVEN = "('0','2','4','6','8','a','c','e')"
 #: the sketched value of a document: its whitespace token count
 _KLL_VAL = "CAST(size(split(text, ' ')) AS BIGINT) AS val"
@@ -2541,10 +2542,12 @@ def _kll_grp_expr(h: int, ng: int) -> str:
 
 def _kll_coin_expr(h: int) -> str:
     """Level-h compaction coin of a group (SQL text over ``grp``):
-    parity of the first md5 hex digit of the salted group id."""
+    parity of the first md5 hex digit of the salted group id. The even
+    digits are spelled out here, apart from the oracle's ``_KLL_EVEN``, so
+    an edit to one side shows up as an oracle mismatch."""
     return (
         f"CASE WHEN substring(md5(concat('kllc:{h}:', CAST(grp AS STRING))),"
-        f" 1, 1) IN {_KLL_EVEN} THEN 0 ELSE 1 END"
+        f" 1, 1) IN ('0', '2', '4', '6', '8', 'a', 'c', 'e') THEN 0 ELSE 1 END"
     )
 
 

@@ -1,9 +1,10 @@
 """JVM-local tiny DataFrames (r15 optimization, guide §4/§5).
 
 ``spark.createDataFrame(list_of_tuples, ...)`` in classic PySpark builds a
-*Python-RDD-backed* plan: the rows are pickled into an RDD of
-``defaultParallelism`` partitions, and **every action over any plan
-containing that leaf spawns a full-width Python-worker stage** — measured
+*Python-RDD-backed* plan: the rows are pickled into an RDD of one
+partition per core (the context's default parallelism), and **every
+action over any plan containing that leaf spawns a full-width
+Python-worker stage** — measured
 on this box at local[32]: writing a ONE-ROW list-backed DataFrame costs
 ~8 s (32 Python worker launches plus an extra evaluation under the write),
 versus 0.17 s when the same row reaches the JVM as one Arrow batch and

@@ -37,34 +37,6 @@ def cosine_expr(a: str, b: str, digits: int = 4):
     )
 
 
-def spread_small_scan(df: DataFrame) -> DataFrame:
-    """Raise a degenerate scan's parallelism to the session default.
-
-    Sibling of :func:`newyork_taxi_etl_spark.session.spread` (the r7
-    guard the dedup/linkage/text families use) with one deliberate
-    difference: this spreads to ``sparkContext.defaultParallelism``
-    (the CORE count — right for the interpreted-HOF vector math below
-    the first exchange, where the unit of work is CPU) where
-    ``session.spread`` targets ``spark.sql.shuffle.partitions`` (right
-    for hash/shingle projections feeding a shuffle of that width).
-    Both are structural no-ops on a well-split input.
-
-    A broadcast-crossjoin stage inherits the probe side's partitioning:
-    when the corpus fits one parquet split (any small-SF local run), the
-    whole O(N x corpus) cosine evaluation — interpreted higher-order
-    functions, ~10 µs/pair — lands in ONE task while the other 31 cores
-    idle (measured 10.9 s -> 1.5 s on the sf0.1 kNN eval).  At real
-    scale the corpus has >= cores splits and this is a structural no-op
-    (no shuffle added): the repartition only fires when the input has
-    FEWER partitions than ``defaultParallelism``.  Values are unchanged
-    — round-robin placement feeds per-pair expressions and
-    order-insensitive reductions only."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
-
-
 _DOT_D = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
 
 

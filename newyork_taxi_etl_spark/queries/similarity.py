@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from newyork_taxi_etl_spark.functions.exact import avg_exact_sql, dec_out_sql
 from newyork_taxi_etl_spark.operators import similarity as S
 from newyork_taxi_etl_spark.registry import register
+from newyork_taxi_etl_spark.session import spread
 from newyork_taxi_etl_spark.sources.readers import table, table_path
 
 _COS_SQL = (
@@ -1453,15 +1454,9 @@ def _ivfpq_adc_topk(spark, sf_dir, k=5, n_probe=2):
         _ARGMIN,
         _SQDIST,
     )
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
     from newyork_taxi_etl_spark.streaming.windows import _stage_cached
 
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("_v"),
@@ -1623,14 +1618,9 @@ def _ivfpq_residual_topk(spark, sf_dir, k=5, n_probe=2):
         _ARGMIN,
         _SQDIST,
     )
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
     from newyork_taxi_etl_spark.streaming.windows import _stage_cached
 
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("_v"),
@@ -2621,13 +2611,7 @@ def ann_index_filtered_probe(spark, sf_dir):
         _ARGMIN,
         _SQDIST,
     )
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     base = emb.select(
         "vec_id",
         "label",
@@ -2976,8 +2960,6 @@ _JL_SIGN_DUCK = (
     "pre-filters) when 100 TB of float32 won't fit the budget.",
 )
 def jl_projection_distortion(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
-
     # r16 (guide §4.2 / §1.2 — don't recompute constants per row): the
     # md5-parity sign matrix is a CONSTANT 16x64 table, but the seeded
     # expression sat inside the per-row projection lambda, so every row
@@ -3002,9 +2984,7 @@ def jl_projection_distortion(spark, sf_dir):
         sign_rows.append("array(" + ", ".join(vals) + ")")
     signs_sql = "array(" + ", ".join(sign_rows) + ")"
 
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     proj = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -3058,14 +3038,10 @@ def _gram_checkpointed(emb):
     after the aggregate) — shared by gram_power_iteration_pc1 and
     gram_subspace_topk so the two queries cannot drift.
 
-    spread_small_scan parallelizes the 2080-term explode when the corpus
-    fits one split (no-op at scale); the per-(i, j) DECIMAL sums are
+    ``spread`` parallelizes the 2080-term explode when the corpus fits
+    one split (no-op at scale); the per-(i, j) DECIMAL sums are
     order-independent, so values are placement-invariant."""
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    emb = spread_small_scan(emb)
+    emb = spread(emb)
     dec = "decimal(38,12)"
     terms = emb.select(
         F.explode(
@@ -3091,11 +3067,7 @@ def _gram_checkpointed(emb):
 
 def _gram_trace(emb):
     """Exact embedding-variance trace (one linear pass, decimal-summed)."""
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    emb = spread_small_scan(emb)
+    emb = spread(emb)
     dec = "decimal(38,12)"
     return emb.select(
         F.explode(
@@ -3370,15 +3342,9 @@ def knn_label_accuracy(spark, sf_dir):
     # rounded cosine is bit-identical to the oracle's formulation.  The
     # sample draws from the RAW read and derives its norms on the 512
     # checkpointed rows — one corpus-wide norm pass (candidate side),
-    # not two (r9 watch item).  spread_small_scan parallelizes the
-    # crossjoin stage when the corpus fits one split (no-op at scale).
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    raw = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    # not two (r9 watch item).  ``spread`` parallelizes the crossjoin
+    # stage when the corpus fits one split (no-op at scale).
+    raw = spread(table(spark, sf_dir, "embeddings"))
     nrm = F.expr(f"sqrt({_DOT.format(a='embedding', b='embedding')})")
     q = _fixed_n_queries(raw).select(
         F.col("vec_id").alias("query_id"),
@@ -3479,13 +3445,7 @@ def label_noise_consensus(spark, sf_dir):
 
     from newyork_taxi_etl_spark.operators.similarity import _DOT
 
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    raw = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    raw = spread(table(spark, sf_dir, "embeddings"))
     nrm = F.expr(f"sqrt({_DOT.format(a='embedding', b='embedding')})")
     q = _fixed_n_queries(raw).select(
         F.col("vec_id").alias("query_id"),
@@ -3672,15 +3632,7 @@ def knn_label_accuracy_indexed(spark, sf_dir):
     )
     from newyork_taxi_etl_spark.operators.similarity import _DOT
 
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    # spread_small_scan: parallelize the assignment/eval stages when the
-    # corpus fits one split (structural no-op at scale)
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     # norms precomputed ONCE per vector and STORED IN THE INDEX (a
     # serving index carries them for exactly this reason) — one dot per
     # pair instead of cosine_expr's three; sqrt(dot(v,v)) is the same
@@ -4861,15 +4813,7 @@ def ann_ranking_quality(spark, sf_dir):
     )
     from newyork_taxi_etl_spark.operators.similarity import _DOT
 
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    # spread_small_scan: parallelize the assignment/eval stages when the
-    # corpus fits one split (structural no-op at scale)
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     # norms precomputed once per vector and stored in the index (the r7
     # semantic_dedup_buckets lesson): sqrt(dot(v,v)) is the same subtree
     # the oracle's inline cosine evaluates, so the 4-dp cosine matches
@@ -5102,13 +5046,8 @@ _OUTLIER_SCORE_DUCK = (
 )
 def embedding_outlier_screen(spark, sf_dir):
     from newyork_taxi_etl_spark.functions.exact import avg_exact
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
 
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     dims = emb.select(
         F.explode(
             F.expr(
@@ -5214,14 +5153,9 @@ def embedding_outlier_screen(spark, sf_dir):
 def hard_negative_mining(spark, sf_dir):
     from pyspark.sql import Window
 
-    from newyork_taxi_etl_spark.operators.similarity import (
-        _DOT,
-        spread_small_scan,
-    )
+    from newyork_taxi_etl_spark.operators.similarity import _DOT
 
-    raw = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    raw = spread(table(spark, sf_dir, "embeddings"))
     nrm = F.expr(f"sqrt({_DOT.format(a='embedding', b='embedding')})")
     q = _fixed_n_queries(raw, n=64).select(
         F.col("vec_id").alias("anchor_id"),
@@ -5362,11 +5296,7 @@ _SQ8_SCORE_DUCK = (
     "to drift",
 )
 def ann_sq8_adc_topk(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     return _sq8_ranked(emb, k=5)
 
 
@@ -5508,11 +5438,7 @@ _L2_SCORE_DUCK = (
     "cand_id) so the comparison is deterministic across engines",
 )
 def ann_recall_sq8(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     bf = _l2_bf_top10(emb)
     sq8 = _sq8_ranked(emb, k=10).select("query_id", "cand_id")
     return _recall_row(sq8, bf, "sq8_adc")
@@ -5655,11 +5581,7 @@ _SQ_SWEEP_SQL = f"""
     "than float32); dim stats are one map-side-combinable pass",
 )
 def ann_recall_sq_sweep(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     bf = _l2_bf_top10(emb)
     out = None
     for bits in (4, 6, 8):
@@ -5794,11 +5716,7 @@ def _hd_rotate_duck_ctes(src: str = "emb", out: str = "rotv") -> str:
     "no shuffle); everything downstream is the existing PQ dataflow",
 )
 def ann_pq_rotated_recall(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     qs = emb.filter(F.col("vec_id") < 5)
     bf = (
         S.brute_force_topk(emb, qs, k=10)
@@ -6226,11 +6144,7 @@ _OPQ_SQL = f"""
     "dataflow.  100 TB cost = two corpus passes more than plain PQ.",
 )
 def ann_opq_trained_recall(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     qs = emb.filter(F.col("vec_id") < 5)
     bf = (
         S.brute_force_topk(emb, qs, k=10)
@@ -6386,11 +6300,7 @@ def ann_ivf_balance(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.clustering import (
         _ARGMIN,
     )
-    from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
     base = emb.select(
         "vec_id",
@@ -6827,30 +6737,32 @@ def lsh_band_sweep(spark, sf_dir):
         _DOT_D,
         lsh_band_structs,
         lsh_multiband_dims,
-        spread_small_scan,
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    # spread the 512-row sample BEFORE checkpointing (r16, guide §2.5 /
-    # the spread_small_scan discipline): limit(512) materializes as ONE
-    # partition, so the truth pass's broadcast-NLJ cosine scan (131k
-    # interpreted-HOF pairs) and every band projection inherited a
-    # single-task stage while 31 cores idled.  The per-vector norm is
-    # precomputed once (sqrt of the same self-dot the oracle's
-    # denominator takes, so na * nb is bit-identical to sqrt(da) *
-    # sqrt(db) per pair — the semantic_dedup_kmeans discipline): the
-    # per-pair work drops from 3 interpreted 64-dim dots to 1.
-    s = spread_small_scan(
+    # spread the 512-row sample BEFORE checkpointing (r16, guide §2.5):
+    # limit(512) materializes as ONE partition at every scale, so the
+    # truth pass's broadcast-NLJ cosine scan (131k interpreted-HOF pairs)
+    # and every band projection inherited a single-task stage while the
+    # other cores idled.  It is repartitioned straight to the session's
+    # shuffle width, not through ``spread``: that guard's partition probe
+    # executes the sort+limit (two jobs) before the checkpoint runs it
+    # again.  The per-vector norm is precomputed once (sqrt of the same
+    # self-dot the oracle's denominator takes, so na * nb is
+    # bit-identical to sqrt(da) * sqrt(db) per pair — the
+    # semantic_dedup_kmeans discipline): the per-pair work drops from 3
+    # interpreted 64-dim dots to 1.
+    s = (
         emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(512)
         .select(
             "vec_id",
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
         )
-        .withColumn(
-            "nrm", F.sqrt(F.expr(_DOT_D.format(a="v", b="v")))
-        )
-    ).localCheckpoint()
+        .withColumn("nrm", F.sqrt(F.expr(_DOT_D.format(a="v", b="v"))))
+        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        .localCheckpoint()
+    )
     a, b = s.alias("a"), s.alias("b")
     cos = F.round(
         F.expr(_DOT_D.format(a="a.v", b="b.v"))
@@ -7252,11 +7164,7 @@ _ZCA_SQL = f"""
 def embedding_whitening_audit(spark, sf_dir):
     import numpy as np
 
-    from newyork_taxi_etl_spark.operators.similarity import spread_small_scan
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -7363,13 +7271,7 @@ assert _IVF_COARSE_ADAPTIVE != _IVF_COARSE_CTES, (
 )
 def semantic_dedup_kmeans(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.clustering import _ARGMIN
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     # constant cluster SIZE (the SemDeDup contract): k grows with the
     # corpus once cells would exceed ~750 members; at every shipped SF
     # this is the shared k=8 build.  n comes from the parquet footer
@@ -7431,7 +7333,7 @@ def semantic_dedup_kmeans(spark, sf_dir):
     # post-shuffle partitions right back together.  Scale-adaptive fix:
     # when the WHOLE cells table is broadcast-sized, broadcast the build
     # side — the pair generation then runs exchange-free at the probe
-    # scan's parallelism (emb is spread_small_scan'd upstream).  Its size
+    # scan's parallelism (emb is spread upstream).  Its size
     # is rows × embedding width × 8 B, the footer's leaf value count of
     # ``embedding`` times 8 (2,000 64-dim rows ≈ 1 MB; 50k rows would be
     # ~26 MB, over the 10 MB default), held against the session's
@@ -7526,13 +7428,7 @@ def prototype_pruning_select(spark, sf_dir):
         _ARGMIN,
         _SQDIST,
     )
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
     cent_row = cent.agg(
         F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
@@ -7651,13 +7547,7 @@ def _kcenter_sql(k: int = _KC_K) -> str:
     "the oracle's LEAST chain bit-for-bit; radii round at 6 dp.",
 )
 def coreset_kcenter_select(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
-
-    emb = spread_small_scan(
-        table(spark, sf_dir, "embeddings")
-    )
+    emb = spread(table(spark, sf_dir, "embeddings"))
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -7805,7 +7695,7 @@ def dbscan_embedding_clusters(spark, sf_dir):
     # the probe side must be SPREAD: a broadcast pair-explosion stage
     # inherits the 512-row probe's (single) partition and the whole
     # O(slice^2) interpreted-HOF cosine pass lands on one core otherwise
-    a = S.spread_small_scan(
+    a = spread(
         emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
     )
     b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
@@ -7944,7 +7834,7 @@ def lof_knn_outliers(spark, sf_dir):
     # the probe side must be SPREAD: a broadcast pair-explosion stage
     # inherits the 512-row probe's (single) partition and the whole
     # O(slice^2) interpreted-HOF cosine pass lands on one core otherwise
-    a = S.spread_small_scan(
+    a = spread(
         emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
     )
     b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))

@@ -123,10 +123,20 @@ def write_zordered_interleaved(
     cost shape as the lexicographic approximation, strictly better
     2-D skipping.  The z column is dropped before the write — the layout
     IS the index.
+
+    The range bounds come from Spark's reservoir sample, seeded by the
+    RDD id, so with the default 100 points per output partition a small
+    table got a layout (and a file-skipping count) that moved with how
+    many RDDs the session had made before.  The write therefore asks for
+    ``ceil(rows / target_files)`` points per partition: below Spark's own
+    cap of 1e6 points the sample then holds every row of each input split
+    up to three times the mean split size, so a small table gets one fixed
+    layout, and a large one the usual capped sample.
     """
     from pyspark.sql import functions as F
 
     b = df.agg(
+        F.count(F.lit(1)).alias("n"),
         F.min(col_a).alias("mna"),
         F.max(col_a).alias("mxa"),
         F.min(col_b).alias("mnb"),
@@ -143,14 +153,24 @@ def write_zordered_interleaved(
         ((F.col(col_b).cast("long") - F.lit(int(b["mnb"]))) * F.lit(top))
         / F.lit(span_b)
     ).cast("long")
-    (
-        df.withColumn("_z", zvalue_expr(na, nb, bits))
-        .repartitionByRange(target_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    conf = df.sparkSession.conf
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    old = conf.get(key, None)
+    conf.set(key, str(max(100, -(-int(b["n"]) // target_files))))
+    try:
+        (
+            df.withColumn("_z", zvalue_expr(na, nb, bits))
+            .repartitionByRange(target_files, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+    finally:
+        if old is None:
+            conf.unset(key)
+        else:
+            conf.set(key, old)
 
 
 def parquet_file_column_ranges(path: str, cols: set[str]) -> list:

@@ -73,22 +73,42 @@ def test_tune_is_memoized_once_every_conf_is_set():
     assert stub.conf.sets == list(DYNAMIC_CONFS)
 
 
-def test_input_tables_are_opened_only_through_sources():
-    """``sources.readers.table`` is the one read path for input tables:
-    no module outside ``sources/`` reads ``table_path(...)`` itself.
-    Output and stage directories may still be read directly."""
+def _engine_matches(pattern, skip=lambda path: False):
+    """``file:line`` of every match of ``pattern`` in the engine (the
+    package, ``__spark_entry__.py`` and ``bench.py``), except in files
+    for which ``skip(path)`` is true."""
     import re
     from pathlib import Path
 
     repo = Path(__file__).resolve().parent.parent
     pkg = repo / "newyork_taxi_etl_spark"
-    direct = re.compile(r"\.parquet\(\s*table_path\(|\bread_parquet\(")
-    files = [repo / "__spark_entry__.py", repo / "bench.py"] + [
-        p for p in pkg.rglob("*.py") if (pkg / "sources") not in p.parents
-    ]
-    found = [
+    files = [repo / "__spark_entry__.py", repo / "bench.py"]
+    files += sorted(pkg.rglob("*.py"))
+    return [
         f"{p.relative_to(repo)}:{p.read_text()[:m.start()].count(chr(10)) + 1}"
         for p in files
-        for m in direct.finditer(p.read_text())
+        if not skip(p)
+        for m in re.finditer(pattern, p.read_text())
     ]
+
+
+def test_input_tables_are_opened_only_through_sources():
+    """``sources.readers.table`` is the one read path for input tables:
+    no module outside ``sources/`` reads ``table_path(...)`` itself.
+    Output and stage directories may still be read directly."""
+    found = _engine_matches(
+        r"\.parquet\(\s*table_path\(|\bread_parquet\(",
+        skip=lambda p: p.parent.name == "sources",
+    )
+    assert not found, found
+
+
+def test_scan_spread_policy_lives_only_in_session():
+    """``session.spread`` is the one scan-spread policy: no second helper,
+    and no partition-count or core-count probe outside ``session.py``."""
+    found = _engine_matches(r"spread_small_scan")
+    found += _engine_matches(
+        r"getNumPartitions|defaultParallelism",
+        skip=lambda p: p.name == "session.py",
+    )
     assert not found, found

@@ -154,20 +154,19 @@ def test_shard_export_manifest_reproducible_and_complete(spark):
 
 
 def test_spread_small_scan_noop_when_already_parallel(spark):
-    """spread_small_scan must be a structural NO-OP (same plan object,
-    no added shuffle) when the input already has >= defaultParallelism
-    partitions — the 100 TB posture — and must raise parallelism when
-    the scan under-splits."""
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
+    """The scan spread (``session.spread``) must be a structural NO-OP
+    (same plan object, no added shuffle) when the input already has
+    >= ``spark.sql.shuffle.partitions`` partitions — the 100 TB posture —
+    and must raise parallelism to exactly that width when the scan
+    under-splits."""
+    from newyork_taxi_etl_spark.session import spread
 
-    cores = spark.sparkContext.defaultParallelism
-    wide = spark.range(0, 1000).repartition(cores + 4)
-    assert spread_small_scan(wide) is wide  # identical object: no shuffle
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    wide = spark.range(0, 1000).repartition(n + 4)
+    assert spread(wide) is wide  # identical object: no shuffle
     narrow = spark.range(0, 1000).coalesce(1)
-    out = spread_small_scan(narrow)
-    assert out.rdd.getNumPartitions() == cores
+    out = spread(narrow)
+    assert out.rdd.getNumPartitions() == n
 
 
 def test_decontamination_fuzzy_flags_planted_paraphrase(spark, tmp_path):

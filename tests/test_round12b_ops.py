@@ -395,6 +395,24 @@ def test_lsh_band_sweep_gates(spark):
         assert r.n_hits <= r.n_candidates
 
 
+def test_lsh_band_sweep_builder_does_not_probe_its_sample(spark):
+    """The 512-row md5 sample is repartitioned straight to the shuffle
+    width before its eager checkpoint, with no partition-count probe: a
+    probe on the sort+limit executes it (two jobs) before the checkpoint
+    runs it again.  A warm builder call starts at most 6 Spark jobs
+    (8 with the probe); its rows do not change."""
+    from newyork_taxi_etl_spark.registry import queries
+
+    q = queries()["lsh_band_sweep"]
+    want = sorted(q(spark, SF).collect())  # warms the table's schema memo
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    df = q(spark, SF)
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    assert len(jobs) <= 6, sorted(jobs)
+    assert sorted(df.collect()) == want
+
+
 # ---------------------------------------------------------------------------
 # Property tests: the readability terms and coverage budget vs direct
 # Python recomputation over random corpora (hypothesis).

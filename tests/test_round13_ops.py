@@ -192,9 +192,6 @@ def test_opq_rotation_is_orthogonal_and_cuts_the_objective(spark):
     import numpy as np
 
     from tests.conftest import SF_ORACLE
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
     from newyork_taxi_etl_spark.queries.similarity import (
         _hd_matrix_np,
         _hd_rotate_spark,
@@ -202,10 +199,9 @@ def test_opq_rotation_is_orthogonal_and_cuts_the_objective(spark):
         _pq_parts_v,
     )
     from newyork_taxi_etl_spark.registry import queries
+    from newyork_taxi_etl_spark.session import spread
 
-    emb = spread_small_scan(
-        spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    )
+    emb = spread(spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet"))
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
@@ -397,19 +393,15 @@ def test_zca_whitening_inverts_the_covariance(spark):
     import numpy as np
 
     from tests.conftest import SF_ORACLE
-    from newyork_taxi_etl_spark.operators.similarity import (
-        spread_small_scan,
-    )
     from newyork_taxi_etl_spark.queries.similarity import (
         _ZCA_RIDGE,
         _zca_cov,
         _zca_invsqrt_np,
     )
     from newyork_taxi_etl_spark.registry import queries
+    from newyork_taxi_etl_spark.session import spread
 
-    emb = spread_small_scan(
-        spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    )
+    emb = spread(spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet"))
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),

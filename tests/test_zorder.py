@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.sources.writers import (
     files_touched,
+    parquet_file_column_ranges,
     write_zordered_approx,
     write_zordered_interleaved,
     zvalue_expr,
@@ -56,6 +57,31 @@ def test_zvalue_locality_beats_lex_on_trailing_dim(spark, tmp_path):
     assert l_touched == l_total, "lex layout should be blind to the trailing dim"
     assert z_touched < l_touched, (z_touched, l_touched)
     assert z_touched <= z_total // 2, f"z-order pruned only {z_touched}/{z_total}"
+
+
+def test_zorder_layout_does_not_move_with_rdd_ids(spark, tmp_path):
+    """Range bounds come from a sample seeded by the RDD id: the small
+    table's z-order layout (per-file key ranges) must be the same however
+    many RDDs the session made before the write, and the sample-size conf
+    the write raises must be restored afterwards."""
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    before = spark.conf.get(key, None)
+    li = spark.read.parquet(SF_SMOKE + "/lineitem.parquet")
+    layouts = []
+    for k in range(4):
+        spark.sparkContext.parallelize([k]).count()  # advance the RDD id
+        d = str(tmp_path / f"z{k}")
+        write_zordered_interleaved(
+            li, d, "l_partkey", "l_suppkey", bits=8, target_files=16
+        )
+        ranges = parquet_file_column_ranges(d, {"l_partkey", "l_suppkey"})
+        layouts.append(
+            sorted(
+                (r["l_partkey"], r["l_suppkey"]) for _f, r in ranges
+            )
+        )
+    assert all(lay == layouts[0] for lay in layouts), layouts
+    assert spark.conf.get(key, None) == before
 
 
 def test_zordered_write_preserves_content(spark, tmp_path):

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from newyork_taxi_etl_spark.functions.text import shingles_sql
 from newyork_taxi_etl_spark.operators import curation as C
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.session import spread
+from newyork_taxi_etl_spark.session import scratch, spread
 from newyork_taxi_etl_spark.sources.readers import table
 
 _SH = shingles_sql("text", 3)
@@ -1546,15 +1546,10 @@ def boilerplate_segment_strip(spark, sf_dir):
     "broadcast and the batch's own rows.",
 )
 def streaming_quality_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_qingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("qingest")
     # shares the ":logreg_weights" sub-key with the PSI monitor —
     # identical training, one cached scorer build
     return W.run_streaming_quality_ingest(
@@ -2504,15 +2499,10 @@ def quality_psi_by_domain(spark, sf_dir):
     "oracle covers every slicing.  State is O(sources x 10 bins).",
 )
 def streaming_quality_psi_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_psiingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("psiingest")
     return W.run_streaming_psi_ingest(
         spark, docs, work, cache_key=f"documents_qg:{sf_dir}"
     )
@@ -2833,15 +2823,10 @@ def decontamination_exact_substring(spark, sf_dir):
     "is a small partitioned table and only the batch shuffles.",
 )
 def streaming_decontamination_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_deconingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("deconingest")
     return W.run_streaming_decon_ingest(
         spark, docs, work, cache_key=f"documents_decon:{sf_dir}"
     )
@@ -3042,15 +3027,10 @@ def _dsir_profile(docs, target_lang: str = "en"):
     "100 TB only the micro-batch shuffles and the model is 64 rows.",
 )
 def streaming_dsir_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_dsiringest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("dsiringest")
     return W.run_streaming_dsir_ingest(
         spark, docs, work, cache_key=f"documents_dsir:{sf_dir}"
     )
@@ -3874,15 +3854,10 @@ def _lcp_finalize(c):
     "the folded vocabulary table, never over positions.",
 )
 def streaming_lcp_depth_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_lcpingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("lcpingest")
     return W.run_streaming_lcp_depth_ingest(
         spark, docs, work, cache_key=f"documents_lcp:{sf_dir}"
     )
@@ -4079,13 +4054,8 @@ def _doremi_from_tf(tf):
     "folds; per batch nothing shuffles but the batch's own counts.",
 )
 def streaming_doremi_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_doremiingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("doremiingest")
     return W.run_streaming_doremi_ingest(spark, docs, work)

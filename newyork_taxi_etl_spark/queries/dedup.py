@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from newyork_taxi_etl_spark.operators import dedup as D
 from newyork_taxi_etl_spark.functions.text import minhash_sql, shingles_sql
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.session import spread
+from newyork_taxi_etl_spark.session import scratch, spread
 from newyork_taxi_etl_spark.sources.readers import table
 
 _SH = shingles_sql("text", 3)
@@ -1370,15 +1370,10 @@ def dedup_bloom_gate(spark, sf_dir):
     "batch nothing shuffles but the batch's own positions.",
 )
 def streaming_bloom_gate_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_bloomingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("bloomingest")
     # the fold interpolates its actual n_slices into the stage key
     return W.run_streaming_bloom_ingest(
         spark, docs, work, cache_key=f"documents_bloom:{sf_dir}"

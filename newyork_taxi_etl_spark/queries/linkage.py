@@ -25,7 +25,7 @@ from newyork_taxi_etl_spark.operators.linkage import (
     mutual_best_match,
 )
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.session import spread
+from newyork_taxi_etl_spark.session import scratch, spread
 from newyork_taxi_etl_spark.sources.readers import table
 
 _SH = shingles_sql("text", 3)
@@ -395,15 +395,10 @@ _INGEST_CTE = _LINK_CTE.replace(_INGEST_HOT_OLD, _INGEST_HOT_NEW)
     "batch shuffles.",
 )
 def streaming_linkage_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     a, b = _corpora(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="nyetl_linkingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("linkingest")
     return W.run_streaming_linkage_ingest(
         spark, a, b, work, cache_key=f"linkage_ab:{sf_dir}"
     )

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.operators import profile as P
 from newyork_taxi_etl_spark.registry import register
+from newyork_taxi_etl_spark.session import scratch
 from newyork_taxi_etl_spark.sources.readers import table, table_path
 
 _MONEYISH = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -2718,15 +2719,10 @@ def _kll_report(d, n: int, surv=None, bound: int | None = None):
     "survivor set.",
 )
 def streaming_kll_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_kllingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("kllingest")
     # 2 slices: one state-less first fold + one genuine fold-into-state
     # batch exercises the full state machine at ~2/3 the drain cost of 3
     # (the cascade dominates; pytests still cover 2/3/5 slicings)

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from newyork_taxi_etl_spark.functions.exact import avg_exact_sql, dec_out_sql
 from newyork_taxi_etl_spark.operators import similarity as S
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.session import spread
+from newyork_taxi_etl_spark.session import scratch, spread
 from newyork_taxi_etl_spark.sources.readers import table, table_path
 
 _COS_SQL = (
@@ -2437,8 +2437,6 @@ def rrf_hybrid_retrieval(spark, sf_dir):
 )
 def ann_index_persisted_probe(spark, sf_dir):
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -2453,10 +2451,7 @@ def ann_index_persisted_probe(spark, sf_dir):
         "embedding",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("_v"),
     )
-    idx_root = os.path.join(
-        tempfile.gettempdir(), f"nyetl_annidx_{os.getpid()}"
-    )
-    shutil.rmtree(idx_root, ignore_errors=True)
+    idx_root = scratch("annidx")
 
     # BUILD: train the quantizer, assign the corpus, persist both tables
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
@@ -2602,8 +2597,6 @@ def ann_index_persisted_probe(spark, sf_dir):
 )
 def ann_index_filtered_probe(spark, sf_dir):
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -2618,10 +2611,7 @@ def ann_index_filtered_probe(spark, sf_dir):
         "embedding",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("_v"),
     )
-    idx_root = os.path.join(
-        tempfile.gettempdir(), f"nyetl_annfidx_{os.getpid()}"
-    )
-    shutil.rmtree(idx_root, ignore_errors=True)
+    idx_root = scratch("annfidx")
 
     # BUILD: the persisted-probe lifecycle, with the filterable payload
     # (label) stored in the index
@@ -2788,8 +2778,6 @@ _IVF_APPEND_SQL = f"""
 )
 def ann_index_incremental_append(spark, sf_dir):
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -2807,8 +2795,7 @@ def ann_index_incremental_append(spark, sf_dir):
     )
     initial = base.filter((F.col("vec_id") % 4) != 0)
     new_batch = base.filter((F.col("vec_id") % 4) == 0)
-    idx_root = tempfile.mkdtemp(prefix="nyetl_annidx_incr_")
-    shutil.rmtree(idx_root, ignore_errors=True)
+    idx_root = scratch("annidx_incr")
     assign_dir = os.path.join(idx_root, "assignments")
 
     def assign_and_write(part, cent_row, mode):
@@ -3621,8 +3608,6 @@ _KNN_IDX_EVAL_SQL = f"""
 )
 def knn_label_accuracy_indexed(spark, sf_dir):
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -3648,10 +3633,7 @@ def knn_label_accuracy_indexed(spark, sf_dir):
             f"sqrt({_DOT.format(a='embedding', b='embedding')})"
         ).alias("nrm"),
     )
-    idx_root = os.path.join(
-        tempfile.gettempdir(), f"nyetl_knnidx_{os.getpid()}"
-    )
-    shutil.rmtree(idx_root, ignore_errors=True)
+    idx_root = scratch("knnidx")
 
     # BUILD: identical lifecycle to ann_index_persisted_probe — train the
     # coarse quantizer, assign the corpus, persist partitioned by cid
@@ -4009,15 +3991,10 @@ def gram_subspace_topk(spark, sf_dir):
     "corpus/n_lists x n_probe.",
 )
 def streaming_ann_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     emb = table(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="nyetl_annstream_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("annstream")
     return W.run_streaming_ann_ingest(
         spark, emb, work, cache_key=f"annstream_snap:{sf_dir}"
     )
@@ -4802,8 +4779,6 @@ _ANN_RANK_SQL = f"""
 )
 def ann_ranking_quality(spark, sf_dir):
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -4825,10 +4800,7 @@ def ann_ranking_quality(spark, sf_dir):
             f"sqrt({_DOT.format(a='embedding', b='embedding')})"
         ).alias("nrm"),
     )
-    idx_root = os.path.join(
-        tempfile.gettempdir(), f"nyetl_rankidx_{os.getpid()}"
-    )
-    shutil.rmtree(idx_root, ignore_errors=True)
+    idx_root = scratch("rankidx")
 
     # BUILD: the ann_index_persisted_probe lifecycle — train the coarse
     # quantizer, assign the corpus, persist partitioned by cid

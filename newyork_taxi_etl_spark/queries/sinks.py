@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
@@ -22,6 +21,7 @@ from newyork_taxi_etl_spark.functions.exact import (
     sum_exact_sql,
 )
 from newyork_taxi_etl_spark.registry import register
+from newyork_taxi_etl_spark.session import scratch
 from newyork_taxi_etl_spark.sources.readers import table
 from newyork_taxi_etl_spark.sources.writers import (
     HAVE_DELTA,
@@ -29,12 +29,6 @@ from newyork_taxi_etl_spark.sources.writers import (
     write_partitioned,
     write_zordered_approx,
 )
-
-
-def _workdir(name: str) -> str:
-    """Per-process-unique scratch dir: concurrent drivers / parallel test
-    workers never race on a shared sink path (ADVICE r6, generalized)."""
-    return os.path.join(tempfile.gettempdir(), f"nyetl_{name}_{os.getpid()}")
 
 
 @register(
@@ -56,8 +50,7 @@ def _workdir(name: str) -> str:
     "against the source-of-truth aggregate",
 )
 def partitioned_write_pruned_read(spark, sf_dir):
-    out = _workdir("partitioned_events")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch("partitioned_events")
     df = (
         table(spark, sf_dir, "events")
         .withColumn("event_year", F.year("ts"))
@@ -91,8 +84,7 @@ def partitioned_write_pruned_read(spark, sf_dir):
     "never change query results, only file-skipping selectivity)",
 )
 def zorder_approx_roundtrip(spark, sf_dir):
-    out = _workdir("zordered_events")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch("zordered_events")
     df = table(spark, sf_dir, "events")
     write_zordered_approx(df, out, ["user_id", "event_type"], target_files=8)
     back = spark.read.parquet(out).filter(F.col("user_id") == 7)
@@ -228,8 +220,7 @@ if HAVE_DELTA:  # pragma: no cover - activates when delta-spark is installed
         "delta-spark is importable (probe in sources/writers.py)",
     )
     def delta_roundtrip_zorder(spark, sf_dir):
-        out = _workdir("delta_events")
-        shutil.rmtree(out, ignore_errors=True)
+        out = scratch("delta_events")
         df = (
             table(spark, sf_dir, "events")
             .withColumn("event_month", F.month("ts"))
@@ -331,8 +322,7 @@ _ROUNDTRIP_ORACLE = f"""
     "repr double formatting reparses exactly)",
 )
 def csv_roundtrip(spark, sf_dir):
-    out = _workdir("events_csv")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch("events_csv")
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -351,8 +341,7 @@ def csv_roundtrip(spark, sf_dir):
     "most raw training-data drops arrive in), schema supplied on read",
 )
 def jsonl_roundtrip(spark, sf_dir):
-    out = _workdir("events_jsonl")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch("events_jsonl")
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -371,8 +360,7 @@ def jsonl_roundtrip(spark, sf_dir):
     "value-checked contract",
 )
 def orc_roundtrip(spark, sf_dir):
-    out = _workdir("events_orc")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch("events_orc")
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -522,10 +510,7 @@ def cdc_merge_apply(spark, sf_dir):
     "rewrite",
 )
 def schema_evolution_read(spark, sf_dir):
-    import shutil
-
-    out = _workdir("schema_evo")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch("schema_evo")
     orders = table(spark, sf_dir, "orders")
     orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -717,16 +702,15 @@ def incremental_agg_refresh(spark, sf_dir):
 def _compact_orders(spark, sf_dir):
     """Write orders fragmented (repartition(16)), compact via coalesce(2).
 
-    Returns (n_files_before, n_files_after, compact_dir).  The work dir is
-    mkdtemp-unique (concurrent drivers / parallel test workers never race,
-    ADVICE item) and removed at process exit — it must outlive this call
-    because the returned DataFrame reads the compacted files lazily.
+    Returns (n_files_before, n_files_after, compact_dir).  The work dir
+    comes from ``session.scratch``, so every call gets its own: it must
+    outlive this call because the returned DataFrame reads the compacted
+    files lazily, and it is freed when ``small_file_compaction`` is next
+    called on the same thread (at process exit when called directly).
     """
-    import atexit
     import glob
 
-    base = tempfile.mkdtemp(prefix="nyetl_compact_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch("compact")
     small_dir = os.path.join(base, "small")
     compact_dir = os.path.join(base, "compact")
 
@@ -801,14 +785,13 @@ def small_file_compaction(spark, sf_dir):
     "Delta/Iceberg mechanize with a transaction log; on plain parquet "
     "the pointer file IS the single-table log, and readers of "
     "superseded generations keep working until a retention sweep "
-    "removes them.",
+    "removes them (here: the table lives in the call's scratch, freed "
+    "when this query is next called on the same thread).",
 )
 def compaction_concurrent_read(spark, sf_dir):
-    import atexit
     import glob
 
-    base = tempfile.mkdtemp(prefix="nyetl_genswap_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch("genswap")
     pointer = os.path.join(base, "_current")
 
     def write_pointer(gen):
@@ -1040,8 +1023,7 @@ def table_diff_reconcile(spark, sf_dir):
 def compliance_delete_rewrite(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.sampling import hash_bucket
 
-    out = _workdir("compliance_tbl")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch("compliance_tbl")
     ev = table(spark, sf_dir, "events").withColumn(
         "u_bucket", hash_bucket("user_id", 16)
     )
@@ -1068,8 +1050,7 @@ def compliance_delete_rewrite(spark, sf_dir):
     # NOT partitionOverwriteMode=dynamic: that replaces only partitions
     # PRESENT in the write, so a bucket whose survivors are empty (a user
     # who owned a whole partition) would silently keep its old data.
-    stage = _workdir("compliance_stage")
-    shutil.rmtree(stage, ignore_errors=True)
+    stage = scratch("compliance_stage")
     (
         spark.read.parquet(out)
         .join(F.broadcast(target_bucket), "u_bucket")
@@ -1147,10 +1128,7 @@ def compliance_delete_rewrite(spark, sf_dir):
     "2-to-1 generation collapse.",
 )
 def time_travel_vacuum(spark, sf_dir):
-    import atexit
-
-    base = tempfile.mkdtemp(prefix="nyetl_timetravel_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch("timetravel")
     pointer = os.path.join(base, "_current")
 
     def write_pointer(gen):
@@ -1287,9 +1265,14 @@ def streaming_cdc_apply(spark, sf_dir):
             ).alias("new_price"),
         )
     )
-    stage = _workdir("cdc_stage")
-    target = _workdir("cdc_target")
-    return W.run_streaming_cdc_apply(spark, base, cdc, stage, target)
+    work = scratch("cdc")
+    return W.run_streaming_cdc_apply(
+        spark,
+        base,
+        cdc,
+        os.path.join(work, "stage"),
+        os.path.join(work, "target"),
+    )
 
 
 @register(
@@ -1351,8 +1334,8 @@ def zorder_interleaved_skipping(spark, sf_dir):
     )
 
     li = table(spark, sf_dir, "lineitem")
-    zdir = _workdir("zint_lineitem")
-    ldir = _workdir("zlex_lineitem")
+    zdir = scratch("zint_lineitem")
+    ldir = scratch("zlex_lineitem")
     write_zordered_interleaved(
         li, zdir, "l_partkey", "l_suppkey", bits=8, target_files=16
     )
@@ -1454,8 +1437,7 @@ def zorder_interleaved_skipping(spark, sf_dir):
     "one aggregation buffer.",
 )
 def corpus_shard_export(spark, sf_dir):
-    out = _workdir("corpus_shards")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch("corpus_shards")
     docs = table(spark, sf_dir, "documents")
     toks = F.size(F.split(F.col("text"), " "))
     kept = docs.filter(toks >= 10).select(

@@ -12,20 +12,13 @@ exposes or compares timestamps first casts ``ts`` to microsecond precision
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.registry import register
+from newyork_taxi_etl_spark.session import scratch
 from newyork_taxi_etl_spark.sources.readers import table
 from newyork_taxi_etl_spark.streaming import windows as W
-
-
-def _workdir(name: str) -> str:
-    """Per-process-unique scratch dir: concurrent drivers / parallel test
-    workers never race on a shared stage path (ADVICE r6, generalized from
-    the compaction/checkpoint fix to every staged streaming query)."""
-    return os.path.join(tempfile.gettempdir(), f"nyetl_{name}_{os.getpid()}")
 
 
 @register(
@@ -119,7 +112,7 @@ def session_window_agg(spark, sf_dir):
     "runtime itself is under the correctness gate",
 )
 def structured_streaming_availablenow(spark, sf_dir):
-    stage = _workdir("stream_stage")
+    stage = scratch("stream_stage")
     return W.run_stream_availablenow(spark, table(spark, sf_dir, "events"), stage)
 
 
@@ -137,7 +130,7 @@ def structured_streaming_availablenow(spark, sf_dir):
     "original source, which the oracle value-checks",
 )
 def streaming_dedup_within_watermark(spark, sf_dir):
-    stage = _workdir("dedup_stage")
+    stage = scratch("dedup_stage")
     return W.run_streaming_dedup(spark, table(spark, sf_dir, "events"), stage)
 
 
@@ -155,7 +148,7 @@ def streaming_dedup_within_watermark(spark, sf_dir):
     "batch aggregate, so the oracle fully value-checks the stateful path",
 )
 def stateful_user_stats(spark, sf_dir):
-    stage = _workdir("stateful_stage")
+    stage = scratch("stateful_stage")
     return W.run_stateful_user_stats(spark, table(spark, sf_dir, "events"), stage)
 
 
@@ -181,7 +174,7 @@ def stateful_user_stats(spark, sf_dir):
     "against the batch time-range join",
 )
 def stream_stream_join(spark, sf_dir):
-    stage = _workdir("ssjoin_stage")
+    stage = scratch("ssjoin_stage")
     return W.run_stream_stream_join(spark, table(spark, sf_dir, "events"), stage)
 
 
@@ -204,8 +197,8 @@ def stream_stream_join(spark, sf_dir):
     "value-checked by the oracle",
 )
 def streaming_upsert_counts(spark, sf_dir):
-    stage = _workdir("upsert_stage")
-    target = _workdir("upsert_target")
+    work = scratch("upsert")
+    stage, target = os.path.join(work, "stage"), os.path.join(work, "target")
     return W.run_foreachbatch_upsert(
         spark,
         table(spark, sf_dir, "events"),
@@ -236,8 +229,8 @@ def streaming_upsert_counts(spark, sf_dir):
     "every replayed row double-folds and the hash compare fails",
 )
 def foreachbatch_idempotent_replay(spark, sf_dir):
-    stage = _workdir("replay_stage")
-    target = _workdir("replay_target")
+    work = scratch("replay")
+    stage, target = os.path.join(work, "stage"), os.path.join(work, "target")
     # same read-only stage (and key) as streaming_upsert_counts
     return W.run_upsert_replay_proof(
         spark,
@@ -269,7 +262,7 @@ def foreachbatch_idempotent_replay(spark, sf_dir):
     "restarts, replicas, and batch backfills at 100 TB",
 )
 def streaming_cms_counters(spark, sf_dir):
-    stage = _workdir("cms_stage")
+    stage = scratch("cms_stage")
     return W.run_streaming_cms(spark, table(spark, sf_dir, "events"), stage)
 
 
@@ -294,13 +287,10 @@ def streaming_cms_counters(spark, sf_dir):
     "the micro-batched accumulation order-independent",
 )
 def streaming_static_enrich(spark, sf_dir):
-    import os
-    import tempfile
-
     dim = table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
-    stage = _workdir("enrich_stage")
+    stage = scratch("enrich_stage")
     return W.run_stream_static_enrich(
         spark, table(spark, sf_dir, "events"), dim, stage
     )
@@ -338,12 +328,9 @@ def streaming_static_enrich(spark, sf_dir):
     "constant — the production pattern this operator demonstrates",
 )
 def streaming_decayed_scores(spark, sf_dir):
-    import os
-    import tempfile
-
     ev = table(spark, sf_dir, "events")
     ref = ev.agg(F.max("ts").alias("mx_ts"))
-    stage = _workdir("decay_stage")
+    stage = scratch("decay_stage")
     return W.run_streaming_decayed_scores(spark, ev, ref, stage)
 
 
@@ -381,12 +368,9 @@ def streaming_decayed_scores(spark, sf_dir):
     "3-decimal output rounding has 5 orders of magnitude of margin)",
 )
 def streaming_decay_rescale(spark, sf_dir):
-    import os
-    import tempfile
-
     ev = table(spark, sf_dir, "events")
-    stage = _workdir("rescale_stage")
-    target = _workdir("rescale_state")
+    work = scratch("rescale")
+    stage, target = os.path.join(work, "stage"), os.path.join(work, "target")
     return W.run_streaming_decay_rescale(spark, ev, stage, target)
 
 
@@ -458,13 +442,13 @@ def streaming_lsh_index_dedup(spark, sf_dir):
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
     )
     corpus = docs.unionAll(dups)
-    base = _workdir("lshidx")
+    base = scratch("lshidx")
     return W.run_streaming_lsh_index(
         spark,
         corpus,
-        base + "_stage",
-        base + "_index",
-        base + "_pairs",
+        os.path.join(base, "stage"),
+        os.path.join(base, "index"),
+        os.path.join(base, "pairs"),
         cache_key=f"lshidx_corpus:{sf_dir}",
     )
 
@@ -506,7 +490,7 @@ def streaming_lsh_index_dedup(spark, sf_dir):
     "the oracle gates the watermark mechanics themselves",
 )
 def stream_stream_outer_join(spark, sf_dir):
-    stage = _workdir("ssouter_stage")
+    stage = scratch("ssouter_stage")
     # the three outer-join drains stage the IDENTICAL time-sliced events +
     # sentinel content, so they share one cached stage per sf_dir (the
     # checkpoint/sink stays per-run; values are unaffected — the stage is
@@ -560,7 +544,7 @@ _SS_TWO_SIDED_ORACLE = """
     "value-identical to this batch FULL JOIN twin",
 )
 def stream_stream_full_outer_join(spark, sf_dir):
-    stage = _workdir("ssfull_stage")
+    stage = scratch("ssfull_stage")
     return W.run_stream_stream_two_sided_outer(
         spark,
         table(spark, sf_dir, "events"),
@@ -580,7 +564,7 @@ def stream_stream_full_outer_join(spark, sf_dir):
     "pinned by the oracle",
 )
 def stream_stream_right_outer_join(spark, sf_dir):
-    stage = _workdir("ssright_stage")
+    stage = scratch("ssright_stage")
     return W.run_stream_stream_two_sided_outer(
         spark,
         table(spark, sf_dir, "events"),
@@ -634,7 +618,7 @@ if tws_available():
         "strictly-increasing count",
     )
     def transform_with_state_stats(spark, sf_dir):
-        stage = _workdir("tws_stage")
+        stage = scratch("tws_stage")
         return W.run_transform_with_state_stats(
             spark, table(spark, sf_dir, "events"), stage
         )
@@ -662,15 +646,8 @@ if tws_available():
     "plus the restart.",
 )
 def streaming_checkpoint_recovery(spark, sf_dir):
-    import atexit
-    import shutil
-
-    # mkdtemp-unique so concurrent drivers / parallel test workers never
-    # race on the checkpoint or target (r6 ADVICE); removed at process exit
-    # because the returned DataFrame reads the target lazily.
-    workdir = tempfile.mkdtemp(prefix="nyetl_ckpt_recovery_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return W.run_checkpoint_recovery(spark, table(spark, sf_dir, "events"), workdir)
+    work = scratch("ckpt_recovery")
+    return W.run_checkpoint_recovery(spark, table(spark, sf_dir, "events"), work)
 
 
 @register(
@@ -720,8 +697,8 @@ def streaming_checkpoint_recovery(spark, sf_dir):
     "percentiles with relative errors as driver-gated values.",
 )
 def streaming_quantile_sketch(spark, sf_dir):
-    stage = _workdir("qsketch_stage")
-    target = _workdir("qsketch_state")
+    work = scratch("qsketch")
+    stage, target = os.path.join(work, "stage"), os.path.join(work, "target")
     return W.run_streaming_quantile_sketch(
         spark, table(spark, sf_dir, "events"), stage, target
     )
@@ -766,7 +743,7 @@ def streaming_quantile_sketch(spark, sf_dir):
     "sessionization-at-ingest.",
 )
 def streaming_session_close(spark, sf_dir):
-    stage = _workdir("sessclose_stage")
+    stage = scratch("sessclose_stage")
     return W.run_streaming_session_close(
         spark,
         table(spark, sf_dir, "events"),
@@ -818,7 +795,7 @@ def streaming_session_close(spark, sf_dir):
     "measured, not assumed.",
 )
 def streaming_late_drop(spark, sf_dir):
-    stage = _workdir("latedrop_stage")
+    stage = scratch("latedrop_stage")
     return W.run_streaming_late_drop(
         spark,
         table(spark, sf_dir, "events"),
@@ -844,19 +821,18 @@ def streaming_late_drop(spark, sf_dir):
     """,
     doc="bounded UNIFORM SAMPLE maintained at ingest — the deterministic "
     "distributed reservoir: state is the k=64 smallest md5(event_id) "
-    "ranks, per micro-batch merge = union + re-top-k. The fold is "
-    "IDEMPOTENT (top-k of a union is unchanged by re-merging the same "
-    "batch), so at-least-once replay needs no applied-batch sidecar — "
-    "the deliberate contrast with the additive folds, whose sidecar "
-    "guard exists precisely because they are NOT idempotent. The hash "
+    "ranks, per micro-batch merge = union + re-top-k. The union is "
+    "UNION ALL, so re-merging a redelivered batch would duplicate its "
+    "rows: the applied-batch sidecar makes at-least-once replay a "
+    "no-op, as for the additive folds. The hash "
     "rank is key-determined, so the drained sample equals the batch "
     "top-k draw over the whole corpus row-for-row under ANY batching; "
     "state is O(k) and each batch reduces map-side in the TakeOrdered "
     "heap before anything shuffles.",
 )
 def streaming_reservoir_sample(spark, sf_dir):
-    stage = _workdir("reservoir_stage")
-    target = _workdir("reservoir_state")
+    work = scratch("reservoir")
+    stage, target = os.path.join(work, "stage"), os.path.join(work, "target")
     return W.run_streaming_reservoir_sample(
         spark, table(spark, sf_dir, "events"), stage, target
     )
@@ -880,15 +856,14 @@ def streaming_reservoir_sample(spark, sf_dir):
     "of sample_k_per_group): state is the k=8 smallest md5(event_id) "
     "ranks PER event_type, merged per micro-batch by a per-group "
     "windowed top-k — map-side WindowGroupLimit prunes each batch "
-    "before the O(groups x k) state union, and the fold is IDEMPOTENT "
-    "(replay-safe without the sidecar). Hash ranks are key-determined, "
+    "before the O(groups x k) state union, and the applied-batch "
+    "sidecar makes replay a no-op. Hash ranks are key-determined, "
     "so the drained stratified sample equals the batch per-group draw "
-    "row-for-row under any batching — one relational oracle, no batch "
-    "bookkeeping.",
+    "row-for-row under any batching — one relational oracle.",
 )
 def streaming_group_reservoir(spark, sf_dir):
-    stage = _workdir("gres_stage")
-    target = _workdir("gres_state")
+    work = scratch("gres")
+    stage, target = os.path.join(work, "stage"), os.path.join(work, "target")
     return W.run_streaming_group_reservoir(
         spark, table(spark, sf_dir, "events"), stage, target
     )
@@ -915,7 +890,7 @@ from newyork_taxi_etl_spark.queries.behavior import _W1_SQL  # noqa: E402
     "regardless of stream length.",
 )
 def streaming_wasserstein_ingest(spark, sf_dir):
-    work = _workdir("w1_ingest")
+    work = scratch("w1_ingest")
     return W.run_streaming_w1_ingest(
         spark, table(spark, sf_dir, "events"), work,
         cache_key=f"events_w1:{sf_dir}",
@@ -942,7 +917,7 @@ from newyork_taxi_etl_spark.queries.similarity import _MMD_SQL  # noqa: E402
     "x dims) = 256 rows regardless of stream length.",
 )
 def streaming_mmd_ingest(spark, sf_dir):
-    work = _workdir("mmd_ingest")
+    work = scratch("mmd_ingest")
     emb = table(spark, sf_dir, "embeddings")
     return W.run_streaming_mmd_ingest(
         spark, emb, work, cache_key=f"emb_mmd:{sf_dir}"
@@ -1015,13 +990,8 @@ def streaming_mmd_ingest(spark, sf_dir):
     "a 100 TB stream can afford where exact distinct cannot.",
 )
 def streaming_fm_distinct_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_fmingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("fmingest")
     return W.run_streaming_fm_ingest(
         spark, docs, work, cache_key=f"documents_fm:{sf_dir}"
     )

@@ -20,7 +20,7 @@ from newyork_taxi_etl_spark.functions.text import (
     with_shingles,
 )
 from newyork_taxi_etl_spark.registry import register
-from newyork_taxi_etl_spark.session import spread
+from newyork_taxi_etl_spark.session import scratch, spread
 from newyork_taxi_etl_spark.sources.readers import table
 
 _TOKS_SQL = "string_split(text, ' ')"
@@ -3651,15 +3651,10 @@ def quality_rule_funnel(spark, sf_dir):
     "O(rules).",
 )
 def streaming_quality_funnel_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_funnelingest_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("funnelingest")
     return W.run_streaming_funnel_ingest(spark, docs, work)
 
 
@@ -3962,15 +3957,10 @@ def char_coverage_budget(spark, sf_dir):
     "over the folded alphabet table.",
 )
 def streaming_char_coverage_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_charcov_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("charcov")
     return W.run_streaming_char_coverage_ingest(
         spark, docs, work, cache_key=f"documents_charcov:{sf_dir}"
     )
@@ -4289,15 +4279,10 @@ _HEAVY_HITTERS_SQL = """
     "never the vocabulary.",
 )
 def streaming_heavy_hitters_ingest(spark, sf_dir):
-    import atexit
-    import shutil
-    import tempfile
-
     from newyork_taxi_etl_spark.streaming import windows as W
 
     docs = table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="nyetl_hh_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = scratch("hh")
     return W.run_streaming_heavy_hitters(spark, docs, work)
 
 

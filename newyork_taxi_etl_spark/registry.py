@@ -17,7 +17,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from newyork_taxi_etl_spark.session import tune
+from newyork_taxi_etl_spark.session import call_scope, tune
 
 
 @dataclass
@@ -32,7 +32,9 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(name: str, oracle: str | None, doc: str = ""):
-    """Register the decorated builder as query ``name``; each name once."""
+    """Register the decorated builder as query ``name``; each name once.
+    Every call runs in its own ``session.call_scope``, which owns the
+    scratch dirs the builder takes from ``session.scratch``."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in _REGISTRY:
@@ -40,7 +42,8 @@ def register(name: str, oracle: str | None, doc: str = ""):
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             tune(spark)  # reference semantics even on driver-provided sessions
-            return fn(spark, sf_dir)
+            with call_scope(name):
+                return fn(spark, sf_dir)
 
         wrapped.__name__ = name
         wrapped.__doc__ = fn.__doc__

@@ -18,7 +18,13 @@ Scale notes (100 TB discipline):
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import contextvars
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -125,6 +131,62 @@ def spread(df):
     if 0 < n_files < n:
         return df.repartition(n)
     return df
+
+
+_SCRATCH_LOCK = threading.Lock()
+_SCRATCH_ROOT: str | None = None
+#: the dirs made by the registered call running in this context, if any
+_CALL_DIRS: contextvars.ContextVar[list[str] | None] = contextvars.ContextVar(
+    "nyetl_call_dirs", default=None
+)
+#: (thread id, query name) -> the dirs of that thread's last call of it
+_LAST_CALL_DIRS: dict[tuple[int, str], list[str]] = {}
+
+
+def scratch_root() -> str:
+    """The process's one scratch root: made on first use under the system
+    temp dir (unique, so processes never share it), removed at exit.  The
+    stage cache keeps its shared stages under it; everything else gets a
+    directory of its own from :func:`scratch`."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="nyetl_scratch_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+        return _SCRATCH_ROOT
+
+
+def scratch(name: str) -> str:
+    """A fresh, empty directory under :func:`scratch_root` — the only way
+    a builder gets scratch space, so two calls never share a path.
+
+    Inside a registered call (:func:`call_scope`) the directory is freed
+    when the next call of the same query starts on the same thread: a
+    returned DataFrame that reads its scratch lazily stays readable until
+    then, and a long-lived process holds at most one call's scratch per
+    (thread, query).  Outside a call it lives until the process exits."""
+    path = tempfile.mkdtemp(prefix=f"{name}_", dir=scratch_root())
+    dirs = _CALL_DIRS.get()
+    if dirs is not None:
+        dirs.append(path)
+    return path
+
+
+@contextlib.contextmanager
+def call_scope(name: str):
+    """Scope one registered call of query ``name``: free the scratch of
+    this thread's previous call of it, then record what this call makes.
+    A nested call records into its own scope and restores the outer one."""
+    key = (threading.get_ident(), name)
+    for path in _LAST_CALL_DIRS.pop(key, ()):
+        shutil.rmtree(path, ignore_errors=True)
+    dirs: list[str] = []
+    token = _CALL_DIRS.set(dirs)
+    try:
+        yield
+    finally:
+        _CALL_DIRS.reset(token)
+        _LAST_CALL_DIRS[key] = dirs
 
 
 def get_spark(

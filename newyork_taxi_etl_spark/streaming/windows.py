@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.functions.exact import avg_exact
 from newyork_taxi_etl_spark.localrel import local_rows_df
+from newyork_taxi_etl_spark.session import scratch_root
 from newyork_taxi_etl_spark.sources.readers import _parquet, _stamp
 
 
@@ -206,16 +207,6 @@ def _run_drain(df, partitions: int, sink, mode=None, checkpoint=None):
             spark.catalog.dropTempView(name)
 
 
-#: per-process stage-cache namespace token (see _stage_cache_dir)
-_PROC_STAGE_TOKEN: str | None = None
-
-#: guards the lazy token mint (r15 ADVICE: an unlocked check-then-set could
-#: mint two tokens under concurrent first calls — the loser's stages would
-#: silently rebuild under an orphaned root for the rest of the process)
-import threading as _threading  # noqa: E402
-
-_PROC_STAGE_LOCK = _threading.Lock()
-
 #: append-only (cache_key, "hit"|"miss") event log (r15 verdict item 9:
 #: bench_detail.json records per-query stage-cache activity so warm-artifact
 #: per-query numbers are auditable; pure logging, no behavior change)
@@ -223,14 +214,15 @@ _STAGE_CACHE_EVENTS: list[tuple[str, str]] = []
 
 
 def _stage_cache_dir(cache_key: str) -> str:
-    """Deterministic per-key directory under a PER-PROCESS temp root for
-    REUSABLE read-only stream stages and trained artifacts.  The staged
-    input of a bounded drain is pure harness scaffolding — same source
-    rows, same derived sentinels, same FIXED mtimes every time — so
-    rebuilding it per invocation (bench runs each query best-of-3) only
-    re-pays the range-shuffle write without changing a single value.
-    Only read-only inputs/artifacts are ever shared; checkpoints, sinks,
-    and state directories stay strictly per-run.
+    """Deterministic per-key directory under ``stage/`` of the process's
+    scratch root (``session.scratch_root``) for REUSABLE read-only stream
+    stages and trained artifacts.  The staged input of a bounded drain is
+    pure harness scaffolding — same source rows, same derived sentinels,
+    same FIXED mtimes every time — so rebuilding it per invocation (bench
+    runs each query best-of-3) only re-pays the range-shuffle write
+    without changing a single value.  Only read-only inputs/artifacts are
+    ever shared; checkpoints, sinks, and state directories stay strictly
+    per-call (``session.scratch``).
 
     Scoped to the current PROCESS (r15): a root shared across processes
     would let one run serve another run's persisted intermediates keyed
@@ -238,27 +230,13 @@ def _stage_cache_dir(cache_key: str) -> str:
     optimization-round contract forbids.  Every bench/verify process
     builds its stages from the parquet inputs once and shares them only
     among its own consumers and bench reps; the root is removed at
-    process exit (a crashed process leaks one uuid-named dir in the
+    process exit (a crashed process leaks one uniquely named dir in the
     system temp dir, never served to any later process)."""
-    import atexit
     import hashlib
     import os
-    import shutil
-    import tempfile
-    import uuid
 
-    global _PROC_STAGE_TOKEN
-    base = os.path.join(tempfile.gettempdir(), "nyetl_stage_cache")
-    with _PROC_STAGE_LOCK:
-        if _PROC_STAGE_TOKEN is None:
-            _PROC_STAGE_TOKEN = f"pid{os.getpid()}-{uuid.uuid4().hex[:8]}"
-            root = os.path.join(base, _PROC_STAGE_TOKEN)
-            os.makedirs(root, exist_ok=True)
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
     return os.path.join(
-        base,
-        _PROC_STAGE_TOKEN,
-        hashlib.md5(cache_key.encode()).hexdigest()[:20],
+        scratch_root(), "stage", hashlib.md5(cache_key.encode()).hexdigest()[:20]
     )
 
 
@@ -2009,6 +1987,37 @@ def run_streaming_linkage_ingest(
     ).orderBy("b_id")
 
 
+def _reservoir_fold_fn(target_dir: str, k: int):
+    """foreachBatch body of run_streaming_reservoir_sample: merge the
+    batch's k smallest md5(event_id) ranks into the top-k state (union +
+    re-top-k, atomic directory swap).  The merge is NOT idempotent —
+    ``unionByName`` is UNION ALL, so a redelivered batch would union its
+    top-k with itself and duplicate rows — so replays of a committed
+    batch_id are skipped through the applied-batch sidecar, which also
+    recovers a crash between ``_swap_dir``'s renames."""
+    import os
+
+    def fold(batch_df, batch_id):
+        applied = _applied_batch_ids(target_dir)
+        if int(batch_id) in applied:
+            return  # redelivered batch: fold already committed, no-op
+        cand = batch_df.select(
+            "event_id",
+            "user_id",
+            "value",
+            F.md5(F.col("event_id").cast("string")).alias("h"),
+        ).orderBy("h", "event_id").limit(k)
+        if os.path.exists(target_dir):
+            prev = batch_df.sparkSession.read.parquet(target_dir)
+            cand = prev.unionByName(cand).orderBy("h", "event_id").limit(k)
+        nxt = target_dir + "_next"
+        cand.write.mode("overwrite").parquet(nxt)
+        _mark_applied(nxt, batch_id, applied)  # commits atomically with swap
+        _swap_dir(nxt, target_dir)
+
+    return fold
+
+
 def run_streaming_reservoir_sample(
     spark,
     src_df: DataFrame,
@@ -2019,41 +2028,20 @@ def run_streaming_reservoir_sample(
     """Bounded UNIFORM SAMPLE maintained at ingest: the deterministic
     distributed reservoir (keep the k smallest md5(event_id) ranks)
     folded across micro-batches — state is the current top-k, merge is
-    union + re-top-k.
+    union + re-top-k (``_reservoir_fold_fn``; replay-safe through the
+    applied-batch sidecar).
 
-    Two properties make this the robust streaming sample: the fold is
-    IDEMPOTENT (top-k of a union is unchanged by re-merging the same
-    batch), so at-least-once redelivery needs NO applied-batch sidecar —
-    unlike the additive folds (upsert counts, quantile sketch), a crash
-    replay simply converges to the same state; and the hash rank is
-    key-determined, so the drained sample equals the BATCH top-k draw
-    over the whole corpus exactly (one relational oracle, any batching).
-    State is O(k); per batch the source side reduces map-side via the
-    TakeOrdered heap before anything shuffles.
+    The hash rank is key-determined, so the drained sample equals the
+    BATCH top-k draw over the whole corpus exactly (one relational
+    oracle, any batching).  State is O(k); per batch the source side
+    reduces map-side via the TakeOrdered heap before anything shuffles.
     """
-    import os
     import shutil
 
     src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
     shutil.rmtree(target_dir, ignore_errors=True)
     stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
-
-    def fold(batch_df, batch_id):
-        ss = batch_df.sparkSession
-        cand = batch_df.select(
-            "event_id",
-            "user_id",
-            "value",
-            F.md5(F.col("event_id").cast("string")).alias("h"),
-        ).orderBy("h", "event_id").limit(k)
-        if os.path.exists(target_dir):
-            prev = ss.read.parquet(target_dir)
-            cand = prev.unionByName(cand).orderBy("h", "event_id").limit(k)
-        nxt = target_dir + "_next"
-        cand.write.mode("overwrite").parquet(nxt)
-        _swap_dir(nxt, target_dir)
-
-    _run_drain(stream, 4, fold)
+    _run_drain(stream, 4, _reservoir_fold_fn(target_dir, k))
 
     from pyspark.sql import Window
 
@@ -2070,6 +2058,47 @@ def run_streaming_reservoir_sample(
     )
 
 
+def _group_reservoir_fold_fn(target_dir: str, k: int):
+    """foreachBatch body of run_streaming_group_reservoir: the per-
+    event_type twin of ``_reservoir_fold_fn`` (windowed top-k per group),
+    with the same applied-batch replay guard — its union is UNION ALL
+    too, so a redelivered batch would otherwise duplicate rows."""
+    import os
+
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("event_type").orderBy("h", "event_id")
+
+    def topk(df):
+        return (
+            df.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= k)
+            .drop("rk")
+        )
+
+    def fold(batch_df, batch_id):
+        applied = _applied_batch_ids(target_dir)
+        if int(batch_id) in applied:
+            return  # redelivered batch: fold already committed, no-op
+        cand = topk(
+            batch_df.select(
+                "event_type",
+                "event_id",
+                "user_id",
+                F.md5(F.col("event_id").cast("string")).alias("h"),
+            )
+        )
+        if os.path.exists(target_dir):
+            prev = batch_df.sparkSession.read.parquet(target_dir)
+            cand = topk(prev.unionByName(cand))
+        nxt = target_dir + "_next"
+        cand.write.mode("overwrite").parquet(nxt)
+        _mark_applied(nxt, batch_id, applied)  # commits atomically with swap
+        _swap_dir(nxt, target_dir)
+
+    return fold
+
+
 def run_streaming_group_reservoir(
     spark,
     src_df: DataFrame,
@@ -2081,11 +2110,10 @@ def run_streaming_group_reservoir(
     k-smallest-md5-rank reservoir of run_streaming_reservoir_sample,
     stratified by event_type — state is O(groups x k), the merge is a
     per-group windowed top-k (map-side WindowGroupLimit prunes each
-    batch before the tiny state union), and the fold stays IDEMPOTENT,
-    so replay needs no sidecar.  The streaming twin of the batch
-    sample_k_per_group; the drained sample equals the batch per-group
-    draw row-for-row under any batching."""
-    import os
+    batch before the tiny state union; ``_group_reservoir_fold_fn``,
+    replay-safe through the applied-batch sidecar).  The streaming twin
+    of the batch sample_k_per_group; the drained sample equals the batch
+    per-group draw row-for-row under any batching."""
     import shutil
 
     from pyspark.sql import Window
@@ -2093,33 +2121,9 @@ def run_streaming_group_reservoir(
     src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
     shutil.rmtree(target_dir, ignore_errors=True)
     stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
+    _run_drain(stream, 4, _group_reservoir_fold_fn(target_dir, k))
+
     w = Window.partitionBy("event_type").orderBy("h", "event_id")
-
-    def topk(df):
-        return (
-            df.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .drop("rk")
-        )
-
-    def fold(batch_df, batch_id):
-        ss = batch_df.sparkSession
-        cand = topk(
-            batch_df.select(
-                "event_type",
-                "event_id",
-                "user_id",
-                F.md5(F.col("event_id").cast("string")).alias("h"),
-            )
-        )
-        if os.path.exists(target_dir):
-            cand = topk(ss.read.parquet(target_dir).unionByName(cand))
-        nxt = target_dir + "_next"
-        cand.write.mode("overwrite").parquet(nxt)
-        _swap_dir(nxt, target_dir)
-
-    _run_drain(stream, 4, fold)
-
     out = spark.read.parquet(target_dir)
     return (
         out.withColumn("rk", F.row_number().over(w).cast("int"))

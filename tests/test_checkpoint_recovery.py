@@ -10,6 +10,7 @@ import os
 import tempfile
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -161,3 +162,31 @@ def test_files_touched_missing_footer_stats_is_conservative(spark, tmp_path):
     # a prunable column still prunes alongside the stat-less one
     touched2, _ = files_touched(d, {"a": (100, 200), "b": (0, 5)})
     assert touched2 == 0
+
+
+@pytest.mark.parametrize(
+    "factory", ["_reservoir_fold_fn", "_group_reservoir_fold_fn"]
+)
+def test_reservoir_fold_redelivery_is_a_noop(spark, tmp_path, factory):
+    """The reservoir folds merge by UNION ALL + re-top-k, so a redelivered
+    batch would union its top-k with itself; the applied-batch sidecar
+    must make the second delivery leave the state as one delivery did."""
+    from newyork_taxi_etl_spark.streaming import windows
+
+    target = str(tmp_path / "state")
+    fold = getattr(windows, factory)(target, 4)
+    batch = spark.range(20).selectExpr(
+        "id AS event_id",
+        "id % 3 AS user_id",
+        "CAST(id AS DOUBLE) AS value",
+        "IF(id % 2 = 0, 'click', 'view') AS event_type",
+    )
+
+    def state():
+        return sorted(map(tuple, spark.read.parquet(target).collect()))
+
+    fold(batch, 0)
+    once = state()
+    assert once and len(set(once)) == len(once)
+    fold(batch, 0)  # at-least-once redelivery of the same batch
+    assert state() == once

@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from newyork_taxi_etl_spark import registry
+from newyork_taxi_etl_spark import registry, session
 from newyork_taxi_etl_spark.streaming import windows
 from tests.conftest import SF_SMOKE
 
@@ -19,9 +19,16 @@ def _temp_views(spark) -> set[str]:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
-def _ckpt_dirs() -> set[str]:
-    root = os.path.dirname(windows._stage_cache_dir("probe"))
-    return set(glob.glob(os.path.join(root, "*_ckpt_*")))
+def _ckpt_dirs(spark) -> set[str]:
+    """Spark's temporary checkpoints (``temporary-*`` under the JVM's
+    ``java.io.tmpdir``), which a clean drain must delete on stop."""
+    jvm = spark.sparkContext._jvm
+    tmp = jvm.java.lang.System.getProperty("java.io.tmpdir")
+    return set(glob.glob(os.path.join(tmp, "temporary-*")))
+
+
+def _scratch_count() -> int:
+    return len(os.listdir(session.scratch_root()))
 
 
 def test_repeated_drains_leave_no_views_or_checkpoints(spark):
@@ -31,12 +38,15 @@ def test_repeated_drains_leave_no_views_or_checkpoints(spark):
         "streaming_cms_counters",
         "streaming_upsert_counts",
     ]
-    views, ckpts = _temp_views(spark), _ckpt_dirs()
+    views, ckpts = _temp_views(spark), _ckpt_dirs(spark)
     for name in names:
-        runs = [queries[name](spark, SF_SMOKE).collect() for _ in range(3)]
+        runs = [queries[name](spark, SF_SMOKE).collect()]
+        n_scratch = _scratch_count()
+        runs += [queries[name](spark, SF_SMOKE).collect() for _ in range(2)]
         assert runs[0] and runs[0] == runs[1] == runs[2], name
+        assert _scratch_count() == n_scratch, name
     assert _temp_views(spark) == views
-    assert _ckpt_dirs() == ckpts
+    assert _ckpt_dirs(spark) == ckpts
 
 
 class _StuckQuery:

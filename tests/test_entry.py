@@ -112,3 +112,14 @@ def test_scan_spread_policy_lives_only_in_session():
         skip=lambda p: p.name == "session.py",
     )
     assert not found, found
+
+
+def test_scratch_policy_lives_only_in_session():
+    """``session.scratch`` is the one source of scratch space: no module
+    outside ``session.py`` makes its own temp dirs, names paths by pid or
+    registers exit-time cleanup."""
+    found = _engine_matches(
+        r"\b(mkdtemp|gettempdir|getpid|atexit)\b",
+        skip=lambda p: p.name == "session.py",
+    )
+    assert not found, found

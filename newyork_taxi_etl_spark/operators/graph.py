@@ -24,8 +24,12 @@ O(edges)).
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from newyork_taxi_etl_spark.session import scoped_conf
 
 
 def connected_components(
@@ -101,13 +105,9 @@ def connected_components(
             F.sum(F.col("comp").cast("decimal(38,0)"))
         ).collect()[0][0]
 
-    from newyork_taxi_etl_spark.streaming.windows import _scoped_conf
-
     spark = edges.sparkSession
-    import contextlib
-
     scope = (
-        _scoped_conf(
+        scoped_conf(
             spark, "spark.sql.shuffle.partitions", str(loop_partitions)
         )
         if loop_partitions

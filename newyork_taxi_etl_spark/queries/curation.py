@@ -988,47 +988,67 @@ _LOGREG_P = (
 )
 
 
+def _logreg_features(label: bool = True) -> list:
+    """The learned quality scorer's features over ``text``/``n_chars``:
+    x1 (token count), x2 (type-token ratio), x3 (100-400-char window)
+    and, with ``label``, the rule label y it learns — the Spark side of
+    the projection ``_logreg_train_ctes`` spells in SQL."""
+    toks = F.split(F.col("text"), " ")
+    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
+    cols = [
+        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
+        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
+        F.when(F.col("n_chars").between(100, 400), 1.0)
+        .otherwise(0.0)
+        .alias("x3"),
+    ]
+    if label:
+        cols.append(
+            F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
+            .otherwise(0.0)
+            .alias("y")
+        )
+    return cols
+
+
+def _build_logreg_weights(spark, docs, target: str) -> None:
+    """Train the 16-step scorer on ``docs`` and write its weights to
+    ``target`` as a 4-row (j, w) table — the one builder of the shared
+    ``documents_qg:{sf_dir}:logreg_weights`` stage."""
+    from newyork_taxi_etl_spark.localrel import local_rows_df
+    from newyork_taxi_etl_spark.operators.logreg import logistic_gd
+
+    feats = docs.select(*_logreg_features()).localCheckpoint()
+    w = logistic_gd(feats, ["x1", "x2", "x3"], "y", steps=16, lr=4.0)
+    local_rows_df(
+        spark, [(j, float(wj)) for j, wj in enumerate(w)], "j int, w double"
+    ).coalesce(1).write.mode("overwrite").parquet(target)
+
+
+def _read_logreg_weights(spark, path: str) -> list[float]:
+    """The weight vector a ``_build_logreg_weights`` table holds."""
+    rows = spark.read.parquet(path).collect()
+    return [r["w"] for r in sorted(rows, key=lambda r: r["j"])]
+
+
 def _logreg_weights_cached(spark, docs, sf_dir: str) -> list[float]:
     """The 16-step full-corpus logistic training (quality_logreg_filter's
     scorer) persisted ONCE per corpus — eight registered queries train
     the IDENTICAL weights (filter, distillation audit, learned pipeline,
     AUC, ECE, curriculum stages, PSI, ccnet agreement) and the streaming
-    quality/PSI folds already stage-cache the same build under the same
-    key (streaming/windows.run_streaming_quality_ingest), so batch and
-    stream now share one artifact.  Weights are raw doubles from the
+    quality/PSI folds stage the same ``_build_logreg_weights`` under the
+    same key (streaming/windows.run_streaming_quality_ingest), so batch
+    and stream share one artifact.  Weights are raw doubles from the
     deterministic decimal-gradient loop; parquet round-trips them
     bit-exactly, so hit and miss paths are value-identical."""
-    import os
-
-    from newyork_taxi_etl_spark.operators.logreg import logistic_gd
     from newyork_taxi_etl_spark.streaming.windows import _stage_cached
 
-    def build(target: str) -> None:
-        toks = F.split(F.col("text"), " ")
-        ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-        feats = docs.select(
-            ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-            ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-            F.when(F.col("n_chars").between(100, 400), 1.0)
-            .otherwise(0.0)
-            .alias("x3"),
-            F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-            .otherwise(0.0)
-            .alias("y"),
-        ).localCheckpoint()
-        w = logistic_gd(feats, ["x1", "x2", "x3"], "y", steps=16, lr=4.0)
-        from newyork_taxi_etl_spark.localrel import local_rows_df
-
-        local_rows_df(
-            spark, [(j, float(wj)) for j, wj in enumerate(w)],
-            "j int, w double",
-        ).coalesce(1).write.mode("overwrite").parquet(target)
-
     sdir = _stage_cached(
-        None, f"documents_qg:{sf_dir}:logreg_weights", build
+        None,
+        f"documents_qg:{sf_dir}:logreg_weights",
+        lambda target: _build_logreg_weights(spark, docs, target),
     )
-    rows = spark.read.parquet(sdir).collect()
-    return [r["w"] for r in sorted(rows, key=lambda r: r["j"])]
+    return _read_logreg_weights(spark, sdir)
 
 
 def _logreg_sql(steps: int = 16, lr: float = 4.0) -> str:
@@ -1079,24 +1099,10 @@ def _logreg_sql(steps: int = 16, lr: float = 4.0) -> str:
     "nothing wider than a d+2-scalar aggregate.",
 )
 def quality_logreg_filter(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
-        logistic_prob,
-    )
+    from newyork_taxi_etl_spark.operators.logreg import logistic_prob
 
     docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    feats = docs.select(
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    ).localCheckpoint()
+    feats = docs.select(*_logreg_features()).localCheckpoint()
 
     w = _logreg_weights_cached(spark, docs, sf_dir)
     keep = logistic_prob(w, ["x1", "x2", "x3"]) >= F.lit(0.5)
@@ -1185,25 +1191,13 @@ def _distill_audit_sql() -> str:
     "kill) and asserts they land in exactly the (1, 0) cell.",
 )
 def quality_distillation_audit(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
-        logistic_prob,
-    )
+    from newyork_taxi_etl_spark.operators.logreg import logistic_prob
     from newyork_taxi_etl_spark.queries.text import _QR_RULES, _qr_stats
 
     docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
         "doc_id",
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
+        *_logreg_features(),
     ).localCheckpoint()
     w = _logreg_weights_cached(spark, docs, sf_dir)
     scored = feats.select(
@@ -1329,21 +1323,9 @@ _LEARNED_PIPE_SQL = f"""WITH {_logreg_train_ctes(16, 4.0)},
 )
 def corpus_pipeline_learned(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.dedup import dedup_exact
-    from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
-        logistic_prob,
-    )
+    from newyork_taxi_etl_spark.operators.logreg import logistic_prob
 
     docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    x1 = ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1")
-    x2 = ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2")
-    x3 = (
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3")
-    )
     # training feats live inside the cached build; x1/x2/x3 still score
     # the corpus below
     w = _logreg_weights_cached(spark, docs, sf_dir)
@@ -1352,7 +1334,9 @@ def corpus_pipeline_learned(spark, sf_dir):
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     # logistic_prob references x1..x3 as columns: attach them first
     scored = (
-        corpus.select("doc_id", "text", "lang", x1, x2, x3)
+        corpus.select(
+            "doc_id", "text", "lang", *_logreg_features(label=False)
+        )
         .withColumn("p", logistic_prob(w, ["x1", "x2", "x3"]))
         .localCheckpoint(eager=True)  # gate + per-lang drop ledger
     )
@@ -1373,7 +1357,9 @@ def corpus_pipeline_learned(spark, sf_dir):
         ).alias("contaminated"),
     )
     final = surv.join(flagged, "doc_id").select(
-        "lang", "contaminated", F.size(toks).alias("n_tokens")
+        "lang",
+        "contaminated",
+        F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
     )
     kept_tok = F.sum(
         F.when(~F.col("contaminated"), F.col("n_tokens")).otherwise(F.lit(0))
@@ -1602,24 +1588,10 @@ _AUC_SQL = f"""WITH {_logreg_train_ctes(16, 4.0)},
 def quality_auc_rank(spark, sf_dir):
     from pyspark.sql import Window
 
-    from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
-        logistic_prob,
-    )
+    from newyork_taxi_etl_spark.operators.logreg import logistic_prob
 
     docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    feats = docs.select(
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    ).localCheckpoint()
+    feats = docs.select(*_logreg_features()).localCheckpoint()
     w = _logreg_weights_cached(spark, docs, sf_dir)
 
     by_p = (
@@ -1706,24 +1678,10 @@ _CALIB_SQL = f"""WITH {_logreg_train_ctes(16, 4.0)},
 def quality_calibration_ece(spark, sf_dir):
     from pyspark.sql import Window
 
-    from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
-        logistic_prob,
-    )
+    from newyork_taxi_etl_spark.operators.logreg import logistic_prob
 
     docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    feats = docs.select(
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    ).localCheckpoint()
+    feats = docs.select(*_logreg_features()).localCheckpoint()
     w = _logreg_weights_cached(spark, docs, sf_dir)
     p = logistic_prob(w, ["x1", "x2", "x3"])
 
@@ -1831,26 +1789,15 @@ _CURR_SQL = f"""WITH {_logreg_train_ctes(16, 4.0)},
     "min/max compare exact 6-dp doubles.",
 )
 def curriculum_quality_stages(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
-        logistic_prob,
-    )
+    from newyork_taxi_etl_spark.operators.logreg import logistic_prob
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
 
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
+        *_logreg_features(),
     ).localCheckpoint()
     w = _logreg_weights_cached(spark, docs, sf_dir)
 
@@ -1965,18 +1912,9 @@ def logreg_learning_curve(spark, sf_dir):
     )
 
     docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     allfeats = docs.select(
         (F.col("doc_id") % 5 == 0).alias("is_val"),
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
+        *_logreg_features(),
     ).localCheckpoint()
     traj = logistic_gd(
         allfeats.filter(~F.col("is_val")),
@@ -2092,18 +2030,9 @@ def logreg_kfold_cv(spark, sf_dir):
     )
 
     docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     af = docs.select(
         (F.col("doc_id") % 3).alias("fold"),
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
+        *_logreg_features(),
     ).localCheckpoint()
     # the three folds' trainings are independent 8-step GD loops, each
     # step one tiny aggregate-collect job; running them from a thread
@@ -2437,15 +2366,9 @@ def _scored_bins(docs, w):
     score-decile bins (shared by the batch query and the ingest fold)."""
     from newyork_taxi_etl_spark.operators.logreg import logistic_prob
 
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
         "source",
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
+        *_logreg_features(label=False),
     )
     p = logistic_prob(w, ["x1", "x2", "x3"])
     return feats.select(
@@ -3383,10 +3306,7 @@ _CURR_CCNET_SQL = f"""WITH {_logreg_train_ctes(16, 4.0)},
     "rows",
 )
 def curriculum_ccnet_agreement(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
-        logistic_prob,
-    )
+    from newyork_taxi_etl_spark.operators.logreg import logistic_prob
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
     from newyork_taxi_etl_spark.queries.text import (
         _doc_nll_cached,
@@ -3394,18 +3314,9 @@ def curriculum_ccnet_agreement(spark, sf_dir):
     )
 
     docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
         "doc_id",
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
+        *_logreg_features(),
     ).localCheckpoint()
     w = _logreg_weights_cached(spark, docs, sf_dir)
     scored = feats.select(

@@ -87,6 +87,22 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` for the ``with`` body, then
+    restore its old value (or unset it if it had none), also on failure —
+    the engine's one way to change a conf for part of a call."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 def spread(df):
     """Repartition an UNDER-SPLIT input to ``spark.sql.shuffle.partitions``
     before compute-heavy per-row work (hashing, shingling, interpreted

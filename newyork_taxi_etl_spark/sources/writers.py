@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from newyork_taxi_etl_spark.session import scoped_conf
+
 try:  # optional dependency; absent in this container
     from delta.tables import DeltaTable  # type: ignore
 
@@ -153,11 +155,11 @@ def write_zordered_interleaved(
         ((F.col(col_b).cast("long") - F.lit(int(b["mnb"]))) * F.lit(top))
         / F.lit(span_b)
     ).cast("long")
-    conf = df.sparkSession.conf
-    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-    old = conf.get(key, None)
-    conf.set(key, str(max(100, -(-int(b["n"]) // target_files))))
-    try:
+    with scoped_conf(
+        df.sparkSession,
+        "spark.sql.execution.rangeExchange.sampleSizePerPartition",
+        str(max(100, -(-int(b["n"]) // target_files))),
+    ):
         (
             df.withColumn("_z", zvalue_expr(na, nb, bits))
             .repartitionByRange(target_files, "_z")
@@ -166,11 +168,6 @@ def write_zordered_interleaved(
             .write.mode("overwrite")
             .parquet(path)
         )
-    finally:
-        if old is None:
-            conf.unset(key)
-        else:
-            conf.set(key, old)
 
 
 def parquet_file_column_ranges(path: str, cols: set[str]) -> list:

@@ -5,7 +5,8 @@ The same ``F.window``/``F.session_window`` expressions work in batch and in
 Structured Streaming; batch mode is what the DuckDB oracle checks, streaming
 mode is exercised by the ``run_*`` drains below.
 
-Every drain takes one path: the runner stages its input as parquet,
+Every drain takes one path: the runner stages its input as parquet
+(``_sliced_stream`` for a hash-split stage drained one file per micro-batch),
 ``_stream_stage`` opens the file stream over it, the runner shapes the
 streaming plan, and ``_run_drain`` runs it with ``Trigger.AvailableNow`` under
 a scoped ``spark.sql.shuffle.partitions``, waits for it through ``_drain``
@@ -15,6 +16,15 @@ fold's parquet state.  Checkpoints are Spark's temporary ones, deleted on a
 clean stop; only ``run_checkpoint_recovery`` names its own, since a restart
 from it is what that runner proves.
 
+Every ``foreachBatch`` fold is built by one of two helpers, which own the
+replay-safe commit (the parquet form of a Delta transaction): both first skip
+a redelivered ``batch_id`` through the applied-batch sidecar.
+``_append_fold`` then appends the batch's rows to the live table and only
+after that marks the batch applied; ``_swap_fold`` writes the next state to
+``<state>_next``, marks the batch applied there, and swaps it in with
+``_swap_dir``, so state and mark commit in one rename.  A runner supplies
+only the per-batch computation.
+
 Scale notes: tumbling/sliding windows are hash aggregates on (window, key) —
 partial aggregation applies; session windows require a per-key sort (Spark
 plans UpdatingSessionsExec); watermarks bound state size in streaming mode.
@@ -22,7 +32,8 @@ plans UpdatingSessionsExec); watermarks bound state size in streaming mode.
 
 from __future__ import annotations
 
-import contextlib
+import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame
@@ -30,30 +41,8 @@ from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.functions.exact import avg_exact
 from newyork_taxi_etl_spark.localrel import local_rows_df
-from newyork_taxi_etl_spark.session import scratch_root
+from newyork_taxi_etl_spark.session import scoped_conf, scratch_root
 from newyork_taxi_etl_spark.sources.readers import _parquet, _stamp
-
-
-@contextlib.contextmanager
-def _scoped_conf(spark, key: str, value: str):
-    """Set a session conf for the duration of a streaming run, then restore.
-
-    Streaming state-store partition count is pinned from
-    ``spark.sql.shuffle.partitions`` at the FIRST micro-batch of a new
-    checkpoint; for a bounded local drain every state partition costs a
-    store init + commit per batch, so a small count is strictly faster here.
-    On a real cluster size it to key cardinality instead — it cannot be
-    changed after the checkpoint exists.
-    """
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def _applied_batch_ids(state_dir: str) -> set:
@@ -70,8 +59,6 @@ def _applied_batch_ids(state_dir: str) -> set:
     redelivered fold a no-op (one query per state dir — the app-id half of
     Delta's pair is implicit).
     """
-    import os
-
     # Every fold reads this before touching state, so this is the one
     # choke-point where a crash between _swap_dir's two renames (live dir
     # missing, tombstone holding the only surviving generation) can be
@@ -85,12 +72,10 @@ def _applied_batch_ids(state_dir: str) -> set:
 
 
 def _mark_applied(state_dir: str, batch_id: int, prior: set) -> None:
-    """Record ``batch_id`` as folded.  Call on the NOT-YET-RENAMED next
-    directory for swap-style state (atomic with the data), or on the live
-    directory for append-style state (non-atomic — documented at the call
-    site; Delta's transaction log is the upgrade)."""
-    import os
-
+    """Record ``batch_id`` as folded: on the NOT-YET-RENAMED next
+    directory for swap-style state (atomic with the data, ``_swap_fold``),
+    or on the live directory for append-style state (non-atomic,
+    ``_append_fold``; Delta's transaction log is the upgrade)."""
     with open(os.path.join(state_dir, "_applied_batches"), "w") as f:
         f.write("\n".join(str(i) for i in sorted(prior | {int(batch_id)})))
 
@@ -107,9 +92,6 @@ def _swap_dir(nxt: str, target_dir: str) -> None:
     at the end is pure garbage collection (Delta's transaction log +
     VACUUM is the production analog of this whole dance).
     """
-    import os
-    import shutil
-
     tomb = target_dir + "_tombstone"
     if os.path.exists(target_dir):
         shutil.rmtree(tomb, ignore_errors=True)  # GC a prior crashed sweep
@@ -133,11 +115,63 @@ def _recover_dir(target_dir: str) -> None:
     surviving generation).  Call at the top of any fold that reads
     ``target_dir`` as prior state.  A single atomic rename; no-op when the
     live dir exists or there is nothing to restore."""
-    import os
-
     tomb = target_dir + "_tombstone"
     if not os.path.exists(target_dir) and os.path.exists(tomb):
         os.rename(tomb, target_dir)
+
+
+def _append_fold(state_dir: str, rows, partition_by: str | None = None):
+    """foreachBatch fold that appends ``rows(batch_df, batch_id)`` (a
+    DataFrame) to the parquet table ``state_dir``, optionally
+    ``partition_by`` one column.  A redelivered batch_id is a no-op;
+    otherwise the rows are appended and only then is the batch marked
+    applied on the live directory.  That commit is not atomic: a crash
+    between append and mark redelivers the batch, which appends again
+    (Delta's transaction log closes the window; here it narrows to the
+    mark write).  A side table that ``rows`` appends itself commits under
+    the same mark."""
+
+    def fold(batch_df, batch_id):
+        applied = _applied_batch_ids(state_dir)
+        if int(batch_id) in applied:
+            return
+        writer = rows(batch_df, batch_id).write.mode("append")
+        if partition_by is not None:
+            writer = writer.partitionBy(partition_by)
+        os.makedirs(state_dir, exist_ok=True)
+        writer.parquet(state_dir)
+        _mark_applied(state_dir, batch_id, applied)
+
+    return fold
+
+
+def _swap_fold(state_dir: str, merge):
+    """foreachBatch fold that replaces the parquet state ``state_dir``
+    with ``merge(batch_df, prev)``: ``prev`` is the live state directory,
+    or None before the first commit, and the result is the next state as
+    one DataFrame or as a dict of sub-table name to DataFrame.  A
+    redelivered batch_id is a no-op; otherwise the next generation is
+    written to ``<state_dir>_next``, marked applied there, and swapped in
+    by ``_swap_dir``, so the state and its applied-batch mark commit in
+    one rename."""
+
+    def fold(batch_df, batch_id):
+        applied = _applied_batch_ids(state_dir)
+        if int(batch_id) in applied:
+            return
+        prev = state_dir if os.path.exists(state_dir) else None
+        nxt = state_dir + "_next"
+        shutil.rmtree(nxt, ignore_errors=True)
+        tables = merge(batch_df, prev)
+        if isinstance(tables, dict):
+            for name, df in tables.items():
+                df.write.parquet(os.path.join(nxt, name))
+        else:
+            tables.write.parquet(nxt)
+        _mark_applied(nxt, batch_id, applied)
+        _swap_dir(nxt, state_dir)
+
+    return fold
 
 
 #: how long any AvailableNow drain may run before it is stopped and raises
@@ -173,7 +207,10 @@ def _run_drain(df, partitions: int, sink, mode=None, checkpoint=None):
     """Drain the streaming ``df`` to completion with Trigger.AvailableNow.
 
     ``partitions`` scopes ``spark.sql.shuffle.partitions`` (and so the
-    state-store partition count) to this run.  ``sink`` is ``"memory"`` or
+    state-store partition count, pinned at a new checkpoint's first
+    micro-batch) to this run: every state partition costs a store init
+    and commit per batch, so a bounded local drain wants few; on a
+    cluster size it to key cardinality.  ``sink`` is ``"memory"`` or
     a ``foreachBatch`` function; ``mode`` is the output mode (Spark's
     default when None); ``checkpoint`` is a fixed checkpoint location (a
     temporary one, deleted on a clean stop, when None).
@@ -196,7 +233,7 @@ def _run_drain(df, partitions: int, sink, mode=None, checkpoint=None):
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
     try:
-        with _scoped_conf(
+        with scoped_conf(
             spark, "spark.sql.shuffle.partitions", str(partitions)
         ):
             _drain(writer.trigger(availableNow=True).start())
@@ -233,7 +270,6 @@ def _stage_cache_dir(cache_key: str) -> str:
     process exit (a crashed process leaks one uniquely named dir in the
     system temp dir, never served to any later process)."""
     import hashlib
-    import os
 
     return os.path.join(
         scratch_root(), "stage", hashlib.md5(cache_key.encode()).hexdigest()[:20]
@@ -268,8 +304,6 @@ def _fingerprinted_key(cache_key: str) -> str:
     regenerating the parquet under an sf_dir lands in a DIFFERENT cache
     directory and the stale generation is simply never hit again
     (assumption, documented: source dirs contain no ``:``)."""
-    import os
-
     fps = [
         _fs_fingerprint(seg)
         for seg in cache_key.split(":")
@@ -284,14 +318,10 @@ def _stage_cached(stage_dir: str, cache_key: str | None, build) -> str:
     ``build`` into a temp dir and commit it with an atomic rename (the
     _swap_dir discipline — a crashed half-build is invisible because the
     _STAGE_COMPLETE marker only exists inside fully-built generations).
-    With no ``cache_key`` the stage builds uncached into ``stage_dir``
-    (the original behavior).  Keys are corpus-fingerprinted (see
-    :func:`_fingerprinted_key`) so cached trained artifacts can never
-    outlive the data they were trained on."""
-    import os
-    import shutil
-    import uuid as _uuid
-
+    With no ``cache_key`` the stage builds uncached into ``stage_dir``.
+    Keys are corpus-fingerprinted (see :func:`_fingerprinted_key`) so
+    cached trained artifacts can never outlive the data they were
+    trained on."""
     if cache_key is None:
         shutil.rmtree(stage_dir, ignore_errors=True)
         build(stage_dir)
@@ -303,7 +333,7 @@ def _stage_cached(stage_dir: str, cache_key: str | None, build) -> str:
         _STAGE_CACHE_EVENTS.append((raw_key, "hit"))
         return cdir
     _STAGE_CACHE_EVENTS.append((raw_key, "miss"))
-    tmp = cdir + ".build-" + _uuid.uuid4().hex[:8]
+    tmp = cdir + ".build-" + uuid.uuid4().hex[:8]
     build(tmp)
     with open(os.path.join(tmp, "_STAGE_COMPLETE"), "w") as f:
         f.write(cache_key)
@@ -337,7 +367,6 @@ def df_stage_cached(spark, cache_key: str, build_df, n_files: int | None = None)
     so the read-back goes through the sources schema memo, keyed on the
     stage's file inventory: a hit infers no schema, so it starts no Spark
     job of its own."""
-    import os
 
     def build(target: str) -> None:
         os.makedirs(target, exist_ok=True)
@@ -348,6 +377,20 @@ def df_stage_cached(spark, cache_key: str, build_df, n_files: int | None = None)
 
     sdir = _stage_cached(None, cache_key, build)
     return _parquet(spark, os.path.join(sdir, "t"))
+
+
+def _sliced_stream(spark, df, stage_dir, n_slices: int, cache_key=None):
+    """Stage ``df`` as ``n_slices`` hash-split parquet files (built once
+    per ``cache_key``, see :func:`_stage_cached`) and open it as a file
+    stream that drains one file per micro-batch."""
+    path = _stage_cached(
+        stage_dir,
+        cache_key,
+        lambda target: df.repartition(n_slices)
+        .write.mode("overwrite")
+        .parquet(target),
+    )
+    return _stream_stage(spark, df.schema, path, 1)
 
 
 def _stage_time_sliced(
@@ -376,7 +419,6 @@ def _stage_time_sliced(
     watermark and late-drop every real row.  ``sentinel_fn`` defers the
     sentinel derivation (usually a max-ts scan) to cache misses only.
     """
-    import os
 
     def build(target: str) -> None:
         (
@@ -642,20 +684,10 @@ def run_foreachbatch_upsert(
     result — the same mergeability argument that makes map-side partial
     aggregation correct.
     """
-    import shutil
-
-    # read-only stage shared build-once via the r12 _stage_cached
-    # discipline (harness scaffolding only — checkpoints, sinks and the
-    # applied-batch sidecar stay strictly per-run)
-    stage_dir = _stage_cached(
-        stage_dir,
-        cache_key,
-        lambda target: src_df.repartition(4)
-        .write.mode("overwrite")
-        .parquet(target),
-    )
+    # the read-only stage is shared build-once (harness scaffolding only —
+    # checkpoints, sinks and the applied-batch sidecar stay per-run)
+    stream = _sliced_stream(spark, src_df, stage_dir, 4, cache_key)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     _run_drain(stream, 8, _upsert_counts_fn(target_dir))
     return (
         spark.read.parquet(target_dir)
@@ -684,23 +716,14 @@ def run_upsert_replay_proof(
     still equals the one-shot batch aggregate the oracle computes.  Without
     the guard every replayed row double-folds and the value compare fails.
 
-    The replay payload is deliberately the WHOLE stage (a superset of the
-    real batch): dedup keys on batch_id alone, exactly like Delta's
+    The replay payload is deliberately the WHOLE source (a superset of
+    the real batch): dedup keys on batch_id alone, exactly like Delta's
     txnAppId/txnVersion, never on payload equality.
     """
-    import shutil
-
-    # same read-only stage (and cache key) as run_foreachbatch_upsert —
-    # both drain src_df.repartition(4); per-run state stays private
-    stage_dir = _stage_cached(
-        stage_dir,
-        cache_key,
-        lambda target: src_df.repartition(4)
-        .write.mode("overwrite")
-        .parquet(target),
-    )
+    # same read-only stage (and cache key) as run_foreachbatch_upsert;
+    # per-run state stays private
+    stream = _sliced_stream(spark, src_df, stage_dir, 4, cache_key)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     upsert = _upsert_counts_fn(target_dir)
     _run_drain(stream, 8, upsert)
 
@@ -708,7 +731,7 @@ def run_upsert_replay_proof(
     if not applied:
         raise RuntimeError("drain committed no batches — nothing to replay")
     # the redelivery: same batch_id, superset payload -> must be a no-op
-    upsert(spark.read.parquet(stage_dir), max(applied))
+    upsert(src_df, max(applied))
     if _applied_batch_ids(target_dir) != applied:
         raise RuntimeError("replayed batch mutated the applied-batch log")
     return (
@@ -745,8 +768,7 @@ def run_streaming_cms(
     """
     from newyork_taxi_etl_spark.operators.sketch import cms_counters
 
-    src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
+    stream = _sliced_stream(spark, src_df, stage_dir, 4)
     counters = cms_counters(stream, col, depth, width)
     out = _run_drain(counters, 8, "memory", "complete")
     return out.orderBy("j", "bucket")
@@ -807,8 +829,7 @@ def run_streaming_decayed_scores(
     multiplies every score by one constant). ``maxFilesPerTrigger=1`` over
     a 4-file stage forces a real multi-batch drain.
     """
-    src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
+    stream = _sliced_stream(spark, src_df, stage_dir, 4)
     ref = ref_df.withColumn("one", F.lit(1))
     age_h = (F.unix_micros("mx_ts") - F.unix_micros("ts")) / F.lit(
         3600000000.0
@@ -870,23 +891,14 @@ def run_streaming_decay_rescale(
     read-combine-swap on parquet exactly like ``run_foreachbatch_upsert``
     (with Delta installed the body becomes one ``MERGE INTO``).
     """
-    import os
-    import shutil
-
-    src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
+    stream = _sliced_stream(spark, src_df, stage_dir, 4)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     us_h = 3600000000.0  # microseconds per hour
 
-    def rescale_merge(batch_df, batch_id):
-        applied = _applied_batch_ids(target_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: rescale+fold already committed
-        ss = batch_df.sparkSession
+    def rescale_merge(batch_df, prev):
         bmax = batch_df.agg(F.unix_micros(F.max("ts")).alias("b_ref"))
-        have_state = os.path.exists(target_dir)
-        if have_state:
-            prev = ss.read.parquet(target_dir)
+        if prev is not None:
+            prev = batch_df.sparkSession.read.parquet(prev)
             pref = prev.agg(F.max("ref_micros").alias("p_ref"))
             # 1 row: the reference only ever moves forward (an all-late
             # batch keeps the previous reference; its events still get
@@ -898,7 +910,6 @@ def run_streaming_decay_rescale(
                 "p_ref",
             )
         else:
-            prev = None
             refs = bmax.select(
                 F.col("b_ref").alias("new_ref"),
                 F.lit(None).cast("long").alias("p_ref"),
@@ -919,11 +930,11 @@ def run_streaming_decay_rescale(
                 F.sum("wgt").alias("b_score"),
             )
         )
-        if have_state:
+        if prev is not None:
             rescale = F.exp(
                 F.lit(-lam) * (F.col("new_ref") - F.col("p_ref")) / F.lit(us_h)
             )
-            merged = (
+            return (
                 prev.select(
                     F.col("event_type").alias("k_prev"),
                     F.col("n_events").alias("n0"),
@@ -949,19 +960,14 @@ def run_streaming_decay_rescale(
                     F.col("new_ref").alias("ref_micros"),
                 )
             )
-        else:
-            merged = agg.crossJoin(F.broadcast(refs)).select(
-                "event_type",
-                F.col("b_n").alias("n_events"),
-                F.col("b_score").alias("score"),
-                F.col("new_ref").alias("ref_micros"),
-            )
-        nxt = target_dir + "_next"
-        merged.write.mode("overwrite").parquet(nxt)
-        _mark_applied(nxt, batch_id, applied)  # commits atomically with swap
-        _swap_dir(nxt, target_dir)
+        return agg.crossJoin(F.broadcast(refs)).select(
+            "event_type",
+            F.col("b_n").alias("n_events"),
+            F.col("b_score").alias("score"),
+            F.col("new_ref").alias("ref_micros"),
+        )
 
-    _run_drain(stream, 8, rescale_merge)
+    _run_drain(stream, 8, _swap_fold(target_dir, rescale_merge))
     return (
         spark.read.parquet(target_dir)
         .select(
@@ -1009,9 +1015,6 @@ def run_streaming_lsh_index(
     boilerplate buckets that large belong to the exact-dedup pass
     anyway, as the batch op documents).
     """
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.operators.dedup import (
         lsh_band_rows,
         with_minhash,
@@ -1030,10 +1033,7 @@ def run_streaming_lsh_index(
     shutil.rmtree(pairs_dir, ignore_errors=True)
     stream = _stream_stage(spark, docs_df.schema, stage_dir, 1)
 
-    def fold(batch_df, batch_id):
-        applied = _applied_batch_ids(index_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: bands+pairs already appended
+    def index_batch(batch_df, batch_id):
         ss = batch_df.sparkSession
         bands = lsh_band_rows(
             with_minhash(batch_df, k=k), "doc_id", k, rows_per_band
@@ -1081,15 +1081,13 @@ def run_streaming_lsh_index(
             pairs = within.unionAll(cross)
         else:
             pairs = within
+        # the pairs land first; the bands append (and the mark) follow
+        # in _append_fold.  A crash before the mark redelivers the batch
+        # and re-appends both (duplicate band rows inflate hot-band counts)
         pairs.distinct().write.mode("append").parquet(pairs_dir)
-        bands.write.mode("append").parquet(index_dir)
-        # append-style state: the marker is written AFTER both appends, so a
-        # crash between append and mark redelivers and re-appends (duplicate
-        # band rows inflate hot-band counts).  Delta's txn log closes that
-        # window; on plain parquet this narrows it to the mark write.
-        _mark_applied(index_dir, batch_id, applied)
+        return bands
 
-    _run_drain(stream, 8, fold)
+    _run_drain(stream, 8, _append_fold(index_dir, index_batch))
     return (
         spark.read.schema("id_a long, id_b long")
         .parquet(pairs_dir)
@@ -1343,8 +1341,7 @@ def run_transform_with_state_stats(
         def close(self) -> None:
             pass
 
-    src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
+    stream = _sliced_stream(spark, src_df, stage_dir, 4)
     stats = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=RunningStats(),
         outputStructType="user_id bigint, n_events bigint, total_value double",
@@ -1354,7 +1351,7 @@ def run_transform_with_state_stats(
     # transformWithState requires the RocksDB state store provider (the
     # default HDFS-backed store does not implement the new API's
     # multi-state/TTL surface) — scoped, like the partition-count conf
-    with _scoped_conf(
+    with scoped_conf(
         spark,
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -1378,59 +1375,49 @@ def _upsert_counts_fn(target_dir: str):
     aggregate the micro-batch per user and MERGE (full-outer combine +
     atomic directory swap) into the parquet target; sums carried as
     DECIMAL(38,12) so batch boundaries cannot skew the fold.  Replays of a
-    committed batch_id are no-ops (``_applied_batch_ids``).  The merge key
+    committed batch_id are no-ops (``_swap_fold``).  The merge key
     compares with ``eqNullSafe`` (ADVICE r6): groupBy emits at most one
     NULL-key row per batch, and a null-rejecting join would accumulate one
     duplicate NULL row per micro-batch instead of folding it — with dirty
     keys at scale that is unbounded state growth.  The output key is
     ``coalesce(k_prev, k_new)`` (NULL stays NULL; both sides NULL only on
     the matched NULL group)."""
-    import os
-    import shutil
 
-    def upsert(batch_df, batch_id):
-        applied = _applied_batch_ids(target_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: fold already committed, no-op
+    def merge(batch_df, prev):
         agg = batch_df.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(38,12)")).alias("sum_value"),
         )
-        if os.path.exists(target_dir):
-            prev = batch_df.sparkSession.read.parquet(target_dir)
-            merged = (
-                prev.select(
-                    F.col("user_id").alias("k_prev"),
-                    F.col("n_events").alias("n0"),
-                    F.col("sum_value").alias("s0"),
-                )
-                .join(
-                    agg.withColumnRenamed("user_id", "k_new"),
-                    F.col("k_prev").eqNullSafe(F.col("k_new")),
-                    "full_outer",
-                )
-                .select(
-                    F.coalesce("k_prev", "k_new").alias("user_id"),
-                    (
-                        F.coalesce("n0", F.lit(0))
-                        + F.coalesce("n_events", F.lit(0))
-                    ).alias("n_events"),
-                    (
-                        F.coalesce(F.col("s0"), F.lit(0).cast("decimal(38,12)"))
-                        + F.coalesce(
-                            F.col("sum_value"), F.lit(0).cast("decimal(38,12)")
-                        )
-                    ).cast("decimal(38,12)").alias("sum_value"),
-                )
+        if prev is None:
+            return agg
+        return (
+            batch_df.sparkSession.read.parquet(prev)
+            .select(
+                F.col("user_id").alias("k_prev"),
+                F.col("n_events").alias("n0"),
+                F.col("sum_value").alias("s0"),
             )
-        else:
-            merged = agg
-        nxt = target_dir + "_next"
-        merged.write.mode("overwrite").parquet(nxt)
-        _mark_applied(nxt, batch_id, applied)  # commits atomically with swap
-        _swap_dir(nxt, target_dir)
+            .join(
+                agg.withColumnRenamed("user_id", "k_new"),
+                F.col("k_prev").eqNullSafe(F.col("k_new")),
+                "full_outer",
+            )
+            .select(
+                F.coalesce("k_prev", "k_new").alias("user_id"),
+                (
+                    F.coalesce("n0", F.lit(0))
+                    + F.coalesce("n_events", F.lit(0))
+                ).alias("n_events"),
+                (
+                    F.coalesce(F.col("s0"), F.lit(0).cast("decimal(38,12)"))
+                    + F.coalesce(
+                        F.col("sum_value"), F.lit(0).cast("decimal(38,12)")
+                    )
+                ).cast("decimal(38,12)").alias("sum_value"),
+            )
+        )
 
-    return upsert
+    return _swap_fold(target_dir, merge)
 
 
 def run_checkpoint_recovery(
@@ -1454,9 +1441,6 @@ def run_checkpoint_recovery(
     of topic/directory history size.  Both phases drain with
     maxFilesPerTrigger=1 so each REALLY iterates micro-batches.
     """
-    import os
-    import shutil
-
     stage_dir = os.path.join(workdir, "stage")
     target_dir = os.path.join(workdir, "target")
     ckpt_dir = os.path.join(workdir, "ckpt")  # FIXED across both phases
@@ -1503,20 +1487,16 @@ def run_streaming_quantile_sketch(
     min/max here: a mergeable-across-batches sketch must fix its bucketing
     before the data arrives (production uses KLL/t-digest for
     bound-free mergeability; fixed bounds are the SQL-parity choice).
-    Addition is replay-sensitive, so the applied-batch sidecar
-    (``_applied_batch_ids``) commits atomically with each swap.  After the
+    Addition is replay-sensitive, so the applied-batch sidecar commits
+    atomically with each swap (``_swap_fold``).  After the
     drain, p50/p99 midpoint estimates from the merged state are laid next
     to the EXACT distributed percentiles — the same measured-not-claimed
     gate shape as the batch twin.
     """
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.operators import profile as P
 
-    src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
+    stream = _sliced_stream(spark, src_df, stage_dir, 4)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     w = (hi - lo) / nb
     # Clamped on BOTH ends: values >= hi land in the last bucket, values
     # below lo in bucket 0 (without the lower clamp a value < lo would
@@ -1530,36 +1510,27 @@ def run_streaming_quantile_sketch(
         ),
     )
 
-    def fold(batch_df, batch_id):
-        applied = _applied_batch_ids(target_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: additive fold must not re-apply
+    def merge(batch_df, prev):
         agg = (
             batch_df.filter(F.col("value").isNotNull())
             .groupBy(bucket.alias("bucket"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        if os.path.exists(target_dir):
-            prev = batch_df.sparkSession.read.parquet(target_dir)
-            merged = (
-                prev.select(F.col("bucket").alias("b0"),
-                            F.col("cnt").alias("c0"))
-                .join(agg, F.col("b0") == F.col("bucket"), "full_outer")
-                .select(
-                    F.coalesce("b0", "bucket").alias("bucket"),
-                    (
-                        F.coalesce("c0", F.lit(0)) + F.coalesce("cnt", F.lit(0))
-                    ).cast("bigint").alias("cnt"),
-                )
+        if prev is None:
+            return agg
+        return (
+            batch_df.sparkSession.read.parquet(prev)
+            .select(F.col("bucket").alias("b0"), F.col("cnt").alias("c0"))
+            .join(agg, F.col("b0") == F.col("bucket"), "full_outer")
+            .select(
+                F.coalesce("b0", "bucket").alias("bucket"),
+                (
+                    F.coalesce("c0", F.lit(0)) + F.coalesce("cnt", F.lit(0))
+                ).cast("bigint").alias("cnt"),
             )
-        else:
-            merged = agg
-        nxt = target_dir + "_next"
-        merged.write.mode("overwrite").parquet(nxt)
-        _mark_applied(nxt, batch_id, applied)
-        _swap_dir(nxt, target_dir)
+        )
 
-    _run_drain(stream, 4, fold)
+    _run_drain(stream, 4, _swap_fold(target_dir, merge))
 
     from pyspark.sql.window import Window
 
@@ -1670,31 +1641,23 @@ def run_streaming_cdc_apply(
     per key here; a real feed orders by LSN within key, which
     ``maxFilesPerTrigger`` respects per file).  The merge key compares
     null-safe and replays of a committed batch_id are no-ops
-    (``_applied_batch_ids``) — the same fold contract as the upsert
-    family.  State after the drain must equal base − deletes ⊎ updates,
-    which the oracle recomputes relationally.
+    (``_swap_fold``) — the same fold contract as the upsert family.
+    State after the drain must equal base − deletes ⊎ updates, which the
+    oracle recomputes relationally.
     """
-    import os
-    import shutil
-
     base_df.write.mode("overwrite").parquet(target_dir + "_base")
     shutil.rmtree(target_dir, ignore_errors=True)
     shutil.copytree(target_dir + "_base", target_dir)
-    cdc_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    stream = _stream_stage(spark, cdc_df.schema, stage_dir, 1)
+    stream = _sliced_stream(spark, cdc_df, stage_dir, 4)
 
-    def apply_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(target_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: merge already committed
-        ss = batch_df.sparkSession
-        prev = ss.read.parquet(target_dir)
+    def apply_batch(batch_df, prev):
+        prev = batch_df.sparkSession.read.parquet(prev)
         ch = batch_df.select(
             F.col("o_orderkey").alias("k"),
             F.col("op"),
             F.col("new_price"),
         )
-        merged = (
+        return (
             prev.join(ch, prev["o_orderkey"].eqNullSafe(ch["k"]), "left")
             .filter(F.coalesce(F.col("op"), F.lit("")) != "D")
             .select(
@@ -1704,12 +1667,8 @@ def run_streaming_cdc_apply(
                 .alias("o_totalprice"),
             )
         )
-        nxt = target_dir + "_next"
-        merged.write.mode("overwrite").parquet(nxt)
-        _mark_applied(nxt, batch_id, applied)
-        _swap_dir(nxt, target_dir)
 
-    _run_drain(stream, 4, apply_batch)
+    _run_drain(stream, 4, _swap_fold(target_dir, apply_batch))
     final = spark.read.parquet(target_dir)
     return final.agg(
         F.count(F.lit(1)).cast("bigint").alias("rows_after"),
@@ -1755,7 +1714,6 @@ def run_streaming_late_drop(
     therefore equal the batch tumbling aggregate over NON-LATE rows
     only, and the dropped total is reported beside it.
     """
-    import os
     from datetime import timedelta
 
     # needed both for the sentinel (staging) and the sentinel-window
@@ -1866,17 +1824,13 @@ def run_streaming_linkage_ingest(
     micro-batch partitioning, and one relational oracle covers every
     possible batching.  The hot-shingle cap is computed from the A side
     alone (the only side that exists before the stream starts); appends
-    are guarded by the applied-batch sidecar (append-style commit —
-    non-atomic, documented in _mark_applied).
+    are guarded by the applied-batch sidecar (``_append_fold``).
 
     Scale shape: the A index (pruned inverted shingles + per-doc sizes +
     hot list) is built ONCE and persisted; each micro-batch does one
     equi-join of its own shingles against it — at 100 TB the index is a
     partitioned table and the per-batch join shuffles only the batch.
     """
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.functions.text import with_shingles
 
     idx_dir = os.path.join(work_dir, "a_index")
@@ -1923,19 +1877,15 @@ def run_streaming_linkage_ingest(
         build_index,
     )
 
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        b_df,
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:b_stage{n_slices}",
-        lambda target: b_df.repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
     )
-    stream = _stream_stage(spark, b_df.schema, stage_dir, 1)
 
     def link_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(target_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its appends are already committed
         ss = batch_df.sparkSession
         from pyspark.sql import Window
 
@@ -1967,16 +1917,13 @@ def run_streaming_linkage_ingest(
         w = Window.partitionBy("b_id").orderBy(
             F.desc("jaccard"), F.col("doc_id")
         )
-        best = (
+        return (
             scored.withColumn("rb", F.row_number().over(w))
             .filter(F.col("rb") == 1)
             .drop("rb")
         )
-        os.makedirs(target_dir, exist_ok=True)
-        best.write.mode("append").parquet(target_dir)
-        _mark_applied(target_dir, batch_id, applied)
 
-    _run_drain(stream, 16, link_batch)
+    _run_drain(stream, 16, _append_fold(target_dir, link_batch))
 
     out = spark.read.parquet(target_dir)
     return out.select(
@@ -1993,29 +1940,22 @@ def _reservoir_fold_fn(target_dir: str, k: int):
     re-top-k, atomic directory swap).  The merge is NOT idempotent —
     ``unionByName`` is UNION ALL, so a redelivered batch would union its
     top-k with itself and duplicate rows — so replays of a committed
-    batch_id are skipped through the applied-batch sidecar, which also
-    recovers a crash between ``_swap_dir``'s renames."""
-    import os
+    batch_id are skipped by ``_swap_fold``, which also recovers a crash
+    between ``_swap_dir``'s renames."""
 
-    def fold(batch_df, batch_id):
-        applied = _applied_batch_ids(target_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: fold already committed, no-op
+    def merge(batch_df, prev):
         cand = batch_df.select(
             "event_id",
             "user_id",
             "value",
             F.md5(F.col("event_id").cast("string")).alias("h"),
         ).orderBy("h", "event_id").limit(k)
-        if os.path.exists(target_dir):
-            prev = batch_df.sparkSession.read.parquet(target_dir)
-            cand = prev.unionByName(cand).orderBy("h", "event_id").limit(k)
-        nxt = target_dir + "_next"
-        cand.write.mode("overwrite").parquet(nxt)
-        _mark_applied(nxt, batch_id, applied)  # commits atomically with swap
-        _swap_dir(nxt, target_dir)
+        if prev is None:
+            return cand
+        prev = batch_df.sparkSession.read.parquet(prev)
+        return prev.unionByName(cand).orderBy("h", "event_id").limit(k)
 
-    return fold
+    return _swap_fold(target_dir, merge)
 
 
 def run_streaming_reservoir_sample(
@@ -2036,11 +1976,8 @@ def run_streaming_reservoir_sample(
     oracle, any batching).  State is O(k); per batch the source side
     reduces map-side via the TakeOrdered heap before anything shuffles.
     """
-    import shutil
-
-    src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
+    stream = _sliced_stream(spark, src_df, stage_dir, 4)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     _run_drain(stream, 4, _reservoir_fold_fn(target_dir, k))
 
     from pyspark.sql import Window
@@ -2063,8 +2000,6 @@ def _group_reservoir_fold_fn(target_dir: str, k: int):
     event_type twin of ``_reservoir_fold_fn`` (windowed top-k per group),
     with the same applied-batch replay guard — its union is UNION ALL
     too, so a redelivered batch would otherwise duplicate rows."""
-    import os
-
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy("h", "event_id")
@@ -2076,10 +2011,7 @@ def _group_reservoir_fold_fn(target_dir: str, k: int):
             .drop("rk")
         )
 
-    def fold(batch_df, batch_id):
-        applied = _applied_batch_ids(target_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: fold already committed, no-op
+    def merge(batch_df, prev):
         cand = topk(
             batch_df.select(
                 "event_type",
@@ -2088,15 +2020,11 @@ def _group_reservoir_fold_fn(target_dir: str, k: int):
                 F.md5(F.col("event_id").cast("string")).alias("h"),
             )
         )
-        if os.path.exists(target_dir):
-            prev = batch_df.sparkSession.read.parquet(target_dir)
-            cand = topk(prev.unionByName(cand))
-        nxt = target_dir + "_next"
-        cand.write.mode("overwrite").parquet(nxt)
-        _mark_applied(nxt, batch_id, applied)  # commits atomically with swap
-        _swap_dir(nxt, target_dir)
+        if prev is None:
+            return cand
+        return topk(batch_df.sparkSession.read.parquet(prev).unionByName(cand))
 
-    return fold
+    return _swap_fold(target_dir, merge)
 
 
 def run_streaming_group_reservoir(
@@ -2114,13 +2042,10 @@ def run_streaming_group_reservoir(
     replay-safe through the applied-batch sidecar).  The streaming twin
     of the batch sample_k_per_group; the drained sample equals the batch
     per-group draw row-for-row under any batching."""
-    import shutil
-
     from pyspark.sql import Window
 
-    src_df.repartition(4).write.mode("overwrite").parquet(stage_dir)
+    stream = _sliced_stream(spark, src_df, stage_dir, 4)
     shutil.rmtree(target_dir, ignore_errors=True)
-    stream = _stream_stage(spark, src_df.schema, stage_dir, 1)
     _run_drain(stream, 4, _group_reservoir_fold_fn(target_dir, k))
 
     w = Window.partitionBy("event_type").orderBy("h", "event_id")
@@ -2147,7 +2072,7 @@ def run_streaming_ann_ingest(
     is assigned by the persisted quantizer (read back inside the fold —
     the appender owns no trainer state) and appended to the partitioned
     assignments table, replay-guarded by the applied-batch sidecar
-    (append-style commit, non-atomic — documented in _mark_applied).
+    (``_append_fold``).
 
     Determinism by construction: each appended vector's cid depends only
     on the persisted centroids, so the drained assignments table — and
@@ -2158,9 +2083,6 @@ def run_streaming_ann_ingest(
     one O(batch) partitioned append; the probe reads only the probed
     cid= directories.
     """
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.clustering import (
@@ -2234,20 +2156,16 @@ def run_streaming_ann_ingest(
         shutil.move(os.path.join(work_dir, "centroids"), cent_dir)
     stream = _stream_stage(spark, arriving.drop("_v").schema, stage_dir, 1)
 
-    def append_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(assign_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its appends are already committed
-        ss = batch_df.sparkSession
+    def assign_batch(batch_df, batch_id):
         cent_row_persisted = (
-            ss.read.parquet(cent_dir)
+            batch_df.sparkSession.read.parquet(cent_dir)
             .agg(
                 F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias(
                     "cents"
                 )
             )
         )
-        (
+        return (
             batch_df.withColumn(
                 "_v", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
             )
@@ -2258,13 +2176,9 @@ def run_streaming_ann_ingest(
                 F.col("embedding").alias("c_vec"),
                 "cid",
             )
-            .write.mode("append")
-            .partitionBy("cid")
-            .parquet(assign_dir)
         )
-        _mark_applied(assign_dir, batch_id, applied)
 
-    _run_drain(stream, 16, append_batch)
+    _run_drain(stream, 16, _append_fold(assign_dir, assign_batch, "cid"))
 
     # -- probe the drained table, partition-pruned ----------------------
     cent_t = spark.read.parquet(cent_dir)
@@ -2331,12 +2245,11 @@ def run_streaming_quality_ingest(
     possible batching.  Per batch: one 4-row broadcast + a per-row
     projection — nothing shuffles but the batch's own per-lang counts.
     """
-    import os
-    import shutil
-
-    from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
-        logistic_prob,
+    from newyork_taxi_etl_spark.operators.logreg import logistic_prob
+    from newyork_taxi_etl_spark.queries.curation import (
+        _build_logreg_weights,
+        _logreg_features,
+        _read_logreg_weights,
     )
 
     stage_dir = os.path.join(work_dir, "doc_stage")
@@ -2344,66 +2257,30 @@ def run_streaming_quality_ingest(
     target_dir = os.path.join(work_dir, "decisions")
     shutil.rmtree(target_dir, ignore_errors=True)
 
-    # build-once artifacts behind the r12 _stage_cached discipline: the
-    # 16-step logistic training and the doc stage are deterministic
-    # functions of the source corpus — only the read-only inputs are
-    # shared; decisions/sidecar stay per-run.  The weights key is
-    # deliberately sharable with run_streaming_psi_ingest (identical
-    # features, label, steps and lr over the same corpus).
-    def build_weights(target: str) -> None:
-        toks = F.split(F.col("text"), " ")
-        ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-        feats = docs_df.select(
-            ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-            ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-            F.when(F.col("n_chars").between(100, 400), 1.0)
-            .otherwise(0.0)
-            .alias("x3"),
-            F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-            .otherwise(0.0)
-            .alias("y"),
-        ).localCheckpoint()
-        w = logistic_gd(feats, ["x1", "x2", "x3"], "y", steps=16, lr=4.0)
-        local_rows_df(
-            spark, [(j, float(wj)) for j, wj in enumerate(w)],
-            "j int, w double",
-        ).coalesce(1).write.mode("overwrite").parquet(target)
-
+    # build-once artifacts: the 16-step logistic training and the doc
+    # stage are deterministic functions of the source corpus — only the
+    # read-only inputs are shared; decisions/sidecar stay per-run.  The
+    # weights stage is the one the batch quality queries and
+    # run_streaming_psi_ingest share (same builder, same key).
     weights_dir = _stage_cached(
         weights_dir,
         cache_key and f"{cache_key}:logreg_weights",
-        build_weights,
+        lambda target: _build_logreg_weights(spark, docs_df, target),
     )
 
     staged = docs_df.select("doc_id", "text", "lang", "n_chars")
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        staged,
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:quality_stage{n_slices}",
-        lambda target: staged.repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
     )
-    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
     def score_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(target_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: decisions already committed
-        ss = batch_df.sparkSession
-        wrow = {
-            r["j"]: r["w"] for r in ss.read.parquet(weights_dir).collect()
-        }
-        wv = [wrow[j] for j in range(4)]
-        t = F.split(F.col("text"), " ")
-        tt = F.size(F.array_distinct(t)).cast("double") / F.size(t)
-        scored = batch_df.select(
-            "doc_id",
-            "lang",
-            ((F.size(t) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-            ((tt - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-            F.when(F.col("n_chars").between(100, 400), 1.0)
-            .otherwise(0.0)
-            .alias("x3"),
+        wv = _read_logreg_weights(batch_df.sparkSession, weights_dir)
+        return batch_df.select(
+            "doc_id", "lang", *_logreg_features(label=False)
         ).select(
             "doc_id",
             "lang",
@@ -2411,11 +2288,8 @@ def run_streaming_quality_ingest(
                 "keep"
             ),
         )
-        os.makedirs(target_dir, exist_ok=True)
-        scored.write.mode("append").parquet(target_dir)
-        _mark_applied(target_dir, batch_id, applied)
 
-    _run_drain(stream, 16, score_batch)
+    _run_drain(stream, 16, _append_fold(target_dir, score_batch))
 
     out = spark.read.parquet(target_dir)
     n = F.count(F.lit(1))
@@ -2456,16 +2330,12 @@ def run_streaming_w1_ingest(
     value ticks) regardless of stream length — the same bound that
     makes the batch statistic scale.
     """
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.queries.behavior import w1_from_counts
 
     stage_dir = os.path.join(work_dir, "b_stage")
     baseline_dir = os.path.join(work_dir, "baseline_counts")
     counts_dir = os.path.join(work_dir, "stream_counts")
-    for d in (stage_dir, baseline_dir, counts_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(counts_dir, ignore_errors=True)
 
     ev = events_df.filter(F.col("value").isNotNull()).select(
         F.col("ts").cast("date").alias("d"),
@@ -2490,29 +2360,20 @@ def run_streaming_w1_ingest(
         .parquet(target),
     )
     # live side staged as arriving files
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        ev.filter(~is_ref).select("v"),
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:w1stage{n_slices}",
-        lambda target: ev.filter(~is_ref)
-        .select("v")
-        .repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
     )
-    stream = _stream_stage(spark, "v bigint", stage_dir, 1)
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(counts_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its counts are already folded
-        part = batch_df.groupBy("v").agg(
+    def batch_rows(batch_df, batch_id):
+        return batch_df.groupBy("v").agg(
             F.count(F.lit(1)).cast("bigint").alias("cb")
         )
-        os.makedirs(counts_dir, exist_ok=True)
-        part.write.mode("append").parquet(counts_dir)
-        _mark_applied(counts_dir, batch_id, applied)
 
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(stream, 16, _append_fold(counts_dir, batch_rows))
 
     ca = spark.read.parquet(baseline_dir)
     cb = (
@@ -2553,9 +2414,6 @@ def run_streaming_mmd_ingest(
     (256 here) regardless of stream length; the additive fold carries
     the applied-batch replay guard.
     """
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.queries.similarity import (
         mmd2_from_partials,
         mmd_moment_partials,
@@ -2563,25 +2421,17 @@ def run_streaming_mmd_ingest(
 
     stage_dir = os.path.join(work_dir, "emb_stage")
     state_dir = os.path.join(work_dir, "mmd_state")
-    for d in (stage_dir, state_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(state_dir, ignore_errors=True)
 
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        emb_df.select("vec_id", "label", "embedding"),
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:mmdstage{n_slices}",
-        lambda target: emb_df.select("vec_id", "label", "embedding")
-        .repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
-    )
-    stream = _stream_stage(
-        spark, "vec_id bigint, label int, embedding array<float>", stage_dir, 1
     )
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(state_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its statistics are already folded
+    def batch_rows(batch_df, batch_id):
         par = mmd_moment_partials(
             batch_df.withColumn(
                 "side", F.when(F.col("vec_id") % 2 == 0, 1).otherwise(0)
@@ -2594,11 +2444,9 @@ def run_streaming_mmd_ingest(
             ),
             "side",
         ).select(F.lit("label0").alias("split"), "*")
-        os.makedirs(state_dir, exist_ok=True)
-        par.unionByName(lab).write.mode("append").parquet(state_dir)
-        _mark_applied(state_dir, batch_id, applied)
+        return par.unionByName(lab)
 
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(stream, 16, _append_fold(state_dir, batch_rows))
 
     state = spark.read.parquet(state_dir)
     out = None
@@ -2631,11 +2479,9 @@ def run_streaming_psi_ingest(
     batching and the batch oracle covers every slicing.  State is
     O(sources x 10 bins) regardless of stream length.
     """
-    import os
-    import shutil
-
-    from newyork_taxi_etl_spark.operators.logreg import logistic_gd
     from newyork_taxi_etl_spark.queries.curation import (
+        _build_logreg_weights,
+        _read_logreg_weights,
         _scored_bins,
         psi_from_source_counts,
     )
@@ -2645,63 +2491,32 @@ def run_streaming_psi_ingest(
     counts_dir = os.path.join(work_dir, "bin_counts")
     shutil.rmtree(counts_dir, ignore_errors=True)
 
-    # the training is IDENTICAL to run_streaming_quality_ingest's
-    # (features, label, steps, lr, corpus) — same ":logreg_weights"
-    # cache key, so the two monitors share one trained scorer build
-    def build_weights(target: str) -> None:
-        toks = F.split(F.col("text"), " ")
-        ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-        feats = docs_df.select(
-            ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-            ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-            F.when(F.col("n_chars").between(100, 400), 1.0)
-            .otherwise(0.0)
-            .alias("x3"),
-            F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-            .otherwise(0.0)
-            .alias("y"),
-        ).localCheckpoint()
-        w = logistic_gd(feats, ["x1", "x2", "x3"], "y", steps=16, lr=4.0)
-        local_rows_df(
-            spark, [(j, float(wj)) for j, wj in enumerate(w)],
-            "j int, w double",
-        ).coalesce(1).write.mode("overwrite").parquet(target)
-
+    # the same ":logreg_weights" stage as run_streaming_quality_ingest,
+    # so the two monitors share one trained scorer build
     weights_dir = _stage_cached(
         weights_dir,
         cache_key and f"{cache_key}:logreg_weights",
-        build_weights,
+        lambda target: _build_logreg_weights(spark, docs_df, target),
     )
 
     staged = docs_df.select("doc_id", "source", "text", "n_chars")
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        staged,
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:psi_stage{n_slices}",
-        lambda target: staged.repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
     )
-    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(counts_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its counts are already folded
-        ss = batch_df.sparkSession
-        wrow = {
-            r["j"]: r["w"] for r in ss.read.parquet(weights_dir).collect()
-        }
-        wv = [wrow[j] for j in range(4)]
-        part = (
+    def count_bins(batch_df, batch_id):
+        wv = _read_logreg_weights(batch_df.sparkSession, weights_dir)
+        return (
             _scored_bins(batch_df, wv)
             .groupBy("source", "bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         )
-        os.makedirs(counts_dir, exist_ok=True)
-        part.write.mode("append").parquet(counts_dir)
-        _mark_applied(counts_dir, batch_id, applied)
 
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(stream, 16, _append_fold(counts_dir, count_bins))
 
     counts = (
         spark.read.parquet(counts_dir)
@@ -2745,15 +2560,11 @@ def run_streaming_fm_ingest(
     Integer max-ranks make the fold bit-exact cross-engine; the only
     floats are the final pow/round.
     """
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.operators.sampling import hash_bucket
 
     stage_dir = os.path.join(work_dir, "tok_stage")
     state_dir = os.path.join(work_dir, "fm_state")
-    for d in (stage_dir, state_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(state_dir, ignore_errors=True)
 
     sliced = docs_df.select(
         (hash_bucket("doc_id", 3) + 1).cast("int").alias("b"),
@@ -2788,11 +2599,8 @@ def run_streaming_fm_ingest(
         f"ELSE CAST(floor(log2({h2} & -{h2})) AS INT) + 1 END"
     )
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(state_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: max-rho fold already applied
-        part = (
+    def batch_rows(batch_df, batch_id):
+        return (
             batch_df.withColumn("_t", F.split("text", " "))
             .select(F.explode(F.expr(_SH3_EXPR)).alias("tok"))
             .select(
@@ -2809,11 +2617,8 @@ def run_streaming_fm_ingest(
             .agg(F.max("rho").alias("m"))
             .select(F.lit(int(batch_id) + 1).alias("b"), "g", "m")
         )
-        os.makedirs(state_dir, exist_ok=True)
-        part.write.mode("append").parquet(state_dir)
-        _mark_applied(state_dir, batch_id, applied)
 
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(stream, 16, _append_fold(state_dir, batch_rows))
 
     state = spark.read.parquet(state_dir)
     prefixes = spark.range(1, 4).select(F.col("id").cast("int").alias("p"))
@@ -2880,9 +2685,6 @@ def run_streaming_dsir_ingest(
     decimal sums are order- and batching-independent, so drained ==
     batch (dsir_importance_select) bit-for-bit under any slicing and
     the batch oracle covers every batching.  State is O(languages)."""
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.queries.curation import (
         _dsir_buckets,
         _dsir_doc_weights,
@@ -2892,8 +2694,7 @@ def run_streaming_dsir_ingest(
     stage_dir = os.path.join(work_dir, "doc_stage")
     model_dir = os.path.join(work_dir, "lr_tab")
     parts_dir = os.path.join(work_dir, "lang_partials")
-    for d in (stage_dir, model_dir, parts_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(parts_dir, ignore_errors=True)
 
     # build once: the 64-row log-ratio model, persisted as the serving
     # artifact (at scale: a tiny table every executor broadcasts) —
@@ -2908,34 +2709,26 @@ def run_streaming_dsir_ingest(
     )
 
     staged = docs_df.select("doc_id", "lang", "text")
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        staged,
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:dsirstage{n_slices}",
-        lambda target: staged.repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
     )
-    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(parts_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its partials are already folded
-        ss = batch_df.sparkSession
-        lr_tab = ss.read.parquet(model_dir)
+    def batch_rows(batch_df, batch_id):
+        lr_tab = batch_df.sparkSession.read.parquet(model_dir)
         per_doc = _dsir_doc_weights(_dsir_buckets(batch_df), lr_tab)
-        part = per_doc.groupBy("lang").agg(
+        return per_doc.groupBy("lang").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(F.col("w").cast("decimal(38,12)")).alias("sum_w"),
             F.sum((F.col("w") > 0).cast("int"))
             .cast("bigint")
             .alias("n_selected"),
         )
-        os.makedirs(parts_dir, exist_ok=True)
-        part.write.mode("append").parquet(parts_dir)
-        _mark_applied(parts_dir, batch_id, applied)
 
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(stream, 16, _append_fold(parts_dir, batch_rows))
 
     agg = (
         spark.read.parquet(parts_dir)
@@ -2977,9 +2770,6 @@ def run_streaming_funnel_ingest(
     addition, replay-guarded by the applied-batch sidecar.  Drained ==
     batch bit-for-bit under any slicing (integer sums commute); state is
     O(rules)."""
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.queries.text import (
         _qr_finalize,
         _qr_stage_counts,
@@ -2988,23 +2778,15 @@ def run_streaming_funnel_ingest(
 
     stage_dir = os.path.join(work_dir, "doc_stage")
     parts_dir = os.path.join(work_dir, "stage_partials")
-    for d in (stage_dir, parts_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(parts_dir, ignore_errors=True)
 
     staged = docs_df.select("doc_id", "n_chars", "text")
-    staged.repartition(n_slices).write.parquet(stage_dir)
-    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
-
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(parts_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its partials are already folded
-        part = _qr_stage_counts(_qr_stats(batch_df))
-        os.makedirs(parts_dir, exist_ok=True)
-        part.write.mode("append").parquet(parts_dir)
-        _mark_applied(parts_dir, batch_id, applied)
-
-    _run_drain(stream, 16, fold_batch)
+    stream = _sliced_stream(spark, staged, stage_dir, n_slices)
+    _run_drain(
+        stream,
+        16,
+        _append_fold(parts_dir, lambda b, _: _qr_stage_counts(_qr_stats(b))),
+    )
 
     counts = (
         spark.read.parquet(parts_dir)
@@ -3041,9 +2823,6 @@ def run_streaming_decon_ingest(
     and the batch oracle covers every batching.  Per batch: one
     index join + a window bounded by the batch's own match count.
     """
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.queries.curation import (
         _decon_bench_index,
         _decon_pos_grams,
@@ -3054,8 +2833,7 @@ def run_streaming_decon_ingest(
     stage_dir = os.path.join(work_dir, "doc_stage")
     index_dir = os.path.join(work_dir, "bench_index")
     runs_dir = os.path.join(work_dir, "run_rows")
-    for d in (stage_dir, index_dir, runs_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(runs_dir, ignore_errors=True)
 
     # build-once artifacts (static bench index + read-only staged docs)
     # share per process like the other drains (r16); run_rows/checkpoint
@@ -3070,31 +2848,22 @@ def run_streaming_decon_ingest(
 
     # any slicing works — per-doc rows are final on append — so the stage
     # is a plain n_slices-file write, no membership column needed
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        docs_df.filter(F.col("doc_id") % 50 != 0).select("doc_id", "text"),
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:deconstage{n_slices}",
-        lambda target: docs_df.filter(F.col("doc_id") % 50 != 0)
-        .select("doc_id", "text")
-        .repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
     )
-    stream = _stream_stage(spark, "doc_id bigint, text string", stage_dir, 1)
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(runs_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its run rows are already final
+    def batch_rows(batch_df, batch_id):
         ss = batch_df.sparkSession
         index = ss.read.parquet(index_dir)
-        part = _decon_runs(index, _decon_pos_grams(batch_df)).select(
+        return _decon_runs(index, _decon_pos_grams(batch_df)).select(
             "bench_id", "corpus_id", "run_tokens"
         )
-        os.makedirs(runs_dir, exist_ok=True)
-        part.write.mode("append").parquet(runs_dir)
-        _mark_applied(runs_dir, batch_id, applied)
 
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(stream, 16, _append_fold(runs_dir, batch_rows))
 
     return _decon_top(spark.read.parquet(runs_dir))
 
@@ -3119,9 +2888,6 @@ def run_streaming_char_coverage_ingest(
     <unk>/byte-fallback) firms up long before tokenizer training.
     State is O(langs x alphabet); the coverage windows run at drain
     time over that table, never over character instances."""
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.queries.text import (
         _char_counts,
         _char_coverage_finalize,
@@ -3129,29 +2895,20 @@ def run_streaming_char_coverage_ingest(
 
     stage_dir = os.path.join(work_dir, "doc_stage")
     parts_dir = os.path.join(work_dir, "char_partials")
-    for d in (stage_dir, parts_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(parts_dir, ignore_errors=True)
 
     staged = docs_df.select("doc_id", "lang", "text")
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        staged,
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:charstage{n_slices}",
-        lambda target: staged.repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
     )
-    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(parts_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its partials are already folded
-        part = _char_counts(batch_df)
-        os.makedirs(parts_dir, exist_ok=True)
-        part.write.mode("append").parquet(parts_dir)
-        _mark_applied(parts_dir, batch_id, applied)
-
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(
+        stream, 16, _append_fold(parts_dir, lambda b, _: _char_counts(b))
+    )
 
     counts = (
         spark.read.parquet(parts_dir)
@@ -3180,23 +2937,15 @@ def run_streaming_heavy_hitters(
     pigeonhole fact that any phi-heavy token must be phi-heavy in at
     least one batch makes per-batch candidates a sound prefilter when
     vocab-sized state is too big."""
-    import os
-    import shutil
-
     stage_dir = os.path.join(work_dir, "doc_stage")
     parts_dir = os.path.join(work_dir, "hh_partials")
-    for d in (stage_dir, parts_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(parts_dir, ignore_errors=True)
 
     staged = docs_df.select("doc_id", "text")
-    staged.repartition(n_slices).write.parquet(stage_dir)
-    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
+    stream = _sliced_stream(spark, staged, stage_dir, n_slices)
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(parts_dir)
-        if int(batch_id) in applied:
-            return
-        part = (
+    def batch_rows(batch_df, batch_id):
+        return (
             batch_df.select(
                 F.explode(F.split(F.lower("text"), " ")).alias("tok")
             )
@@ -3204,11 +2953,8 @@ def run_streaming_heavy_hitters(
             .groupBy("tok")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        os.makedirs(parts_dir, exist_ok=True)
-        part.write.mode("append").parquet(parts_dir)
-        _mark_applied(parts_dir, batch_id, applied)
 
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(stream, 16, _append_fold(parts_dir, batch_rows))
 
     counts = (
         spark.read.parquet(parts_dir)
@@ -3254,9 +3000,6 @@ def run_streaming_lcp_depth_ingest(
     sidecar.  State is O(depths x gram vocabulary), the exact-profile
     cost (CMS is the bounded-state alternative); the finalize windows
     run over the folded vocabulary table only."""
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.queries.curation import (
         _lcp_finalize,
         _lcp_gram_stats,
@@ -3267,25 +3010,17 @@ def run_streaming_lcp_depth_ingest(
     shutil.rmtree(parts_dir, ignore_errors=True)
 
     staged = docs_df.select("doc_id", "lang", "text")
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        staged,
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:lcp_stage{n_slices}",
-        lambda target: staged.repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
     )
-    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(parts_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its partials are already folded
-        part = _lcp_gram_stats(batch_df)
-        os.makedirs(parts_dir, exist_ok=True)
-        part.write.mode("append").parquet(parts_dir)
-        _mark_applied(parts_dir, batch_id, applied)
-
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(
+        stream, 16, _append_fold(parts_dir, lambda b, _: _lcp_gram_stats(b))
+    )
 
     folded = (
         spark.read.parquet(parts_dir)
@@ -3312,9 +3047,6 @@ def run_streaming_doremi_ingest(
     sidecar); models and the excess-loss softmax run at drain via the
     batch query's own _doremi_from_tf finalize, so the drained weights
     equal the one-shot batch answer bit-for-bit under any slicing."""
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.queries.curation import (
         _doremi_from_tf,
         _doremi_tf,
@@ -3325,25 +3057,17 @@ def run_streaming_doremi_ingest(
     shutil.rmtree(parts_dir, ignore_errors=True)
 
     staged = docs_df.select("doc_id", "source", "text")
-    stage_dir = _stage_cached(
+    stream = _sliced_stream(
+        spark,
+        staged,
         stage_dir,
+        n_slices,
         cache_key and f"{cache_key}:doremi_stage{n_slices}",
-        lambda target: staged.repartition(n_slices)
-        .write.mode("overwrite")
-        .parquet(target),
     )
-    stream = _stream_stage(spark, staged.schema, stage_dir, 1)
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(parts_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: its partials are already folded
-        part = _doremi_tf(batch_df)
-        os.makedirs(parts_dir, exist_ok=True)
-        part.write.mode("append").parquet(parts_dir)
-        _mark_applied(parts_dir, batch_id, applied)
-
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(
+        stream, 16, _append_fold(parts_dir, lambda b, _: _doremi_tf(b))
+    )
 
     folded = (
         spark.read.parquet(parts_dir)
@@ -3389,9 +3113,6 @@ def run_streaming_bloom_ingest(
     instead of copying generations).  The drained ledger reports
     n_bits_set and n_norms_audit side by side so the split is visible.
     """
-    import os
-    import shutil
-
     from newyork_taxi_etl_spark.queries.dedup import (
         _BLOOM_K,
         _BLOOM_M,
@@ -3447,16 +3168,12 @@ def run_streaming_bloom_ingest(
         ]
     )
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(state_dir)
-        if int(batch_id) in applied:
-            return
+    def fold_batch(batch_df, prev):
         ss = batch_df.sparkSession
-        have_state = os.path.exists(os.path.join(state_dir, "bits"))
-        if have_state:
-            bits = ss.read.parquet(os.path.join(state_dir, "bits"))
-            norms = ss.read.parquet(os.path.join(state_dir, "norms"))
-            dec = ss.read.parquet(os.path.join(state_dir, "decisions"))
+        if prev is not None:
+            bits = ss.read.parquet(os.path.join(prev, "bits"))
+            norms = ss.read.parquet(os.path.join(prev, "norms"))
+            dec = ss.read.parquet(os.path.join(prev, "decisions"))
         else:
             bits = local_rows_df(ss, [], "p bigint, first_id bigint")
             norms = local_rows_df(
@@ -3518,17 +3235,13 @@ def run_streaming_bloom_ingest(
             .groupBy("norm")
             .agg(F.min("first_id").alias("first_id"))
         )
-        nxt = state_dir + "_next"
-        shutil.rmtree(nxt, ignore_errors=True)
-        next_bits.write.parquet(os.path.join(nxt, "bits"))
-        next_norms.write.parquet(os.path.join(nxt, "norms"))
-        dec.unionByName(new_dec).write.parquet(
-            os.path.join(nxt, "decisions")
-        )
-        _mark_applied(nxt, batch_id, applied)
-        _swap_dir(nxt, state_dir)
+        return {
+            "bits": next_bits,
+            "norms": next_norms,
+            "decisions": dec.unionByName(new_dec),
+        }
 
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(stream, 16, _swap_fold(state_dir, fold_batch))
 
     flags = spark.read.parquet(os.path.join(state_dir, "decisions"))
     bits_n = (
@@ -3612,9 +3325,6 @@ def run_streaming_kll_ingest(
     reproduce the exact batch boundaries.  State is O(top buffer):
     survivors shrink geometrically above it.
     """
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.queries.profiling import (
@@ -3675,17 +3385,11 @@ def run_streaming_kll_ingest(
 
     stream = _stream_stage(spark, "doc_id bigint, val bigint", stage_dir, 1)
 
-    def fold_batch(batch_df, batch_id):
-        applied = _applied_batch_ids(state_dir)
-        if int(batch_id) in applied:
-            return  # redelivered batch: already folded (sidecar guard)
+    def fold_batch(batch_df, prev):
         ss = batch_df.sparkSession
-        have = os.path.exists(os.path.join(state_dir, "meta"))
-        if have:
-            surv = ss.read.parquet(os.path.join(state_dir, "surv"))
-            meta = ss.read.parquet(
-                os.path.join(state_dir, "meta")
-            ).collect()[0]
+        if prev is not None:
+            surv = ss.read.parquet(os.path.join(prev, "surv"))
+            meta = ss.read.parquet(os.path.join(prev, "meta")).collect()[0]
             n_prev, bound_acc = int(meta["n_seen"]), int(meta["bound_acc"])
         else:
             surv = local_rows_df(
@@ -3732,18 +3436,16 @@ def run_streaming_kll_ingest(
                     f"CASE WHEN lvl = {h} THEN {h + 1} ELSE lvl END AS lvl",
                 )
             )
-        nxt = state_dir + "_next"
-        shutil.rmtree(nxt, ignore_errors=True)
         # state is top-buffer-sized: one file avoids 16-part dirs and
         # their re-list cost on every subsequent fold
-        cur.coalesce(1).write.parquet(os.path.join(nxt, "surv"))
-        local_rows_df(
-            ss, [(n_cum, bound_acc)], "n_seen bigint, bound_acc bigint"
-        ).coalesce(1).write.parquet(os.path.join(nxt, "meta"))
-        _mark_applied(nxt, batch_id, applied)
-        _swap_dir(nxt, state_dir)
+        return {
+            "surv": cur.coalesce(1),
+            "meta": local_rows_df(
+                ss, [(n_cum, bound_acc)], "n_seen bigint, bound_acc bigint"
+            ).coalesce(1),
+        }
 
-    _run_drain(stream, 16, fold_batch)
+    _run_drain(stream, 16, _swap_fold(state_dir, fold_batch))
 
     surv = spark.read.parquet(os.path.join(state_dir, "surv")).select(
         "doc_id", "val"

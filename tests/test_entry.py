@@ -123,3 +123,40 @@ def test_scratch_policy_lives_only_in_session():
         skip=lambda p: p.name == "session.py",
     )
     assert not found, found
+
+
+def test_replay_safe_commit_lives_only_in_the_fold_helpers():
+    """``windows._append_fold`` and ``windows._swap_fold`` own the
+    replay-safe commit: no other function in ``streaming/windows.py``
+    calls the applied-batch sidecar or the directory swap, except
+    ``run_upsert_replay_proof``'s post-drain check of the sidecar."""
+    import ast
+    from pathlib import Path
+
+    from newyork_taxi_etl_spark.streaming import windows
+
+    commit = {"_applied_batch_ids", "_mark_applied", "_swap_dir"}
+    allowed = commit | {"_append_fold", "_swap_fold"}
+    tree = ast.parse(Path(windows.__file__).read_text())
+    found = [
+        f"{fn.name}:{node.lineno} {node.id}"
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and fn.name not in allowed
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Name)
+        and node.id in commit
+        and not (
+            fn.name == "run_upsert_replay_proof"
+            and node.id == "_applied_batch_ids"
+        )
+    ]
+    assert not found, found
+
+
+def test_conf_changes_live_only_in_session():
+    """``session.tune`` and ``session.scoped_conf`` are the only places
+    the engine sets or unsets a session conf."""
+    found = _engine_matches(
+        r"conf\.(set|unset)\(", skip=lambda p: p.name == "session.py"
+    )
+    assert not found, found

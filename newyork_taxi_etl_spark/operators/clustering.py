@@ -18,11 +18,20 @@ the cid-ordered centroid array) — results are stable across partitionings,
 which is what makes the operator testable. Centroid lineage is truncated
 every round with ``localCheckpoint`` (same iterative-DataFrame discipline
 as ``operators/graph.py``).
+
+The same assignment serves the inverted-file (IVF) index lifecycle of the
+ANN queries: :func:`_assign` puts each vector in its cell, :func:`_probe`
+finds each query's nearest cells, :func:`_write_index` persists the cells
+partitioned by ``cid`` next to the centroids, and :func:`_pruned_read`
+reads back only the probed ``cid=`` directories.  They stay private: the
+tracing layer wraps every public function here as an operator call.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import os
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -63,16 +72,68 @@ def _seed_centroids(base: DataFrame, k: int, id_col: str) -> DataFrame:
     )
 
 
-def _assign(base: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
-    """Zero-shuffle argmin against the ONE broadcast centroid-array row."""
+def _assign(base: DataFrame, cent: DataFrame) -> DataFrame:
+    """Every column of ``base`` (which carries the double vector ``_v``)
+    plus the ``cid`` of its nearest centroid in ``cent`` (``cid``,
+    ``vec``): a zero-shuffle argmin against ONE broadcast centroid-array
+    row."""
     cent_row = cent.agg(
         F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
     )
     return (
         base.join(broadcast(cent_row), how="cross")
         .withColumn("cid", F.expr(_ARGMIN))
-        .select(id_col, "_v", "cid")
+        .select(*base.columns, "cid")
     )
+
+
+def _probe(queries: DataFrame, cent: DataFrame, n_probe: int) -> DataFrame:
+    """The ``n_probe`` nearest cells of each query: every column of
+    ``queries`` (``query_id``, ``_v`` and any payload) plus ``cid`` and
+    that cell's ``cent_vec``.  Cells rank by squared distance, ties toward
+    the lower cid — the same order as the strict-< argmin.  The window
+    runs over n_queries x k rows, so it stays tiny at any corpus size."""
+    d = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
+    wq = Window.partitionBy("query_id").orderBy("d", "cid")
+    return (
+        queries.crossJoin(
+            broadcast(cent.select("cid", F.col("vec").alias("cent_vec")))
+        )
+        .select(*queries.columns, "cid", "cent_vec", d.alias("d"))
+        .withColumn("r", F.row_number().over(wq))
+        .filter(F.col("r") <= n_probe)
+        .drop("d", "r")
+    )
+
+
+def _write_index(
+    root: str,
+    cells: DataFrame,
+    cent: DataFrame | None = None,
+    name: str = "assignments",
+    mode: str = "overwrite",
+) -> None:
+    """Persist an IVF index under ``root``: ``cells`` partitioned by
+    ``cid`` in ``root/name`` (one directory per inverted list) and, when
+    given, the centroid table in ``root/centroids``."""
+    cells.write.mode(mode).partitionBy("cid").parquet(os.path.join(root, name))
+    if cent is not None:
+        cent.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
+
+
+def _pruned_read(
+    spark: SparkSession, path: str, probes: DataFrame, **also: str
+) -> DataFrame:
+    """The persisted cells at ``path``, read back from the probed ``cid=``
+    directories only.  The probed cids are collected (n_queries x n_probe
+    values) and pushed as a static partition filter; each
+    ``index_col=probe_col`` in ``also`` pushes that probe column's
+    collected values as a filter on ``index_col`` too."""
+    rows = probes.select("cid", *also.values()).collect()
+    scan = spark.read.parquet(path)
+    for col, src in {"cid": "cid", **also}.items():
+        scan = scan.filter(F.col(col).isin(sorted({r[src] for r in rows})))
+    return scan
 
 
 def _update(assigned: DataFrame) -> DataFrame:
@@ -118,7 +179,7 @@ def kmeans_assign(
     cent = _seed_centroids(base, k, id_col)
     assigned = None
     for _ in range(n_iter):
-        assigned = _assign(base, cent, id_col)
+        assigned = _assign(base, cent)
         cent = _update(assigned)
     return assigned.select(id_col, "cid")
 
@@ -152,5 +213,5 @@ def kmeans_centroids(
     base = _base(df, id_col, vec_col)
     cent = _seed_centroids(base, k, id_col)
     for _ in range(n_iter):
-        cent = _update(_assign(base, cent, id_col))
+        cent = _update(_assign(base, cent))
     return cent

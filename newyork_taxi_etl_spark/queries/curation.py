@@ -16,7 +16,7 @@ from newyork_taxi_etl_spark.functions.text import shingles_sql
 from newyork_taxi_etl_spark.operators import curation as C
 from newyork_taxi_etl_spark.registry import register
 from newyork_taxi_etl_spark.session import scratch, spread
-from newyork_taxi_etl_spark.sources.readers import table
+from newyork_taxi_etl_spark.sources.readers import _parquet, table
 
 _SH = shingles_sql("text", 3)
 
@@ -1026,8 +1026,9 @@ def _build_logreg_weights(spark, docs, target: str) -> None:
 
 
 def _read_logreg_weights(spark, path: str) -> list[float]:
-    """The weight vector a ``_build_logreg_weights`` table holds."""
-    rows = spark.read.parquet(path).collect()
+    """The weight vector a ``_build_logreg_weights`` table holds (read
+    through the schema memo: the table never changes once built)."""
+    rows = _parquet(spark, path).collect()
     return [r["w"] for r in sorted(rows, key=lambda r: r["j"])]
 
 

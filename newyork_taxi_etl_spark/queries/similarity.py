@@ -657,9 +657,11 @@ def ann_ivf_kmeans_topk(spark, sf_dir):
 
 
 def _ivf_kmeans_topk(emb, k=5, n_probe=2, cent=None):
+    from pyspark.sql import Window
+
     from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
+        _assign,
+        _probe,
         kmeans_centroids,
     )
 
@@ -672,41 +674,19 @@ def _ivf_kmeans_topk(emb, k=5, n_probe=2, cent=None):
         F.col("embedding"),
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("_v"),
     )
-    from pyspark.sql import Window
-
-    # corpus assignment: the clustering module's zero-shuffle argmin fold
-    # over ONE broadcast centroid-array row — the crossJoin + window
-    # formulation multiplies the corpus by k and hash-exchanges it, which
-    # at 100 TB is the dominant cost of the whole query (review finding).
-    # Identical strict-< lower-cid tie-break as ROW_NUMBER (d, cid).
-    cent_row = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
+    assigned = _assign(base, cent).select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").alias("c_vec"),
+        "cid",
     )
-    assigned = (
-        base.join(F.broadcast(cent_row), how="cross")
-        .withColumn("cid", F.expr(_ARGMIN))
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("embedding").alias("c_vec"),
-            "cid",
-        )
-    )
-    # query probing stays window-based: n_queries x k rows is tiny
-    cent = cent.select("cid", F.col("vec").alias("cent_vec"))
-    d = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
-    wq = Window.partitionBy("query_id").orderBy("d", "cid")
-    probes = (
-        base.filter(F.col("vec_id") < 5)
-        .select(
+    probes = _probe(
+        base.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_vec"),
             "_v",
-        )
-        .crossJoin(F.broadcast(cent))
-        .select("query_id", "q_vec", "cid", d.alias("d"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= n_probe)
-        .select("query_id", "q_vec", "cid")
+        ),
+        cent,
+        n_probe,
     )
     scored = (
         assigned.join(F.broadcast(probes), "cid")
@@ -931,29 +911,26 @@ def _pq_parts_v(base, k_codes: int = _PQ_K, train: bool = False):
 def _ivf_centroids_cached(spark, emb, sf_dir: str, k: int = 8):
     """The trained IVF coarse quantizer (k=8, one exact-mean Lloyd round
     — deterministic: lowest-vec_id seeds, decimal means, strict-< argmin)
-    persisted ONCE per corpus through the stage cache.  Seven registered
-    queries each re-ran this training on the identical input
-    (ann_ivf_kmeans_topk, ann_recall_trained's ivf leg, the persisted/
-    filtered index probes, knn_label_accuracy_indexed,
-    ann_ranking_quality, ann_ivf_balance) plus both IVFPQ index builds;
-    they now read the same 8-row table back — doubles round-trip parquet
-    bit-exactly, so hit and miss paths are value-identical.  Subset
-    trainers (incremental append, streaming ingest) keep their own
-    builds: their input is not the full corpus."""
-    import os
-
+    persisted ONCE per corpus through the stage cache.  Every full-corpus
+    IVF consumer (ann_ivf_kmeans_topk, ann_recall_trained's ivf leg, the
+    persisted/filtered index probes, knn_label_accuracy_indexed,
+    ann_ranking_quality, ann_ivf_balance, the SemDeDup and prototype
+    pruning selections, both IVFPQ index builds) reads the same k-row
+    table back — doubles round-trip parquet bit-exactly, so hit and miss
+    paths are value-identical.  Subset trainers (incremental append,
+    streaming ingest) keep their own builds: their input is not the full
+    corpus."""
     from newyork_taxi_etl_spark.operators.clustering import (
         kmeans_centroids,
     )
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
+    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
 
-    def build(target: str) -> None:
-        kmeans_centroids(emb, k=k, n_iter=1).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(target, "centroids"))
-
-    sdir = _stage_cached(None, f"ivfcent{k}:{sf_dir}", build)
-    return spark.read.parquet(os.path.join(sdir, "centroids"))
+    return df_stage_cached(
+        spark,
+        f"ivfcent{k}:{sf_dir}",
+        lambda: kmeans_centroids(emb, k=k, n_iter=1),
+        n_files=1,
+    )
 
 
 def _pq_trained_cached(
@@ -1451,8 +1428,10 @@ def _ivfpq_adc_topk(spark, sf_dir, k=5, n_probe=2):
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
+        _assign,
+        _probe,
+        _pruned_read,
+        _write_index,
     )
     from newyork_taxi_etl_spark.streaming.windows import _stage_cached
 
@@ -1466,22 +1445,14 @@ def _ivfpq_adc_topk(spark, sf_dir, k=5, n_probe=2):
     subvecs, _, _, d = _pq_parts(emb, k_codes=16, train=False)
 
     def build(target: str) -> None:
-        # BUILD: coarse quantizer + cell assignment (zero-shuffle argmin
-        # fold over one broadcast centroid-array row), PQ codes from the
+        # BUILD: coarse quantizer + cell assignment, PQ codes from the
         # family-cached trained codebooks; inverted lists persisted
-        # partitioned by cid.  Stage-cached per corpus (r13 verdict item
-        # 2): k/n_probe only shape the PROBE, so one persisted index
-        # serves ann_ivfpq_adc_topk AND ann_recall_ivfpq's k=10 leg.
+        # partitioned by cid.  Stage-cached per corpus: k/n_probe only
+        # shape the PROBE, so one persisted index serves
+        # ann_ivfpq_adc_topk AND ann_recall_ivfpq's k=10 leg.
         cent = _ivf_centroids_cached(spark, emb, sf_dir)
-        cent_row = cent.agg(
-            F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias(
-                "cents"
-            )
-        )
-        cells = (
-            base.join(F.broadcast(cent_row), how="cross")
-            .withColumn("cid", F.expr(_ARGMIN))
-            .select(F.col("vec_id").alias("cand_id"), "cid")
+        cells = _assign(base, cent).select(
+            F.col("vec_id").alias("cand_id"), "cid"
         )
         base_v = emb.select(
             "vec_id",
@@ -1492,44 +1463,30 @@ def _ivfpq_adc_topk(spark, sf_dir, k=5, n_probe=2):
         _, codebook, encoded, _ = _pq_trained_cached(
             spark, base_v, f"pqt16_raw:{sf_dir}"
         )
-        (
-            encoded.select(
-                F.col("vec_id").alias("cand_id"), "subspace", "code"
-            )
-            .join(cells, "cand_id")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(os.path.join(target, "codes"))
-        )
+        codes = encoded.select(
+            F.col("vec_id").alias("cand_id"), "subspace", "code"
+        ).join(cells, "cand_id")
+        _write_index(target, codes, cent, name="codes")
         codebook.write.mode("overwrite").parquet(
             os.path.join(target, "codebook")
-        )
-        cent.write.mode("overwrite").parquet(
-            os.path.join(target, "centroids")
         )
 
     idx_root = _stage_cached(None, f"ivfpqidx_raw:{sf_dir}", build)
 
     # PROBE: nearest n_probe cells per query from persisted centroids,
     # pushed as a static partition filter on the code scan
-    cent_t = spark.read.parquet(os.path.join(idx_root, "centroids")).select(
-        "cid", F.col("vec").alias("cent_vec")
-    )
-    dq = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
-    wq = Window.partitionBy("query_id").orderBy("d", "cid")
     probes = (
-        base.filter(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), "_v")
-        .crossJoin(F.broadcast(cent_t))
-        .select("query_id", "cid", dq.alias("d"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= n_probe)
+        _probe(
+            base.filter(F.col("vec_id") < 5).select(
+                F.col("vec_id").alias("query_id"), "_v"
+            ),
+            spark.read.parquet(os.path.join(idx_root, "centroids")),
+            n_probe,
+        )
         .select("query_id", "cid")
-    ).localCheckpoint(eager=True)
-    probe_cids = sorted({r["cid"] for r in probes.collect()})
-    idx_scan = spark.read.parquet(os.path.join(idx_root, "codes")).filter(
-        F.col("cid").isin(probe_cids)
+        .localCheckpoint(eager=True)
     )
+    idx_scan = _pruned_read(spark, os.path.join(idx_root, "codes"), probes)
 
     # per-query distance tables from the PERSISTED codebook (m x k rows
     # per query); ADC = m lookups per candidate, decimal-summed
@@ -1615,8 +1572,10 @@ def _ivfpq_residual_topk(spark, sf_dir, k=5, n_probe=2):
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
+        _assign,
+        _probe,
+        _pruned_read,
+        _write_index,
     )
     from newyork_taxi_etl_spark.streaming.windows import _stage_cached
 
@@ -1631,20 +1590,11 @@ def _ivfpq_residual_topk(spark, sf_dir, k=5, n_probe=2):
     def build(target: str) -> None:
         # BUILD: coarse quantizer, cell assignment, RESIDUALS per vector,
         # PQ trained on the residuals, codes persisted partitioned by
-        # cid.  Stage-cached per corpus (r13 verdict item 2): k/n_probe
-        # shape only the probe, so the one persisted index serves
-        # ann_ivfpq_residual_topk AND ann_recall_ivfpq's k=10 leg.
+        # cid.  Stage-cached per corpus: k/n_probe shape only the probe,
+        # so the one persisted index serves ann_ivfpq_residual_topk AND
+        # ann_recall_ivfpq's k=10 leg.
         cent = _ivf_centroids_cached(spark, emb, sf_dir)
-        cent_row = cent.agg(
-            F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias(
-                "cents"
-            )
-        )
-        cells = (
-            base.join(F.broadcast(cent_row), how="cross")
-            .withColumn("cid", F.expr(_ARGMIN))
-            .select("vec_id", "cid")
-        )
+        cells = _assign(base, cent).select("vec_id", "cid")
         cent_v = cent.select("cid", F.col("vec").alias("cvec"))
         resid = (
             base.join(cells, "vec_id")
@@ -1658,51 +1608,37 @@ def _ivfpq_residual_topk(spark, sf_dir, k=5, n_probe=2):
         _, codebook, encoded, _ = _pq_parts_v(
             resid.select("vec_id", "v"), k_codes=16, train=True
         )
-        (
-            encoded.select(
-                F.col("vec_id").alias("cand_id"), "subspace", "code"
-            )
-            .join(
-                cells.select(F.col("vec_id").alias("cand_id"), "cid"),
-                "cand_id",
-            )
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(os.path.join(target, "codes"))
+        codes = encoded.select(
+            F.col("vec_id").alias("cand_id"), "subspace", "code"
+        ).join(
+            cells.select(F.col("vec_id").alias("cand_id"), "cid"),
+            "cand_id",
         )
+        _write_index(target, codes, cent, name="codes")
         codebook.write.mode("overwrite").parquet(
             os.path.join(target, "codebook")
-        )
-        cent.write.mode("overwrite").parquet(
-            os.path.join(target, "centroids")
         )
 
     idx_root = _stage_cached(None, f"ivfpqidx_res:{sf_dir}", build)
 
     # PROBE: n_probe cells per query; the query's distance table is
     # built PER PROBED CELL from its residual against that centroid
-    cent_t = spark.read.parquet(os.path.join(idx_root, "centroids")).select(
-        "cid", F.col("vec").alias("cent_vec")
-    )
-    dq = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
-    wq = Window.partitionBy("query_id").orderBy("d", "cid")
     probes = (
-        base.filter(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), "_v")
-        .crossJoin(F.broadcast(cent_t))
-        .select("query_id", "_v", "cid", "cent_vec", dq.alias("d"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= n_probe)
+        _probe(
+            base.filter(F.col("vec_id") < 5).select(
+                F.col("vec_id").alias("query_id"), "_v"
+            ),
+            spark.read.parquet(os.path.join(idx_root, "centroids")),
+            n_probe,
+        )
         .select(
             "query_id",
             "cid",
             F.expr("zip_with(_v, cent_vec, (x, y) -> x - y)").alias("qr"),
         )
-    ).localCheckpoint(eager=True)
-    probe_cids = sorted({r["cid"] for r in probes.select("cid").collect()})
-    idx_scan = spark.read.parquet(os.path.join(idx_root, "codes")).filter(
-        F.col("cid").isin(probe_cids)
+        .localCheckpoint(eager=True)
     )
+    idx_scan = _pruned_read(spark, os.path.join(idx_root, "codes"), probes)
 
     cbk = spark.read.parquet(os.path.join(idx_root, "codebook"))
     sub_slices = F.array(
@@ -2441,8 +2377,10 @@ def ann_index_persisted_probe(spark, sf_dir):
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
+        _assign,
+        _probe,
+        _pruned_read,
+        _write_index,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -2455,48 +2393,27 @@ def ann_index_persisted_probe(spark, sf_dir):
 
     # BUILD: train the quantizer, assign the corpus, persist both tables
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
-    cent_row = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
+    cells = _assign(base, cent).select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").alias("c_vec"),
+        "cid",
     )
-    (
-        base.join(F.broadcast(cent_row), how="cross")
-        .withColumn("cid", F.expr(_ARGMIN))
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("embedding").alias("c_vec"),
-            "cid",
-        )
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(os.path.join(idx_root, "assignments"))
-    )
-    cent.write.mode("overwrite").parquet(os.path.join(idx_root, "centroids"))
+    _write_index(idx_root, cells, cent)
 
-    # PROBE: nearest n_probe lists per query from the persisted centroids
-    cent_t = spark.read.parquet(os.path.join(idx_root, "centroids")).select(
-        "cid", F.col("vec").alias("cent_vec")
-    )
-    d = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
-    wq = Window.partitionBy("query_id").orderBy("d", "cid")
-    probes = (
-        base.filter(F.col("vec_id") < 5)
-        .select(
+    # PROBE: nearest n_probe lists per query from the persisted centroids;
+    # the index scan reads only the probed cid= directories
+    probes = _probe(
+        base.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_vec"),
             "_v",
-        )
-        .crossJoin(F.broadcast(cent_t))
-        .select("query_id", "q_vec", "cid", d.alias("d"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= 2)
-        .select("query_id", "q_vec", "cid")
+        ),
+        spark.read.parquet(os.path.join(idx_root, "centroids")),
+        2,
     )
-    # planner-style fetch of the probe lists (n_queries x n_probe values)
-    # -> STATIC partition filter, so the index scan prunes to those dirs
-    probe_cids = sorted({r["cid"] for r in probes.select("cid").collect()})
-    idx_scan = spark.read.parquet(
-        os.path.join(idx_root, "assignments")
-    ).filter(F.col("cid").isin(probe_cids))
+    idx_scan = _pruned_read(
+        spark, os.path.join(idx_root, "assignments"), probes
+    )
 
     scored = (
         idx_scan.join(F.broadcast(probes), "cid")
@@ -2601,9 +2518,12 @@ def ann_index_filtered_probe(spark, sf_dir):
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
+        _assign,
+        _probe,
+        _pruned_read,
+        _write_index,
     )
+
     emb = spread(table(spark, sf_dir, "embeddings"))
     base = emb.select(
         "vec_id",
@@ -2616,52 +2536,32 @@ def ann_index_filtered_probe(spark, sf_dir):
     # BUILD: the persisted-probe lifecycle, with the filterable payload
     # (label) stored in the index
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
-    cent_row = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
+    cells = _assign(base, cent).select(
+        F.col("vec_id").alias("cand_id"),
+        "label",
+        F.col("embedding").alias("c_vec"),
+        "cid",
     )
-    (
-        base.join(F.broadcast(cent_row), how="cross")
-        .withColumn("cid", F.expr(_ARGMIN))
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            "label",
-            F.col("embedding").alias("c_vec"),
-            "cid",
-        )
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(os.path.join(idx_root, "assignments"))
-    )
-    cent.write.mode("overwrite").parquet(os.path.join(idx_root, "centroids"))
+    _write_index(idx_root, cells, cent)
 
     # PROBE: n_probe cells per query; the label predicate pushes to the
     # pruned scan as the UNION of query labels, then refines per query
-    cent_t = spark.read.parquet(os.path.join(idx_root, "centroids")).select(
-        "cid", F.col("vec").alias("cent_vec")
-    )
-    d = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
-    wq = Window.partitionBy("query_id").orderBy("d", "cid")
     probes = (
-        base.filter(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("q_label"),
-            F.col("embedding").alias("q_vec"),
-            "_v",
+        _probe(
+            base.filter(F.col("vec_id") < 5).select(
+                F.col("vec_id").alias("query_id"),
+                F.col("label").alias("q_label"),
+                F.col("embedding").alias("q_vec"),
+                "_v",
+            ),
+            spark.read.parquet(os.path.join(idx_root, "centroids")),
+            2,
         )
-        .crossJoin(F.broadcast(cent_t))
-        .select("query_id", "q_label", "q_vec", "cid", d.alias("d"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= 2)
         .select("query_id", "q_label", "q_vec", "cid")
-    ).localCheckpoint(eager=True)
-    rows = probes.select("cid", "q_label").collect()
-    probe_cids = sorted({r["cid"] for r in rows})
-    probe_labels = sorted({r["q_label"] for r in rows})
-    idx_scan = (
-        spark.read.parquet(os.path.join(idx_root, "assignments"))
-        .filter(F.col("cid").isin(probe_cids))
-        .filter(F.col("label").isin(probe_labels))
+        .localCheckpoint(eager=True)
+    )
+    idx_scan = _pruned_read(
+        spark, os.path.join(idx_root, "assignments"), probes, label="q_label"
     )
 
     scored = (
@@ -2782,8 +2682,10 @@ def ann_index_incremental_append(spark, sf_dir):
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
+        _assign,
+        _probe,
+        _pruned_read,
+        _write_index,
         kmeans_centroids,
     )
 
@@ -2796,64 +2698,40 @@ def ann_index_incremental_append(spark, sf_dir):
     initial = base.filter((F.col("vec_id") % 4) != 0)
     new_batch = base.filter((F.col("vec_id") % 4) == 0)
     idx_root = scratch("annidx_incr")
-    assign_dir = os.path.join(idx_root, "assignments")
 
-    def assign_and_write(part, cent_row, mode):
-        (
-            part.join(F.broadcast(cent_row), how="cross")
-            .withColumn("cid", F.expr(_ARGMIN))
-            .select(
-                F.col("vec_id").alias("cand_id"),
-                F.col("embedding").alias("c_vec"),
-                "cid",
-            )
-            .write.mode(mode)
-            .partitionBy("cid")
-            .parquet(assign_dir)
+    def cells(part, cent):
+        return _assign(part, cent).select(
+            F.col("vec_id").alias("cand_id"),
+            F.col("embedding").alias("c_vec"),
+            "cid",
         )
 
     # BUILD: train on the initial corpus only; persist index + quantizer
     cent = kmeans_centroids(
         emb.filter((F.col("vec_id") % 4) != 0), k=8, n_iter=1
     )
-    cent_row = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
-    )
-    assign_and_write(initial, cent_row, "overwrite")
-    cent.write.mode("overwrite").parquet(os.path.join(idx_root, "centroids"))
+    _write_index(idx_root, cells(initial, cent), cent)
 
     # APPEND: the new batch is assigned by the PERSISTED quantizer (the
     # appender reads it back — no trainer state survives the build) and
     # lands in the same partitioned table as an append: O(batch) compute,
     # no touch of the existing partitions' files.
     cent_t = spark.read.parquet(os.path.join(idx_root, "centroids"))
-    cent_row_persisted = cent_t.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
-    )
-    assign_and_write(new_batch, cent_row_persisted, "append")
+    _write_index(idx_root, cells(new_batch, cent_t), mode="append")
 
     # PROBE: nearest n_probe=2 lists per query from the persisted
     # centroids, pushed as a static partition filter on the appended table
-    d = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
-    wq = Window.partitionBy("query_id").orderBy("d", "cid")
-    probes = (
-        base.filter(F.col("vec_id") < 5)
-        .select(
+    probes = _probe(
+        base.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_vec"),
             "_v",
-        )
-        .crossJoin(
-            F.broadcast(cent_t.select("cid", F.col("vec").alias("cent_vec")))
-        )
-        .select("query_id", "q_vec", "cid", d.alias("d"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= 2)
-        .select("query_id", "q_vec", "cid")
+        ),
+        cent_t,
+        2,
     )
-    probe_cids = sorted({r["cid"] for r in probes.select("cid").collect()})
-    idx_scan = spark.read.parquet(assign_dir).filter(
-        F.col("cid").isin(probe_cids)
+    idx_scan = _pruned_read(
+        spark, os.path.join(idx_root, "assignments"), probes
     )
     scored = (
         idx_scan.join(F.broadcast(probes), "cid")
@@ -3590,7 +3468,7 @@ _KNN_IDX_EVAL_SQL = f"""
     "knn_label_accuracy_indexed",
     _KNN_IDX_EVAL_SQL,
     doc="INDEX-PROBE evaluation twin of knn_label_accuracy (the "
-    "measurement its docstring promises, r8 verdict item): the SAME "
+    "measurement its docstring promises): the SAME "
     "fixed-N (512, md5-order) query sample is 1-NN-classified twice — "
     "once brute-force against the whole corpus (the exact baseline, "
     "O(N x corpus)) and once with candidates generated by the PERSISTED "
@@ -3612,8 +3490,10 @@ def knn_label_accuracy_indexed(spark, sf_dir):
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
+        _assign,
+        _probe,
+        _pruned_read,
+        _write_index,
     )
     from newyork_taxi_etl_spark.operators.similarity import _DOT
 
@@ -3622,8 +3502,8 @@ def knn_label_accuracy_indexed(spark, sf_dir):
     # serving index carries them for exactly this reason) — one dot per
     # pair instead of cosine_expr's three; sqrt(dot(v,v)) is the same
     # expression subtree, so the rounded cosine is bit-identical to the
-    # oracle's inline formulation (the r7 semantic_dedup_buckets lesson;
-    # measured 20s -> ~7s on the sf0.1 bench for this query)
+    # oracle's inline formulation (measured 20s -> ~7s on the sf0.1
+    # bench for this query)
     base = emb.select(
         "vec_id",
         "label",
@@ -3639,27 +3519,17 @@ def knn_label_accuracy_indexed(spark, sf_dir):
     # coarse quantizer, assign the corpus, persist partitioned by cid
     # (labels ride along as the payload a serving index would carry)
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
-    cent_row = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
+    cells = _assign(base, cent).select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("label").alias("pred_label"),
+        F.col("embedding").alias("c_vec"),
+        F.col("nrm").alias("c_nrm"),
+        "cid",
     )
-    (
-        base.join(F.broadcast(cent_row), how="cross")
-        .withColumn("cid", F.expr(_ARGMIN))
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("label").alias("pred_label"),
-            F.col("embedding").alias("c_vec"),
-            F.col("nrm").alias("c_nrm"),
-            "cid",
-        )
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(os.path.join(idx_root, "assignments"))
-    )
-    cent.write.mode("overwrite").parquet(os.path.join(idx_root, "centroids"))
+    _write_index(idx_root, cells, cent)
 
     # sample from the RAW read — _v/nrm derive on the 512 checkpointed
-    # rows, not corpus-wide on the sample branch (r9 watch item)
+    # rows, not corpus-wide on the sample branch
     qs = _fixed_n_queries(emb).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("true_label"),
@@ -3671,22 +3541,12 @@ def knn_label_accuracy_indexed(spark, sf_dir):
     )
 
     # PROBE: nearest n_probe=2 lists per query from persisted centroids
-    cent_t = spark.read.parquet(os.path.join(idx_root, "centroids")).select(
-        "cid", F.col("vec").alias("cent_vec")
+    probes = _probe(
+        qs, spark.read.parquet(os.path.join(idx_root, "centroids")), 2
+    ).select("query_id", "q_vec", "q_nrm", "cid")
+    idx_scan = _pruned_read(
+        spark, os.path.join(idx_root, "assignments"), probes
     )
-    d = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
-    wq = Window.partitionBy("query_id").orderBy("d", "cid")
-    probes = (
-        qs.crossJoin(F.broadcast(cent_t))
-        .select("query_id", "q_vec", "q_nrm", "cid", d.alias("d"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= 2)
-        .select("query_id", "q_vec", "q_nrm", "cid")
-    )
-    probe_cids = sorted({r["cid"] for r in probes.select("cid").collect()})
-    idx_scan = spark.read.parquet(
-        os.path.join(idx_root, "assignments")
-    ).filter(F.col("cid").isin(probe_cids))
 
     cos = F.expr(
         f"round({_DOT.format(a='q_vec', b='c_vec')} / (q_nrm * c_nrm), 4)"
@@ -4783,15 +4643,17 @@ def ann_ranking_quality(spark, sf_dir):
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
+        _assign,
+        _probe,
+        _pruned_read,
+        _write_index,
     )
     from newyork_taxi_etl_spark.operators.similarity import _DOT
 
     emb = spread(table(spark, sf_dir, "embeddings"))
-    # norms precomputed once per vector and stored in the index (the r7
-    # semantic_dedup_buckets lesson): sqrt(dot(v,v)) is the same subtree
-    # the oracle's inline cosine evaluates, so the 4-dp cosine matches
+    # norms precomputed once per vector and stored in the index:
+    # sqrt(dot(v,v)) is the same subtree the oracle's inline cosine
+    # evaluates, so the 4-dp cosine matches
     base = emb.select(
         "vec_id",
         "embedding",
@@ -4805,26 +4667,16 @@ def ann_ranking_quality(spark, sf_dir):
     # BUILD: the ann_index_persisted_probe lifecycle — train the coarse
     # quantizer, assign the corpus, persist partitioned by cid
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
-    cent_row = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
+    cells = _assign(base, cent).select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").alias("c_vec"),
+        F.col("nrm").alias("c_nrm"),
+        "cid",
     )
-    (
-        base.join(F.broadcast(cent_row), how="cross")
-        .withColumn("cid", F.expr(_ARGMIN))
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("embedding").alias("c_vec"),
-            F.col("nrm").alias("c_nrm"),
-            "cid",
-        )
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(os.path.join(idx_root, "assignments"))
-    )
-    cent.write.mode("overwrite").parquet(os.path.join(idx_root, "centroids"))
+    _write_index(idx_root, cells, cent)
 
     # sample from the RAW read — _v/nrm derive on the 128 checkpointed
-    # rows, not corpus-wide on the sample branch (r9 watch item)
+    # rows, not corpus-wide on the sample branch
     qs = _fixed_n_queries(emb, n=_RANK_QUERY_N).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
@@ -4836,22 +4688,12 @@ def ann_ranking_quality(spark, sf_dir):
 
     # PROBE: nearest n_probe=2 lists per query from persisted centroids,
     # pushed as a static partition filter on the assignments read
-    cent_t = spark.read.parquet(os.path.join(idx_root, "centroids")).select(
-        "cid", F.col("vec").alias("cent_vec")
+    probes = _probe(
+        qs, spark.read.parquet(os.path.join(idx_root, "centroids")), 2
+    ).select("query_id", "q_vec", "q_nrm", "cid")
+    idx_scan = _pruned_read(
+        spark, os.path.join(idx_root, "assignments"), probes
     )
-    d = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
-    wq = Window.partitionBy("query_id").orderBy("d", "cid")
-    probes = (
-        qs.crossJoin(F.broadcast(cent_t))
-        .select("query_id", "q_vec", "q_nrm", "cid", d.alias("d"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= 2)
-        .select("query_id", "q_vec", "q_nrm", "cid")
-    )
-    probe_cids = sorted({r["cid"] for r in probes.select("cid").collect()})
-    idx_scan = spark.read.parquet(
-        os.path.join(idx_root, "assignments")
-    ).filter(F.col("cid").isin(probe_cids))
 
     cos = F.expr(
         f"round({_DOT.format(a='q_vec', b='c_vec')} / (q_nrm * c_nrm), 4)"
@@ -6269,21 +6111,16 @@ def ann_opq_trained_recall(spark, sf_dir):
     "broadcast-argmin assignment + one k-row aggregate",
 )
 def ann_ivf_balance(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-    )
+    from newyork_taxi_etl_spark.operators.clustering import _assign
+
     emb = spread(table(spark, sf_dir, "embeddings"))
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("_v"),
     )
-    cent_row = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
-    )
     lists = (
-        base.join(F.broadcast(cent_row), how="cross")
-        .withColumn("cid", F.expr(_ARGMIN))
+        _assign(base, cent)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_i"))
     )
@@ -7242,13 +7079,14 @@ assert _IVF_COARSE_ADAPTIVE != _IVF_COARSE_CTES, (
     "the cached 8-row broadcast.",
 )
 def semantic_dedup_kmeans(spark, sf_dir):
-    from newyork_taxi_etl_spark.operators.clustering import _ARGMIN
+    from newyork_taxi_etl_spark.operators.clustering import _assign
+
     emb = spread(table(spark, sf_dir, "embeddings"))
     # constant cluster SIZE (the SemDeDup contract): k grows with the
     # corpus once cells would exceed ~750 members; at every shipped SF
     # this is the shared k=8 build.  n comes from the parquet footer
     # (exact, zero Spark jobs) so a centroid-stage cache hit skips the
-    # corpus entirely (r14 ADVICE).
+    # corpus entirely.
     from newyork_taxi_etl_spark.sources.readers import (
         parquet_rowcount,
         parquet_value_count,
@@ -7257,19 +7095,12 @@ def semantic_dedup_kmeans(spark, sf_dir):
     emb_path = table_path(sf_dir, "embeddings")
     k = max(8, parquet_rowcount(emb_path) // _SEMDEDUP_CELL)
     cent = _ivf_centroids_cached(spark, emb, sf_dir, k=k)
-    cent_row = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
-    )
     base = emb.select(
         "vec_id",
         "embedding",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("_v"),
     )
-    cells = (
-        base.join(F.broadcast(cent_row), how="cross")
-        .withColumn("cid", F.expr(_ARGMIN))
-        .select("vec_id", "embedding", "cid")
-    )
+    cells = _assign(base, cent).select("vec_id", "embedding", "cid")
     members = cells.groupBy("cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")
     )
@@ -7298,7 +7129,7 @@ def semantic_dedup_kmeans(spark, sf_dir):
         F.col("nrm").alias("nb"),
     )
     dot = F.expr(_DOT.format(a="ea", b="eb"))
-    # r16 (guide §2.5/§3.1): the pair join's only key is cid, so its
+    # the pair join's only key is cid, so its
     # parallelism is capped at k (8 at every shipped SF) — a quarter of
     # the local cores idle under ~1.5M pairwise dots, and a byte-sized
     # salt is useless because AQE coalesces the tiny-bytes/heavy-CPU
@@ -7396,25 +7227,15 @@ def semantic_dedup_kmeans(spark, sf_dir):
 def prototype_pruning_select(spark, sf_dir):
     from pyspark.sql import Window
 
-    from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
-    )
+    from newyork_taxi_etl_spark.operators.clustering import _SQDIST, _assign
+
     emb = spread(table(spark, sf_dir, "embeddings"))
     cent = _ivf_centroids_cached(spark, emb, sf_dir)
-    cent_row = cent.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias("cents")
-    )
     base = emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("_v"),
     )
-    cells = (
-        base.join(F.broadcast(cent_row), how="cross")
-        .withColumn("cid", F.expr(_ARGMIN))
-        .select("vec_id", "_v", "cid")
-    )
-    dist = cells.join(
+    dist = _assign(base, cent).join(
         F.broadcast(cent.select("cid", F.col("vec").alias("cvec"))), "cid"
     ).select(
         "vec_id",

@@ -705,42 +705,34 @@ def _bpe_train_tops(docs, rounds=3):
     return tops
 
 
+#: merge rounds of every cached tokenizer trainer (each cache key names it)
+_TOPS_ROUNDS = 3
+
+
 def _tops_cached(spark, cache_key: str, builder):
-    """Stage-cache a tokenizer trainer's tiny per-round merge tables
-    (r15 optimization, guide §2.4/§1.2 — the _ivf_centroids_cached /
-    _logreg_weights_cached discipline applied to the four tokenizer
-    families): each family's iterative trainer (3 merge rounds / 2 EM
-    rounds, one eager argmax job per round) was re-run by EVERY consumer
-    — the standalone train/apply/holdout/drift queries AND all four legs
-    of tokenizer_family_bakeoff retrained identical vocab tables on the
+    """Stage-cache a tokenizer trainer's tiny per-round merge tables: each
+    family's iterative trainer (3 merge rounds, one eager argmax job per
+    round) would otherwise re-run for EVERY consumer — the
+    standalone train/apply/holdout/drift queries AND all four legs of
+    tokenizer_family_bakeoff retrain identical vocab tables on the
     identical corpus slice.  The per-round winners are deterministic
     (ties broken (n DESC, a, b)); strings/longs/doubles round-trip
     parquet bit-exactly, so hit and miss paths are value-identical.
-    Returns the per-round tables as a list of 1-row DataFrames, exactly
-    what the trainers return."""
-    import os
+    ``builder`` returns :data:`_TOPS_ROUNDS` tables; they come back as
+    that list of 1-row DataFrames, exactly what the trainers return."""
+    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
 
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
-
-    def build(target: str) -> None:
-        tops = builder()
+    def build():
         out = None
-        for i, t in enumerate(tops):
+        for i, t in enumerate(builder()):
             leg = t.select(F.lit(i).alias("step"), "*")
             out = leg if out is None else out.unionByName(leg)
-        os.makedirs(target, exist_ok=True)
-        out.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(target, "tops")
-        )
-        with open(os.path.join(target, "NROUNDS"), "w") as f:
-            f.write(str(len(tops)))
+        return out
 
-    sdir = _stage_cached(None, cache_key, build)
-    with open(os.path.join(sdir, "NROUNDS")) as f:
-        rounds = int(f.read())
-    allt = spark.read.parquet(os.path.join(sdir, "tops"))
+    allt = df_stage_cached(spark, cache_key, build, n_files=1)
     return [
-        allt.filter(F.col("step") == i).drop("step") for i in range(rounds)
+        allt.filter(F.col("step") == i).drop("step")
+        for i in range(_TOPS_ROUNDS)
     ]
 
 
@@ -806,21 +798,17 @@ def _uni_final_cached(spark, sf_dir, split: str):
     """train_unigram's final (piece, cnt) table through the same stage
     cache (em_rounds=2, keep_multi=24 — the only configuration any
     registered query trains)."""
-    import os
-
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
+    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
 
     docs = table(spark, sf_dir, "documents")
-
-    def build(target: str) -> None:
-        UNI.train_unigram(
+    return df_stage_cached(
+        spark,
+        f"unifinal_em2k24:{split}:{sf_dir}",
+        lambda: UNI.train_unigram(
             _split_docs(docs, split), em_rounds=2, keep_multi=24
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(target, "final")
-        )
-
-    sdir = _stage_cached(None, f"unifinal_em2k24:{split}:{sf_dir}", build)
-    return spark.read.parquet(os.path.join(sdir, "final"))
+        ),
+        n_files=1,
+    )
 
 
 def _bpe_encoded_words(spark, sf_dir):

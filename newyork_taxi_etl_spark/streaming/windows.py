@@ -348,14 +348,14 @@ def _stage_cached(stage_dir: str, cache_key: str | None, build) -> str:
 
 def df_stage_cached(spark, cache_key: str, build_df, n_files: int | None = None):
     """Parquet-backed per-process stage cache for a DETERMINISTIC
-    DataFrame shared by several registered queries (r16, guide §2.4/§1.2 —
-    the _tops_cached / _ivf_centroids_cached discipline generalized): the
-    first consumer in the process builds the stage from the parquet inputs
-    and every later consumer (including later bench reps) reads it back.
+    DataFrame shared by several registered queries: the first consumer in
+    the process builds the stage from the parquet inputs and every later
+    consumer (including later bench reps) reads it back.
 
-    Value identity: every column type the engine passes here (bigint,
-    double, string, boolean) round-trips parquet bit-exactly, and all
-    downstream consumers are row-order/partitioning independent.  Keys are
+    Value identity: every column type the engine passes here (int,
+    bigint, double, arrays of doubles, string, boolean) round-trips
+    parquet bit-exactly, and all downstream consumers are
+    row-order/partitioning independent.  Keys are
     corpus-fingerprinted (see :func:`_fingerprinted_key`) and the root is
     per-process with removal at exit — no cross-run reuse.
 
@@ -1022,7 +1022,7 @@ def run_streaming_lsh_index(
 
     # staged source is deterministic scaffolding (same rows, same 4 range
     # slices every invocation) — share it per process like the other
-    # drains' staged inputs (r16); index/pairs/checkpoint stay per-run
+    # drains' staged inputs; index/pairs/checkpoint stay per-run
     def _build_stage(target: str) -> None:
         docs_df.repartitionByRange(4, "doc_id").write.mode(
             "overwrite"
@@ -1060,7 +1060,10 @@ def run_streaming_lsh_index(
             )
         )
         if os.path.exists(index_dir):
-            idx = ss.read.parquet(index_dir)
+            # the index holds earlier batches' bands: read it with their
+            # schema (the fold appends every batch, so inferring it would
+            # start a job on every batch)
+            idx = ss.read.schema(bands.schema).parquet(index_dir)
             idx_hot = (
                 idx.groupBy("band_idx", "band_hash")
                 .agg(F.count(F.lit(1)).alias("_m"))
@@ -1889,9 +1892,9 @@ def run_streaming_linkage_ingest(
         ss = batch_df.sparkSession
         from pyspark.sql import Window
 
-        inv = ss.read.parquet(os.path.join(idx_dir, "inv"))
-        hot_t = ss.read.parquet(os.path.join(idx_dir, "hot"))
-        sz_a = ss.read.parquet(os.path.join(idx_dir, "sizes"))
+        inv = _parquet(ss, os.path.join(idx_dir, "inv"))
+        hot_t = _parquet(ss, os.path.join(idx_dir, "hot"))
+        sz_a = _parquet(ss, os.path.join(idx_dir, "sizes"))
         sh_b = with_shingles(batch_df, "text", 3).select(
             "b_id",
             F.col("lang").alias("blk"),
@@ -2086,8 +2089,10 @@ def run_streaming_ann_ingest(
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.clustering import (
-        _ARGMIN,
-        _SQDIST,
+        _assign,
+        _probe,
+        _pruned_read,
+        _write_index,
         kmeans_centroids,
     )
     from newyork_taxi_etl_spark.operators import similarity as S
@@ -2107,37 +2112,25 @@ def run_streaming_ann_ingest(
     initial = base.filter((F.col("vec_id") % 4) != 0)
     arriving = base.filter((F.col("vec_id") % 4) == 0)
 
+    def cells(part, cent):
+        return _assign(part, cent).select(
+            F.col("vec_id").alias("cand_id"),
+            F.col("embedding").alias("c_vec"),
+            "cid",
+        )
+
     # -- build once: train on the initial corpus, persist both tables ---
     # The trained snapshot (centroids + initial assignments + staged
     # arriving vectors) is deterministic and read-only, so it shares per
-    # process (r16); the APPENDED-to assignments table is copied out of
-    # the snapshot into the per-run dir (the drain mutates it, and the
+    # process; the APPENDED-to assignments table is copied out of the
+    # snapshot into the per-run dir (the drain mutates it, and the
     # applied-batch sidecar must start clean every run).
     def _build_snapshot(target: str) -> None:
         os.makedirs(target, exist_ok=True)
         cent = kmeans_centroids(
             emb_df.filter((F.col("vec_id") % 4) != 0), k=8, n_iter=1
         )
-        cent_row = cent.agg(
-            F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias(
-                "cents"
-            )
-        )
-        (
-            initial.join(F.broadcast(cent_row), how="cross")
-            .withColumn("cid", F.expr(_ARGMIN))
-            .select(
-                F.col("vec_id").alias("cand_id"),
-                F.col("embedding").alias("c_vec"),
-                "cid",
-            )
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(os.path.join(target, "assignments"))
-        )
-        cent.write.mode("overwrite").parquet(
-            os.path.join(target, "centroids")
-        )
+        _write_index(target, cells(initial, cent), cent)
         arriving.drop("_v").repartition(n_slices).write.mode(
             "overwrite"
         ).parquet(os.path.join(target, "stage"))
@@ -2157,52 +2150,26 @@ def run_streaming_ann_ingest(
     stream = _stream_stage(spark, arriving.drop("_v").schema, stage_dir, 1)
 
     def assign_batch(batch_df, batch_id):
-        cent_row_persisted = (
-            batch_df.sparkSession.read.parquet(cent_dir)
-            .agg(
-                F.array_sort(F.collect_list(F.struct("cid", "vec"))).alias(
-                    "cents"
-                )
-            )
-        )
-        return (
+        return cells(
             batch_df.withColumn(
                 "_v", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-            )
-            .join(F.broadcast(cent_row_persisted), how="cross")
-            .withColumn("cid", F.expr(_ARGMIN))
-            .select(
-                F.col("vec_id").alias("cand_id"),
-                F.col("embedding").alias("c_vec"),
-                "cid",
-            )
+            ),
+            _parquet(batch_df.sparkSession, cent_dir),
         )
 
     _run_drain(stream, 16, _append_fold(assign_dir, assign_batch, "cid"))
 
     # -- probe the drained table, partition-pruned ----------------------
-    cent_t = spark.read.parquet(cent_dir)
-    d = F.expr(_SQDIST.format(a="_v", b="cent_vec"))
-    wq = Window.partitionBy("query_id").orderBy("d", "cid")
-    probes = (
-        base.filter(F.col("vec_id") < 5)
-        .select(
+    probes = _probe(
+        base.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_vec"),
             "_v",
-        )
-        .crossJoin(
-            F.broadcast(cent_t.select("cid", F.col("vec").alias("cent_vec")))
-        )
-        .select("query_id", "q_vec", "cid", d.alias("d"))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= 2)
-        .select("query_id", "q_vec", "cid")
+        ),
+        spark.read.parquet(cent_dir),
+        2,
     )
-    probe_cids = sorted({r["cid"] for r in probes.select("cid").collect()})
-    idx_scan = spark.read.parquet(assign_dir).filter(
-        F.col("cid").isin(probe_cids)
-    )
+    idx_scan = _pruned_read(spark, assign_dir, probes)
     scored = (
         idx_scan.join(F.broadcast(probes), "cid")
         .filter(F.col("cand_id") != F.col("query_id"))
@@ -2698,7 +2665,7 @@ def run_streaming_dsir_ingest(
 
     # build once: the 64-row log-ratio model, persisted as the serving
     # artifact (at scale: a tiny table every executor broadcasts) —
-    # shared per process with the staged docs (r16); partials per-run
+    # shared per process with the staged docs; partials per-run
     model_dir = _stage_cached(
         model_dir,
         cache_key and f"{cache_key}:dsirmodel",
@@ -2718,7 +2685,7 @@ def run_streaming_dsir_ingest(
     )
 
     def batch_rows(batch_df, batch_id):
-        lr_tab = batch_df.sparkSession.read.parquet(model_dir)
+        lr_tab = _parquet(batch_df.sparkSession, model_dir)
         per_doc = _dsir_doc_weights(_dsir_buckets(batch_df), lr_tab)
         return per_doc.groupBy("lang").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -2836,7 +2803,7 @@ def run_streaming_decon_ingest(
     shutil.rmtree(runs_dir, ignore_errors=True)
 
     # build-once artifacts (static bench index + read-only staged docs)
-    # share per process like the other drains (r16); run_rows/checkpoint
+    # share per process like the other drains; run_rows/checkpoint
     # stay per-run
     index_dir = _stage_cached(
         index_dir,
@@ -2858,7 +2825,7 @@ def run_streaming_decon_ingest(
 
     def batch_rows(batch_df, batch_id):
         ss = batch_df.sparkSession
-        index = ss.read.parquet(index_dir)
+        index = _parquet(ss, index_dir)
         return _decon_runs(index, _decon_pos_grams(batch_df)).select(
             "bench_id", "corpus_id", "run_tokens"
         )

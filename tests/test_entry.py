@@ -160,3 +160,19 @@ def test_conf_changes_live_only_in_session():
         r"conf\.(set|unset)\(", skip=lambda p: p.name == "session.py"
     )
     assert not found, found
+
+
+def test_ivf_cell_path_lives_only_in_clustering():
+    """``operators/clustering.py`` owns the IVF cell path: no other engine
+    module names the argmin fold, builds the broadcast centroid array,
+    ranks probe cells by ``(d, cid)``, writes cells partitioned by
+    ``cid`` or filters a scan by collected probe cids itself."""
+    found = _engine_matches(
+        r"\b_ARGMIN\b"
+        r"|collect_list\(\s*(F\.)?struct\(\s*[\"']?cid[\"']?\s*,\s*[\"']?vec\b"
+        r"|orderBy\(\s*\"d\",\s*\"cid\"\s*\)"
+        r"|\.mode\([^)]*\)\s*\.partitionBy\(\s*\"cid\""
+        r"|\.isin\(\s*probe_cids",
+        skip=lambda p: p.name == "clustering.py" and p.parent.name == "operators",
+    )
+    assert not found, found

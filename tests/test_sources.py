@@ -94,19 +94,42 @@ def test_events_ts_is_timestamp_for_both_encodings(spark, tmp_path):
 
 
 def test_stage_cache_hit_reads_back_without_a_job(spark):
-    key = f"test_sources:{uuid.uuid4().hex}"
+    """A second call of a stage-cached builder starts no Spark job and
+    returns the first call's rows: ``df_stage_cached`` itself, and the
+    IVF centroids and tokenizer merge tables it stores."""
+    from newyork_taxi_etl_spark.queries import similarity, text
+
+    tag = uuid.uuid4().hex
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i // 3)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
 
     def build():
         return spark.range(6).withColumn("sq", F.col("id") * F.col("id"))
 
-    miss = windows.df_stage_cached(spark, key, build, n_files=1)
-    assert windows._STAGE_CACHE_EVENTS[-1] == (key, "miss")
-    hit, jobs = _with_jobs(
-        spark, lambda: windows.df_stage_cached(spark, key, build, n_files=1)
-    )
-    assert windows._STAGE_CACHE_EVENTS[-1] == (key, "hit")
-    assert jobs == set()
-    assert sorted(hit.collect()) == sorted(miss.collect())
+    cases = {
+        f"test_sources:{tag}": lambda key: [
+            windows.df_stage_cached(spark, key, build, n_files=1)
+        ],
+        f"ivfcent3:{tag}": lambda key: [
+            similarity._ivf_centroids_cached(spark, emb, tag, k=3)
+        ],
+        f"test_tops:{tag}": lambda key: text._tops_cached(
+            spark,
+            key,
+            lambda: [spark.range(i, i + 1) for i in range(3)],
+        ),
+    }
+    for key, call in cases.items():
+        miss = call(key)
+        assert windows._STAGE_CACHE_EVENTS[-1] == (key, "miss")
+        hit, jobs = _with_jobs(spark, lambda: call(key))
+        assert windows._STAGE_CACHE_EVENTS[-1] == (key, "hit")
+        assert jobs == set(), key
+        assert [sorted(t.collect()) for t in hit] == [
+            sorted(t.collect()) for t in miss
+        ], key
 
 
 def _broadcast_hints(df) -> int:

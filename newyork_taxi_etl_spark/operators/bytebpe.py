@@ -6,22 +6,21 @@ the <unk>-free guarantee char_coverage_budget / oov_fallback_rate
 quantify the need for.
 
 Symbols are hex PAIRS of the UTF-8 encoding ('C3', 'A9', ... — engine-
-portable strings, reversible via unhex), so the existing leftmost-non-
-overlapping merge fold (queries/text.py _BPE_MERGE_EXPR) and the pair-
-count/argmax rounds apply UNCHANGED over byte symbols: on pure-ASCII
-corpora byte-BPE degenerates to char-BPE with renamed symbols (pinned
-in tests), and multi-byte codepoints split into learnable byte pairs.
-
-Registration (train + fertility queries with DuckDB oracles) is the
-round-13 item; this module ships the operator + cross-engine seed
-equality + round-trip + Python-reference trainer tests first, the
-wordpiece.py r11->r12 pattern.
+portable strings, reversible via unhex), so the merge rounds and the
+leftmost-non-overlapping merge fold of operators/merges apply UNCHANGED
+over byte symbols: on pure-ASCII corpora byte-BPE degenerates to
+char-BPE with renamed symbols (pinned in tests), and multi-byte
+codepoints split into learnable byte pairs.  The ``bytebpe_merge_loop``
+and ``bytebpe_holdout_fertility`` queries (queries/text.py) train and
+apply through this module.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from newyork_taxi_etl_spark.operators.merges import apply_merges, train
 
 #: word -> UTF-8 byte symbols as hex pairs.  hex() is uppercase on both
 #: engines; `div` keeps the index integral.  The empty-word guard is
@@ -49,39 +48,10 @@ def byte_symbol_words(words: DataFrame) -> DataFrame:
 
 
 def bytebpe_train_tops(words: DataFrame, rounds: int = 3) -> list:
-    """Byte-level BPE training: the IDENTICAL pair-count / (n DESC, a, b)
-    argmax / leftmost-non-overlapping merge loop as the char trainer
-    (queries/text.py _bpe_train_tops), over byte symbols.  Vocab-sized
-    per round; each 1-row winner localCheckpoints (argmax truncates the
-    iterative lineage) and broadcasts into the rewrite fold."""
-    from newyork_taxi_etl_spark.queries.text import _BPE_MERGE_EXPR
-
-    syms = byte_symbol_words(words).select(
-        F.col("freq").alias("cnt"), "syms"
-    )
-    tops = []
-    for _ in range(rounds):
-        pairs = syms.select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(syms) < 2 "
-                    "THEN CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) "
-                    "ELSE transform(sequence(1, size(syms) - 1), "
-                    "i -> named_struct('a', element_at(syms, i), "
-                    "'b', element_at(syms, i + 1))) END"
-                )
-            ).alias("e"),
-        )
-        counts = pairs.groupBy(
-            F.col("e.a").alias("a"), F.col("e.b").alias("b")
-        ).agg(F.sum("cnt").alias("n"))
-        top = counts.orderBy(F.desc("n"), "a", "b").limit(1).localCheckpoint()
-        tops.append(top)
-        syms = syms.crossJoin(F.broadcast(top)).select(
-            "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms")
-        )
-    return tops
+    """Byte-level BPE training: operators/merges' rounds with the
+    (n DESC, a, b) argmax, over the byte symbols of the (w, freq) vocab."""
+    syms = byte_symbol_words(words).select(F.col("freq").alias("cnt"), "syms")
+    return train(syms, rounds)
 
 
 def encode_words_bytebpe(words: DataFrame, tops: list) -> DataFrame:
@@ -89,13 +59,8 @@ def encode_words_bytebpe(words: DataFrame, tops: list) -> DataFrame:
     word; returns (w, freq, syms).  concat(unhex(concat(syms))) must
     reconstruct w exactly — byte-BPE can never lose or invent bytes
     (the round-trip test pins it, multi-byte codepoints included)."""
-    from newyork_taxi_etl_spark.queries.text import _BPE_MERGE_EXPR
-
     enc = byte_symbol_words(words).select(
         "w", F.col("freq").alias("cnt"), "syms"
     )
-    for top in tops:
-        enc = enc.crossJoin(F.broadcast(top.select("a", "b"))).select(
-            "w", "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms")
-        )
+    enc = apply_merges(enc, tops, "w", "cnt")
     return enc.select("w", F.col("cnt").alias("freq"), "syms")

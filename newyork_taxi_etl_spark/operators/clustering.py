@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from newyork_taxi_etl_spark.sources.readers import _parquet
+
 _SQDIST = (
     "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
     "0D, (acc, v) -> acc + v)"
@@ -130,7 +132,7 @@ def _pruned_read(
     ``index_col=probe_col`` in ``also`` pushes that probe column's
     collected values as a filter on ``index_col`` too."""
     rows = probes.select("cid", *also.values()).collect()
-    scan = spark.read.parquet(path)
+    scan = _parquet(spark, path)
     for col, src in {"cid": "cid", **also}.items():
         scan = scan.filter(F.col(col).isin(sorted({r[src] for r in rows})))
     return scan

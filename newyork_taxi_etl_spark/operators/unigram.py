@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from newyork_taxi_etl_spark.operators.merges import CHAR_SYMS
+
 MAX_PIECE_LEN = 4
 SENT = "9999999999999999"  # unreachable / absent-piece sentinel cost
 SENT_ENTRY = SENT + "|9|"
@@ -180,11 +182,7 @@ def em_counts(words: DataFrame, costs: DataFrame) -> DataFrame:
         .agg(F.sum("freq").cast("bigint").alias("cnt"))
     )
     singles = (
-        words.select(
-            F.explode(
-                F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-            ).alias("piece")
-        )
+        words.select(F.explode(F.expr(CHAR_SYMS)).alias("piece"))
         .distinct()
         .join(used, "piece", "left_anti")
         .select("piece", F.lit(1).cast("bigint").alias("cnt"))

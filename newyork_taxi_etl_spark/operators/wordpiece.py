@@ -2,8 +2,8 @@
 algorithm).
 
 ``wordpiece_merge_loop`` trains the merge table and
-``wordpiece_holdout_fertility`` applies it with the BPE merge fold (apply
-in training ORDER); the deployed BERT tokenizer instead segments against
+``wordpiece_holdout_fertility`` applies it in training ORDER, both through
+operators/merges; the deployed BERT tokenizer instead segments against
 the FINAL vocabulary with greedy longest-match-first (Schuster & Nakajima
 2012; Devlin et al. 2019 use the same runtime).  This operator is that
 runtime, relational:
@@ -15,8 +15,8 @@ runtime, relational:
    vocabulary, so every position matches at least itself — and the fold
    GUARDS that precondition loudly: a vocab missing a single character
    raises instead of silently shifting positions);
-3. one left fold over positions with a struct accumulator (the
-   _BPE_MERGE_EXPR discipline): at the current cursor take the longest
+3. one left fold over positions with a struct accumulator (the merge
+   fold's idiom, operators/merges): at the current cursor take the longest
    match, emit it, jump the cursor; other positions pass through.
 
 Everything is vocab-sized after the word collapse: the fold runs once per
@@ -28,6 +28,8 @@ below as its value oracle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from newyork_taxi_etl_spark.operators.merges import CHAR_SYMS
 
 #: merges of merges can reach 2^rounds chars; 8 covers 3 training rounds
 MAX_PIECE_LEN = 8
@@ -104,12 +106,11 @@ def vocab_from_tops(words: DataFrame, tops) -> DataFrame:
     """Final WordPiece vocabulary = all single characters of the ``words``
     corpus (the (w, freq) frame being segmented — guarantees
     :func:`greedy_segment_words`'s every-position-covered precondition)
-    plus each round's merged pair from ``_wp_train_tops`` output (list of
-    1-row (a, b, ...) frames).  One ``piece`` string column."""
+    plus each round's merged pair of a trained merge table (list of
+    1-row (a, b, ...) frames, operators/merges).  One ``piece`` string
+    column."""
     singles = words.select(
-        F.explode(
-            F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-        ).alias("piece")
+        F.explode(F.expr(CHAR_SYMS)).alias("piece")
     ).distinct()
     merged = singles
     for top in tops:

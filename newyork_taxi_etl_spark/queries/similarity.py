@@ -10,7 +10,7 @@ from newyork_taxi_etl_spark.functions.exact import avg_exact_sql, dec_out_sql
 from newyork_taxi_etl_spark.operators import similarity as S
 from newyork_taxi_etl_spark.registry import register
 from newyork_taxi_etl_spark.session import scratch, spread
-from newyork_taxi_etl_spark.sources.readers import table, table_path
+from newyork_taxi_etl_spark.sources.readers import _parquet, table, table_path
 
 _COS_SQL = (
     "ROUND(list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
@@ -965,8 +965,8 @@ def _pq_trained_cached(
         ).parquet(os.path.join(target, "encoded"))
 
     sdir = _stage_cached(None, cache_key, build)
-    codebook = spark.read.parquet(os.path.join(sdir, "codebook"))
-    encoded = spark.read.parquet(os.path.join(sdir, "encoded"))
+    codebook = _parquet(spark, os.path.join(sdir, "codebook"))
+    encoded = _parquet(spark, os.path.join(sdir, "encoded"))
     return subvecs, codebook, encoded, d
 
 
@@ -1480,7 +1480,7 @@ def _ivfpq_adc_topk(spark, sf_dir, k=5, n_probe=2):
             base.filter(F.col("vec_id") < 5).select(
                 F.col("vec_id").alias("query_id"), "_v"
             ),
-            spark.read.parquet(os.path.join(idx_root, "centroids")),
+            _parquet(spark, os.path.join(idx_root, "centroids")),
             n_probe,
         )
         .select("query_id", "cid")
@@ -1490,7 +1490,7 @@ def _ivfpq_adc_topk(spark, sf_dir, k=5, n_probe=2):
 
     # per-query distance tables from the PERSISTED codebook (m x k rows
     # per query); ADC = m lookups per candidate, decimal-summed
-    cbk = spark.read.parquet(os.path.join(idx_root, "codebook"))
+    cbk = _parquet(spark, os.path.join(idx_root, "codebook"))
     qtab = (
         subvecs.filter(F.col("vec_id") < 5)
         .join(F.broadcast(cbk), "subspace")
@@ -1628,7 +1628,7 @@ def _ivfpq_residual_topk(spark, sf_dir, k=5, n_probe=2):
             base.filter(F.col("vec_id") < 5).select(
                 F.col("vec_id").alias("query_id"), "_v"
             ),
-            spark.read.parquet(os.path.join(idx_root, "centroids")),
+            _parquet(spark, os.path.join(idx_root, "centroids")),
             n_probe,
         )
         .select(
@@ -1640,7 +1640,7 @@ def _ivfpq_residual_topk(spark, sf_dir, k=5, n_probe=2):
     )
     idx_scan = _pruned_read(spark, os.path.join(idx_root, "codes"), probes)
 
-    cbk = spark.read.parquet(os.path.join(idx_root, "codebook"))
+    cbk = _parquet(spark, os.path.join(idx_root, "codebook"))
     sub_slices = F.array(
         *[
             F.struct(
@@ -6018,12 +6018,12 @@ def ann_opq_trained_recall(spark, sf_dir):
     import numpy as np
 
     r = np.zeros((64, 64))
-    for row in spark.read.parquet(_os.path.join(sdir, "rmat")).collect():
+    for row in _parquet(spark, _os.path.join(sdir, "rmat")).collect():
         r[row["i"], row["j"]] = row["v"]
     opqv = _apply_rotation(base, r)
     sub_oq, _, _, d_oq = _pq_parts_v(opqv, 16, train=False)
-    cb_oq = spark.read.parquet(_os.path.join(sdir, "codebook"))
-    enc_oq = spark.read.parquet(_os.path.join(sdir, "encoded"))
+    cb_oq = _parquet(spark, _os.path.join(sdir, "codebook"))
+    enc_oq = _parquet(spark, _os.path.join(sdir, "encoded"))
     pairs_opq = _pq_adc_topk(
         None, k=10, k_codes=16, parts=(sub_oq, cb_oq, enc_oq, d_oq)
     )

@@ -19,6 +19,16 @@ from newyork_taxi_etl_spark.functions.text import (
     shingles_sql,
     with_shingles,
 )
+from newyork_taxi_etl_spark.operators.merges import (
+    CHAR_SYMS,
+    apply_merges,
+    by_gain,
+    char_vocab,
+    merge_round,
+    merge_table,
+    train,
+    word_counts,
+)
 from newyork_taxi_etl_spark.registry import register
 from newyork_taxi_etl_spark.session import scratch, spread
 from newyork_taxi_etl_spark.sources.readers import table
@@ -590,21 +600,6 @@ def _bpe_round_sql(r: int, mat: bool = False) -> str:
     syms{r} AS ({_bpe_fold_sql(prev, f'top{r}')})"""
 
 
-_BPE_MERGE_EXPR = """
-  aggregate(
-    syms,
-    named_struct('o', CAST(array() AS ARRAY<STRING>), 'p', CAST(NULL AS STRING)),
-    (acc, s) -> CASE
-      WHEN acc.p = a AND s = b
-        THEN named_struct('o', concat(acc.o, array(concat(a, b))),
-                          'p', CAST(NULL AS STRING))
-      WHEN acc.p IS NULL THEN named_struct('o', acc.o, 'p', s)
-      ELSE named_struct('o', concat(acc.o, array(acc.p)), 'p', s) END,
-    acc -> CASE WHEN acc.p IS NULL THEN acc.o
-                ELSE concat(acc.o, array(acc.p)) END)
-"""
-
-
 @register(
     "bpe_merge_loop",
     f"""
@@ -642,67 +637,7 @@ _BPE_MERGE_EXPR = """
     "structure it",
 )
 def bpe_merge_loop(spark, sf_dir):
-    tops = _bpe_tops_cached(spark, sf_dir, "full")
-    outs = [
-        top.select(
-            F.lit(step).alias("step"),
-            F.concat_ws("+", "a", "b").alias("pair"),
-            F.concat("a", "b").alias("merged"),
-            F.col("n").cast("bigint").alias("n"),
-        )
-        for step, top in enumerate(tops, start=1)
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out.orderBy("step")
-
-
-def _bpe_train_tops(docs, rounds=3):
-    """The 3-round BPE training loop, factored so bpe_merge_loop (train)
-    and bpe_encode_apply (apply) learn from the IDENTICAL fold: corpus
-    collapses to a frequency-weighted word vocab, each round counts
-    adjacent symbol pairs (map-side-combinable, pair-vocabulary
-    shuffle), takes the (n DESC, a, b) argmax, and rewrites symbols with
-    the leftmost-non-overlapping merge fold.  Returns the per-round
-    1-row merge tables (localCheckpoint-ed: the argmax truncates the
-    iterative lineage — clustering.py discipline — and each top is
-    consumed by BOTH the next round and the apply twin)."""
-    vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.length("w") >= 2)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    syms = vocab.select(
-        "cnt",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("syms"),
-    )
-    tops = []
-    for _ in range(rounds):
-        pairs = syms.select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(syms) < 2 "
-                    "THEN CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) "
-                    "ELSE transform(sequence(1, size(syms) - 1), "
-                    "i -> named_struct('a', element_at(syms, i), "
-                    "'b', element_at(syms, i + 1))) END"
-                )
-            ).alias("e"),
-        )
-        counts = pairs.groupBy(
-            F.col("e.a").alias("a"), F.col("e.b").alias("b")
-        ).agg(F.sum("cnt").alias("n"))
-        top = counts.orderBy(F.desc("n"), "a", "b").limit(1).localCheckpoint()
-        tops.append(top)
-        syms = syms.crossJoin(F.broadcast(top)).select(
-            "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms")
-        )
-    return tops
+    return merge_table(_bpe_tops_cached(spark, sf_dir, "full"))
 
 
 #: merge rounds of every cached tokenizer trainer (each cache key names it)
@@ -765,7 +700,7 @@ def _bpe_tops_cached(spark, sf_dir, split: str):
     return _tops_cached(
         spark,
         f"bpetops3:{split}:{sf_dir}",
-        lambda: _bpe_train_tops(_split_docs(docs, split)),
+        lambda: train(char_vocab(_split_docs(docs, split))),
     )
 
 
@@ -774,19 +709,13 @@ def _wp_tops_cached(spark, sf_dir, split: str):
     return _tops_cached(
         spark,
         f"wptops3:{split}:{sf_dir}",
-        lambda: _wp_train_tops(_split_docs(docs, split)),
+        lambda: train(char_vocab(_split_docs(docs, split)), pick=by_gain),
     )
 
 
 def _bb_tops_cached(spark, sf_dir, split: str):
     docs = table(spark, sf_dir, "documents")
-    vocab = (
-        _split_docs(docs, split)
-        .select(F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.length("w") >= 2)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
+    vocab = word_counts(_split_docs(docs, split), "freq")
     return _tops_cached(
         spark,
         f"bbtops3:{split}:{sf_dir}",
@@ -826,19 +755,10 @@ def _bpe_encoded_words(spark, sf_dir):
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    enc = lv.select(
-        "lang",
-        "w",
-        "cnt",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("syms"),
+    keep = ("lang", "w", "cnt")
+    return apply_merges(
+        lv.select(*keep, F.expr(CHAR_SYMS).alias("syms")), tops, *keep
     )
-    for top in tops:
-        enc = enc.crossJoin(F.broadcast(top)).select(
-            "lang", "w", "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms")
-        )
-    return enc
 
 
 _BPE_APPLY_SQL = f"""
@@ -986,7 +906,7 @@ _BPE_HOLDOUT_SQL = f"""
     "a held-out fertility materially above train fertility means the "
     "merge table memorized the training vocabulary instead of "
     "learning reusable subwords.  Same shared training fold "
-    "(_bpe_train_tops) and apply fold as the full-corpus twins; "
+    "(operators/merges) and apply fold as the full-corpus twins; "
     "training is vocab-sized per round, apply runs once over the "
     "(split, lang, word) vocab with each 1-row merge broadcast; all "
     "sums integer.",
@@ -1005,18 +925,10 @@ def bpe_holdout_fertility(spark, sf_dir):
             .groupBy("is_val", "lang", "w")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        enc = lv.select(
-            "is_val",
-            "lang",
-            "cnt",
-            F.expr(
-                "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-            ).alias("syms"),
+        keep = ("is_val", "lang", "cnt")
+        enc = apply_merges(
+            lv.select(*keep, F.expr(CHAR_SYMS).alias("syms")), tops, *keep
         )
-        for top in tops:
-            enc = enc.crossJoin(F.broadcast(top)).select(
-                "is_val", "lang", "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms")
-            )
         return (
             enc.select(
                 F.when(F.col("is_val"), "holdout").otherwise("train").alias(
@@ -2452,14 +2364,7 @@ def unigram_holdout_fertility(spark, sf_dir):
             "freq", F.lit(1).cast("bigint")
         )
         eval_singles = (
-            evalwords.select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, length(w)),"
-                        " i -> substring(w, i, 1))"
-                    )
-                ).alias("piece")
-            )
+            evalwords.select(F.explode(F.expr(CHAR_SYMS)).alias("piece"))
             .distinct()
             .join(final, "piece", "left_anti")
             .select("piece", F.lit(1).cast("bigint").alias("cnt"))
@@ -2491,7 +2396,8 @@ def unigram_holdout_fertility(spark, sf_dir):
 #
 # Third tokenizer family beside BPE (bpe_merge_loop) and unigram-LM
 # (unigram_lm_train).  Identical vocab-collapse + leftmost-non-overlapping
-# merge fold as BPE — the ONLY difference is the merge-selection criterion:
+# merge fold as BPE (operators/merges) — the ONLY difference is the
+# merge-selection criterion (operators/merges.by_gain on the Spark side):
 # WordPiece picks the pair maximizing the training-corpus likelihood gain
 # count(ab) / (count(a) * count(b)), i.e. pointwise mutual information up
 # to constants, instead of raw pair frequency.  The score is carried in the
@@ -2578,85 +2484,7 @@ def _wp_round_sql(r: int) -> str:
     "comparable on the same corpus",
 )
 def wordpiece_merge_loop(spark, sf_dir):
-    tops = _wp_tops_cached(spark, sf_dir, "full")
-    outs = [
-        top.select(
-            F.lit(step).alias("step"),
-            F.concat_ws("+", "a", "b").alias("pair"),
-            F.concat("a", "b").alias("merged"),
-            F.col("n").cast("bigint").alias("n"),
-            F.col("score").alias("score"),
-        )
-        for step, top in enumerate(tops, start=1)
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out.orderBy("step")
-
-
-def _wp_train_tops(docs, rounds=3):
-    """WordPiece training loop: _bpe_train_tops with the likelihood-gain
-    argmax.  Merge fold, vocab collapse, and localCheckpoint lineage
-    truncation are shared with BPE (one fold implementation — the
-    apply/train drift lesson); only the per-round winner selection
-    differs."""
-    vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.length("w") >= 2)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    syms = vocab.select(
-        "cnt",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("syms"),
-    )
-    tops = []
-    for _ in range(rounds):
-        symfreq = (
-            syms.select(F.explode("syms").alias("sym"), "cnt")
-            .groupBy("sym")
-            .agg(F.sum("cnt").cast("bigint").alias("f"))
-        )
-        pairs = syms.select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(syms) < 2 "
-                    "THEN CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) "
-                    "ELSE transform(sequence(1, size(syms) - 1), "
-                    "i -> named_struct('a', element_at(syms, i), "
-                    "'b', element_at(syms, i + 1))) END"
-                )
-            ).alias("e"),
-        )
-        counts = pairs.groupBy(
-            F.col("e.a").alias("a"), F.col("e.b").alias("b")
-        ).agg(F.sum("cnt").cast("bigint").alias("n"))
-        fa = symfreq.select(F.col("sym").alias("a"), F.col("f").alias("fa"))
-        fb = symfreq.select(F.col("sym").alias("b"), F.col("f").alias("fb"))
-        scored = (
-            counts.join(F.broadcast(fa), "a")
-            .join(F.broadcast(fb), "b")
-            .select(
-                "a",
-                "b",
-                "n",
-                F.round(
-                    F.log("n") - F.log("fa") - F.log("fb"), 12
-                ).alias("score"),
-            )
-        )
-        top = (
-            scored.orderBy(F.desc("score"), "a", "b").limit(1).localCheckpoint()
-        )
-        tops.append(top)
-        syms = syms.crossJoin(F.broadcast(top.select("a", "b"))).select(
-            "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms")
-        )
-    return tops
+    return merge_table(_wp_tops_cached(spark, sf_dir, "full"), "score")
 
 
 # --- CCNet perplexity buckets (Wenzek et al. 2020, LREC) --------------------
@@ -2957,18 +2785,10 @@ def wordpiece_holdout_fertility(spark, sf_dir):
             .groupBy("is_val", "lang", "w")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        enc = lv.select(
-            "is_val",
-            "lang",
-            "cnt",
-            F.expr(
-                "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-            ).alias("syms"),
+        keep = ("is_val", "lang", "cnt")
+        enc = apply_merges(
+            lv.select(*keep, F.expr(CHAR_SYMS).alias("syms")), tops, *keep
         )
-        for top in tops:
-            enc = enc.crossJoin(F.broadcast(top.select("a", "b"))).select(
-                "is_val", "lang", "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms")
-            )
         return (
             enc.select(
                 F.when(F.col("is_val"), "holdout").otherwise("train").alias(
@@ -3418,18 +3238,10 @@ def wordpiece_runtime_drift(spark, sf_dir):
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    enc = lv.select(
-        "lang",
-        "cnt",
-        "w",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("syms"),
+    keep = ("lang", "cnt", "w")
+    enc = apply_merges(
+        lv.select(*keep, F.expr(CHAR_SYMS).alias("syms")), tops, *keep
     )
-    for top in tops:
-        enc = enc.crossJoin(F.broadcast(top.select("a", "b"))).select(
-            "lang", "cnt", "w", F.expr(_BPE_MERGE_EXPR).alias("syms")
-        )
     fold_lang = enc.groupBy("lang").agg(
         F.sum("cnt").cast("bigint").alias("n_instances"),
         F.round(
@@ -4572,8 +4384,8 @@ def _zipf_source_stats(docs):
 # input is ever out-of-vocabulary — the <unk>-free guarantee whose need
 # char_coverage_budget and oov_fallback_rate quantify.  The seeds come
 # from operators/bytebpe.py (cross-engine equality + multi-byte
-# round-trip pytest-pinned there); the merge loop itself is the SHARED
-# leftmost-non-overlapping fold every other family uses.
+# round-trip pytest-pinned there); the merge rounds and the
+# leftmost-non-overlapping fold are operators/merges', as for every family.
 
 from newyork_taxi_etl_spark.operators.bytebpe import (  # noqa: E402
     BYTE_SYMS_SQL,
@@ -4619,20 +4431,7 @@ from newyork_taxi_etl_spark.operators.bytebpe import (  # noqa: E402
     "same contract as the char trainer.",
 )
 def bytebpe_merge_loop(spark, sf_dir):
-    tops = _bb_tops_cached(spark, sf_dir, "full")
-    outs = [
-        top.select(
-            F.lit(step).alias("step"),
-            F.concat_ws("+", "a", "b").alias("pair"),
-            F.concat("a", "b").alias("merged"),
-            F.col("n").cast("bigint").alias("n"),
-        )
-        for step, top in enumerate(tops, start=1)
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out.orderBy("step")
+    return merge_table(_bb_tops_cached(spark, sf_dir, "full"))
 
 
 _BYTEBPE_HOLDOUT_SQL = f"""
@@ -4690,9 +4489,8 @@ _BYTEBPE_HOLDOUT_SQL = f"""
     "contain NO unrepresentable word: unmerged words fall back to raw "
     "byte symbols, never <unk> — so fertility degrades gracefully "
     "instead of failing, which is exactly the property this query "
-    "measures.  Same shared training fold (operators/bytebpe.py "
-    "bytebpe_train_tops -> the common merge fold) and apply fold as "
-    "every tokenizer family; training is vocab-sized per round, apply "
+    "measures.  Same training rounds and apply fold (operators/merges) "
+    "as every tokenizer family; training is vocab-sized per round, apply "
     "runs once over the (split, lang, word) vocab with each 1-row merge "
     "broadcast; symbol/byte sums integer (the /2 halves an exact int "
     "sum), engine-exact.",
@@ -4713,13 +4511,10 @@ def bytebpe_holdout_fertility(spark, sf_dir):
             .groupBy("is_val", "lang", "w")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        enc = lv.select(
-            "is_val", "lang", "cnt", F.expr(BYTE_SYMS_EXPR).alias("syms")
+        keep = ("is_val", "lang", "cnt")
+        enc = apply_merges(
+            lv.select(*keep, F.expr(BYTE_SYMS_EXPR).alias("syms")), tops, *keep
         )
-        for top in tops:
-            enc = enc.crossJoin(F.broadcast(top.select("a", "b"))).select(
-                "is_val", "lang", "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms")
-            )
         n_hex = F.expr("aggregate(syms, 0L, (acc, s) -> acc + length(s))")
         return (
             enc.select(
@@ -5280,18 +5075,7 @@ _BPE_GAIN_SQL = f"""
 )
 def bpe_merge_gain_curve(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.length("w") >= 2)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    syms = vocab.select(
-        "cnt",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("syms"),
-    ).localCheckpoint(eager=True)
+    syms = char_vocab(docs).localCheckpoint(eager=True)
 
     def stats(df, rnd):
         return df.agg(
@@ -5309,29 +5093,10 @@ def bpe_merge_gain_curve(spark, sf_dir):
     rows = [stats(syms, 0).collect()[0]]
     merges = [(None, None)]
     for rnd in (1, 2, 3):
-        pairs = syms.select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(syms) < 2 "
-                    "THEN CAST(array() AS ARRAY<STRUCT<a: STRING, b: STRING>>) "
-                    "ELSE transform(sequence(1, size(syms) - 1), "
-                    "i -> named_struct('a', element_at(syms, i), "
-                    "'b', element_at(syms, i + 1))) END"
-                )
-            ).alias("e"),
-        )
-        counts = pairs.groupBy(
-            F.col("e.a").alias("a"), F.col("e.b").alias("b")
-        ).agg(F.sum("cnt").alias("n"))
-        top = counts.orderBy(F.desc("n"), "a", "b").limit(1).localCheckpoint()
+        top, syms = merge_round(syms)
         t = top.collect()[0]
         merges.append((f"{t['a']}+{t['b']}", int(t["n"])))
-        syms = (
-            syms.crossJoin(F.broadcast(top))
-            .select("cnt", F.expr(_BPE_MERGE_EXPR).alias("syms"))
-            .localCheckpoint(eager=True)
-        )
+        syms = syms.localCheckpoint(eager=True)
         rows.append(stats(syms, rnd).collect()[0])
 
     out = []
@@ -5516,29 +5281,14 @@ def tokenizer_family_bakeoff(spark, sf_dir):
         docs.filter(F.col("doc_id") % 5 != 0)
         .select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.col("w") != "")
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(w)),"
-                    " i -> substring(w, i, 1))"
-                )
-            ).alias("ch")
-        )
+        .select(F.explode(F.expr(CHAR_SYMS)).alias("ch"))
         .distinct()
         .withColumn("seen", F.lit(1))
     )
     oovw = (
         hw.select("w")
         .distinct()
-        .select(
-            "w",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(w)),"
-                    " i -> substring(w, i, 1))"
-                )
-            ).alias("ch"),
-        )
+        .select("w", F.explode(F.expr(CHAR_SYMS)).alias("ch"))
         .join(F.broadcast(trainchars), "ch", "left")
         .groupBy("w")
         .agg(

@@ -123,10 +123,10 @@ def test_ascii_degenerates_to_char_bpe(spark):
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
-    from newyork_taxi_etl_spark.queries.text import _bpe_train_tops
+    from newyork_taxi_etl_spark.operators.merges import char_vocab, train
 
     btops = bytebpe_train_tops(vocab, rounds=3)
-    ctops = _bpe_train_tops(docs, rounds=3)
+    ctops = train(char_vocab(docs), rounds=3)
     for bt, ct in zip(btops, ctops):
         b, c = bt.collect()[0], ct.collect()[0]
         assert b.n == c.n

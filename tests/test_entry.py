@@ -176,3 +176,17 @@ def test_ivf_cell_path_lives_only_in_clustering():
         skip=lambda p: p.name == "clustering.py" and p.parent.name == "operators",
     )
     assert not found, found
+
+
+def test_merge_path_lives_only_in_operators_merges():
+    """``operators/merges.py`` owns the merge-table tokenizers' algorithm:
+    no other engine module spells the adjacent-pair explode, the merge
+    fold's accumulator, the old fold constant or the char seed."""
+    found = _engine_matches(
+        r"ARRAY<STRUCT<a: STRING, b: STRING>>"
+        r"|named_struct\('o'"
+        r"|\b_BPE_MERGE_EXPR\b"
+        r"|substring\(w, i, 1\)",
+        skip=lambda p: p.name == "merges.py" and p.parent.name == "operators",
+    )
+    assert not found, found

@@ -78,7 +78,7 @@ def test_bpe_merge_fold_edge_cases(spark):
     """The leftmost-non-overlapping merge fold (bpe_merge_loop) on planted
     sequences: overlap chain 'aaa', alternating 'abab', singleton, full
     merge — pinned so neither engine's fold can drift."""
-    from newyork_taxi_etl_spark.queries.text import _BPE_MERGE_EXPR
+    from newyork_taxi_etl_spark.operators.merges import MERGE_EXPR
 
     df = spark.createDataFrame(
         [
@@ -90,7 +90,7 @@ def test_bpe_merge_fold_edge_cases(spark):
         ],
         "syms array<string>, a string, b string, want array<string>",
     )
-    for r in df.select("want", F.expr(_BPE_MERGE_EXPR).alias("got")).collect():
+    for r in df.select("want", F.expr(MERGE_EXPR).alias("got")).collect():
         assert r["got"] == r["want"], r
 
 

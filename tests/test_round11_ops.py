@@ -457,9 +457,10 @@ def test_wordpiece_argmax_diverges_from_bpe_on_planted_corpus(spark):
     in many words built from very frequent letters (t, h everywhere),
     while 'qz' appears fewer times but q and z occur NOWHERE else —
     count(qz)/(f(q)*f(z)) maximal, count(th) maximal."""
-    from newyork_taxi_etl_spark.queries.text import (
-        _bpe_train_tops,
-        _wp_train_tops,
+    from newyork_taxi_etl_spark.operators.merges import (
+        by_gain,
+        char_vocab,
+        train,
     )
 
     words = (
@@ -467,8 +468,8 @@ def test_wordpiece_argmax_diverges_from_bpe_on_planted_corpus(spark):
         + ["qz"] * 3  # q,z occur only together
     )
     docs = spark.createDataFrame([(w,) for w in words], "text string")
-    bpe1 = _bpe_train_tops(docs, rounds=1)[0].collect()[0]
-    wp1 = _wp_train_tops(docs, rounds=1)[0].collect()[0]
+    bpe1 = train(char_vocab(docs), rounds=1)[0].collect()[0]
+    wp1 = train(char_vocab(docs), rounds=1, pick=by_gain)[0].collect()[0]
     assert (bpe1["a"], bpe1["b"]) == ("t", "h")
     assert (wp1["a"], wp1["b"]) == ("q", "z")
     # the score column is the documented log-domain likelihood gain
@@ -479,17 +480,18 @@ def test_wordpiece_argmax_diverges_from_bpe_on_planted_corpus(spark):
 def test_wordpiece_fold_is_bpes_fold(spark):
     """Both trainers must rewrite symbols with the SAME leftmost-non-
     overlapping fold: after forcing the same winning pair, round-2
-    symbol streams agree (the shared-_BPE_MERGE_EXPR contract)."""
-    from newyork_taxi_etl_spark.queries.text import (
-        _bpe_train_tops,
-        _wp_train_tops,
+    symbol streams agree (the shared operators/merges contract)."""
+    from newyork_taxi_etl_spark.operators.merges import (
+        by_gain,
+        char_vocab,
+        train,
     )
 
     # single repeated word -> both criteria pick the same argmax ('aa'
     # overlap case pins leftmost-non-overlap: 'aaaa' -> [aa, aa])
     docs = spark.createDataFrame([("aaaa aaaa",)] * 4, "text string")
-    bpe = _bpe_train_tops(docs, rounds=2)
-    wp = _wp_train_tops(docs, rounds=2)
+    bpe = train(char_vocab(docs), rounds=2)
+    wp = train(char_vocab(docs), rounds=2, pick=by_gain)
     assert [(t.collect()[0]["a"], t.collect()[0]["b"]) for t in bpe] == [
         (t.collect()[0]["a"], t.collect()[0]["b"]) for t in wp
     ]
@@ -740,13 +742,18 @@ def test_wordpiece_greedy_over_trained_vocab(spark):
         greedy_segment_words,
         vocab_from_tops,
     )
-    from newyork_taxi_etl_spark.queries.text import _wp_train_tops
+    from newyork_taxi_etl_spark.operators.merges import (
+        by_gain,
+        char_vocab,
+        train,
+    )
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     words = word_vocab(docs)
     # vocab_from_tops unions the corpus single characters itself (the
     # fold's every-position-covered precondition)
-    vocab = vocab_from_tops(words, _wp_train_tops(docs)).localCheckpoint()
+    tops = train(char_vocab(docs), pick=by_gain)
+    vocab = vocab_from_tops(words, tops).localCheckpoint()
     vocab_set = {r["piece"] for r in vocab.collect()}
     segs = greedy_segment_words(words, vocab).collect()
     assert len(segs) > 0
@@ -770,11 +777,16 @@ def test_wordpiece_greedy_duckdb_twin_matches_spark(spark):
         greedy_segment_words,
         vocab_from_tops,
     )
-    from newyork_taxi_etl_spark.queries.text import _wp_train_tops
+    from newyork_taxi_etl_spark.operators.merges import (
+        by_gain,
+        char_vocab,
+        train,
+    )
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     words = word_vocab(docs)
-    vocab = vocab_from_tops(words, _wp_train_tops(docs)).localCheckpoint()
+    tops = train(char_vocab(docs), pick=by_gain)
+    vocab = vocab_from_tops(words, tops).localCheckpoint()
 
     got_spark = {
         r["w"]: list(r["pieces"])

@@ -122,11 +122,15 @@ def test_wordpiece_log_score_matches_duckdb_on_planted(spark):
     planted q/z corpus and compare the top row value-for-value."""
     import duckdb
 
-    from newyork_taxi_etl_spark.queries.text import _wp_train_tops
+    from newyork_taxi_etl_spark.operators.merges import (
+        by_gain,
+        char_vocab,
+        train,
+    )
 
     rows = ["that this then hath teeth"] * 6 + ["qz"] * 3
     docs = spark.createDataFrame([(r,) for r in rows], "text string")
-    top = _wp_train_tops(docs, rounds=1)[0].collect()[0]
+    top = train(char_vocab(docs), rounds=1, pick=by_gain)[0].collect()[0]
     assert (top["a"], top["b"]) == ("q", "z")
     assert abs(top["score"] - round(math.log(3) - 2 * math.log(3), 12)) < 1e-12
 
@@ -565,7 +569,7 @@ def test_wordpiece_runtime_drift_detects_planted_divergence(spark):
         greedy_segment_words,
         vocab_from_tops,
     )
-    from newyork_taxi_etl_spark.queries.text import _BPE_MERGE_EXPR
+    from newyork_taxi_etl_spark.operators.merges import MERGE_EXPR
 
     tops = [
         spark.createDataFrame([(a, b)], "a string, b string")
@@ -582,7 +586,7 @@ def test_wordpiece_runtime_drift_detects_planted_divergence(spark):
     )
     for top in tops:
         enc = enc.crossJoin(F.broadcast(top)).select(
-            "w", F.expr(_BPE_MERGE_EXPR).alias("syms")
+            "w", F.expr(MERGE_EXPR).alias("syms")
         )
     fold = enc.collect()[0]["syms"]
     assert fold == ["a", "bcc"]
